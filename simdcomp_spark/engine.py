@@ -13,9 +13,10 @@ Spark-first design (SURVEY.md §1.4, §4):
   BEFORE the shuffle, so a single 10M-token document cannot straggle a task.
   Blocks are independent given per-block inits (SURVEY.md §3.2), so segment
   encodes are bit-compatible with whole-row encodes;
-* decode reassembly is a declarative ``groupBy(doc_id) → array_sort →
-  flatten`` that Catalyst plans as one shuffle; it is skipped when the
-  caller knows no row exceeded the split threshold;
+* one decoder: every encoded read is a DataFrame (``iceberg.read_table``,
+  or ``spark.read.parquet`` for plain directories) handed to
+  :func:`decode`, whose reassembly shuffles the COMPRESSED segments by
+  doc_id and stitches them after a per-partition sort;
 * metrics are plain DataFrame aggregations over the encoded output plus
   per-task encode timings carried as constant batch columns — queryable,
   not log-scraped.
@@ -353,13 +354,12 @@ def _file_name_df(spark: SparkSession, files: list[str]):
 def _rowgroup_units(spark: SparkSession, path: str,
                     snapshot_id: int | None = None,
                     files: list[str] | None = None) -> DataFrame:
-    """(file, row_group, rowgroup_file_row_offset) work units for the
-    fused scan paths — one Spark task per parquet row group, so task size
-    is bounded by the writer's row-group size regardless of file-count
-    skew.  ``rg_off`` is the row group's first-row ordinal WITHIN its
-    file — the coordinate system Iceberg v2 position deletes use, carried
-    on every unit so the fused decode can apply deletes.  Input may be a
-    plain parquet directory or an Iceberg table dir (:func:`_input_files`).
+    """(file, row_group) work units for the fused scan of
+    :func:`encode_files` — one Spark task per parquet row group, so task
+    size is bounded by the writer's row-group size regardless of
+    file-count skew.  Input may be a plain parquet directory or an
+    Iceberg table dir (:func:`_input_files`, which refuses tables that
+    carry deletes).
 
     Both the footer reads AND the (path, row_group) expansion are
     DISTRIBUTED: the driver only lists file names (one directory-metadata
@@ -375,8 +375,7 @@ def _rowgroup_units(spark: SparkSession, path: str,
     if files is None:
         files = _input_files(path, snapshot_id)
     if not files:
-        return spark.createDataFrame(
-            [], "path string, rg int, rg_off long")
+        return spark.createDataFrame([], "path string, rg int")
     par = max(int(spark.sparkContext.defaultParallelism), 1)
     factor = int(os.environ.get("SIMDCOMP_UNIT_FACTOR", "4"))
     # small-input fast path: when the file list alone already saturates
@@ -384,9 +383,7 @@ def _rowgroup_units(spark: SparkSession, path: str,
     # UNLESS some file is large — probe sizes with one driver-side stat
     # per file (bounded: only attempted below par*factor files) and emit
     # WHOLE-FILE units (rg = -1), skipping the distributed footer job,
-    # its exchange, and a stage of per-task overhead.  Workers iterate
-    # every row group of their file in order, so file-row offsets (the
-    # position-delete coordinate system) stay correct from rg_off = 0.
+    # its exchange, and a stage of per-task overhead.
     if len(files) <= par * factor:
         try:
             small = all(os.path.getsize(f) <= (256 << 20) for f in files)
@@ -394,52 +391,36 @@ def _rowgroup_units(spark: SparkSession, path: str,
             small = False          # non-local paths: plan row groups
         if small:
             return (spark.createDataFrame(
-                [(f, -1, 0) for f in files],
-                "path string, rg int, rg_off long")
+                [(f, -1) for f in files], "path string, rg int")
                 .repartition(len(files)))
     fdf = _file_name_df(spark, files)
 
     def footer_counts(it):
         import pyarrow.parquet as pq
         for batch in it:
-            paths = batch.column(0).to_pylist()
-            offs = []
-            for p in paths:
-                md = pq.ParquetFile(p).metadata
-                # per-row-group FILE row offsets (prefix sums): the
-                # coordinate system v2 position deletes are written in
-                o, acc = [], 0
-                for g in range(md.num_row_groups):
-                    o.append(acc)
-                    acc += md.row_group(g).num_rows
-                offs.append(o)
+            n_rg = [pq.ParquetFile(p).metadata.num_row_groups
+                    for p in batch.column(0).to_pylist()]
             yield pa.RecordBatch.from_arrays(
-                [batch.column(0),
-                 pa.array(offs, type=pa.list_(pa.int64()))],
-                names=["path", "offs"])
+                [batch.column(0), pa.array(n_rg, type=pa.int32())],
+                names=["path", "n_rg"])
 
-    counts = fdf.mapInArrow(footer_counts, "path string, "
-                                           "offs array<long>")
-    units = (counts.where(F.size("offs") > 0)
-             .select("path",
-                     F.posexplode("offs").alias("rg", "rg_off")))
+    counts = fdf.mapInArrow(footer_counts, "path string, n_rg int")
+    units = (counts.where(F.col("n_rg") > 0)
+             .select("path", F.explode(F.sequence(
+                 F.lit(0), F.col("n_rg") - 1)).alias("rg")))
     return units.repartition(par * factor)
 
 
-def _role_columns(path: str, roles: list[str],
-                  meta: dict | None = None) -> dict:
+def _role_columns(path: str, roles: list[str]) -> dict:
     """Physical column names for the engine's canonical roles: identity
     on plain parquet dirs; rename-aware resolution (by field id through
     schema history) on Iceberg tables — see
-    :func:`iceberg.fused_role_columns`.  ``meta`` passes an
-    already-loaded table metadata dict through (no re-read).  The
-    resolution is always against the CURRENT schema: the fused guard
-    (assert_fused_name_safe) has already refused any snapshot whose
-    live files carry other names."""
-    from pathlib import Path
+    :func:`iceberg.fused_role_columns`.  The resolution is always against
+    the CURRENT schema: the fused guard (assert_fused_name_safe) has
+    already refused any snapshot whose live files carry other names."""
     from . import iceberg
     if iceberg.is_iceberg_table(path):
-        return iceberg.fused_role_columns(path, roles, meta=meta)
+        return iceberg.fused_role_columns(path, roles)
     return {r: r for r in roles}
 
 
@@ -533,291 +514,6 @@ def salt_encoded(df_encoded: DataFrame, shards: int | None = None) -> DataFrame:
             .repartition(shards, "_shard").drop("_shard"))
 
 
-def _delete_assignment(dels: list[dict], files: list[str]
-                       ) -> dict[str, list[str]]:
-    """{data file → delete files that may reference it}, planned from the
-    delete manifests' file_path BOUNDS (the reserved-field-id bounds the
-    delete writer records) — metadata only, no delete file is opened.  A
-    delete file lacking bounds is conservatively assigned to every data
-    file."""
-    from . import iceberg
-    spans = []
-    for d in dels:
-        lbs = {e["key"]: e["value"] for e in (d.get("lower_bounds") or [])}
-        ubs = {e["key"]: e["value"] for e in (d.get("upper_bounds") or [])}
-        fid = iceberg._FP_FID
-        if fid in lbs and fid in ubs:
-            spans.append((lbs[fid].decode(), ubs[fid].decode(),
-                          d["file_path"]))
-        else:
-            spans.append((None, None, d["file_path"]))
-    return {f: [p for lo, hi, p in spans
-                if lo is None or lo <= f <= hi] for f in files}
-
-
-def _eq_delete_assignment(table_dir: str, entries: list[dict],
-                          eq_dels: list[dict],
-                          meta: dict | None = None
-                          ) -> dict[str, str | None]:
-    """{data file → JSON [{cols, paths}] of equality-delete files that
-    apply to it} under the v2 sequence rule: a delete applies only to
-    data files with a STRICTLY smaller data sequence number, so rows
-    (re-)appended after the delete survive.  Metadata-only planning; the
-    JSON rides the broadcast work-unit map to the workers."""
-    import json
-    from . import iceberg
-    if meta is None:
-        meta = iceberg._load_metadata(table_dir)
-    groups = iceberg._eq_delete_groups(meta, eq_dels)
-    out: dict[str, str | None] = {}
-    for e in entries:
-        fseq = int(e.get("_sequence_number") or 0)
-        lst = []
-        for cols, ds in groups.items():
-            paths = [d["file_path"] for d in ds
-                     if int(d["_sequence_number"]) > fseq]
-            if paths:
-                lst.append({"cols": list(cols), "paths": paths})
-        out[e["file_path"]] = json.dumps(lst) if lst else None
-    return out
-
-
-def decode_files(spark: SparkSession, path: str,
-                 batch_rows: int = 2048,
-                 snapshot_id: int | None = None,
-                 files: list[str] | None = None,
-                 plan: tuple | None = None) -> DataFrame:
-    """Fused scan→decode, symmetric to :func:`encode_files`: one task per
-    parquet row group of an ENCODED table, read with pyarrow inside the
-    worker — the packed binary columns never enter the JVM row format.
-
-    Decode consumes every row of the encoded table and produces every token,
-    so there is no Catalyst pushdown to lose; skipping the JVM
-    columnar→Arrow conversion removes the decode side's dominant fixed cost
-    (the encode side's measurement in BENCH.md applies symmetrically).
-    Returns (doc_id, source, seg_id, tokens) segments; reassemble split rows
-    with :func:`reassemble_segments` if the table was length-split.
-    ``files`` restricts the decode to an explicit subset — e.g. the
-    output of ``iceberg.prune_files`` for a metadata-planned range
-    decode that never touches the other files.
-
-    Iceberg inputs with DELETES are honored without compaction.
-    POSITION deletes: each work unit knows its row group's FILE row
-    offset (the delete coordinate system), the planner assigns delete
-    files to data files from manifest bounds alone, and the worker reads
-    only the matching coordinate rows (parquet predicate pushdown over
-    the sorted file_path column) and masks them out per Arrow batch
-    BEFORE any kernel call.  EQUALITY deletes: the planner assigns each
-    data file the delete files with a strictly larger sequence number
-    (the v2 rule — later re-appends survive), and the worker loads those
-    keys once per task (cached) and drops matching rows per batch.
-    Scale shape: the per-unit delete read is bounded by the delete-file
-    sizes, not the table's."""
-    import json
-    import pyarrow.parquet as pq
-    from pathlib import Path
-
-    del_map = eq_map = None
-    ice_meta = None
-    from . import iceberg
-    if plan is not None or iceberg.is_iceberg_table(path):
-        # ONE metadata-tree walk covers the name-safety guard, the live
-        # file list, and the delete inventory — at 10^5-10^6 files each
-        # extra walk is a full manifest-tree read.  ``plan`` reuses a
-        # caller's :func:`iceberg.fused_plan` result (guard already run
-        # against it), for zero extra walks
-        ice_meta, entries, all_dels = (
-            plan if plan is not None
-            else iceberg.fused_plan(path, snapshot_id))
-        if files is None:
-            files = [e["file_path"] for e in entries]
-        else:
-            fset = set(files)
-            entries = [e for e in entries if e["file_path"] in fset]
-        if all_dels:
-            pos_dels = [d for d in all_dels if d.get("content", 0) == 1]
-            eq_dels = [d for d in all_dels if d.get("content", 0) == 2]
-            if pos_dels:
-                del_map = _delete_assignment(pos_dels, files)
-            if eq_dels:
-                eq_map = _eq_delete_assignment(path, entries, eq_dels,
-                                               meta=ice_meta)
-    fdf = _rowgroup_units(spark, path, snapshot_id, files)
-    if del_map is not None or eq_map is not None:
-        keys = set(del_map or {}) | set(eq_map or {})
-        dmap = spark.createDataFrame(
-            [(k, (del_map or {}).get(k), (eq_map or {}).get(k))
-             for k in sorted(keys)],
-            "path string, dels array<string>, eq string")
-        fdf = fdf.join(F.broadcast(dmap), "path", "left")
-    else:
-        fdf = (fdf.withColumn("dels", F.lit(None).cast("array<string>"))
-               .withColumn("eq", F.lit(None).cast("string")))
-    fdf = fdf.select("path", "rg", "rg_off", "dels", "eq")
-    cm = _role_columns(path, ["doc_id", "source", "seg_id", "n_tok",
-                              "codec", "widths", "inits", "payload"],
-                       meta=ice_meta)
-    cols = [cm[r] for r in ("doc_id", "source", "seg_id", "n_tok",
-                            "codec", "widths", "inits", "payload")]
-    # equality-delete keys may be columns OUTSIDE the decoded role set
-    # (content_hash is the natural dedup/takedown key): read them too,
-    # appended after the fixed 8 so the decode indices stay stable
-    extra_cols: list[str] = []
-    if eq_map:
-        seen = set(cols)
-        for spec in eq_map.values():
-            for g in (json.loads(spec) if spec else []):
-                for c in g["cols"]:
-                    if c not in seen:
-                        seen.add(c)
-                        extra_cols.append(c)
-    # output under the engine's CANONICAL role names regardless of
-    # storage-level renames — encode_files normalizes the same way, and
-    # reassemble_segments / downstream consumers address doc_id/source/
-    # seg_id by these names
-    out_names = ["doc_id", "source", "seg_id", "tokens"]
-    out_schema = DECODED_SCHEMA
-
-    def _deleted_positions(del_paths, path_, cache: dict):
-        """Sorted deleted positions of one data file; cached per task on
-        (delete paths, data file) — row-group work units of the same file
-        share an assignment, so without the cache every delete file is
-        re-read once PER ROW GROUP on heavily deleted tables."""
-        ck = (tuple(del_paths), path_)
-        if ck not in cache:
-            import pyarrow.dataset as pads
-            dset = pads.dataset(list(del_paths), format="parquet")
-            t = dset.to_table(filter=pads.field("file_path") == path_,
-                              columns=["pos"])
-            cache[ck] = np.sort(
-                t.column("pos").to_numpy(zero_copy_only=False))
-        return cache[ck]
-
-    def _eq_killers(eq_spec: str, cache: dict):
-        """[(key col names, set of deleted key tuples/values)] for one
-        unit; delete-file reads are cached per task (many row groups of
-        one file share the same assignment)."""
-        import pyarrow.dataset as pads
-        out = []
-        for g in json.loads(eq_spec):
-            ck = (tuple(g["cols"]), tuple(g["paths"]))
-            if ck not in cache:
-                t = pads.dataset(g["paths"], format="parquet") \
-                    .to_table(columns=g["cols"])
-                if len(g["cols"]) == 1:
-                    cache[ck] = set(t.column(0).to_pylist())
-                else:
-                    cache[ck] = set(zip(*[t.column(c).to_pylist()
-                                          for c in g["cols"]]))
-            out.append((g["cols"], cache[ck]))
-        return out
-
-    def fn(it):
-        eq_cache: dict = {}
-        pos_cache: dict = {}
-        for batch in it:
-            for path_, rg, rg_off, dels, eq in zip(
-                    batch.column(0).to_pylist(),
-                    batch.column(1).to_pylist(),
-                    batch.column(2).to_pylist(),
-                    batch.column(3).to_pylist(),
-                    batch.column(4).to_pylist()):
-                pf = pq.ParquetFile(path_, pre_buffer=True)
-                dead = (_deleted_positions(dels, path_, pos_cache)
-                        if dels else None)
-                killers = _eq_killers(eq, eq_cache) if eq else None
-                unit_cols = cols
-                if killers:
-                    need = {c for kcols, _ in killers for c in kcols}
-                    missing = sorted(
-                        need - set(pf.schema_arrow.names))
-                    if missing:
-                        raise ValueError(
-                            f"{path_}: equality-delete key column(s) "
-                            f"{missing} are not in this data file "
-                            "(added after the file was written?) — "
-                            "the fused decode cannot evaluate the "
-                            "delete; use read_table, or compact_files "
-                            "to materialize the deletes")
-                    unit_cols = cols + [c for c in extra_cols
-                                        if c in need]
-                cur = rg_off
-                rgs = [rg] if rg >= 0 else None   # -1 = whole-file unit
-                for rb in pf.iter_batches(batch_size=batch_rows,
-                                          row_groups=rgs,
-                                          columns=unit_cols):
-                    rb = rb.select(unit_cols)  # parquet yields file order
-                    n = rb.num_rows
-                    if dead is not None and dead.size:
-                        lo, hi = np.searchsorted(dead, [cur, cur + n])
-                        if hi > lo:
-                            mask = np.ones(n, dtype=bool)
-                            mask[dead[lo:hi] - cur] = False
-                            rb = rb.filter(pa.array(mask))
-                    cur += n
-                    if killers and rb.num_rows:
-                        keep = np.ones(rb.num_rows, dtype=bool)
-                        for kcols, kset in killers:
-                            idxs = [unit_cols.index(c) for c in kcols]
-                            vals = (rb.column(idxs[0]).to_pylist()
-                                    if len(idxs) == 1 else
-                                    zip(*[rb.column(i).to_pylist()
-                                          for i in idxs]))
-                            keep &= np.fromiter(
-                                (v not in kset for v in vals),
-                                dtype=bool, count=rb.num_rows)
-                        if not keep.all():
-                            rb = rb.filter(pa.array(keep))
-                    if rb.num_rows == 0:
-                        continue
-                    tokens_arr = _decode_batch_columns(
-                        rb.column(3), rb.column(4), rb.column(5),
-                        rb.column(6), rb.column(7))
-                    yield pa.RecordBatch.from_arrays(
-                        [rb.column(0), rb.column(1),
-                         rb.column(2).cast(pa.int32()), tokens_arr],
-                        names=out_names)
-
-    return fdf.mapInArrow(fn, schema=out_schema)
-
-
-def decode_incremental(spark: SparkSession, path: str,
-                       since_snapshot_id: int,
-                       to_snapshot_id: int | None = None,
-                       batch_rows: int = 2048,
-                       _preplanned: tuple | None = None) -> DataFrame:
-    """Fused decode of ONLY the data appended to an Iceberg table after
-    ``since_snapshot_id`` (a snapshot cursor the caller saved from its
-    previous run) — metadata-only planning via
-    :func:`iceberg.incremental_files`, then :func:`decode_files` on the
-    file subset.  The per-run consumption unit of a recurring pipeline
-    at 100 TB: a run's cost scales with what LANDED, not the table.
-    Raises on non-append history in the range (the caller re-seeds from
-    a full read).  Empty range returns an empty segments frame."""
-    from . import iceberg
-    if _preplanned is not None:
-        fplan, inc = _preplanned
-    else:
-        if to_snapshot_id is None:
-            # pin "current" ONCE so the file plan and the decode cannot
-            # resolve it to different snapshots when an append races in
-            to_snapshot_id = iceberg._load_metadata(path)[
-                "current-snapshot-id"]
-        # ONE manifest-tree walk serves the cursor diff AND the decode
-        # plan — incremental consumers are exactly the
-        # long-manifest-chain tables where each walk is expensive
-        fplan = iceberg.fused_plan(path, to_snapshot_id)
-        inc = iceberg.incremental_files(path, since_snapshot_id,
-                                        to_snapshot_id,
-                                        preloaded=(fplan[0], fplan[1]))
-    if not inc:
-        return spark.createDataFrame([], DECODED_SCHEMA)
-    return decode_files(spark, path, batch_rows=batch_rows,
-                        snapshot_id=to_snapshot_id,
-                        files=[d["file_path"] for d in inc],
-                        plan=fplan)
-
-
 # ---------------------------------------------------------------------------
 # decode
 # ---------------------------------------------------------------------------
@@ -861,9 +557,7 @@ def _decode_batch_flat(n_tok_col: pa.Array, codec_col: pa.Array,
 def _decode_batch_columns(n_tok_col: pa.Array, codec_col: pa.Array,
                           widths_col: pa.Array, inits_col: pa.Array,
                           payload_col: pa.Array) -> pa.Array:
-    """Shared decode core: encoded Arrow columns → tokens list<int32> array.
-    Used by both the scan-based :func:`decode` and the fused
-    :func:`decode_files` paths."""
+    """Decode core: encoded Arrow columns → tokens list<int32> array."""
     out, n_toks = _decode_batch_flat(n_tok_col, codec_col, widths_col,
                                      inits_col, payload_col)
     return _list_from_flat(out.view(np.int32), n_toks)
@@ -886,27 +580,34 @@ def _bare_scan_plan(df: DataFrame) -> bool:
 def decode(df_encoded: DataFrame, reassemble: bool = True) -> DataFrame:
     """encoded table → tokens table (doc_id, source, tokens, n_tok).
 
-    reassemble=False keeps (doc_id, seg_id, tokens) segments and skips the
-    groupBy shuffle — use when no row exceeded the split threshold.
+    The ONLY decoder: every encoded read is a DataFrame handed to this
+    function — ``iceberg.read_table(...)`` for Iceberg tables (snapshot,
+    ref, ``between=`` / ``since_snapshot_id=`` ranges and v2 deletes are
+    resolved there), ``spark.read.parquet`` or ``manifest.read_encoded``
+    for plain directories.  Columns are addressed by their canonical
+    names (doc_id, source, seg_id, n_tok, codec, widths, inits, payload);
+    a table whose role columns were renamed is renamed back by the
+    caller (``withColumnsRenamed``).
 
-    reassemble=True avoids the groupBy when it can PROVE it is a no-op:
-    if the input is a bare scan (cheap to re-read — never an arbitrary
-    subtree), a one-pass probe of (max seg_id, count, distinct doc_ids)
-    checks that every doc is a single segment; the reassembly shuffle of
-    full token arrays is then dropped from the plan (guide §2.4 "remove
-    shuffles outright").
+    reassemble=False returns one row per stored segment — (doc_id,
+    source, seg_id, tokens, n_tok) — with no shuffle: use it when no row
+    exceeded the split threshold, or when the consumer works per
+    segment.
+
+    reassemble=True avoids the reassembly when it can PROVE it is a
+    no-op: if the input is a bare scan (cheap to re-read — never an
+    arbitrary subtree), a one-pass probe of (max seg_id, count, distinct
+    doc_ids) checks that every doc is a single segment, and the shuffle
+    is then dropped from the plan.
 
     When reassembly IS needed, the shuffle moves the COMPRESSED segments
     (repartition by doc_id + sort by seg_id, decode-and-concatenate
     post-shuffle in one vectorized pass) rather than decoded 32-bit
-    arrays — 3-16× fewer bytes across the exchange and no
-    ObjectHashAggregate/array_sort/flatten over token arrays (guide §2.3
-    / §8: "make every shuffle but the last operate on a lightweight
-    proxy").  Concatenation in seg_id order is just merged row lengths
-    over the already-ordered flat decode buffer.  Note: rows with a
-    DUPLICATE (doc_id, seg_id) — malformed input the writer never emits
-    — concatenate in partition order rather than the old struct-sort's
-    content order."""
+    arrays — 3-16× fewer bytes across the exchange.  Concatenation in
+    seg_id order is just merged row lengths over the already-ordered
+    flat decode buffer.  Rows with a DUPLICATE (doc_id, seg_id) —
+    malformed input the writer never emits — concatenate in partition
+    order."""
     cols = ["doc_id", "source", "seg_id", "n_tok", "codec", "widths",
             "inits", "payload"]
     src = df_encoded.select(*cols)
@@ -1017,21 +718,6 @@ def _decode_reassembled(src: DataFrame) -> DataFrame:
     out = srt.mapInArrow(
         fn, schema="doc_id string, source string, tokens array<int>")
     return out.withColumn("n_tok", F.size("tokens"))
-
-
-def reassemble_segments(dec: DataFrame) -> DataFrame:
-    """(doc_id, seg_id, tokens) segments → whole-document rows, segments
-    concatenated in seg_id order — the groupBy half of :func:`decode`,
-    public for :func:`decode_files` consumers (the fused path returns
-    segments so the shuffle is opt-in)."""
-    return (
-        dec.groupBy("doc_id")
-        .agg(F.first("source").alias("source"),
-             F.flatten(F.transform(
-                 F.array_sort(F.collect_list(F.struct("seg_id", "tokens"))),
-                 lambda s: s.tokens)).alias("tokens"))
-        .withColumn("n_tok", F.size("tokens"))
-    )
 
 
 def point_lookup(df_encoded: DataFrame, index_col: str = "lookup_idx"

@@ -1194,10 +1194,10 @@ def rename_column(table_dir: str, old: str, new: str) -> dict:
     old name serves the renamed column's data (and an equality-delete
     file keyed on the old name still applies: its key columns are also
     id-resolved).  Partition source columns refuse (the spec names the
-    partition path layout after them).  The file-level fused paths
-    (engine.encode_files / decode_files) address physical columns by
-    name and refuse a renamed table — read_table remains the full-
-    fidelity reader (see assert_fused_name_safe)."""
+    partition path layout after them).  The fused ingest
+    (engine.encode_files) addresses physical columns by name and
+    refuses a renamed table until its files are rewritten — read_table
+    remains the full-fidelity reader (see assert_fused_name_safe)."""
     def mutate(meta, cur):
         by_name = {f["name"]: f for f in cur["fields"]}
         if old not in by_name:
@@ -1274,10 +1274,10 @@ def assert_fused_name_safe(table_dir: str,
                            snapshot_id: int | None = None,
                            preloaded: tuple[dict, list[dict]] | None = None
                            ) -> None:
-    """Refuse the file-level fused paths on tables whose LIVE data files
+    """Refuse the file-level fused ingest on tables whose LIVE data files
     may carry columns under names the CURRENT schema does not mean: the
-    fused Arrow readers (engine.encode_files / decode_files) address
-    physical parquet columns BY NAME.  Each live file's WRITE schema is
+    fused Arrow reader (engine.encode_files) addresses physical parquet
+    columns BY NAME.  Each live file's WRITE schema is
     resolved through its snapshot's recorded schema-id; a file whose
     write schema gave a shared field id a different name or type
     (rename / promote), or used a current name for a DIFFERENT field id
@@ -1291,7 +1291,7 @@ def assert_fused_name_safe(table_dir: str,
 
     ``preloaded=(meta, data_entries)`` skips the metadata-tree walk —
     callers that already hold a :func:`_snapshot_entries` result (the
-    fused planners, via :func:`fused_plan`) must not pay a second full
+    fused planner, via :func:`fused_plan`) must not pay a second full
     manifest read at 10^5-10^6 files just for the guard."""
     if preloaded is not None:
         meta, data = preloaded
@@ -1345,13 +1345,12 @@ def assert_fused_name_safe(table_dir: str,
 
 def fused_plan(table_dir: str, snapshot_id: int | None = None
                ) -> tuple[dict, list[dict], list[dict]]:
-    """ONE metadata-tree walk for the fused file-level paths: returns
-    ``(meta, data_entries, delete_entries)`` from a single
-    :func:`_snapshot_entries` read and runs :func:`assert_fused_name_safe`
-    against that same result.  The fused planners (engine.encode_files /
-    decode_files) previously stacked guard + delete_files + data_files —
-    three independent full manifest reads per call; at the 10^5-10^6-file
-    scale this module targets, planning I/O tripled for nothing."""
+    """ONE metadata-tree walk for the fused ingest planner
+    (engine.encode_files): returns ``(meta, data_entries,
+    delete_entries)`` from a single :func:`_snapshot_entries` read and
+    runs :func:`assert_fused_name_safe` against that same result, rather
+    than three independent full manifest reads (guard, delete_files,
+    data_files) per call."""
     meta, data, dels = _snapshot_entries(table_dir, snapshot_id)
     assert_fused_name_safe(table_dir, snapshot_id,
                            preloaded=(meta, data))
@@ -1361,8 +1360,7 @@ def fused_plan(table_dir: str, snapshot_id: int | None = None
 def refuse_raw_scan_on_deletes(table_dir: str, dels: list[dict]) -> None:
     """Raise when a snapshot carries delete files and the caller is a raw
     file-level scan that would resurrect deleted rows.  Shared by
-    :func:`data_files` and the fused planners that handle deletes
-    themselves only in some modes."""
+    :func:`data_files` and the fused ingest planner."""
     if dels:
         npos = sum(1 for d in dels if d.get("content", 0) == 1)
         raise NotImplementedError(
@@ -1371,14 +1369,13 @@ def refuse_raw_scan_on_deletes(table_dir: str, dels: list[dict]) -> None:
             "file-level scan would resurrect deleted rows. Read via "
             "iceberg.read_table (applies the deletes), or run "
             "iceberg.compact_files first for file-level consumers "
-            "(fused encode/decode).")
+            "(engine.encode_files).")
 
 
-def fused_role_columns(table_dir: str, roles: list[str],
-                       meta: dict | None = None) -> dict:
+def fused_role_columns(table_dir: str, roles: list[str]) -> dict:
     """Map the engine's canonical role-column names (``doc_id``,
     ``payload``, …) to the table's CURRENT physical names, following
-    renames through field ids.  Used by the fused file-level paths after
+    renames through field ids.  Used by the fused ingest after
     :func:`assert_fused_name_safe` — once that guard passes, live files
     carry the current schema's names, so resolving roles against the
     current schema is exactly what reads the right physical columns.
@@ -1394,8 +1391,7 @@ def fused_role_columns(table_dir: str, roles: list[str],
     ``doc_id`` on the SOURCE field — resolving by name there would read
     source values as doc ids with no error.  A role whose field was
     dropped (and never re-added) raises."""
-    if meta is None:
-        meta = _load_metadata(table_dir)
+    meta = _load_metadata(table_dir)
     cur = _current_schema(meta)
     cur_by_id = {f["id"]: f["name"] for f in cur["fields"]}
     history = sorted(meta["schemas"], key=lambda s: s.get("schema-id", 0))
@@ -1593,8 +1589,8 @@ def data_files(table_dir: str, snapshot_id: int | None = None,
 
     If the snapshot carries DELETE files (position or equality) this
     raises unless ``ignore_deletes=True``: callers that hand the returned
-    paths straight to a parquet scan (the fused encode/decode paths)
-    would silently resurrect deleted rows.  Row-aware readers go through
+    paths straight to a parquet scan (the fused ingest) would silently
+    resurrect deleted rows.  Row-aware readers go through
     :func:`read_table` (which applies the deletes) or
     :func:`compact_files` (which rewrites them away)."""
     _, data, dels = _snapshot_entries(table_dir, snapshot_id)
@@ -1784,32 +1780,39 @@ def read_table_with_pos(spark: SparkSession, table_dir: str,
 def read_table(spark: SparkSession, table_dir: str,
                snapshot_id: int | None = None,
                between: tuple | None = None,
-               ref: str | None = None) -> DataFrame:
+               ref: str | None = None,
+               since_snapshot_id: int | None = None) -> DataFrame:
     """Load an Iceberg table's current (or a historic) snapshot as a
     DataFrame.  File pruning happens at the metadata layer — only the
     snapshot's live files are handed to the parquet scan.  ``between =
     (col, lo, hi)`` additionally prunes files via the manifest column
     bounds (:func:`prune_files`) and applies the exact row filter on
     top (the pruning is a superset guarantee, the filter the truth).
-    DELETE files in the snapshot are applied — position deletes by
-    anti-join on the (file, row-ordinal) coordinates, equality deletes
-    by null-safe key anti-join under the sequence-number rule; both
-    broadcast when small.  ``ref`` reads the snapshot a named tag (or
-    ``"main"``) points at — mutually exclusive with ``snapshot_id``."""
+    ``since_snapshot_id`` restricts the scan to the files appended after
+    that snapshot cursor, up to the read snapshot
+    (:func:`incremental_files`: raises on non-append history in the
+    range).  DELETE files in the snapshot are applied — position deletes
+    by anti-join on the (file, row-ordinal) coordinates, equality
+    deletes by null-safe key anti-join under the sequence-number rule;
+    both broadcast when small.  ``ref`` reads the snapshot a named tag
+    (or ``"main"``) points at — mutually exclusive with
+    ``snapshot_id``.  Encoded tables decode with ``engine.decode``."""
     if ref is not None:
         if snapshot_id is not None:
             raise ValueError("pass ref OR snapshot_id, not both")
         snapshot_id = resolve_ref(table_dir, ref)
     meta, data, dels = _snapshot_entries(table_dir, snapshot_id)
+    # range filters reuse THIS walk's entries — a second walk would
+    # re-open every manifest avro
+    files = data
+    if since_snapshot_id is not None:
+        files = incremental_files(table_dir, since_snapshot_id,
+                                  snapshot_id, preloaded=(meta, files))
     if between is not None:
         col, lo, hi = between
-        # reuse THIS walk's entries — a second data_files walk would
-        # re-open every manifest avro
         files = prune_files(table_dir, col, lo, hi, snapshot_id,
                             ignore_deletes=True,
-                            preloaded=(meta, data))
-    else:
-        files = data
+                            preloaded=(meta, files))
     paths = [d["file_path"] for d in files]
     if not paths:
         return spark.createDataFrame([], _spark_ddl(table_dir))
@@ -2307,10 +2310,9 @@ def compact_files(spark: SparkSession, table_dir: str) -> dict:
     carry-forward.
 
     After compaction the current snapshot has no delete files, so the
-    fused file-level paths (engine.encode_files / decode_files) accept
-    the table again.  Earlier snapshots still time-travel (their delete
-    files stay referenced until expire_snapshots + remove_orphan_files
-    reclaim them).  Returns ``{"meta", "rewritten_files", "kept_files",
+    fused ingest (engine.encode_files) accepts the table again.  Earlier
+    snapshots still time-travel (their delete files stay referenced
+    until expire_snapshots + remove_orphan_files reclaim them).  Returns ``{"meta", "rewritten_files", "kept_files",
     "removed_delete_files"}``; no commit when the table has no
     deletes."""
     prev_meta, data, dels = _snapshot_entries(table_dir)

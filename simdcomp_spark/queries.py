@@ -1435,8 +1435,8 @@ def q_iceberg_incremental(spark, sf_dir):
     """Incremental snapshot-range consumption: the orders tokens table is
     published in TWO appends (even-custkey docs, then odd), and the query
     decodes ONLY the files added after the first append's snapshot —
-    iceberg.incremental_files (a metadata-only cursor walk) feeding
-    engine.decode_incremental (fused decode of the file subset).  This is
+    iceberg.read_table(since_snapshot_id=) (a metadata-only cursor walk
+    over incremental_files) feeding engine.decode.  This is
     the per-run unit of a recurring 100 TB ingest: run cost scales with
     what LANDED since the saved cursor, not with the table.  Raises if
     the incremental plan failed to skip the first batch's files, so the
@@ -1461,8 +1461,8 @@ def q_iceberg_incremental(spark, sf_dir):
         raise AssertionError(
             f"incremental plan did not skip the first batch "
             f"({len(inc)} of {n_all} files)")
-    dec = engine.reassemble_segments(
-        engine.decode_incremental(spark, table, cursor))
+    dec = engine.decode(
+        iceberg.read_table(spark, table, since_snapshot_id=cursor))
     ex = dec.select(F.col("doc_id").cast("long").alias("o_custkey"),
                     F.posexplode("tokens").alias("pos", "tok"))
     return ex.select("o_custkey", F.col("pos").cast("int").alias("pos"),
@@ -1506,7 +1506,7 @@ def q_iceberg_wap(spark, sf_dir):
     """Write-audit-publish: the odd-custkey batch is STAGED on a branch
     (the gate asserts main still serves only the even batch while the
     audit ref already sees both), then fast_forward publishes it in one
-    metadata swap and the fused decode of main must reproduce the full
+    metadata swap and the decode of main must reproduce the full
     table.  Oracle: all orders rows."""
     import os
     from . import iceberg
@@ -1527,7 +1527,7 @@ def q_iceberg_wap(spark, sf_dir):
     if iceberg.read_table(spark, table, ref="audit").count() <= n_main:
         raise AssertionError("audit ref does not see the staged batch")
     iceberg.fast_forward(table, "audit")
-    dec = engine.reassemble_segments(engine.decode_files(spark, table))
+    dec = engine.decode(iceberg.read_table(spark, table))
     ex = dec.select(F.col("doc_id").cast("long").alias("o_custkey"),
                     F.posexplode("tokens").alias("pos", "tok"))
     return ex.select("o_custkey", F.col("pos").cast("int").alias("pos"),
@@ -1540,7 +1540,7 @@ def q_iceberg_maintenance(spark, sf_dir):
     rewrite_manifests (one-manifest-per-append chain → 1, asserted),
     expire_snapshots (history trimmed to the rewrite snapshot), and
     remove_orphan_files(age 0) (replaced manifests + expired manifest
-    lists swept from metadata/, asserted) — after all of which the fused
+    lists swept from metadata/, asserted) — after all of which the
     decode must still match the SQL oracle over raw orders exactly."""
     import os
     from . import iceberg
@@ -1562,7 +1562,7 @@ def q_iceberg_maintenance(spark, sf_dir):
     swept = iceberg.remove_orphan_files(table, older_than_s=0)
     if not any(s.endswith(".avro") for s in swept):
         raise AssertionError("orphan sweep reclaimed no metadata avros")
-    dec = engine.reassemble_segments(engine.decode_files(spark, table))
+    dec = engine.decode(iceberg.read_table(spark, table))
     ex = dec.select(F.col("doc_id").cast("long").alias("o_custkey"),
                     F.posexplode("tokens").alias("pos", "tok"))
     return ex.select("o_custkey", F.col("pos").cast("int").alias("pos"),
@@ -1577,9 +1577,9 @@ def q_iceberg_eq_delete(spark, sf_dir):
     then a subset (custkey % 10 == 2) RE-APPENDED — the v2 sequence rule
     says equality deletes apply only to data files with a strictly
     smaller sequence number, so the re-appended docs must survive
-    (asserted).  The result is produced by the FUSED decode_files path,
-    which masks equality-deleted rows per Arrow batch before any kernel
-    call, and must match the SQL oracle's complementary predicate."""
+    (asserted).  The result is read_table (which anti-joins the
+    equality-deleted keys under the sequence rule) → engine.decode, and
+    must match the SQL oracle's complementary predicate."""
     import os
     from . import iceberg
     base = _stream_tmp(sf_dir, "iceeqdel")
@@ -1604,7 +1604,7 @@ def q_iceberg_eq_delete(spark, sf_dir):
             "cast(doc_id as bigint) % 10 = 2").count() == 0:
         raise AssertionError(
             "sequence rule violated: re-appended docs were deleted")
-    dec = engine.reassemble_segments(engine.decode_files(spark, table))
+    dec = engine.decode(iceberg.read_table(spark, table))
     ex = dec.select(F.col("doc_id").cast("long").alias("o_custkey"),
                     F.posexplode("tokens").alias("pos", "tok"))
     return ex.select("o_custkey", F.col("pos").cast("int").alias("pos"),
@@ -1743,8 +1743,8 @@ def q_streaming_iceberg_ingest(spark, sf_dir):
     from its checkpoint), each micro-batch committed as one Iceberg
     snapshot stamped with its (query-id, batch-id); a deliberate replay
     of an already-committed batch is asserted in-query to be a no-op
-    (no new snapshot).  The final table is read through the FUSED
-    decode path and must match the batch SQL oracle — proving the
+    (no new snapshot).  The final table is read through
+    read_table → engine.decode and must match the batch SQL oracle — proving the
     streaming sink, the idempotence guard, and the table stack compose
     bit-identically."""
     import os
@@ -1770,7 +1770,7 @@ def q_streaming_iceberg_ingest(spark, sf_dir):
             p1, 0, table, qid, codec="auto") is not None \
             or len(iceberg.snapshots(table)) != n_snaps:
         raise AssertionError("replayed batch was not a no-op")
-    dec = engine.reassemble_segments(engine.decode_files(spark, table))
+    dec = engine.decode(iceberg.read_table(spark, table))
     ex = dec.select(F.col("doc_id").cast("long").alias("o_custkey"),
                     F.posexplode("tokens").alias("pos", "tok"))
     return ex.select("o_custkey", F.col("pos").cast("int").alias("pos"),

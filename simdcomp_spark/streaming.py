@@ -128,7 +128,7 @@ def start_encode_stream_iceberg(spark: SparkSession, in_dir: str,
     (one snapshot per micro-batch, idempotent on replay — see
     :func:`commit_encoded_stream_batch`).  Unifies the streaming path
     with the table stack: the result is an ordinary Iceberg table —
-    time travel across triggers, fused decode, dedup-delete, compaction
+    time travel across triggers, decode, dedup-delete, compaction
     and expiry all apply.  ``rewrite_every=N`` folds manifest
     maintenance into the sink: after every Nth batch commit the
     accumulated one-manifest-per-snapshot chain is consolidated
@@ -239,8 +239,7 @@ def windowed_token_rate(stream_df: DataFrame, ts_col: str = "ts",
 
 
 def consume_incremental(spark: SparkSession, table_dir: str,
-                        cursor_path: str, process,
-                        batch_rows: int = 2048) -> dict:
+                        cursor_path: str, process) -> dict:
     """One exactly-once-per-range pull of everything appended to an
     encoded Iceberg table since the saved cursor — the CONSUMER half of
     the exactly-once streaming/resumable sinks above: a downstream job
@@ -250,7 +249,9 @@ def consume_incremental(spark: SparkSession, table_dir: str,
     Protocol: read the snapshot cursor from ``cursor_path`` (absent =
     never ran → the full table is the first range), plan the appended
     files metadata-only (:func:`iceberg.incremental_files`), run
-    ``process(decoded_segments_df)``, and advance the cursor via atomic
+    ``process(decoded_segments_df)`` — ``engine.decode(...,
+    reassemble=False)`` over ``iceberg.read_table(since_snapshot_id=)``,
+    one row per stored segment — and advance the cursor via atomic
     tmp+rename ONLY after ``process`` returns.  A crash inside
     ``process`` leaves the cursor untouched, so the next call replays
     the SAME range — at-least-once delivery; ``process`` must be
@@ -283,23 +284,18 @@ def consume_incremental(spark: SparkSession, table_dir: str,
         return {"from_snapshot": cur, "to_snapshot": to_id,
                 "files": 0, "snapshots": 0}
     if cur is None or cur == -1:   # never ran, or seeded on empty table
-        df = engine.decode_files(spark, table_dir, snapshot_id=to_id,
-                                 batch_rows=batch_rows)
+        since = None
         nfiles, nsnaps = -1, len(meta["snapshots"])
     else:
-        # ONE manifest-tree walk serves the cursor diff AND the decode
-        # plan — this loop runs on exactly the long-manifest-chain
-        # tables where each walk is expensive
-        fplan = iceberg.fused_plan(table_dir, to_id)
-        inc = iceberg.incremental_files(table_dir, cur, to_id,
-                                        preloaded=(fplan[0], fplan[1]))
+        since = cur
         order = {s["snapshot-id"]: i
                  for i, s in enumerate(meta["snapshots"])}
-        nfiles, nsnaps = len(inc), order[to_id] - order[cur]
-        df = engine.decode_incremental(
-            spark, table_dir, cur, to_id, batch_rows=batch_rows,
-            _preplanned=(fplan, inc))
-    process(df)
+        nfiles = len(iceberg.incremental_files(table_dir, cur, to_id))
+        nsnaps = order[to_id] - order[cur]
+    process(engine.decode(
+        iceberg.read_table(spark, table_dir, snapshot_id=to_id,
+                           since_snapshot_id=since),
+        reassemble=False))
     fd, tmp = tempfile.mkstemp(dir=str(Path(cursor_path).parent),
                                prefix=".cursor.")
     with os.fdopen(fd, "w") as f:

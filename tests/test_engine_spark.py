@@ -138,28 +138,30 @@ def test_encode_files_fused_path(spark, unit_df, tmp_path):
     assert a == b
 
 
-def test_decode_files_fused_path(spark, unit_df, tmp_path):
-    """The fused pyarrow-in-worker decode must reproduce the scan-based
-    decode exactly, including mixed-codec encoded tables and the
-    shard-partitioned resumable layout."""
+def test_decode_plain_dirs_and_resumable_layout(spark, unit_df, tmp_path):
+    """Plain encoded directories decode through spark.read.parquet →
+    decode: segments (reassemble=False) carry seg_id + n_tok, and both a
+    length-split table and the shard-partitioned resumable layout
+    (manifest.read_encoded) round-trip to the input rows."""
     enc_dir = str(tmp_path / "enc")
     enc = engine.encode(unit_df, codec="auto", split_threshold=1 << 14)
     enc.write.parquet(enc_dir)
-    a = {(r["doc_id"], r["seg_id"]): r["tokens"]
-         for r in engine.decode_files(spark, enc_dir).collect()}
-    b = {(r["doc_id"], r["seg_id"]): r["tokens"]
-         for r in engine.decode(spark.read.parquet(enc_dir),
-                                reassemble=False).collect()}
-    assert a == b
+    segs = engine.decode(spark.read.parquet(enc_dir), reassemble=False)
+    assert {"seg_id", "n_tok"} <= set(segs.columns)
+    truth = {r["doc_id"]: r["tokens"] for r in unit_df.collect()}
+    parts: dict = {}
+    for r in segs.collect():
+        assert r["n_tok"] == len(r["tokens"]) <= 1 << 14
+        parts.setdefault(r["doc_id"], []).append((r["seg_id"], r["tokens"]))
+    assert {d: [t for _, s in sorted(v) for t in s]
+            for d, v in parts.items()} == truth
+    dec = engine.decode(spark.read.parquet(enc_dir), reassemble=True)
+    assert engine.verify_roundtrip(unit_df, dec) == 0
     # partitioned (resumable) layout
     out = str(tmp_path / "resumable")
     manifest.encode_resumable(unit_df, out, codec="d1", shards=4)
-    dec = engine.decode_files(spark, f"{out}/data")
-    got = {(r["doc_id"], r["seg_id"]): r["tokens"] for r in dec.collect()}
-    want = {(r["doc_id"], r["seg_id"]): r["tokens"]
-            for r in engine.decode(manifest.read_encoded(spark, out),
-                                   reassemble=False).collect()}
-    assert got == want
+    dec = engine.decode(manifest.read_encoded(spark, out), reassemble=True)
+    assert engine.verify_roundtrip(unit_df, dec) == 0
 
 
 def test_encode_resumable_iceberg_crash_resume(spark, unit_df, tmp_path,
@@ -270,23 +272,29 @@ def test_encode_files_resumable_iceberg_crash_resume(spark, unit_df,
         manifest.encode_files_resumable_iceberg(spark, other, table)
 
 
-def test_decode_files_pruned_subset(spark, unit_df, tmp_path):
-    """prune_files → decode_files(files=...): a metadata-planned range
-    decode touches ONLY the pruned files and round-trips their rows."""
+def test_read_table_between_decodes_pruned_subset(spark, unit_df,
+                                                  tmp_path):
+    """read_table(between=) → decode: a metadata-planned range decode
+    scans ONLY the files whose doc_id bounds overlap the range and
+    round-trips exactly the rows inside it."""
     from simdcomp_spark import iceberg
     table = str(tmp_path / "tbl")
     enc = engine.encode(unit_df.orderBy("doc_id").repartitionByRange(
         4, "doc_id"), codec="bitpack", split_threshold=None)
     iceberg.export_encoded(enc, table)
-    files = iceberg.data_files(table)
-    subset = [d["file_path"] for d in files[:2]]
-    dec = engine.decode_files(spark, table, files=subset)
     import pyarrow.parquet as pq
-    want = sum(pq.ParquetFile(f).metadata.num_rows for f in subset)
-    assert dec.count() == want
+    files = iceberg.data_files(table)
+    lo, hi = min((min(ids), max(ids)) for ids in (
+        pq.read_table(d["file_path"], columns=["doc_id"])
+        .column(0).to_pylist() for d in files))
+    pruned = iceberg.prune_files(table, "doc_id", lo, hi)
+    assert len(pruned) < len(files)
+    df = iceberg.read_table(spark, table, between=("doc_id", lo, hi))
+    assert len(df.inputFiles()) == len(pruned)
+    dec = engine.decode(df, reassemble=False)
     got = {r["doc_id"]: r["tokens"] for r in dec.collect()}
     truth = {r["doc_id"]: r["tokens"] for r in unit_df.collect()}
-    assert got and all(truth[k] == v for k, v in got.items())
+    assert got == {k: v for k, v in truth.items() if lo <= k <= hi}
 
 
 def test_expire_snapshots_and_orphan_cleanup_preserve_resume(
@@ -398,9 +406,9 @@ def test_rowgroup_units_exceed_partitions(spark, tmp_path):
     pq.write_table(tbl, src / "part-0.parquet", row_group_size=rg_rows)
 
     # r7 small-input fast path: one small file → ONE whole-file unit
-    # (rg = -1, workers iterate row groups in file order from rg_off 0)
+    # (rg = -1, workers iterate its row groups in file order)
     fast = engine._rowgroup_units(spark, str(src)).collect()
-    assert [(r["rg"], r["rg_off"]) for r in fast] == [(-1, 0)]
+    assert [tuple(r) for r in fast] == [(str(src / "part-0.parquet"), -1)]
 
     # large files must take the distributed row-group planning path:
     # pretend the file stats big so the fast path declines
@@ -743,8 +751,8 @@ def test_resumable_ingest_final_manifest_rewrite(spark, unit_df, tmp_path):
 
 def test_decode_single_segment_shortcut_r7(spark, tmp_path):
     """r7: decode(reassemble=True) over a bare scan of a provably
-    single-segment table drops the reassembly exchange; split tables and
-    duplicate-doc tables keep the exact groupBy path."""
+    single-segment table drops the reassembly exchange; split tables
+    keep the exchange.  Both reproduce the input rows exactly."""
     from pyspark.sql import functions as F
 
     rows = [(f"d{i}", "s", list(range(i % 9 + 1))) for i in range(300)]
@@ -759,11 +767,10 @@ def test_decode_single_segment_shortcut_r7(spark, tmp_path):
     fast = engine.decode(enc2, reassemble=True)
     assert "Exchange" not in fast._jdf.queryExecution() \
         .executedPlan().toString()
-    slow = engine.reassemble_segments(
-        engine.decode(enc2, reassemble=False).drop("n_tok"))
     norm = lambda d: sorted((r["doc_id"], r["source"], tuple(r["tokens"]),
                              r["n_tok"]) for r in d.collect())
-    assert norm(fast) == norm(slow)
+    want = norm(df.select("doc_id", "source", "tokens", "n_tok"))
+    assert norm(fast) == want
 
     # split table: shortcut must NOT fire, rows reassemble exactly
     enc_s = engine.encode(df, codec="auto", split_threshold=4)
@@ -772,5 +779,4 @@ def test_decode_single_segment_shortcut_r7(spark, tmp_path):
     dec_s = engine.decode(spark.read.parquet(ps), reassemble=True)
     assert "Exchange" in dec_s._jdf.queryExecution() \
         .executedPlan().toString()
-    assert norm(dec_s) == norm(df.select("doc_id", "source", "tokens",
-                                         "n_tok"))
+    assert norm(dec_s) == want

@@ -379,8 +379,8 @@ def test_fused_encode_reads_iceberg_input(spark, unit_df, tmp_path):
 
 
 def test_fused_decode_reads_encoded_iceberg_table(spark, unit_df, tmp_path):
-    """decode_files over an exported ENCODED Iceberg table plans from
-    metadata: appended snapshots are all read, orphans are not, and
+    """read_table → decode over an exported ENCODED Iceberg table plans
+    from metadata: appended snapshots are all read, orphans are not, and
     time travel decodes the historic snapshot."""
     import shutil
 
@@ -395,12 +395,13 @@ def test_fused_decode_reads_encoded_iceberg_table(spark, unit_df, tmp_path):
     live = [d["file_path"] for d in iceberg.data_files(table)]
     shutil.copy(live[0], str(Path(table) / "data" / "orphan.parquet"))
 
-    dec = engine.decode_files(spark, table)
+    dec = engine.decode(iceberg.read_table(spark, table), reassemble=False)
     assert dec.count() == unit_df.count()
     a = {r["doc_id"]: r["tokens"] for r in dec.collect()}
     b = {r["doc_id"]: r["tokens"] for r in unit_df.collect()}
     assert a == b
-    dec1 = engine.decode_files(spark, table, snapshot_id=snap1)
+    dec1 = engine.decode(iceberg.read_table(spark, table, snapshot_id=snap1),
+                         reassemble=False)
     assert dec1.count() == enc1.count()
 
 
@@ -900,8 +901,9 @@ def _docs(spark, lo, hi):
 
 def test_incremental_files_append_ranges(spark, tmp_path):
     """incremental_files returns exactly the files the in-range appends
-    added (a metadata-only cursor walk), decode_incremental decodes only
-    those rows, and an at-cursor range is empty."""
+    added (a metadata-only cursor walk), read_table(since_snapshot_id=)
+    → decode decodes only those rows, and an at-cursor range is
+    empty."""
     t = str(tmp_path / "t")
     enc = lambda df: engine.encode(df, codec="bitpack",  # noqa: E731
                                    split_threshold=None)
@@ -913,18 +915,18 @@ def test_incremental_files_append_ranges(spark, tmp_path):
 
     inc = iceberg.incremental_files(t, s1)
     assert inc and len(inc) < len(iceberg.data_files(t))
-    dec = engine.reassemble_segments(
-        engine.decode_incremental(spark, t, s1))
+    dec = engine.decode(iceberg.read_table(spark, t, since_snapshot_id=s1))
     assert engine.verify_roundtrip(_docs(spark, 8, 20), dec) == 0
     # bounded range [s1, s2]: only the middle batch
-    dec_mid = engine.reassemble_segments(
-        engine.decode_incremental(spark, t, s1, to_snapshot_id=s2))
+    dec_mid = engine.decode(iceberg.read_table(
+        spark, t, snapshot_id=s2, since_snapshot_id=s1))
     assert engine.verify_roundtrip(_docs(spark, 8, 14), dec_mid) == 0
     # at-cursor: nothing landed
     assert iceberg.incremental_files(t, iceberg.snapshots(t)[-1]
                                      ["snapshot-id"]) == []
-    assert engine.decode_incremental(
-        spark, t, iceberg.snapshots(t)[-1]["snapshot-id"]).count() == 0
+    assert engine.decode(iceberg.read_table(
+        spark, t, since_snapshot_id=iceberg.snapshots(t)[-1]
+        ["snapshot-id"])).count() == 0
 
 
 def test_incremental_files_refuses_non_append_history(spark, tmp_path):
@@ -940,11 +942,12 @@ def test_incremental_files_refuses_non_append_history(spark, tmp_path):
     iceberg.delete_where(spark, t, "doc_id = 'd003'")
     with pytest.raises(ValueError, match="non-append"):
         iceberg.incremental_files(t, s1)
+    with pytest.raises(ValueError, match="non-append"):
+        iceberg.read_table(spark, t, since_snapshot_id=s1)
     # cursor AFTER the delete: appends since then are cleanly consumable
     s2 = iceberg.snapshots(t)[-1]["snapshot-id"]
     iceberg.append(enc(_docs(spark, 8, 12)), t)
-    dec = engine.reassemble_segments(
-        engine.decode_incremental(spark, t, s2))
+    dec = engine.decode(iceberg.read_table(spark, t, since_snapshot_id=s2))
     assert engine.verify_roundtrip(_docs(spark, 8, 12), dec) == 0
     with pytest.raises(ValueError, match="not in the table history"):
         iceberg.incremental_files(t, 424242)
@@ -1015,7 +1018,7 @@ def test_rewrite_manifests_consolidates_append_history(spark, tmp_path):
     assert res["manifests_before"] == 2 and res["manifests_after"] == 1
     assert {d["file_path"] for d in iceberg.data_files(t)} \
         == files_before                        # data files untouched
-    dec = engine.reassemble_segments(engine.decode_files(spark, t))
+    dec = engine.decode(iceberg.read_table(spark, t))
     assert engine.verify_roundtrip(_docs(spark, 0, 20), dec) == 0
     # original snapshot/sequence numbers preserved on EXISTING entries
     assert {d["_snapshot_id"] for d in iceberg.data_files(t)} \
@@ -1026,8 +1029,8 @@ def test_rewrite_manifests_consolidates_append_history(spark, tmp_path):
         == files_before
     # incremental cursor from BEFORE the rewrite: the replace commit is
     # benign, the appended files still come back
-    dec_inc = engine.reassemble_segments(
-        engine.decode_incremental(spark, t, cursor))
+    dec_inc = engine.decode(
+        iceberg.read_table(spark, t, since_snapshot_id=cursor))
     assert engine.verify_roundtrip(_docs(spark, 4, 20), dec_inc) == 0
     # a second rewrite is a no-op (already consolidated); splitting into
     # MORE manifests than needed is refused too; appends after work
@@ -1037,8 +1040,7 @@ def test_rewrite_manifests_consolidates_append_history(spark, tmp_path):
         iceberg.rewrite_manifests(t, target_entries=0)
     iceberg.append(enc(_docs(spark, 20, 24)), t)
     assert engine.verify_roundtrip(
-        _docs(spark, 0, 24), engine.reassemble_segments(
-            engine.decode_files(spark, t))) == 0
+        _docs(spark, 0, 24), engine.decode(iceberg.read_table(spark, t))) == 0
 
 
 def test_rewrite_manifests_carries_delete_manifests(spark, tmp_path):
@@ -1080,7 +1082,7 @@ def test_maintenance_cycle_reclaims_rewritten_manifests(spark, tmp_path):
     assert left < avros_before | left        # old avros actually gone
     assert len(left) < len(avros_before) + 1
     # every retained reference still resolves; reads stay bit-identical
-    dec = engine.reassemble_segments(engine.decode_files(spark, t))
+    dec = engine.decode(iceberg.read_table(spark, t))
     assert engine.verify_roundtrip(_docs(spark, 0, 12), dec) == 0
     assert iceberg.read_table(spark, t).count() == dec.count()
 
@@ -1249,16 +1251,12 @@ def test_wap_multi_append_staging(spark, unit_df, tmp_path):
     assert iceberg.read_table(spark, table).count() == 2 * n_lo + n_hi
     # the published chain is parent-linked from the pre-branch cursor
     assert len(iceberg.incremental_files(table, s1)) > 0
-    # fused decode agrees (manifest list carries all staged manifests)
-    n_fused = engine.decode_files(spark, table).count()
-    assert n_fused == 2 * n_lo + n_hi
 
 
 def test_wap_fused_audit_read(spark, unit_df, tmp_path):
-    """The audit step at scale uses the FUSED reader on the staged
-    snapshot (resolve_ref + decode_files(snapshot_id=)): it must see the
-    staged batches while the fused read of MAIN still serves only the
-    published state."""
+    """The audit step decodes the staged snapshot (read_table by ref, or
+    resolve_ref + snapshot_id=): it must see the staged batches while
+    the decode of MAIN still serves only the published state."""
     table = str(tmp_path / "wapfused")
     lo = engine.encode(unit_df.where(F.col("n_tok") <= 1000),
                        codec="bitpack", split_threshold=None)
@@ -1268,9 +1266,9 @@ def test_wap_fused_audit_read(spark, unit_df, tmp_path):
     iceberg.create_branch(table, "audit")
     iceberg.append(hi, table, branch="audit")
     staged = iceberg.resolve_ref(table, "audit")
-    n_main = engine.decode_files(spark, table).count()
-    n_staged = engine.decode_files(spark, table,
-                                   snapshot_id=staged).count()
-    assert n_main == lo.count()
-    assert n_staged == lo.count() + hi.count()
+    dec = lambda **kw: engine.decode(  # noqa: E731
+        iceberg.read_table(spark, table, **kw), reassemble=False)
+    assert dec().count() == lo.count()
+    assert dec(snapshot_id=staged).count() == lo.count() + hi.count()
+    assert dec(ref="audit").count() == lo.count() + hi.count()
     iceberg.drop_branch(table, "audit")

@@ -73,8 +73,8 @@ def test_time_travel_predates_delete(spark, deltable):
 def test_raw_file_consumers_refuse_deleted_table(spark, deltable):
     """data_files (and through it the fused ENCODE planner, whose input
     is a tokens table) refuses a delete-bearing snapshot instead of
-    resurrecting deleted rows; the fused DECODE applies them instead
-    (test_decode_files_applies_deletes)."""
+    resurrecting deleted rows; read_table applies them instead
+    (test_read_table_between_applies_deletes)."""
     table, _ = deltable
     with pytest.raises(NotImplementedError, match="position-delete"):
         iceberg.data_files(table)
@@ -82,24 +82,42 @@ def test_raw_file_consumers_refuse_deleted_table(spark, deltable):
         engine.encode_files(spark, table)
 
 
-def test_decode_files_applies_deletes(spark, deltable):
-    """The fused decode path honors position deletes WITHOUT compaction:
-    work units carry their row group's file row offset, delete files are
-    assigned from manifest bounds, and deleted rows are masked out
-    before any kernel call — output bit-identical to the read_table
-    (anti-join) path."""
+def test_read_table_between_applies_deletes(spark, deltable):
+    """A pruned range read (read_table(between=)) of a delete-bearing
+    snapshot applies the position deletes WITHOUT compaction: the
+    multi-segment docs inside the range decode bit-identically, the
+    deleted ones (d03, d13) are gone."""
     table, tok = deltable
-    dec = engine.reassemble_segments(engine.decode_files(spark, table))
-    keep = tok.where(~F.col("doc_id").like("%3"))
+    rng = ("doc_id", "d02", "d14")
+    dec = engine.decode(iceberg.read_table(spark, table, between=rng))
+    keep = tok.where(~F.col("doc_id").like("%3")
+                     & F.col("doc_id").between("d02", "d14"))
     assert engine.verify_roundtrip(keep, dec) == 0
-    # an explicit file subset (pruned range decode) also applies them
-    subset = [d["file_path"]
-              for d in iceberg.data_files(table, ignore_deletes=True)][:2]
-    dec_sub = engine.decode_files(spark, table, files=subset)
-    full = iceberg.read_table_with_pos(spark, table) \
-        .where(F.col("_file").isin(subset))
-    assert dec_sub.count() == full.count()
-    assert dec_sub.where(F.col("doc_id").like("%3")).count() == 0
+    assert dec.count() == keep.count() == 11
+
+
+def test_cross_file_reassembly_with_deletes(spark, tmp_path):
+    """Deletes compose with cross-file segment reassembly: salting the
+    encoded segments scatters each length-split doc over several data
+    files, one position delete and one equality delete each remove a
+    doc, and read_table → decode(reassemble=True) stitches the
+    survivors back bit-identically."""
+    table = str(tmp_path / "t")
+    tok = _tok_df(spark)
+    enc = engine.salt_encoded(
+        engine.encode(tok, codec="auto", split_threshold=16), shards=4)
+    iceberg.export_encoded(enc, table)
+    spans = (iceberg.read_table_with_pos(spark, table)
+             .groupBy("doc_id").agg(F.countDistinct("_file").alias("n"))
+             .agg(F.min("n")).first()[0])
+    assert spans > 1                  # every doc spans several files
+    assert iceberg.delete_where(spark, table, "doc_id = 'd05'") is not None
+    keys = spark.createDataFrame([("d10",)], "doc_id string")
+    assert iceberg.write_equality_deletes(spark, table, keys) is not None
+    dec = engine.decode(iceberg.read_table(spark, table), reassemble=True)
+    keep = tok.where("doc_id not in ('d05', 'd10')")
+    assert engine.verify_roundtrip(keep, dec) == 0
+    assert dec.count() == 22
 
 
 def test_deletes_compose_and_never_rematch(spark, deltable):
@@ -157,8 +175,8 @@ def test_compact_rewrites_only_dirty_files(spark, tmp_path):
     # untouched files carried forward by identical path (metadata only)
     assert len(after & before) == res["kept_files"]
     assert iceberg.delete_files(table) == []
-    # fused file-level decode accepts the table again, bit-identically
-    dec = engine.reassemble_segments(engine.decode_files(spark, table))
+    # survivors still decode bit-identically
+    dec = engine.decode(iceberg.read_table(spark, table))
     keep = tok.where("doc_id <> 'd00'")
     assert engine.verify_roundtrip(keep, dec) == 0
     # compacting a clean table is a no-op (no commit)
@@ -300,16 +318,21 @@ def test_equality_delete_sequence_rule(spark, eqtable):
     keep = tok.where("doc_id not in ('d03','d09')")
     assert engine.verify_roundtrip(
         keep, engine.decode(back, reassemble=True)) == 0
-    # the FUSED decode applies the same semantics bit-identically
-    dec = engine.reassemble_segments(engine.decode_files(spark, table))
-    assert engine.verify_roundtrip(keep, dec) == 0
 
 
 def test_equality_delete_fused_decode(spark, eqtable):
+    """Per-segment decode (reassemble=False) of an equality-deleted
+    table: every segment of a deleted doc is gone — the key matches all
+    of a length-split doc's rows — and every surviving segment
+    decodes."""
     table, tok = eqtable
-    dec = engine.reassemble_segments(engine.decode_files(spark, table))
+    segs = engine.decode(iceberg.read_table(spark, table),
+                         reassemble=False)
     keep = tok.where("doc_id not in ('d03','d07','d09')")
-    assert engine.verify_roundtrip(keep, dec) == 0
+    got = {r["doc_id"]: r["n"] for r in segs.groupBy("doc_id").agg(
+        F.sum("n_tok").alias("n")).collect()}
+    assert got == {r["doc_id"]: r["n_tok"] for r in keep.collect()}
+    assert segs.where("seg_id > 0").count() > 0
 
 
 def test_equality_delete_multi_column_and_nulls(spark, tmp_path):
@@ -331,11 +354,10 @@ def test_equality_delete_multi_column_and_nulls(spark, tmp_path):
     left = {(r["doc_id"], r["source"])
             for r in back.select("doc_id", "source").collect()}
     assert left == {("a", "s1"), ("b", "s1")}
-    # fused path agrees
-    dec = engine.decode_files(spark, table)
-    fused = {(r["doc_id"], r["source"])
-             for r in dec.select("doc_id", "source").collect()}
-    assert fused == left
+    dec = engine.decode(back, reassemble=False)
+    assert {(r["doc_id"], r["source"], tuple(r["tokens"]))
+            for r in dec.collect()} == {
+        (d, s, tuple(t)) for d, t, _, s in rows if (d, s) in left}
 
 
 def test_equality_delete_compaction(spark, eqtable):
@@ -357,7 +379,7 @@ def test_equality_delete_compaction(spark, eqtable):
     assert appended <= after          # post-delete files never rewritten
     assert iceberg.delete_files(table) == []
     keep = tok.where("doc_id not in ('d03','d09')")
-    dec = engine.reassemble_segments(engine.decode_files(spark, table))
+    dec = engine.decode(iceberg.read_table(spark, table))
     assert engine.verify_roundtrip(keep, dec) == 0
 
 
@@ -371,8 +393,7 @@ def test_equality_delete_validation(spark, eqtable):
 
 
 def test_mixed_position_and_equality_deletes(spark, tmp_path):
-    """Both delete kinds on one snapshot compose on the read path AND
-    the fused decode path."""
+    """Both delete kinds on one snapshot compose on the read path."""
     table = str(tmp_path / "t")
     tok = _tok_df(spark, n_docs=10)
     enc = engine.encode(tok, codec="bitpack", split_threshold=None)
@@ -384,16 +405,12 @@ def test_mixed_position_and_equality_deletes(spark, tmp_path):
     back = iceberg.read_table(spark, table)
     assert engine.verify_roundtrip(
         keep, engine.decode(back, reassemble=True)) == 0
-    dec = engine.reassemble_segments(engine.decode_files(spark, table))
-    assert engine.verify_roundtrip(keep, dec) == 0
 
 
 def test_equality_delete_on_non_role_key_fused_decode(spark, tmp_path):
     """Equality deletes keyed on a column OUTSIDE the 8 decoded role
     columns (content_hash — the natural dedup/takedown key) are honored
-    by the fused decode: the worker reads the key column alongside the
-    role set.  (Previously every task died with ValueError:
-    'content_hash' is not in list.)"""
+    by read_table → decode."""
     table = str(tmp_path / "t")
     tok = _tok_df(spark, n_docs=8)
     enc = engine.encode(tok, codec="bitpack", split_threshold=None)
@@ -402,9 +419,5 @@ def test_equality_delete_on_non_role_key_fused_decode(spark, tmp_path):
         .where("doc_id = 'd03'").select("content_hash").distinct()
     assert iceberg.write_equality_deletes(spark, table, key) is not None
     keep = tok.where("doc_id <> 'd03'")
-    dec = engine.reassemble_segments(engine.decode_files(spark, table))
+    dec = engine.decode(iceberg.read_table(spark, table))
     assert engine.verify_roundtrip(keep, dec) == 0
-    # read_table agrees
-    back = iceberg.read_table(spark, table)
-    assert engine.verify_roundtrip(
-        keep, engine.decode(back, reassemble=True)) == 0

@@ -2,9 +2,9 @@
 promote resolve physical columns by parquet field id (the only safe way
 to execute them — reference analog: the reference has no tables at all,
 reference/README.md:23-24; semantics follow the Iceberg v2 spec), legacy
-name-based tables refuse, and the fused file-level paths refuse tables
-whose live files carry stale physical names until a rewrite re-aligns
-them."""
+name-based tables refuse, and the fused file-level ingest
+(engine.encode_files) refuses tables whose live files carry stale
+physical names until a rewrite re-aligns them."""
 
 from __future__ import annotations
 
@@ -191,32 +191,34 @@ def test_drop_refuses_live_equality_delete_key(spark, table):
 
 def test_fused_paths_refuse_stale_names_until_rewrite(spark, unit_df,
                                                       tmp_path):
-    """The fused file-level decode addresses physical columns by NAME:
-    it refuses a table whose live files predate a rename, and accepts
-    again once an overwrite rewrites them under the current names.
-    Pure add_column never trips the guard."""
-    t = str(tmp_path / "enc")
+    """The fused ingest (encode_files over an Iceberg TOKENS table)
+    addresses physical columns by NAME: it refuses a table whose live
+    files predate a rename of a role column, and accepts again once an
+    overwrite rewrites them under the current names.  Pure add_column
+    never trips the guard."""
+    t = str(tmp_path / "tok")
     cols = ["doc_id", "source", "n_tok", "tokens"]
-    enc = engine.encode(unit_df.select(*cols).limit(30),
-                        codec="bitpack", split_threshold=None)
-    iceberg.export_encoded(enc, t)
-    n0 = engine.decode_files(spark, t).count()
+    tok = unit_df.select(*cols).orderBy("doc_id").limit(30)
+    iceberg.export_encoded(tok, t)
+    enc = lambda: engine.encode_files(  # noqa: E731
+        spark, t, codec="bitpack", split_threshold=1 << 14)
+    n0 = enc().count()
     iceberg.add_column(t, "note", "string")
-    assert engine.decode_files(spark, t).count() == n0   # adds are fine
+    assert enc().count() == n0                 # adds are fine
     iceberg.rename_column(t, "note", "remark")
     # live files never carried 'note' -> still name-safe
-    assert engine.decode_files(spark, t).count() == n0
+    assert enc().count() == n0
     iceberg.rename_column(t, "doc_id", "document_id")
     with pytest.raises(ValueError, match="fused|by name"):
-        engine.decode_files(spark, t).count()
+        enc().count()
     # overwrite rewrites every live file under the current schema
     iceberg.overwrite(iceberg.read_table(spark, t), t)
-    df = engine.decode_files(spark, t)
-    assert df.count() == n0
-    # output is normalized to the CANONICAL role names (the physical
-    # column read is 'document_id'; see
-    # test_decode_files_canonical_names_after_rename)
-    assert "doc_id" in df.columns
+    out = enc()
+    assert out.count() == n0
+    # the renamed role column is read from 'document_id' and the
+    # encoded rows carry the canonical role names
+    assert engine.verify_roundtrip(
+        tok, engine.decode(out, reassemble=True)) == 0
 
 
 def test_fused_guard_conservative_on_expired_snapshots(spark, table):
@@ -266,11 +268,10 @@ def test_schema_id_recorded_on_snapshots(spark, table):
         s.get("schema-id", 0) for s in meta["schemas"])
 
 
-def test_decode_files_canonical_names_after_rename(spark, tmp_path):
-    """decode_files emits the engine's CANONICAL role names even when
-    the stored columns were renamed, so the documented
-    decode_files → reassemble_segments pipeline keeps working (it
-    addresses doc_id/source/seg_id by name)."""
+def test_decode_after_role_rename(spark, tmp_path):
+    """read_table serves an encoded table under its CURRENT logical
+    names; after a role column was renamed the caller renames it back
+    (withColumnsRenamed) and decode round-trips."""
     t = str(tmp_path / "enc")
     tok = spark.createDataFrame(
         [(f"d{i}", "unit", 5, [i, i + 1, i + 2, i + 3, i + 4])
@@ -280,9 +281,10 @@ def test_decode_files_canonical_names_after_rename(spark, tmp_path):
     iceberg.export_encoded(enc, t)
     iceberg.rename_column(t, "doc_id", "document_id")
     iceberg.overwrite(iceberg.read_table(spark, t), t)
-    dec = engine.decode_files(spark, t)
-    assert dec.columns == ["doc_id", "source", "seg_id", "tokens"]
-    out = engine.reassemble_segments(dec)
+    back = iceberg.read_table(spark, t)
+    assert "document_id" in back.columns and "doc_id" not in back.columns
+    out = engine.decode(
+        back.withColumnsRenamed({"document_id": "doc_id"}))
     assert engine.verify_roundtrip(tok, out) == 0
 
 
@@ -303,5 +305,9 @@ def test_fused_roles_resist_name_reuse_chain(spark, tmp_path):
     iceberg.overwrite(iceberg.read_table(spark, t), t)
     cm = iceberg.fused_role_columns(t, ["doc_id", "source"])
     assert cm == {"doc_id": "did", "source": "doc_id"}
-    out = engine.reassemble_segments(engine.decode_files(spark, t))
-    assert engine.verify_roundtrip(tok, out) == 0
+    # the renames swap names, so map every column in one projection
+    role_of = {phys: role for role, phys in cm.items()}
+    back = iceberg.read_table(spark, t)
+    back = back.select(*[F.col(c).alias(role_of.get(c, c))
+                         for c in back.columns])
+    assert engine.verify_roundtrip(tok, engine.decode(back)) == 0
