@@ -2,7 +2,7 @@
 (widths, inits, payload) triples in the simdcomp wire format.
 
 This is the layer between the Arrow batch a Spark UDF receives and the
-per-width numpy kernels in :mod:`simdcomp_spark.kernels`.  Design:
+kernels that pack and unpack blocks.  Design:
 
 * every row is segmented into full 128-int blocks + one short tail block,
   exactly like ``simdpack_length`` (/root/reference/src/simdbitpacking.c:14379);
@@ -15,9 +15,11 @@ per-width numpy kernels in :mod:`simdcomp_spark.kernels`.  Design:
   init (previous element), making every block independently decodable — the
   reference chains offsets sequentially (/root/reference/example.c:71), we
   trade 4 bytes/block for embarrassing parallelism (SURVEY.md §3.2);
-* all heavy work is grouped by (block length, width) so each group is ONE
-  vectorized pack/unpack over a dense matrix — no per-row numpy calls, no
-  per-value Python;
+* encode and decode run the fused C kernels of :mod:`simdcomp_spark.native`
+  (analyze, pack, unpack) over the whole batch — no per-row numpy calls,
+  no per-value Python; only the point ops below decode through grouped
+  (block length, width) numpy matrices, because they touch one block per
+  row;
 * the native interface is FLAT (one values buffer + row lengths, one payload
   buffer + row payload lengths) so the Spark ``mapInArrow`` path moves
   Arrow list/binary columns in and out with zero per-row materialization.
@@ -34,7 +36,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from . import kernels as K
+from . import kernels as K, native
 
 U32 = np.uint32
 MODES = ("plain", "for", "d1")
@@ -82,6 +84,39 @@ def _gather_rows(flat: np.ndarray, starts: np.ndarray, length: int) -> np.ndarra
     return np.take(flat, idx)  # ~100x faster than flat[idx] on this numpy
 
 
+def _analyze(flat: np.ndarray, lens: np.ndarray, mode: str):
+    """The analyze pass shared by :func:`encode_flat` and
+    :func:`encoded_sizes_flat`: block table, the mode's source values
+    (deltas for d1), per-block widths and inits, and packed bytes per
+    block.  Returns (row_id, blk_start, blk_len int32, src, widths, inits,
+    sizes, nblocks)."""
+    row_id, blk_start, blk_len, nblocks = _block_table(lens)
+    src = flat
+    if mode == "d1":
+        row_starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
+        first_of_row = blk_start == row_starts[row_id]
+        safe_prev = np.where(first_of_row, 0, blk_start - 1)
+        inits = np.where(first_of_row, U32(0),
+                         np.take(flat, safe_prev)).astype(U32)
+        # fused delta pass: per-block init == previous element, so every
+        # within-row delta is just the GLOBAL adjacent diff (one contiguous
+        # SIMD subtract) — only row firsts need init-0 fixup
+        src = np.empty_like(flat)
+        np.subtract(flat[1:], flat[:-1], out=src[1:])
+        # row firsts (of NON-EMPTY rows only: an empty trailing row's start
+        # is one past the buffer): init is 0, delta == the value itself
+        rs = row_starts[lens > 0]
+        src[rs] = np.take(flat, rs)
+    else:
+        # FOR inits are written by the kernel; plain inits stay empty (the
+        # kernels never touch inits in plain mode)
+        inits = np.empty(row_id.size if mode == "for" else 0, dtype=U32)
+    blk_len32 = blk_len.astype(np.int32)
+    widths = native.analyze_blocks(src, blk_start, blk_len32, mode, inits)
+    sizes = K.compressed_bytes_arr(blk_len, widths.astype(np.int64))
+    return row_id, blk_start, blk_len32, src, widths, inits, sizes, nblocks
+
+
 def encode_flat(flat: np.ndarray, lens: np.ndarray, mode: str) -> EncodedFlat:
     """Encode a batch given as one flat uint32 buffer + per-row lengths."""
     assert mode in MODES
@@ -92,96 +127,12 @@ def encode_flat(flat: np.ndarray, lens: np.ndarray, mode: str) -> EncodedFlat:
         z = np.zeros(nrows, dtype=np.int64)
         return EncodedFlat((lens + 127) // 128, np.zeros(0, np.uint8),
                            np.zeros(0, U32), np.zeros(0, np.uint8), z)
-
-    row_id, blk_start, blk_len, nblocks = _block_table(lens)
-    total_blocks = row_id.size
-    row_starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-
-    widths = np.zeros(total_blocks, dtype=np.uint8)
-    src = flat
-    if mode == "d1":
-        first_of_row = blk_start == row_starts[row_id]
-        safe_prev = np.where(first_of_row, 0, blk_start - 1)
-        inits = np.where(first_of_row, U32(0),
-                         np.take(flat, safe_prev)).astype(U32)
-        # fused delta pass: per-block init == previous element, so every
-        # within-row delta is just the GLOBAL adjacent diff (one contiguous
-        # SIMD subtract) — only row firsts need init-0 fixup.  The per-group
-        # matrix subtract + extra alloc this replaces halved d1 encode
-        # throughput vs bitpack.
-        src = np.empty_like(flat)
-        np.subtract(flat[1:], flat[:-1], out=src[1:])
-        # row firsts (of NON-EMPTY rows only: an empty trailing row's start
-        # is one past the buffer): init is 0, delta == the value itself
-        rs = row_starts[lens > 0]
-        src[rs] = np.take(flat, rs)
-    else:
-        inits = np.zeros(total_blocks if mode == "for" else 0, dtype=U32)
-
-    # fused C fast path: analyze + pack directly on the flat buffers —
-    # one pass each, no (nblk, blen) matrices (native.py; numpy fallback
-    # below is byte-identical and remains the portable path)
-    from . import native
-    if native.have_flat_codec():
-        blk_len32 = blk_len.astype(np.int32)
-        cinits = inits if mode != "plain" else np.zeros(1, dtype=U32)
-        if mode == "for":
-            inits = cinits = np.empty(total_blocks, dtype=U32)
-        widths = native.analyze_blocks(src, blk_start, blk_len32, mode,
-                                       cinits)
-        sizes = K.compressed_bytes_arr(blk_len, widths.astype(np.int64))
-        dst = np.cumsum(sizes) - sizes
-        payload = np.empty(int(sizes.sum()), dtype=np.uint8)
-        native.pack_blocks_flat(src, flat, blk_start, blk_len32, widths,
-                                cinits, dst, mode, payload)
-        payload_lens = np.zeros(nrows, dtype=np.int64)
-        np.add.at(payload_lens, row_id, sizes)
-        return EncodedFlat(nblocks, widths, inits, payload, payload_lens)
-
-    # pass 1: analyze (widths per block), grouped by block length
-    group_cache: list[tuple[np.ndarray, np.ndarray, int]] = []
-    for blen in np.unique(blk_len):
-        blen = int(blen)
-        sel = np.nonzero(blk_len == blen)[0]
-        mat = _gather_rows(src, blk_start[sel], blen)
-        if mode == "for":
-            mn = mat.min(axis=1)
-            inits[sel] = mn
-            widths[sel] = K.bits_u32(mat.max(axis=1) - mn).astype(np.uint8)
-            vals = mat - mn[:, None]
-        else:  # plain / d1 (src already holds deltas for d1)
-            vals = mat
-            widths[sel] = K.maxbits_rows(mat).astype(np.uint8)
-        group_cache.append((sel, vals, blen))
-
-    # sizes + destination offsets (blocks are already in (row, seq) order)
-    sizes = K.compressed_bytes_arr(blk_len, widths.astype(np.int64))
-    dst = np.concatenate(([0], np.cumsum(sizes)[:-1]))
-    payload = np.zeros(int(sizes.sum()), dtype=np.uint8)
-
-    # pass 2: pack per (blen, width) group, scatter into the payload buffer
-    for sel, vals, blen in group_cache:
-        w_here = widths[sel]
-        for b in np.unique(w_here):
-            b = int(b)
-            if b == 0:
-                continue
-            gmask = w_here == b
-            gsel = sel[gmask]
-            if b == 32:
-                # raw ORIGINAL values in all families (simdbitpacking.c:14198,
-                # ipackFOR32 simdfor.c:6954, ipackwithoutmask32)
-                by = _gather_rows(flat, blk_start[gsel], blen) \
-                    .view(np.uint8).reshape(gsel.size, blen * 4)
-            else:
-                padded = vals[gmask]
-                if blen % 4:
-                    pad = np.zeros((padded.shape[0], 4 - blen % 4), dtype=U32)
-                    padded = np.concatenate([padded, pad], axis=1)
-                by = K.pack_blocks(np.ascontiguousarray(padded), b)
-            idx = dst[gsel][:, None] + np.arange(by.shape[1], dtype=np.int64)
-            payload[idx] = by
-
+    (row_id, blk_start, blk_len32, src, widths, inits, sizes,
+     nblocks) = _analyze(flat, lens, mode)
+    dst = np.cumsum(sizes) - sizes
+    payload = np.empty(int(sizes.sum()), dtype=np.uint8)
+    native.pack_blocks_flat(src, flat, blk_start, blk_len32, widths, inits,
+                            dst, mode, payload)
     payload_lens = np.zeros(nrows, dtype=np.int64)
     np.add.at(payload_lens, row_id, sizes)
     return EncodedFlat(nblocks, widths, inits, payload, payload_lens)
@@ -202,8 +153,7 @@ def decode_flat(lens: np.ndarray, widths: np.ndarray, inits: np.ndarray,
     total_blocks = row_id.size
     widths = np.ascontiguousarray(widths, dtype=np.uint8)
     assert widths.size == total_blocks, (widths.size, total_blocks)
-    if mode != "plain":
-        inits = np.ascontiguousarray(inits, dtype=U32)
+    inits = np.ascontiguousarray(inits, dtype=U32)
 
     sizes = K.compressed_bytes_arr(blk_len, widths.astype(np.int64))
     # per-block source offset: exclusive cumsum restarted per row, plus the
@@ -214,43 +164,10 @@ def decode_flat(lens: np.ndarray, widths: np.ndarray, inits: np.ndarray,
     row_pl_starts = np.concatenate(([0], np.cumsum(payload_lens)[:-1]))
     src_start = row_pl_starts[row_id] + (excl - row_base[row_id])
     payload = np.ascontiguousarray(payload, dtype=np.uint8)
-
-    # fused C fast path: one pass, codec semantics applied in-block
-    from . import native
-    if native.have_flat_codec():
-        cinits = inits if mode != "plain" else np.zeros(1, dtype=U32)
-        native.unpack_blocks_flat(payload, src_start, blk_start,
-                                  blk_len.astype(np.int32), widths,
-                                  cinits, mode, out)
-        return out
-
-    keys = blk_len.astype(np.int64) * 64 + widths.astype(np.int64)
-    for key in np.unique(keys):
-        blen, b = int(key) // 64, int(key) % 64
-        sel = np.nonzero(keys == key)[0]
-        nb = int(sizes[sel[0]])
-        if b == 0:
-            # plain: zeros; FOR: broadcast base; d1: broadcast chain init
-            # (iunpackFOR0 src/simdfor.c:7-20, iunpack0
-            # src/simdintegratedbitpacking.c:21-35)
-            src0 = inits[sel] if mode != "plain" else np.zeros(sel.size, U32)
-            vals = np.broadcast_to(src0[:, None], (sel.size, blen))
-        else:
-            seg = _gather_rows(payload, src_start[sel], nb)
-            if b == 32:
-                vals = np.ascontiguousarray(seg).view(U32).reshape(sel.size, blen)
-            else:
-                rows4 = (blen + 3) // 4
-                words = np.ascontiguousarray(seg).view(U32).reshape(sel.size, -1, 4)
-                vals = K.unpack_lanes(words, rows4, b).reshape(sel.size, -1)[:, :blen]
-                if mode == "for":
-                    vals = vals + inits[sel][:, None]
-                elif mode == "d1":
-                    acc = np.cumsum(vals, axis=1, dtype=np.uint64) + \
-                        inits[sel][:, None].astype(np.uint64)
-                    vals = acc.astype(U32)
-        idx = blk_start[sel][:, None] + np.arange(blen, dtype=np.int64)[None, :]
-        out[idx] = vals
+    # one fused pass, codec semantics applied in-block
+    native.unpack_blocks_flat(payload, src_start, blk_start,
+                              blk_len.astype(np.int32), widths, inits, mode,
+                              out)
     return out
 
 
@@ -602,30 +519,10 @@ def encoded_sizes_flat(flat: np.ndarray, lens: np.ndarray, mode: str
     payload — the analyze pass only (used by the codec auto-selector)."""
     flat = np.ascontiguousarray(flat, dtype=U32)
     lens = np.asarray(lens, dtype=np.int64)
-    nrows = lens.size
+    per_row = np.zeros(lens.size, dtype=np.int64)
     if flat.size == 0:
-        return np.zeros(nrows, dtype=np.int64)
-    row_id, blk_start, blk_len, nblocks = _block_table(lens)
-    row_starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    widths = np.zeros(row_id.size, dtype=np.int64)
-    for blen in np.unique(blk_len):
-        blen = int(blen)
-        sel = np.nonzero(blk_len == blen)[0]
-        mat = _gather_rows(flat, blk_start[sel], blen)
-        if mode == "plain":
-            widths[sel] = K.maxbits_rows(mat)
-        elif mode == "for":
-            widths[sel] = K.bits_u32(mat.max(axis=1) - mat.min(axis=1))
-        else:
-            d = mat.copy()
-            d[:, 1:] = mat[:, 1:] - mat[:, :-1]
-            first = blk_start == row_starts[row_id]
-            prev = np.where(first[sel], U32(0),
-                            flat[np.maximum(blk_start[sel] - 1, 0)])
-            d[:, 0] = mat[:, 0] - prev
-            widths[sel] = K.maxbits_rows(d)
-    sizes = K.compressed_bytes_arr(blk_len, widths)
-    per_row = np.zeros(nrows, dtype=np.int64)
+        return per_row
+    row_id, *_, sizes, _nblocks = _analyze(flat, lens, mode)
     np.add.at(per_row, row_id, sizes)
     return per_row
 

@@ -14,6 +14,8 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from .. import native
+
 U32 = np.uint32
 
 
@@ -97,29 +99,22 @@ class Codec:
 def place_rows(out: np.ndarray, dst_off: np.ndarray, src: np.ndarray,
                lens: np.ndarray) -> None:
     """out[dst_off[i]:+lens[i]] = the i-th packed slice of ``src`` (src is
-    the contiguous row-order concatenation).  C segmented memcpy when
-    available, multi_arange fancy-index otherwise (byte-identical)."""
-    from .. import native
-    from ..kernels import multi_arange
+    the contiguous row-order concatenation), one C segmented memcpy."""
     src = np.ascontiguousarray(src, dtype=np.uint8)
     lens = np.ascontiguousarray(lens, dtype=np.int64)
     src_off = np.cumsum(lens) - lens
     dst_off = np.ascontiguousarray(dst_off, dtype=np.int64)
-    if not native.gather_rows(src, src_off, lens, out, dst_off):
-        out[multi_arange(dst_off, lens)] = src
+    native.gather_rows(src, src_off, lens, out, dst_off)
 
 
 def extract_rows(src: np.ndarray, src_off: np.ndarray, lens: np.ndarray
                  ) -> np.ndarray:
     """Packed row-order concatenation of src[src_off[i]:+lens[i]]."""
-    from .. import native
-    from ..kernels import multi_arange
     lens = np.ascontiguousarray(lens, dtype=np.int64)
     out = np.empty(int(lens.sum()), dtype=np.uint8)
     dst_off = np.cumsum(lens) - lens
     src_off = np.ascontiguousarray(src_off, dtype=np.int64)
-    if not native.gather_rows(src, src_off, lens, out, dst_off):
-        out[:] = src[multi_arange(src_off, lens)]
+    native.gather_rows(src, src_off, lens, out, dst_off)
     return out
 
 

@@ -13,8 +13,9 @@ ascending, so it packs as delta+init blocks (the reference's integrated d1
 layout) — on zipf token data that shrinks it from 3.5 to 2.5 bits/token at
 the cost of 4 bytes/128-values-block of stored inits; the codes sub-stream
 reuses the per-block-maxbits plain layout so code blocks adapt their width
-to the local code range.  The whole batch is processed with one C per-row
-radix pass (numpy fused-key argsort fallback) — no per-row Python.
+to the local code range.  The streams of the whole batch come from one C
+pass (``native.dict_streams``) and decode ends in one C gather
+(``native.dict_gather``) — no per-row Python.
 """
 
 from __future__ import annotations
@@ -22,47 +23,11 @@ from __future__ import annotations
 import numpy as np
 
 from .. import blocks, native
-from ..kernels import multi_arange
 from .base import Codec, FlatEncoded, extract_rows as _extract, \
     place_rows as _place
 
 U32 = np.uint32
 _HDR = 4
-
-
-def _dict_streams(flat: np.ndarray, lens: np.ndarray):
-    """Vectorized per-row unique+codes: returns (uniq_flat, n_dict_per_row,
-    codes_flat in original token order)."""
-    nrows = lens.size
-    total = flat.size
-    if total == 0:
-        return np.empty(0, U32), np.zeros(nrows, np.int64), np.empty(0, U32)
-    res = native.dict_streams(flat, lens)   # C per-row radix path
-    if res is not None:
-        return res
-    row_of = np.repeat(np.arange(nrows, dtype=np.uint64), lens)
-    # one fused (row, value) uint64 key → single radix argsort; ~5x faster
-    # than the two-key lexsort and uniqueness becomes one comparison
-    fused = (row_of << np.uint64(32)) | flat
-    order = np.argsort(fused, kind="stable")
-    sf = np.take(fused, order)
-    sv = sf.astype(U32)                    # low 32 bits = value
-    sr = (sf >> np.uint64(32)).astype(np.int64)
-    newu = np.ones(total, dtype=bool)
-    newu[1:] = sf[1:] != sf[:-1]
-    uniq = sv[newu]
-    n_dict = np.bincount(sr[newu], minlength=nrows).astype(np.int64)
-    gid = np.cumsum(newu) - 1
-    # first group id of each row, forward-filled onto its tokens
-    row_first_gid = np.zeros(nrows, dtype=np.int64)
-    first_pos = np.ones(total, dtype=bool)
-    first_pos[1:] = sr[1:] != sr[:-1]
-    fp = np.nonzero(first_pos)[0]
-    row_first_gid[sr[fp]] = gid[fp]
-    code_sorted = gid - row_first_gid[sr]
-    codes = np.empty(total, dtype=U32)
-    codes[order] = code_sorted.astype(U32)
-    return uniq, n_dict, codes
 
 
 class DictCodec(Codec):
@@ -73,7 +38,7 @@ class DictCodec(Codec):
         flat = np.ascontiguousarray(flat, dtype=U32)
         lens = np.asarray(lens, dtype=np.int64)
         nrows = lens.size
-        uniq, n_dict, codes = _dict_streams(flat, lens)
+        uniq, n_dict, codes = native.dict_streams(flat, lens)
         ed = blocks.encode_flat(uniq, n_dict, "d1")
         ec = blocks.encode_flat(codes, lens, "plain")
         nbd, nbc = ed.nblocks, ec.nblocks
@@ -133,19 +98,12 @@ class DictCodec(Codec):
         codes = blocks.decode_flat(lens, wc, np.zeros(0, U32), pc, pc_lens,
                                    "plain")
         # final gather: one C pass out[k] = uniq[dict_off[row]+codes[k]]
-        # when available; numpy path keeps uint32 index math (per-batch
-        # token counts fit u32, halving index-temporary DRAM traffic)
-        res = native.dict_gather(uniq, codes, lens, n_dict)
-        if res is not None:
-            return res
-        dict_off = (np.cumsum(n_dict) - n_dict).astype(U32)
-        idx = codes + np.repeat(dict_off, lens)
-        return np.take(uniq, idx)
+        return native.dict_gather(uniq, codes, lens, n_dict)
 
     def payload_sizes_flat(self, flat, lens):
         flat = np.ascontiguousarray(flat, dtype=U32)
         lens = np.asarray(lens, dtype=np.int64)
-        uniq, n_dict, codes = _dict_streams(flat, lens)
+        uniq, n_dict, codes = native.dict_streams(flat, lens)
         sd = blocks.encoded_sizes_flat(uniq, n_dict, "d1")
         sc = blocks.encoded_sizes_flat(codes, lens, "plain")
         nbd = (n_dict + 127) // 128

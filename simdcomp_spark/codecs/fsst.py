@@ -12,9 +12,9 @@ The symbol table is learned once per Spark partition and stored in a side
 table joined back on partition id at decode time (a broadcast dimension
 join — Spark-idiomatic replacement for FSST's per-block table header).
 
-Encode uses one compiled regex alternation (longest-match-first) so the hot
-loop is C-side; decode is vectorized numpy gather over a concatenated symbol
-buffer.
+Training tokenizes its sample with one compiled regex alternation
+(longest-match-first).  Encode and decode of whole batches run the C kernels
+``native.fsst_encode``/``fsst_decode`` over lookup tables built here.
 """
 
 from __future__ import annotations
@@ -23,6 +23,8 @@ import re
 from collections import Counter
 
 import numpy as np
+
+from .. import native
 
 ESCAPE = 255
 MAX_SYMBOLS = 255
@@ -91,31 +93,11 @@ class SymbolTable:
     def __init__(self, symbols: list[bytes]):
         assert len(symbols) <= MAX_SYMBOLS
         self.symbols = symbols
-        self.code_of = {s: i for i, s in enumerate(symbols)}
-        self._pat = _compile(symbols)
-        # token → emitted bytes: escape pairs for every single byte,
-        # overridden by symbol codes (the pattern only ever yields symbols
-        # or single bytes, so this lookup is total)
-        self._enc_lut = {bytes([b]): bytes([ESCAPE, b]) for b in range(256)}
-        self._enc_lut.update({s: bytes([i]) for i, s in enumerate(symbols)})
-        # decode side: concatenated symbol buffer + offsets for numpy gather
-        lens = np.fromiter((len(s) for s in symbols), dtype=np.int64,
-                           count=len(symbols))
-        self._sym_lens = np.concatenate((lens, [1]))  # escape slot
-        self._sym_starts = np.concatenate(
-            ([0], np.cumsum(self._sym_lens)))[:-1]
-        self._sym_buf = np.frombuffer(b"".join(symbols) + b"\x00", dtype=np.uint8)
-        # padded (n_sym+1, MAX_LEN) byte matrix for the batched decode: one
-        # 2-D row gather + boolean compress instead of a ragged index build
-        self._sym_mat = np.zeros((len(symbols) + 1, MAX_LEN), dtype=np.uint8)
-        for i, s in enumerate(symbols):
-            self._sym_mat[i, :len(s)] = np.frombuffer(s, dtype=np.uint8)
-        # encode side (the FSST paper's lookup shape, vectorized): a
+        # encode tables for the C kernel (the FSST paper's lookup shape): a
         # single-candidate hash table keyed on the first 3 bytes for symbols
-        # of length 3..8 (verified against the full window), a 64K direct
-        # LUT for 2-byte symbols, a 256 LUT for 1-byte symbols.  Windows are
-        # little-endian uint32 pairs (bytes i..i+3 and i+4..i+7), so no
-        # byteswaps and no uint64 anywhere.
+        # of length 3..8 (verified against the full little-endian 8-byte
+        # window), a 64K direct LUT for 2-byte symbols, a 256 LUT for
+        # 1-byte symbols
         HBITS = 13
         self._hbits = HBITS
         nslots = 1 << HBITS
@@ -123,10 +105,8 @@ class SymbolTable:
         self._lut2 = np.full(1 << 16, ESCAPE, dtype=np.uint8)
         self._slot_len = np.zeros(nslots, dtype=np.uint8)
         self._slot_code = np.zeros(nslots, dtype=np.uint8)
-        self._slot_val_lo = np.zeros(nslots, dtype=np.uint32)
-        self._slot_val_hi = np.zeros(nslots, dtype=np.uint32)
-        self._slot_mask_lo = np.zeros(nslots, dtype=np.uint32)
-        self._slot_mask_hi = np.zeros(nslots, dtype=np.uint32)
+        self._slot_val64 = np.zeros(nslots, dtype=np.uint64)
+        self._slot_mask64 = np.zeros(nslots, dtype=np.uint64)
         # lower code = higher training gain, so iterate in reverse: on a
         # hash collision the higher-gain symbol ends up owning the slot
         for code in range(len(symbols) - 1, -1, -1):
@@ -137,28 +117,19 @@ class SymbolTable:
             elif L == 2:
                 self._lut2[s[0] | (s[1] << 8)] = code
             else:
-                pad = s + b"\x00" * (MAX_LEN - L)
-                lo = int.from_bytes(pad[:4], "little")
-                hi = int.from_bytes(pad[4:], "little")
                 key3 = s[0] | (s[1] << 8) | (s[2] << 16)
                 h = ((key3 * 2654435761) & 0xFFFFFFFF) >> (32 - HBITS)
                 self._slot_len[h] = L
                 self._slot_code[h] = code
-                self._slot_val_lo[h] = lo
-                self._slot_val_hi[h] = hi
-                self._slot_mask_lo[h] = (1 << (8 * min(L, 4))) - 1
-                self._slot_mask_hi[h] = (1 << (8 * max(L - 4, 0))) - 1
-        # combined uint64 views + dense decode tables for the optional C
-        # kernel (simdcomp_spark.native); byte-identical semantics
-        self._slot_val64 = (self._slot_val_lo.astype(np.uint64)
-                            | (self._slot_val_hi.astype(np.uint64) << 32))
-        self._slot_mask64 = (self._slot_mask_lo.astype(np.uint64)
-                             | (self._slot_mask_hi.astype(np.uint64) << 32))
+                self._slot_val64[h] = int.from_bytes(s, "little")
+                self._slot_mask64[h] = (1 << (8 * L)) - 1
+        # decode tables: (256 x 8) padded symbol bytes + lengths (row 255,
+        # the escape code, has length 0)
         self._dec_mat256 = np.zeros((256, MAX_LEN), dtype=np.uint8)
-        self._dec_mat256[:len(symbols)] = self._sym_mat[:len(symbols)]
         self._dec_len256 = np.zeros(256, dtype=np.uint8)
-        self._dec_len256[:len(symbols)] = \
-            self._sym_lens[:len(symbols)].astype(np.uint8)
+        for code, s in enumerate(symbols):
+            self._dec_mat256[code, :len(s)] = np.frombuffer(s, np.uint8)
+            self._dec_len256[code] = len(s)
 
     def serialize(self) -> bytes:
         out = bytearray([len(self.symbols)])
@@ -186,152 +157,25 @@ class SymbolTable:
 
     def encode_flat(self, buf: np.ndarray, row_lens: np.ndarray
                     ) -> tuple[np.ndarray, np.ndarray]:
-        """Encode MANY rows in one batched pass: ``buf`` is the concatenated
-        raw bytes, ``row_lens`` their lengths.  Returns (flat encoded uint8
-        buffer, encoded length per row).
-
-        Two vectorized stages replace the per-row regex loop:
-
-        1. match at EVERY position — little-endian uint32 window pairs, one
-           verified hash probe for symbols of length 3..8 (the FSST paper's
-           single-candidate lookup), direct LUTs for 2- and 1-byte symbols,
-           row-boundary aware via the remaining-bytes mask;
-        2. greedy chain resolution — a wavefront that advances ALL rows one
-           token per step (``pos += match_len[pos]``), so the Python-level
-           loop count is max-tokens-per-row, not total tokens."""
+        """Encode MANY rows in one C pass: ``buf`` is the concatenated raw
+        bytes, ``row_lens`` their lengths.  Returns (flat encoded uint8
+        buffer, encoded length per row).  Greedy per row: the longest
+        matching symbol (hash probe, then 2-byte, then 1-byte LUT) or an
+        escape pair."""
         buf = np.ascontiguousarray(buf, dtype=np.uint8)
         row_lens = np.asarray(row_lens, dtype=np.int64)
-        n = buf.size
-        if n == 0:
-            return np.zeros(0, np.uint8), np.zeros(row_lens.size, np.int64)
-        bounds = np.concatenate(([0], np.cumsum(row_lens)))
-        from .. import native
-        res = native.encode_flat(self, buf, bounds)
-        if res is not None:
-            return res
-        # --- stage 1: symbol match per position ---
-        # little-endian uint32 windows over buf padded to n+8: w_lo[i] =
-        # bytes i..i+3, and bytes i+4..i+7 are just w_lo[i+4] (a free view)
-        padded = np.zeros(n + MAX_LEN, dtype=np.uint8)
-        padded[:n] = buf
-        w_all = padded[:n + 4].astype(np.uint32)
-        tmp = np.empty(n + 4, dtype=np.uint32)
-        for k in (1, 2, 3):
-            np.copyto(tmp, padded[k:k + n + 4], casting="unsafe")
-            np.left_shift(tmp, np.uint32(8 * k), out=tmp)
-            np.bitwise_or(w_all, tmp, out=w_all)
-        w_lo = w_all[:n]
-        w_hi = w_all[4:4 + n]
-        # bytes remaining in the row at each position, saturated at 8
-        rem8 = np.minimum(
-            np.repeat(bounds[1:], row_lens) - np.arange(n, dtype=np.int64),
-            MAX_LEN).astype(np.uint8)
-        # 1-byte symbols (or escape) as the base layer
-        mcode = np.take(self._lut1, buf)
-        mlen = np.ones(n, dtype=np.uint8)
-        # 2-byte LUT (copyto-with-where: one fused pass, no index scatter)
-        c2 = np.take(self._lut2, (w_lo & np.uint32(0xFFFF)).astype(np.intp))
-        m2 = (c2 != ESCAPE) & (rem8 >= 2)
-        np.copyto(mcode, c2, where=m2)
-        np.copyto(mlen, np.uint8(2), where=m2)
-        # 3..8-byte verified hash probe
-        h = (w_lo & np.uint32(0xFFFFFF)) * np.uint32(2654435761)
-        np.right_shift(h, np.uint32(32 - self._hbits), out=h)
-        hp = h.astype(np.intp)
-        slen = np.take(self._slot_len, hp)
-        ok = (np.take(self._slot_val_lo, hp)
-              == (w_lo & np.take(self._slot_mask_lo, hp)))
-        ok &= (np.take(self._slot_val_hi, hp)
-               == (w_hi & np.take(self._slot_mask_hi, hp)))
-        ok &= (slen >= 3) & (slen <= rem8)
-        np.copyto(mcode, np.take(self._slot_code, hp), where=ok)
-        np.copyto(mlen, slen, where=ok)
-        # --- stage 2: wavefront greedy chain across all rows ---
-        visited = np.zeros(n, dtype=bool)
-        pos = bounds[:-1].copy()
-        end = bounds[1:]
-        alive = np.nonzero(pos < end)[0]
-        pos, end = pos[alive], end[alive]
-        while pos.size:
-            visited[pos] = True
-            pos = pos + np.take(mlen, pos)
-            keep = pos < end
-            if not keep.all():
-                pos, end = pos[keep], end[keep]
-        # --- emit: repeat+gather only (no integer-index scatters, which are
-        # pathologically slow on this numpy) ---
-        kept = np.nonzero(visited)[0]
-        tok_codes = np.take(mcode, kept)
-        lit = np.take(buf, kept)            # literal byte per token (escapes)
-        is_esc = tok_codes == ESCAPE
-        out_per_tok = np.where(is_esc, 2, 1).astype(np.int64)
-        src = np.repeat(np.arange(kept.size, dtype=np.int64), out_per_tok)
-        first = np.ones(src.size, dtype=bool)
-        first[1:] = src[1:] != src[:-1]
-        out = np.where(first, np.take(tok_codes, src), np.take(lit, src))
-        # per-row encoded lengths: cumsum of per-position contributions
-        contrib = np.where(visited,
-                           np.where(mcode == ESCAPE, np.int64(2),
-                                    np.int64(1)),
-                           np.int64(0))
-        ccum = np.concatenate(([0], np.cumsum(contrib)))
-        out_lens = ccum[bounds[1:]] - ccum[bounds[:-1]]
-        return out, out_lens
+        return native.encode_flat(self, buf,
+                                  np.concatenate(([0], np.cumsum(row_lens))))
 
     def decode_flat(self, codes: np.ndarray, row_lens: np.ndarray
                     ) -> tuple[np.ndarray, np.ndarray]:
-        """Decode MANY rows in one pass: ``codes`` is the concatenation of
+        """Decode MANY rows in one C pass: ``codes`` is the concatenation of
         the rows' encoded bytes, ``row_lens`` their lengths.  Returns
-        (flat decoded uint8 buffer, decoded length per row).
-
-        Safe to run across row boundaries: every escape emits a complete
-        2-byte pair within its row, so a maximal run of 0xFF bytes that
-        touches a row end always ends on a literal — the run-parity rule
-        (even offsets are escapes) still holds after concatenation.  This
-        turns the per-row decode (dominated by per-call numpy overhead at
-        ~7 MB/s) into one escape-scan + one gather for the whole batch."""
+        (flat decoded uint8 buffer, decoded length per row)."""
         codes = np.ascontiguousarray(codes, dtype=np.uint8)
         row_lens = np.asarray(row_lens, dtype=np.int64)
-        n = codes.size
-        if n == 0:
-            return np.zeros(0, np.uint8), np.zeros(row_lens.size, np.int64)
-        from .. import native
-        res = native.decode_flat(
+        return native.decode_flat(
             self, codes, np.concatenate(([0], np.cumsum(row_lens))))
-        if res is not None:
-            return res
-        is255 = codes == ESCAPE
-        idx = np.arange(n, dtype=np.int64)
-        if is255.any():
-            run_start = is255 & ~np.concatenate(([False], is255[:-1]))
-            start_ff = np.maximum.accumulate(np.where(run_start, idx, -1))
-            esc = is255 & ((idx - start_ff) % 2 == 0)
-            lit_pos = np.nonzero(esc)[0] + 1
-            lit_pos = lit_pos[lit_pos < n]
-            keep = np.ones(n, dtype=bool)
-            keep[lit_pos] = False
-        else:
-            keep = np.ones(n, dtype=bool)
-            lit_pos = np.zeros(0, dtype=np.int64)
-        toks = codes[keep]
-        n_sym = len(self.symbols)
-        safe = np.minimum(toks, n_sym)       # ESCAPE → sentinel slot (len 1)
-        lens = self._sym_lens[safe]
-        # padded-row gather + boolean compress (fastest gather on this numpy)
-        sel = np.arange(MAX_LEN, dtype=np.int64) < lens[:, None]
-        out = self._sym_mat[safe][sel]
-        if lit_pos.size:
-            ends = np.cumsum(lens)
-            lit_slots = np.nonzero(toks == ESCAPE)[0]
-            out[ends[lit_slots] - 1] = codes[lit_pos]
-        # per-row decoded lengths: each kept code position contributes its
-        # token's decoded length; cumsum sliced at row boundaries
-        contrib = np.zeros(n, dtype=np.int64)
-        contrib[np.nonzero(keep)[0]] = lens
-        ccum = np.concatenate(([0], np.cumsum(contrib)))
-        bounds = np.concatenate(([0], np.cumsum(row_lens)))
-        out_lens = ccum[bounds[1:]] - ccum[bounds[:-1]]
-        return out, out_lens
 
     def decode(self, enc: bytes) -> bytes:
         codes = np.frombuffer(enc, dtype=np.uint8)

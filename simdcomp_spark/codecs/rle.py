@@ -9,8 +9,9 @@ Wire format per non-empty row:
 Both sub-streams reuse the reference per-block-maxbits bit-packing layout
 (``blocks.encode_flat`` mode 'plain'), so RLE inherits the bit-identical
 kernels AND per-block adaptive widths.  Run lengths are stored minus 1 (a
-run is never empty) so all-distinct data degrades to width-0 blocks.
-Everything is vectorized across the whole batch — no per-row Python.
+run is never empty) so all-distinct data degrades to width-0 blocks.  Runs
+of the whole batch come from one C pass (``native.rle_runs``) — no per-row
+Python.
 """
 
 from __future__ import annotations
@@ -25,31 +26,6 @@ U32 = np.uint32
 _HDR = 4
 
 
-def _runs_flat(flat: np.ndarray, lens: np.ndarray):
-    """Vectorized run detection: returns (run_vals, run_lens, runs_per_row)."""
-    nrows = lens.size
-    total = flat.size
-    if total == 0:
-        return (np.empty(0, U32), np.empty(0, np.int64),
-                np.zeros(nrows, np.int64))
-    res = native.rle_runs(flat, lens)       # C one-pass path
-    if res is not None:
-        return res
-    row_starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    is_start = np.ones(total, dtype=bool)
-    is_start[1:] = flat[1:] != flat[:-1]
-    is_start[row_starts[lens > 0]] = True
-    start_idx = np.nonzero(is_start)[0]
-    run_lens = np.diff(np.concatenate((start_idx, [total])))
-    run_vals = flat[start_idx]
-    # runs per row: one reduceat over the start-flags (empty rows excluded
-    # — reduceat misreads zero-length segments — then scattered back)
-    ne = np.nonzero(lens > 0)[0]
-    rpr = np.zeros(nrows, dtype=np.int64)
-    rpr[ne] = np.add.reduceat(is_start, row_starts[ne])
-    return run_vals, run_lens, rpr
-
-
 class RLECodec(Codec):
     name = "rle"
     _per_block_overhead = 0
@@ -58,7 +34,7 @@ class RLECodec(Codec):
         flat = np.ascontiguousarray(flat, dtype=U32)
         lens = np.asarray(lens, dtype=np.int64)
         nrows = lens.size
-        run_vals, run_lens, rpr = _runs_flat(flat, lens)
+        run_vals, run_lens, rpr = native.rle_runs(flat, lens)
         ev = blocks.encode_flat(run_vals, rpr, "plain")
         el = blocks.encode_flat((run_lens - 1).astype(U32), rpr, "plain")
         nb = ev.nblocks  # == el.nblocks
@@ -116,7 +92,7 @@ class RLECodec(Codec):
     def payload_sizes_flat(self, flat, lens):
         flat = np.ascontiguousarray(flat, dtype=U32)
         lens = np.asarray(lens, dtype=np.int64)
-        run_vals, run_lens, rpr = _runs_flat(flat, lens)
+        run_vals, run_lens, rpr = native.rle_runs(flat, lens)
         sv = blocks.encoded_sizes_flat(run_vals, rpr, "plain")
         sl = blocks.encoded_sizes_flat((run_lens - 1).astype(U32), rpr, "plain")
         nb = (rpr + 127) // 128

@@ -2,9 +2,10 @@
 
 Spark-first design (SURVEY.md §1.4, §4):
 * the ONLY Python in the hot path is Arrow-batched ``mapInArrow`` calling the
-  vectorized numpy codec core — token list-columns and packed binary columns
-  move as RAW ARROW BUFFERS (one values buffer + offsets per batch), so there
-  is no per-row Python and no per-row object materialization at all;
+  codec core (C kernels over flat buffers) — token list-columns and packed
+  binary columns move as RAW ARROW BUFFERS (one values buffer + offsets per
+  batch), so there is no per-row Python and no per-row object
+  materialization at all;
 * salt-based repartitioning on ``pmod(xxhash64(doc_id, seg_id), shards)``
   spreads encode work evenly (north rule: explicit partitioning/skew
   handling);
@@ -36,7 +37,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import blocks, codecs
+from . import blocks, codecs, kernels
 from .codecs.auto import choose_codec_flat
 
 ENCODED_SCHEMA = ("doc_id string, source string, seg_id int, n_tok int, "
@@ -45,6 +46,12 @@ ENCODED_SCHEMA = ("doc_id string, source string, seg_id int, n_tok int, "
 DECODED_SCHEMA = "doc_id string, source string, seg_id int, tokens array<int>"
 
 DEFAULT_SPLIT_THRESHOLD = 1 << 16  # tokens per segment
+# rows per pyarrow batch in encode_files: 2048 rows ≈ 7 MB of tokens keeps
+# the per-thread working set near the L3 share at full thread count
+# (measured +7-10% over 8192 at 8 and 32 cores; 1024 regresses)
+_ENCODE_BATCH_ROWS = 2048
+# work units per core planned by _rowgroup_units
+_UNITS_PER_CORE = 4
 _BLOCK_MODES = {"bitpack": "plain", "for": "for", "d1": "d1"}
 
 
@@ -243,43 +250,59 @@ def encode(df: DataFrame, codec: str = "auto", shards: int | None = None,
         df = df.withColumn(
             "_shard", F.pmod(F.xxhash64("doc_id", "seg_id"), F.lit(shards)))
         df = df.repartition(shards, "_shard").drop("_shard")
-    df = df.select("doc_id", "source", "seg_id", "n_tok", "tokens")
+    df = df.select("doc_id", "source", "seg_id", "tokens")
 
     def encode_fn(it):
-        from pyspark import TaskContext
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else -1
+        pid = _partition_id()
         chosen = None if codec == "auto" else codec
-        total_ns = 0  # cumulative per task; metrics take max() per pid
+        total_ns = 0
         for batch in it:
-            t0 = time.perf_counter_ns()
-            tokens_col = batch.column(4)
-            flat_i32, lens = _list_to_flat(tokens_col)
-            flat = flat_i32.view(np.uint32)
-            if chosen is None:
-                chosen, _costs = choose_codec_flat(flat, lens)
-            n = len(batch)
-            e = codecs.get(chosen).encode_flat(flat, lens)
-            widths_arr = _binary_from_flat(e.widths, e.widths_lens)
-            inits_arr = _binary_from_flat(e.inits, e.inits_lens)
-            payload_arr = _binary_from_flat(e.payload, e.payload_lens)
-            from .kernels import content_hash_flat
-            ch = content_hash_flat(flat, lens)
-            total_ns += time.perf_counter_ns() - t0
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0), batch.column(1),
-                 batch.column(2).cast(pa.int32()),
-                 batch.column(3).cast(pa.int32()),
-                 pa.array([chosen] * n, type=pa.string()),
-                 widths_arr, inits_arr, payload_arr,
-                 pa.array(np.full(n, pid, dtype=np.int32)),
-                 pa.array(np.full(n, total_ns, dtype=np.int64)),
-                 _binary_from_flat(ch, np.full(n, 16, dtype=np.int64))],
-                names=["doc_id", "source", "seg_id", "n_tok", "codec",
-                       "widths", "inits", "payload", "pid", "enc_ns",
-                       "content_hash"])
+            flat_i32, lens = _list_to_flat(batch.column(3))
+            rb, chosen, total_ns = _encode_batch(
+                batch.column(0), batch.column(1),
+                batch.column(2).cast(pa.int32()), flat_i32.view(np.uint32),
+                lens, chosen, pid, total_ns)
+            yield rb
 
     return df.mapInArrow(encode_fn, schema=ENCODED_SCHEMA)
+
+
+def _partition_id() -> int:
+    from pyspark import TaskContext
+    ctx = TaskContext.get()
+    return ctx.partitionId() if ctx else -1
+
+
+def _encode_batch(doc_ids: pa.Array, sources: pa.Array, seg_ids: pa.Array,
+                  flat: np.ndarray, lens: np.ndarray, chosen: str | None,
+                  pid: int, total_ns: int
+                  ) -> tuple[pa.RecordBatch, str, int]:
+    """The encode core shared by :func:`encode` and :func:`encode_files`:
+    one batch of uint32 token rows → one ``ENCODED_SCHEMA`` RecordBatch.
+
+    ``chosen`` is the task's codec, or None to pick one on this batch
+    (auto); ``total_ns`` is the task's cumulative codec time so far — the
+    ``enc_ns`` column carries the running total, metrics take max() per
+    pid.  Returns (batch, codec, new total_ns)."""
+    t0 = time.perf_counter_ns()
+    if chosen is None:
+        chosen, _costs = choose_codec_flat(flat, lens)
+    e = codecs.get(chosen).encode_flat(flat, lens)
+    ch = kernels.content_hash_flat(flat, lens)
+    total_ns += time.perf_counter_ns() - t0
+    n = lens.size
+    rb = pa.RecordBatch.from_arrays(
+        [doc_ids, sources, seg_ids, pa.array(lens.astype(np.int32)),
+         pa.array([chosen] * n, type=pa.string()),
+         _binary_from_flat(e.widths, e.widths_lens),
+         _binary_from_flat(e.inits, e.inits_lens),
+         _binary_from_flat(e.payload, e.payload_lens),
+         pa.array(np.full(n, pid, dtype=np.int32)),
+         pa.array(np.full(n, total_ns, dtype=np.int64)),
+         _binary_from_flat(ch, np.full(n, 16, dtype=np.int64))],
+        names=["doc_id", "source", "seg_id", "n_tok", "codec", "widths",
+               "inits", "payload", "pid", "enc_ns", "content_hash"])
+    return rb, chosen, total_ns
 
 
 def _split_flat(doc_ids, sources, flat, lens, threshold):
@@ -377,14 +400,13 @@ def _rowgroup_units(spark: SparkSession, path: str,
     if not files:
         return spark.createDataFrame([], "path string, rg int")
     par = max(int(spark.sparkContext.defaultParallelism), 1)
-    factor = int(os.environ.get("SIMDCOMP_UNIT_FACTOR", "4"))
     # small-input fast path: when the file list alone already saturates
     # the unit budget there is nothing for row-group planning to balance
     # UNLESS some file is large — probe sizes with one driver-side stat
     # per file (bounded: only attempted below par*factor files) and emit
     # WHOLE-FILE units (rg = -1), skipping the distributed footer job,
     # its exchange, and a stage of per-task overhead.
-    if len(files) <= par * factor:
+    if len(files) <= par * _UNITS_PER_CORE:
         try:
             small = all(os.path.getsize(f) <= (256 << 20) for f in files)
         except OSError:
@@ -408,7 +430,7 @@ def _rowgroup_units(spark: SparkSession, path: str,
     units = (counts.where(F.col("n_rg") > 0)
              .select("path", F.explode(F.sequence(
                  F.lit(0), F.col("n_rg") - 1)).alias("rg")))
-    return units.repartition(par * factor)
+    return units.repartition(par * _UNITS_PER_CORE)
 
 
 def _role_columns(path: str, roles: list[str]) -> dict:
@@ -426,7 +448,6 @@ def _role_columns(path: str, roles: list[str]) -> dict:
 
 def encode_files(spark: SparkSession, path: str, codec: str = "auto",
                  split_threshold: int = DEFAULT_SPLIT_THRESHOLD,
-                 batch_rows: int = 2048,
                  snapshot_id: int | None = None,
                  files: list[str] | None = None) -> DataFrame:
     """Fused scan→encode: Spark schedules one task per parquet row-group,
@@ -443,12 +464,8 @@ def encode_files(spark: SparkSession, path: str, codec: str = "auto",
     pushdown has nothing to push, and the JVM per-element list conversion
     (the dominant fixed cost of the `mapInArrow`-over-scan plan) is pure
     overhead.  Work units are (file, row_group) so task size is bounded by
-    the writer's row-group size regardless of file count skew.
-
-    ``batch_rows`` trades per-batch Python overhead against cache
-    residency: 2048 rows ≈ 7 MB of tokens keeps the per-thread working set
-    near the L3 share at full thread count (measured +7-10% over 8192 at
-    8 and 32 cores on this host; 1024 regresses)."""
+    the writer's row-group size regardless of file count skew.  Workers
+    read 2048-row batches (``_ENCODE_BATCH_ROWS``)."""
     import pyarrow.parquet as pq
 
     fdf = _rowgroup_units(spark, path, snapshot_id, files)
@@ -456,9 +473,7 @@ def encode_files(spark: SparkSession, path: str, codec: str = "auto",
     cols = [cm["doc_id"], cm["tokens"], cm["source"]]
 
     def fn(it):
-        from pyspark import TaskContext
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else -1
+        pid = _partition_id()
         chosen = None if codec == "auto" else codec
         total_ns = 0
         for batch in it:
@@ -466,38 +481,18 @@ def encode_files(spark: SparkSession, path: str, codec: str = "auto",
                                  batch.column(1).to_pylist()):
                 pf = pq.ParquetFile(path_, pre_buffer=True)
                 rgs = [rg] if rg >= 0 else None   # -1 = whole-file unit
-                for rb in pf.iter_batches(batch_size=batch_rows,
+                for rb in pf.iter_batches(batch_size=_ENCODE_BATCH_ROWS,
                                           row_groups=rgs,
                                           columns=cols):
                     rb = rb.select(cols)  # parquet yields file order
-                    t0 = time.perf_counter_ns()
                     flat_i32, lens = _list_to_flat(rb.column(1))
-                    flat = flat_i32.view(np.uint32)
-                    doc_ids = rb.column(0)
-                    sources = rb.column(2)
                     doc_ids, sources, seg_ids, flat, lens = _split_flat(
-                        doc_ids, sources, flat, lens, split_threshold)
-                    if chosen is None:
-                        chosen, _ = choose_codec_flat(flat, lens)
-                    e = codecs.get(chosen).encode_flat(flat, lens)
-                    n = lens.size
-                    from .kernels import content_hash_flat
-                    ch = content_hash_flat(flat, lens)
-                    total_ns += time.perf_counter_ns() - t0
-                    yield pa.RecordBatch.from_arrays(
-                        [doc_ids, sources, pa.array(seg_ids, pa.int32()),
-                         pa.array(lens.astype(np.int32)),
-                         pa.array([chosen] * n, type=pa.string()),
-                         _binary_from_flat(e.widths, e.widths_lens),
-                         _binary_from_flat(e.inits, e.inits_lens),
-                         _binary_from_flat(e.payload, e.payload_lens),
-                         pa.array(np.full(n, pid, dtype=np.int32)),
-                         pa.array(np.full(n, total_ns, dtype=np.int64)),
-                         _binary_from_flat(ch,
-                                           np.full(n, 16, dtype=np.int64))],
-                        names=["doc_id", "source", "seg_id", "n_tok",
-                               "codec", "widths", "inits", "payload",
-                               "pid", "enc_ns", "content_hash"])
+                        rb.column(0), rb.column(2),
+                        flat_i32.view(np.uint32), lens, split_threshold)
+                    out, chosen, total_ns = _encode_batch(
+                        doc_ids, sources, pa.array(seg_ids, pa.int32()),
+                        flat, lens, chosen, pid, total_ns)
+                    yield out
 
     return fdf.mapInArrow(fn, schema=ENCODED_SCHEMA)
 

@@ -48,7 +48,6 @@ corpus scope, with documents instead of deltas as the unit.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -317,16 +316,6 @@ def pack_greedy(df_tokens: DataFrame, chunk_len: int,
                 "corrupt chunks)")
         ns = pdf["_n"].to_numpy(dtype="int64")
         chunk = native.next_fit(ns, L)   # C loop: ~100M docs/s/core
-        if chunk is None:                # no toolchain: identical Python
-            chunk = np.empty(ns.size, dtype=np.int64)
-            cid, fill = 0, L   # fill=L forces first doc to open chunk 1
-            for i, n in enumerate(ns):   # next-fit: sequential by design
-                if fill + n <= L:
-                    fill += n
-                else:
-                    cid += 1
-                    fill = n
-                chunk[i] = cid
         return pd.DataFrame({"_id": pdf["_id"], "_bkt": pdf["_bkt"],
                              "_chunk": chunk})
 

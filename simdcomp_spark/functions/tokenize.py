@@ -15,14 +15,11 @@ Spark shape: an Arrow-batched UDF (``mapInArrow``) — genuine
 per-character control flow is the sanctioned UDF case; there is no JVM
 expression for longest-match scanning.  It is embarrassingly parallel
 (zero exchanges, whole-stage scan → udf → output).  The per-core hot
-loop is a ~40-line C byte-trie DFA (native.tokenize_greedy, same
-lazy-gcc+ctypes pattern as the codec kernels) fed the Arrow string
-buffer directly — no per-row Python, no per-row str materialization.
-When the C toolchain is unavailable (or SIMDCOMP_NO_NATIVE=1) the
-byte-identical Python path runs instead, with a size-capped word → ids
-memo per partition (corpus word frequency is Zipfian, so the memo turns
-the per-character loop into a dict hit for the bulk of occurrences
-while the cap bounds worker memory).  The vocabulary here is a fixed
+loop is a ~40-line C byte-trie DFA (native.tokenize_greedy, compiled
+like the codec kernels) fed the Arrow string buffer directly — no
+per-row Python, no per-row str materialization.  The text column must
+be string or large_string.  :func:`tokenize_word` is the scalar
+reference the tests compare the DFA against.  The vocabulary here is a fixed
 demo table (ASCII singles + common English merges); a production run
 swaps in a learned one — every code path is vocabulary-agnostic (the
 trie is built from whatever VOCAB holds).
@@ -56,7 +53,7 @@ _MAX_LEN = max(len(t) for t in VOCAB)
 
 def tokenize_word(w: str) -> list[int]:
     """Greedy longest-match ids for one word (the reference scalar
-    implementation — the UDF memoizes it, the oracle replays it)."""
+    implementation — the C DFA matches it, the oracle replays it)."""
     out: list[int] = []
     pos, n = 0, len(w)
     while pos < n:
@@ -166,45 +163,16 @@ def wordpiece_tokenize(df: DataFrame, col: str = "text",
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from .. import engine, native
         trans, accept = _trie_arrays(vocab)
-
-        # per-PARTITION word memo for the Python fallback, size-capped:
-        # Zipfian reuse makes most occurrences a dict hit, while the cap
-        # bounds worker memory on web-scale partitions full of distinct
-        # "words" (URLs, hashes)
-        memo: dict[str, list[int]] = {}
-        MEMO_CAP = 1 << 20
-
-        def doc_tokens(text) -> list[int]:
-            if text is None:
-                return []
-            out: list[int] = []
-            for w in text.split(" "):
-                if not w:
-                    continue
-                ids = memo.get(w)
-                if ids is None:
-                    ids = tokenize_word(w)
-                    if len(memo) < MEMO_CAP:
-                        memo[w] = ids
-                out.extend(ids)
-            return out
-
         for batch in batches:
             ids_col, text_col = batch.column(0), batch.column(1)
-            res = None
-            if pa.types.is_string(text_col.type) or pa.types.is_large_string(
-                    text_col.type):
-                data, starts, ends = _string_slots(text_col)
-                res = native.tokenize_greedy(data, starts, ends,
-                                             trans, accept, unk)
-            if res is not None:
-                flat, lens = res
-            else:                      # no C toolchain: Python fallback
-                toks = [doc_tokens(t) for t in text_col.to_pylist()]
-                lens = np.array([len(t) for t in toks], dtype=np.int64)
-                flat = np.fromiter(
-                    (i for t in toks for i in t), dtype=np.int32,
-                    count=int(lens.sum()))
+            if not (pa.types.is_string(text_col.type)
+                    or pa.types.is_large_string(text_col.type)):
+                raise TypeError(
+                    f"wordpiece_tokenize: column {col!r} is "
+                    f"{text_col.type}, expected string or large_string")
+            data, starts, ends = _string_slots(text_col)
+            flat, lens = native.tokenize_greedy(data, starts, ends,
+                                                trans, accept, unk)
             tokens_arr = pa.ListArray.from_arrays(
                 engine._offsets32(lens), pa.array(flat, type=pa.int32()))
             yield pa.RecordBatch.from_arrays(

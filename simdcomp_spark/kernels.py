@@ -1,9 +1,11 @@
 """Vectorized numpy codec core — bit-identical to lemire/simdcomp's SSE wire
 format.
 
-This module is pure numpy (no Spark): it is the "engine room" every Spark
-codec UDF calls into.  The wire format it reproduces is the reference's
-4-lane vertically interleaved layout (see ``/root/reference``):
+This module is the numpy statement of the wire format (no Spark): the
+tests check the engine's C block codec (:mod:`simdcomp_spark.native`,
+driven by :mod:`simdcomp_spark.blocks`) against it, and the golden
+vectors pin it to the compiled reference.  The wire format is the
+reference's 4-lane vertically interleaved layout (sources cited below):
 
 * lane ``l = i % 4``, position-in-lane ``k = i // 4``
   (``src/simdfor.c:14996`` — "we have 4 interleaved lanes");
@@ -679,61 +681,20 @@ def multi_arange(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
 # Canonical per-row content hash (codec-invariant dedup key)
 # ---------------------------------------------------------------------------
 
-_CH_P1 = np.uint64(0x9E3779B97F4A7C15)   # odd → invertible mod 2^64
-_CH_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
-_CH_C1 = np.uint64(0x9AE16A3B2F90404F)
-_CH_C2 = np.uint64(0x165667B19E3779F9)
-
-
 def content_hash_flat(flat: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """128-bit content hash of each row's raw token stream, vectorized.
+    """128-bit content hash of each row's raw token stream.
 
     The dedup key the engine stamps on every encoded row: it is computed
     from the RAW tokens before any codec runs, so equal token arrays hash
     equal no matter which codec a partition's auto-selector picked (the
-    compressed representation is NOT codec-invariant).  Two independent
-    64-bit polynomial hashes H_p = sum_i (v_i + C) * p^(n-1-i) mod 2^64
-    (distinct odd multipliers), each folded with the row length and passed
-    through a splitmix64 finalizer.  Implementation is one global prefix
-    sum per multiplier (mod-2^64 wraparound arithmetic) — no per-row
-    Python, empty rows well-defined.  Returns uint8 of shape (16 * nrows,)
-    — 16 little-endian bytes per row."""
-    lens = np.asarray(lens, dtype=np.int64)
-    n = lens.size
-    if n == 0:
-        return np.empty(0, dtype=np.uint8)
+    compressed representation is NOT codec-invariant).  Tokens are read
+    in the uint32 domain (Arrow's int32 -1 is 0xFFFFFFFF).  Two
+    independent 64-bit polynomial hashes H_p = sum_i (v_i + C) * p^(n-1-i)
+    mod 2^64 with (p, C) = (0x9E3779B97F4A7C15, 0x9AE16A3B2F90404F) and
+    (0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9); each is XORed with n * p and
+    passed through the splitmix64 finalizer.  Empty rows are well-defined.
+    Computed by the C kernel ``native.content_hash`` (a block-Horner
+    loop).  Returns uint8 of shape (16 * nrows,) — 16 little-endian bytes
+    per row, H_p1 then H_p2."""
     from . import native
-    fast = native.content_hash(flat, lens)
-    if fast is not None:          # C Horner loop, bit-identical, ~40x
-        return fast
-    out = np.empty((max(n, 1), 2), dtype=np.uint64)
-    ends = np.cumsum(lens)
-    starts = ends - lens
-    # reinterpret in the uint32 domain FIRST (int32 tokens from Arrow may
-    # be negative): a direct astype(uint64) would sign-extend -1 to
-    # 2^64-1 while the C path sees 0xFFFFFFFF — the two "bit-identical"
-    # paths would hash apart and encoded_dedup would miss duplicates
-    # across hosts with/without a C toolchain
-    v = (flat[:int(ends[-1])].astype(np.int64, copy=False)
-         & np.int64(0xFFFFFFFF)).astype(np.uint64)
-    maxlen = int(lens.max())
-    g = np.arange(v.size, dtype=np.int64)
-    rev = np.repeat(ends - 1, lens) - g      # row-local position from end
-    for j, (p, c) in enumerate(((_CH_P1, _CH_C1), (_CH_P2, _CH_C2))):
-        pows = np.empty(max(maxlen, 1), dtype=np.uint64)
-        pows[0] = 1
-        if maxlen > 1:
-            np.cumprod(np.full(maxlen - 1, p, dtype=np.uint64),
-                       out=pows[1:])
-        terms = (v + c) * pows[rev]
-        csum = np.zeros(terms.size + 1, dtype=np.uint64)
-        np.cumsum(terms, out=csum[1:])
-        h = csum[ends] - csum[starts]
-        h ^= lens.astype(np.uint64) * p
-        h ^= h >> np.uint64(30)
-        h *= np.uint64(0xBF58476D1CE4E5B9)
-        h ^= h >> np.uint64(27)
-        h *= np.uint64(0x94D049BB133111EB)
-        h ^= h >> np.uint64(31)
-        out[:n, j] = h
-    return out[:n].reshape(-1).view(np.uint8)
+    return native.content_hash(flat, np.asarray(lens, dtype=np.int64))

@@ -1,30 +1,39 @@
-"""Optional C fast path for the engine's per-core hot loops.
+"""The C kernels behind the engine's per-core hot loops.
 
-Four kernel families, all self-written generic loops (NOT derived from the
-reference's machine-generated per-width unrolled C), compiled with the
-system gcc on first use and loaded via ctypes:
+Self-written generic loops (NOT derived from the reference's
+machine-generated per-width unrolled C), compiled with the system gcc on
+first use and loaded via ctypes:
 
 * ``pack_lanes``/``unpack_lanes`` — the lane-interleaved bit-pack
   recurrence, width- and lane-parameterized (SSE/AVX2/AVX-512 layouts);
 * ``analyze_blocks``/``pack_blocks_flat``/``unpack_blocks_flat`` — the
   FUSED flat-buffer block codec: per-block maxbits/min-max, pack, and
   unpack-with-codec-semantics (FOR base add, d1 prefix sum) in one pass
-  over the batch with no intermediate matrices (~200-400 Mtok/s/core vs
-  ~30-50 for the grouped-numpy path);
+  over the batch with no intermediate matrices;
+* ``dict_streams``/``dict_gather``/``rle_runs``/``gather_rows`` — the
+  dict and RLE stream builders and the wire-format row copies;
+* ``content_hash``, ``next_fit``, ``tokenize_greedy`` — the per-row dedup
+  hash, pack_greedy's next-fit loop and the byte-trie tokenizer;
 * ``fsst_encode``/``fsst_decode`` — the FSST tokenizer, the one loop that
   is inherently sequential per row (the next match position depends on the
-  previous match length; ~630 MB/s/core vs ~14 for batched numpy).
+  previous match length).
 
-Everything degrades gracefully: if gcc or a C toolchain is unavailable the
-callers keep using the batched-numpy paths, which compute BYTE-IDENTICAL
-output (tested in tests/test_codecs.py for both families, and the golden
-tests pin both paths to vectors dumped from the compiled reference).
-Set SIMDCOMP_NO_NATIVE=1 to force the numpy paths.
+The kernels are REQUIRED: each loop has this one implementation, so gcc
+must be on the PATH of every host that runs the engine (driver and
+executors).  :func:`_load` raises :class:`NativeBuildError`, carrying the
+compiler's stderr, when the library cannot be built or loaded, and every
+wrapper returns its result or raises.  The library is cached in
+``SIMDCOMP_NATIVE_DIR`` (default: a directory under the system temp dir)
+under a name derived from a hash of the C source and the compile flags,
+so an edited source never loads a stale build.  The golden tests pin the
+kernels to vectors dumped from the compiled reference.
 """
 
 from __future__ import annotations
 
+import contextlib
 import ctypes
+import hashlib
 import os
 import subprocess
 import tempfile
@@ -40,8 +49,8 @@ _C_SRC = r"""
  * always has SSE2; the 4-lane wire layout IS the SSE layout, so one
  * 128-bit op per row replaces 4 scalar ops and the per-element address
  * math) and the original scalar loops for any other architecture.  Both
- * produce byte-identical payloads (asserted in tests against the numpy
- * builders and the compiled-reference golden vectors). */
+ * produce byte-identical payloads (the compiled-reference golden vectors
+ * pin the wire format). */
 #if defined(__SSE2__) || defined(__x86_64__)
 #include <emmintrin.h>
 #define SIMDCOMP_SSE2 1
@@ -386,9 +395,8 @@ void unpack_blocks_flat(const uint8_t *payload, const int64_t *src_off,
 }
 
 /* Segmented memcpy: for each row copy lens[i] bytes from src+src_off[i]
- * to dst+dst_off[i].  Replaces the numpy multi_arange fancy-index gathers
- * in the codec wire-format assembly/parsing (those build an int64 index
- * per BYTE; this is a straight memcpy per row). */
+ * to dst+dst_off[i] — the codec wire-format assembly/parsing (a straight
+ * memcpy per row instead of an int64 index per BYTE). */
 void gather_rows(const uint8_t *src, const int64_t *src_off,
                  const int64_t *lens, int64_t n, uint8_t *dst,
                  const int64_t *dst_off)
@@ -403,9 +411,7 @@ void gather_rows(const uint8_t *src, const int64_t *src_off,
  * row's sorted distinct set.  Per row: LSB-radix sort of (value<<32|pos)
  * pairs, with passes skipped for value bytes that don't vary inside the
  * row (token ids are typically < 2^16-2^24 → 2-3 passes), then one scan.
- * scratch must hold 2*max_row_len uint64.  Returns the total uniq count.
- * Matches the numpy fused-key argsort path exactly (same sorted-distinct
- * ranks); rows are independent so the batch layout is identical. */
+ * scratch must hold 2*max_row_len uint64.  Returns the total uniq count. */
 int64_t dict_streams(const uint32_t *flat, const int64_t *row_off,
                      int64_t nrows, uint64_t *scratch,
                      uint32_t *uniq, int64_t *n_dict, uint32_t *codes)
@@ -542,7 +548,7 @@ int64_t rle_runs(const uint32_t *flat, const int64_t *row_off, int64_t nrows,
 }
 
 /* Dict decode final gather: out[k] = uniq[dict_off[row]+codes[k]] in one
- * pass (replaces numpy repeat + add + take — three full-size temporaries). */
+ * pass (no repeat + add + take full-size temporaries). */
 void dict_gather(const uint32_t *uniq, const uint32_t *codes,
                  const int64_t *row_off, const int64_t *dict_off,
                  int64_t nrows, uint32_t *out)
@@ -627,11 +633,10 @@ int64_t fsst_decode(const uint8_t *codes, int64_t n,
 
 /* Per-row 128-bit content hash (codec-invariant dedup key): two
  * independent 64-bit polynomial hashes via forward Horner
- * (h = h*p + (v + c)), then a length fold + splitmix64 finalizer.
- * Bit-identical to the numpy prefix-sum formulation in
- * kernels.content_hash_flat (Horner of p equals sum (v_i+c)*p^(n-1-i)
- * mod 2^64); the two Horner chains are independent so they pipeline.
- * out receives 2 u64 words per row. */
+ * (h = h*p + (v + c)), then a length fold + splitmix64 finalizer; Horner
+ * of p equals sum (v_i+c)*p^(n-1-i) mod 2^64, the definition documented
+ * in kernels.content_hash_flat.  The two Horner chains are independent so
+ * they pipeline.  out receives 2 u64 words per row. */
 void content_hash(const uint32_t *flat, const int64_t *row_off,
                   int64_t nrows, uint64_t *out)
 {
@@ -732,9 +737,22 @@ void tokenize_greedy(const uint8_t *buf, const int64_t *starts,
 }
 """
 
+# x86-64-v2 (SSE4.2) lets gcc vectorize the unsigned min/max analyze loops
+# (pminud is not in baseline SSE2); the second flag set serves toolchains
+# without it (non-x86 hosts)
+_FLAGS = (("-O3", "-march=x86-64-v2", "-shared", "-fPIC"),
+          ("-O3", "-shared", "-fPIC"))
+_TAG = hashlib.sha256(
+    (_C_SRC + repr(_FLAGS)).encode()).hexdigest()[:16]
+
+
+class NativeBuildError(RuntimeError):
+    """The C kernels could not be compiled or loaded on this host."""
+
+
 _lock = threading.Lock()
 _lib: ctypes.CDLL | None = None
-_tried = False
+_error: NativeBuildError | None = None
 
 
 def _build_dir() -> str:
@@ -744,89 +762,112 @@ def _build_dir() -> str:
     return d
 
 
-def _load() -> ctypes.CDLL | None:
-    """Compile (once per machine) and load the kernel; None on failure."""
-    global _lib, _tried
-    if _lib is not None or _tried:
+def _compile() -> str:
+    """Path of the shared library for this source, compiled on first use.
+    Concurrent builders write pid-unique files and publish them with an
+    atomic rename, so racing processes are fine."""
+    base = os.path.join(_build_dir(), f"simdcomp_kernels_{_TAG}")
+    so = base + ".so"
+    if os.path.exists(so):
+        return so
+    tmp_src, tmp = f"{base}.{os.getpid()}.c", f"{base}.{os.getpid()}.so"
+    with open(tmp_src, "w") as f:
+        f.write(_C_SRC)
+    failures = []
+    try:
+        for flags in _FLAGS:
+            cmd = ["gcc", *flags, "-o", tmp, tmp_src]
+            try:
+                r = subprocess.run(cmd, capture_output=True, text=True,
+                                   timeout=60)
+            except (OSError, subprocess.TimeoutExpired) as e:
+                failures.append(f"$ {' '.join(cmd)}\n{e}")
+                break                   # no gcc: other flags cannot help
+            if r.returncode == 0:
+                os.replace(tmp, so)
+                os.replace(tmp_src, base + ".c")    # kept for inspection
+                return so
+            failures.append(f"$ {' '.join(cmd)}\n{r.stderr.strip()}")
+    finally:
+        for leftover in (tmp_src, tmp):
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(leftover)
+    raise NativeBuildError(
+        "could not compile the simdcomp_spark C kernels; gcc is required "
+        "on every host that runs the engine:\n" + "\n".join(failures))
+
+
+def _load() -> ctypes.CDLL:
+    """Compile (once per machine) and load the kernels.  Raises
+    :class:`NativeBuildError` on failure; the failure is remembered, so
+    later calls re-raise it without compiling again."""
+    global _lib, _error
+    if _lib is not None:
         return _lib
     with _lock:
-        if _lib is not None or _tried:
-            return _lib
-        _tried = True
-        if os.environ.get("SIMDCOMP_NO_NATIVE"):
-            return None
-        try:
-            d = _build_dir()
-            so = os.path.join(d, "simdcomp_kernels_v14.so")
-            if not os.path.exists(so):
-                src = os.path.join(d, "simdcomp_kernels_v14.c")
-                with open(src, "w") as f:
-                    f.write(_C_SRC)
-                tmp = so + f".tmp.{os.getpid()}"
-                # x86-64-v2 (SSE4.2) lets gcc vectorize the unsigned
-                # min/max analyze loops (pminud is not in baseline SSE2);
-                # fall back to plain -O3 on toolchains without the flag
+        if _lib is None:
+            if _error is None:
                 try:
-                    subprocess.run(
-                        ["gcc", "-O3", "-march=x86-64-v2", "-shared",
-                         "-fPIC", "-o", tmp, src],
-                        check=True, capture_output=True, timeout=60)
-                except subprocess.CalledProcessError:
-                    subprocess.run(
-                        ["gcc", "-O3", "-shared", "-fPIC", "-o", tmp, src],
-                        check=True, capture_output=True, timeout=60)
-                os.replace(tmp, so)           # atomic: racing procs are fine
-            lib = ctypes.CDLL(so)
-            i64, u8p, i64p = (ctypes.c_int64, ctypes.POINTER(ctypes.c_uint8),
-                              ctypes.POINTER(ctypes.c_int64))
-            u64p = ctypes.POINTER(ctypes.c_uint64)
-            lib.fsst_encode.restype = i64
-            lib.fsst_encode.argtypes = [u8p, i64, i64p, i64, u8p, u8p, u8p,
-                                        u8p, u64p, u64p, ctypes.c_int, u8p,
-                                        i64p]
-            lib.fsst_decode.restype = i64
-            lib.fsst_decode.argtypes = [u8p, i64, i64p, i64, u8p, u8p, u8p,
-                                        i64p]
-            u32p = ctypes.POINTER(ctypes.c_uint32)
-            i32p = ctypes.POINTER(ctypes.c_int32)
-            ci = ctypes.c_int
-            lib.pack_lanes.restype = None
-            lib.pack_lanes.argtypes = [u32p, i64, ci, ci, ci, ci, u32p]
-            lib.unpack_lanes.restype = None
-            lib.unpack_lanes.argtypes = [u32p, i64, ci, ci, ci, u32p]
-            lib.analyze_blocks.restype = None
-            lib.analyze_blocks.argtypes = [u32p, i64p, i32p, i64, ci, u8p,
-                                           u32p]
-            lib.pack_blocks_flat.restype = None
-            lib.pack_blocks_flat.argtypes = [u32p, u32p, i64p, i32p, u8p,
-                                             u32p, i64p, i64, ci, u8p]
-            lib.unpack_blocks_flat.restype = None
-            lib.unpack_blocks_flat.argtypes = [u8p, i64p, i64p, i32p, u8p,
-                                               u32p, i64, ci, u32p]
-            lib.dict_streams.restype = i64
-            lib.dict_streams.argtypes = [u32p, i64p, i64, u64p, u32p, i64p,
-                                         u32p]
-            lib.dict_streams_table.restype = i64
-            lib.dict_streams_table.argtypes = [u32p, i64p, i64, u32p, u32p,
-                                               u32p, u32p, u32p, i64p, u32p]
-            lib.gather_rows.restype = None
-            lib.gather_rows.argtypes = [u8p, i64p, i64p, i64, u8p, i64p]
-            lib.dict_gather.restype = None
-            lib.dict_gather.argtypes = [u32p, u32p, i64p, i64p, i64, u32p]
-            lib.rle_runs.restype = i64
-            lib.rle_runs.argtypes = [u32p, i64p, i64, u32p, i64p, i64p]
-            lib.content_hash.restype = None
-            lib.content_hash.argtypes = [u32p, i64p, i64, u64p]
-            lib.next_fit.restype = None
-            lib.next_fit.argtypes = [i64p, i64, i64, i64p]
-            lib.tokenize_greedy.restype = None
-            lib.tokenize_greedy.argtypes = [u8p, i64p, i64p, i64, i32p,
-                                            i32p, ctypes.c_int32, i32p,
-                                            i64p]
-            _lib = lib
-        except Exception:
-            _lib = None
-        return _lib
+                    _lib = _bind(ctypes.CDLL(_compile()))
+                except NativeBuildError as e:
+                    _error = e
+                except OSError as e:
+                    _error = NativeBuildError(
+                        f"could not load the simdcomp_spark C kernels: {e}")
+            if _error is not None:
+                raise _error.with_traceback(None)
+    return _lib
+
+
+def _bind(lib: ctypes.CDLL) -> ctypes.CDLL:
+    """Declare every kernel's C signature on the loaded library."""
+    i64, u8p, i64p = (ctypes.c_int64, ctypes.POINTER(ctypes.c_uint8),
+                      ctypes.POINTER(ctypes.c_int64))
+    u64p = ctypes.POINTER(ctypes.c_uint64)
+    lib.fsst_encode.restype = i64
+    lib.fsst_encode.argtypes = [u8p, i64, i64p, i64, u8p, u8p, u8p,
+                                u8p, u64p, u64p, ctypes.c_int, u8p,
+                                i64p]
+    lib.fsst_decode.restype = i64
+    lib.fsst_decode.argtypes = [u8p, i64, i64p, i64, u8p, u8p, u8p,
+                                i64p]
+    u32p = ctypes.POINTER(ctypes.c_uint32)
+    i32p = ctypes.POINTER(ctypes.c_int32)
+    ci = ctypes.c_int
+    lib.pack_lanes.restype = None
+    lib.pack_lanes.argtypes = [u32p, i64, ci, ci, ci, ci, u32p]
+    lib.unpack_lanes.restype = None
+    lib.unpack_lanes.argtypes = [u32p, i64, ci, ci, ci, u32p]
+    lib.analyze_blocks.restype = None
+    lib.analyze_blocks.argtypes = [u32p, i64p, i32p, i64, ci, u8p,
+                                   u32p]
+    lib.pack_blocks_flat.restype = None
+    lib.pack_blocks_flat.argtypes = [u32p, u32p, i64p, i32p, u8p,
+                                     u32p, i64p, i64, ci, u8p]
+    lib.unpack_blocks_flat.restype = None
+    lib.unpack_blocks_flat.argtypes = [u8p, i64p, i64p, i32p, u8p,
+                                       u32p, i64, ci, u32p]
+    lib.dict_streams.restype = i64
+    lib.dict_streams.argtypes = [u32p, i64p, i64, u64p, u32p, i64p,
+                                 u32p]
+    lib.dict_streams_table.restype = i64
+    lib.dict_streams_table.argtypes = [u32p, i64p, i64, u32p, u32p,
+                                       u32p, u32p, u32p, i64p, u32p]
+    lib.gather_rows.restype = None
+    lib.gather_rows.argtypes = [u8p, i64p, i64p, i64, u8p, i64p]
+    lib.dict_gather.restype = None
+    lib.dict_gather.argtypes = [u32p, u32p, i64p, i64p, i64, u32p]
+    lib.rle_runs.restype = i64
+    lib.rle_runs.argtypes = [u32p, i64p, i64, u32p, i64p, i64p]
+    lib.content_hash.restype = None
+    lib.content_hash.argtypes = [u32p, i64p, i64, u64p]
+    lib.next_fit.restype = None
+    lib.next_fit.argtypes = [i64p, i64, i64, i64p]
+    lib.tokenize_greedy.restype = None
+    lib.tokenize_greedy.argtypes = [u8p, i64p, i64p, i64, i32p,
+                                    i32p, ctypes.c_int32, i32p,
+                                    i64p]
+    return lib
 
 
 def _p8(a: np.ndarray):
@@ -842,11 +883,9 @@ def _pu64(a: np.ndarray):
 
 
 def encode_flat(table, buf: np.ndarray, bounds: np.ndarray
-                ) -> tuple[np.ndarray, np.ndarray] | None:
-    """C fsst encode; returns (out, out_lens) or None if unavailable."""
+                ) -> tuple[np.ndarray, np.ndarray]:
+    """C fsst encode; returns (out, out_lens)."""
     lib = _load()
-    if lib is None:
-        return None
     n = int(bounds[-1])
     padded = np.zeros(n + 8, dtype=np.uint8)
     padded[:n] = buf
@@ -861,11 +900,9 @@ def encode_flat(table, buf: np.ndarray, bounds: np.ndarray
 
 
 def decode_flat(table, codes: np.ndarray, bounds: np.ndarray
-                ) -> tuple[np.ndarray, np.ndarray] | None:
-    """C fsst decode; returns (out, out_lens) or None if unavailable."""
+                ) -> tuple[np.ndarray, np.ndarray]:
+    """C fsst decode; returns (out, out_lens)."""
     lib = _load()
-    if lib is None:
-        return None
     n = int(bounds[-1])
     padded = np.zeros(n + 1, dtype=np.uint8)      # escape reads pos+1
     padded[:n] = codes
@@ -882,12 +919,9 @@ def _pu32(a: np.ndarray):
     return a.ctypes.data_as(ctypes.POINTER(ctypes.c_uint32))
 
 
-def pack_lanes(vals: np.ndarray, bit: int, mask: bool) -> np.ndarray | None:
-    """C pack_lanes; (nblk, rows, lanes) u32 → (nblk, nwords, lanes) u32.
-    None if the kernel is unavailable."""
+def pack_lanes(vals: np.ndarray, bit: int, mask: bool) -> np.ndarray:
+    """C pack_lanes; (nblk, rows, lanes) u32 → (nblk, nwords, lanes) u32."""
     lib = _load()
-    if lib is None:
-        return None
     nblk, rows, lanes = vals.shape
     nwords = (rows * bit + 31) // 32
     out = np.empty((nblk, nwords, lanes), dtype=np.uint32)
@@ -896,11 +930,9 @@ def pack_lanes(vals: np.ndarray, bit: int, mask: bool) -> np.ndarray | None:
     return out
 
 
-def unpack_lanes(words: np.ndarray, rows: int, bit: int) -> np.ndarray | None:
+def unpack_lanes(words: np.ndarray, rows: int, bit: int) -> np.ndarray:
     """C unpack_lanes; (nblk, nwords, lanes) u32 → (nblk, rows, lanes)."""
     lib = _load()
-    if lib is None:
-        return None
     nblk, _nw, lanes = words.shape
     out = np.empty((nblk, rows, lanes), dtype=np.uint32)
     lib.unpack_lanes(_pu32(words), nblk, rows, lanes, bit, _pu32(out))
@@ -908,24 +940,19 @@ def unpack_lanes(words: np.ndarray, rows: int, bit: int) -> np.ndarray | None:
 
 
 def gather_rows(src: np.ndarray, src_off: np.ndarray, lens: np.ndarray,
-                dst: np.ndarray, dst_off: np.ndarray) -> bool:
-    """C segmented memcpy dst[dst_off[i]:+lens[i]] = src[src_off[i]:+lens[i]];
-    False if the kernel is unavailable (caller falls back to multi_arange)."""
+                dst: np.ndarray, dst_off: np.ndarray) -> None:
+    """C segmented memcpy:
+    dst[dst_off[i]:+lens[i]] = src[src_off[i]:+lens[i]]."""
     lib = _load()
-    if lib is None:
-        return False
     lib.gather_rows(_p8(src), _p64(src_off), _p64(lens), lens.size,
                     _p8(dst), _p64(dst_off))
-    return True
 
 
 def rle_runs(flat: np.ndarray, lens: np.ndarray
-             ) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
-    """C one-pass run detection; returns (run_vals, run_lens, runs_per_row)
-    or None if the kernel is unavailable."""
+             ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """C one-pass run detection; returns (run_vals, run_lens, runs_per_row).
+    Runs never cross row boundaries."""
     lib = _load()
-    if lib is None:
-        return None
     lens = np.ascontiguousarray(lens, dtype=np.int64)
     row_off = np.zeros(lens.size + 1, dtype=np.int64)
     np.cumsum(lens, out=row_off[1:])
@@ -940,12 +967,9 @@ def rle_runs(flat: np.ndarray, lens: np.ndarray
 
 
 def dict_gather(uniq: np.ndarray, codes: np.ndarray, lens: np.ndarray,
-                n_dict: np.ndarray) -> np.ndarray | None:
-    """C one-pass dict gather out[k] = uniq[dict_off[row]+codes[k]];
-    None if the kernel is unavailable."""
+                n_dict: np.ndarray) -> np.ndarray:
+    """C one-pass dict gather out[k] = uniq[dict_off[row]+codes[k]]."""
     lib = _load()
-    if lib is None:
-        return None
     lens = np.ascontiguousarray(lens, dtype=np.int64)
     n_dict = np.ascontiguousarray(n_dict, dtype=np.int64)
     row_off = np.zeros(lens.size + 1, dtype=np.int64)
@@ -966,13 +990,13 @@ _DICT_TABLE_MAX = 1 << 22
 
 
 def dict_streams(flat: np.ndarray, lens: np.ndarray
-                 ) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
-    """C per-row dict streams; returns (uniq, n_dict, codes) or None.
-    Bounded-vocab batches go through the branchless direct-address table
-    kernel; unbounded values use the per-row pair radix sort."""
+                 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """C per-row dict streams; returns (uniq, n_dict, codes): each row's
+    sorted distinct values (concatenated across rows), their count per
+    row, and every token's rank in its row's distinct set.  Bounded-vocab
+    batches go through the branchless direct-address table kernel;
+    unbounded values use the per-row pair radix sort."""
     lib = _load()
-    if lib is None:
-        return None
     lens = np.ascontiguousarray(lens, dtype=np.int64)
     row_off = np.zeros(lens.size + 1, dtype=np.int64)
     np.cumsum(lens, out=row_off[1:])
@@ -1010,17 +1034,11 @@ def _pi32(a: np.ndarray):
 _MODE = {"plain": 0, "for": 1, "d1": 2}
 
 
-def have_flat_codec() -> bool:
-    return _load() is not None
-
-
 def analyze_blocks(src: np.ndarray, blk_start: np.ndarray,
                    blk_len: np.ndarray, mode: str,
-                   inits: np.ndarray) -> np.ndarray | None:
+                   inits: np.ndarray) -> np.ndarray:
     """Per-block widths (and FOR inits, written into ``inits``)."""
     lib = _load()
-    if lib is None:
-        return None
     nblk = blk_start.size
     widths = np.empty(nblk, dtype=np.uint8)
     lib.analyze_blocks(_pu32(src), _p64(blk_start), _pi32(blk_len), nblk,
@@ -1032,38 +1050,30 @@ def pack_blocks_flat(src: np.ndarray, orig: np.ndarray,
                      blk_start: np.ndarray, blk_len: np.ndarray,
                      widths: np.ndarray, inits: np.ndarray,
                      dst: np.ndarray, mode: str,
-                     payload: np.ndarray) -> bool:
+                     payload: np.ndarray) -> None:
+    """Pack every block at its width into ``payload`` at ``dst``."""
     lib = _load()
-    if lib is None:
-        return False
     lib.pack_blocks_flat(_pu32(src), _pu32(orig), _p64(blk_start),
                          _pi32(blk_len), _p8(widths), _pu32(inits),
                          _p64(dst), blk_start.size, _MODE[mode],
                          _p8(payload))
-    return True
 
 
 def unpack_blocks_flat(payload: np.ndarray, src_off: np.ndarray,
                        blk_start: np.ndarray, blk_len: np.ndarray,
                        widths: np.ndarray, inits: np.ndarray, mode: str,
-                       out: np.ndarray) -> bool:
+                       out: np.ndarray) -> None:
+    """Unpack every block into ``out`` with the mode's codec semantics."""
     lib = _load()
-    if lib is None:
-        return False
     lib.unpack_blocks_flat(_p8(payload), _p64(src_off), _p64(blk_start),
                            _pi32(blk_len), _p8(widths), _pu32(inits),
                            blk_start.size, _MODE[mode], _pu32(out))
-    return True
 
 
-def content_hash(flat: np.ndarray, lens: np.ndarray) -> np.ndarray | None:
+def content_hash(flat: np.ndarray, lens: np.ndarray) -> np.ndarray:
     """C per-row 128-bit content hash (see kernels.content_hash_flat for
-    the definition); returns uint8 of shape (16*nrows,), or None when the
-    C toolchain is unavailable (caller falls back to the numpy path,
-    which is bit-identical)."""
+    the definition); returns uint8 of shape (16*nrows,)."""
     lib = _load()
-    if lib is None:
-        return None
     lens = np.ascontiguousarray(lens, dtype=np.int64)
     row_off = np.zeros(lens.size + 1, dtype=np.int64)
     np.cumsum(lens, out=row_off[1:])
@@ -1075,14 +1085,11 @@ def content_hash(flat: np.ndarray, lens: np.ndarray) -> np.ndarray | None:
 
 def tokenize_greedy(buf: np.ndarray, starts: np.ndarray, ends: np.ndarray,
                     trans: np.ndarray, accept: np.ndarray, unk_id: int
-                    ) -> tuple[np.ndarray, np.ndarray] | None:
+                    ) -> tuple[np.ndarray, np.ndarray]:
     """C greedy longest-match tokenizer over a byte-trie DFA; returns
-    (flat int32 token ids, per-row int64 counts) or None when the C
-    toolchain is unavailable (caller falls back to the Python path,
-    which is byte-identical — asserted in tests/test_functions.py)."""
+    (flat int32 token ids, per-row int64 counts).  Same ids as
+    functions/tokenize.tokenize_word (asserted in tests/test_functions.py)."""
     lib = _load()
-    if lib is None:
-        return None
     starts = np.ascontiguousarray(starts, dtype=np.int64)
     ends = np.ascontiguousarray(ends, dtype=np.int64)
     nrows = starts.size
@@ -1096,13 +1103,10 @@ def tokenize_greedy(buf: np.ndarray, starts: np.ndarray, ends: np.ndarray,
     return out[:total], out_lens[:nrows]
 
 
-def next_fit(ns: np.ndarray, cap: int) -> np.ndarray | None:
+def next_fit(ns: np.ndarray, cap: int) -> np.ndarray:
     """C next-fit chunk assignment over one bucket's doc sizes; returns
-    1-based int64 chunk ids, or None when the C toolchain is unavailable
-    (caller falls back to the identical Python loop)."""
+    1-based int64 chunk ids."""
     lib = _load()
-    if lib is None:
-        return None
     ns = np.ascontiguousarray(ns, dtype=np.int64)
     out = np.empty(max(ns.size, 1), dtype=np.int64)
     lib.next_fit(_p64(ns), ns.size, int(cap), _p64(out))

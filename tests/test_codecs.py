@@ -4,6 +4,8 @@ auto-selector sanity."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import numpy as np
 import pytest
 
@@ -39,11 +41,35 @@ def corpus() -> list[np.ndarray]:
     return rows
 
 
+EDGE_LENS = [0, 1, 5, 127, 128, 129, 300, 1000, 4096, 50, 0]
+
+
+def edge_batch(kind: str) -> list[np.ndarray]:
+    """One batch over EDGE_LENS — empty rows (also trailing), tail-only
+    rows and multi-block rows.  'sorted': small increasing values;
+    'mixed': the same with 5% full-range values, so b==32 blocks occur."""
+    rng = np.random.default_rng(123)
+    tot = sum(EDGE_LENS)
+    base = np.cumsum(rng.integers(0, 64, size=tot, dtype=np.uint32),
+                     dtype=np.uint64).astype(U32)
+    wide = rng.integers(0, 2**32, size=tot, dtype=np.uint64).astype(U32)
+    mixed = np.where(rng.random(tot) < 0.05, wide, base).astype(U32)
+    return np.split(base if kind == "sorted" else mixed,
+                    np.cumsum(EDGE_LENS)[:-1])
+
+
+def _assert_block_roundtrip(arrs, widths, inits, payloads, mode):
+    n_toks = np.array([a.size for a in arrs])
+    back = blocks.decode_batch(n_toks, widths, inits, payloads, mode)
+    for a, b in zip(arrs, back):
+        np.testing.assert_array_equal(a, b)
+
+
 def test_block_batch_matches_single_array_kernels():
     """encode_batch('plain') must byte-match simdpack_length applied per row
     with per-block maxbits — i.e. the demo format of example.c minus the
-    inline headers."""
-    arrs = corpus()
+    inline headers — and decode back to the input."""
+    arrs = corpus() + edge_batch("mixed")
     widths, inits, payloads = blocks.encode_batch(arrs, "plain")
     for a, w, p in zip(arrs, widths, payloads):
         wid = np.frombuffer(w, dtype=np.uint8)
@@ -54,10 +80,12 @@ def test_block_batch_matches_single_array_kernels():
             assert b == wid[i // 128]
             expect += K.simdpack_length(blk, b)
         assert p == expect
+    assert 32 in b"".join(widths)
+    _assert_block_roundtrip(arrs, widths, inits, payloads, "plain")
 
 
 def test_block_batch_for_matches_kernel():
-    arrs = [a for a in corpus() if a.size]
+    arrs = [a for a in corpus() if a.size] + edge_batch("mixed")
     widths, inits, payloads = blocks.encode_batch(arrs, "for")
     for a, w, ini, p in zip(arrs, widths, inits, payloads):
         wid = np.frombuffer(w, dtype=np.uint8)
@@ -73,29 +101,39 @@ def test_block_batch_for_matches_kernel():
             else:
                 expect += K.simdpackFOR_length(mn, blk, b)
         assert p == expect
+    assert 32 in b"".join(widths)
+    _assert_block_roundtrip(arrs, widths, inits, payloads, "for")
 
 
 def test_block_batch_d1_matches_reference_chaining():
-    """Full 128-blocks of the d1 codec must byte-match the reference's
-    chained simdpackwithoutmaskd1 (example.c:56-75) because our stored
-    per-block init IS the previous element."""
+    """d1 blocks must byte-match the reference's chained
+    simdpackwithoutmaskd1 (example.c:56-75) because our stored per-block
+    init IS the previous element: full blocks pack the deltas, tails use
+    the short layout over deltas, b==32 blocks hold the raw values."""
     a = np.cumsum(RNG.integers(0, 100, size=512, dtype=U32)).astype(U32)
-    widths, inits, payloads = blocks.encode_batch([a], "d1")
-    wid = np.frombuffer(widths[0], np.uint8)
-    ini = np.frombuffer(inits[0], U32)
-    pos = 0
-    prev = 0
-    for j in range(4):
-        blk = a[j * 128:(j + 1) * 128]
-        assert ini[j] == prev
-        b = K.maxbits_d1(blk, prev)
-        assert wid[j] == b
-        sz = K.compressed_bytes(128, b)
-        expect = K.pack_blocks(K.deltas_u32(blk, prev).reshape(1, 128), b).tobytes() \
-            if 0 < b < 32 else (blk.tobytes() if b == 32 else b"")
-        assert payloads[0][pos:pos + sz] == expect
-        pos += sz
-        prev = int(blk[-1])
+    arrs = [a] + edge_batch("sorted") + edge_batch("mixed")
+    widths, inits, payloads = blocks.encode_batch(arrs, "d1")
+    for row, w, ini, p in zip(arrs, widths, inits, payloads):
+        wid = np.frombuffer(w, np.uint8)
+        ini = np.frombuffer(ini, U32)
+        expect = b""
+        prev = 0
+        for j, i in enumerate(range(0, row.size, 128)):
+            blk = row[i:i + 128]
+            assert ini[j] == prev
+            b = K.maxbits_d1(blk, prev)
+            assert wid[j] == b
+            if blk.size == 128 and 0 < b < 32:
+                expect += K.pack_blocks(
+                    K.deltas_u32(blk, prev).reshape(1, 128), b).tobytes()
+            elif b == 32:
+                expect += blk.tobytes()
+            else:
+                expect += K.simdpack_length(K.deltas_u32(blk, prev), b)
+            prev = int(blk[-1])
+        assert p == expect
+    assert 32 in b"".join(widths)
+    _assert_block_roundtrip(arrs, widths, inits, payloads, "d1")
 
 
 @pytest.mark.parametrize("name", ["bitpack", "for", "d1", "rle", "dict"])
@@ -171,91 +209,74 @@ def test_fsst_roundtrip():
     assert [t2.encode(s) for s in strings] == encs
 
 
-def test_fsst_native_numpy_identical():
-    """The optional C kernel and the batched-numpy path must produce
-    byte-identical encodes and decodes from the same tables."""
-    import os
-    import numpy as np
-    from simdcomp_spark import native
+FSST_GOLDEN = Path(__file__).parent / "golden" / "fsst_golden.json"
 
+
+def test_fsst_native_numpy_identical():
+    """The C FSST encode must reproduce, byte for byte, the vectors in
+    tests/golden/fsst_golden.json — dumped when the C kernel was checked
+    byte-identical to an independent batched-numpy encoder on the same
+    table and inputs — and decode them back to the input."""
+    import hashlib
+    import json
+    g = json.loads(FSST_GOLDEN.read_text())
     rng = np.random.default_rng(99)
     docs = [bytes(rng.integers(97, 123, size=int(n)).astype(np.uint8))
             for n in rng.integers(0, 400, size=200)]
     docs += [b"", b"\xff" * 9, bytes(range(256)), b"\xff\xff\x00"]
-    table = fsst.SymbolTable(fsst.train(docs[:64]))
     flat = np.frombuffer(b"".join(docs), np.uint8)
     lens = np.fromiter(map(len, docs), np.int64, count=len(docs))
-    bounds = np.concatenate(([0], np.cumsum(lens)))
-    c = native.encode_flat(table, flat, bounds)
-    if c is None:
-        import pytest
-        pytest.skip("no C toolchain: numpy fallback is the only path")
-    os.environ["SIMDCOMP_NO_NATIVE"] = "1"
-    native._lib, native._tried = None, False
-    try:
-        np_out, np_lens = table.encode_flat(flat, lens)
-        assert np.array_equal(c[0], np_out) and np.array_equal(c[1], np_lens)
-        np_dec, np_dl = table.decode_flat(np_out, np_lens)
-    finally:
-        del os.environ["SIMDCOMP_NO_NATIVE"]
-        native._lib, native._tried = None, False
-    cd = native.decode_flat(table, c[0], np.concatenate(([0],
-                                                         np.cumsum(c[1]))))
-    assert np.array_equal(cd[0], np_dec) and np.array_equal(cd[1], np_dl)
-    assert np.array_equal(cd[0], flat) and np.array_equal(cd[1], lens)
+    assert hashlib.sha256(flat.tobytes()).hexdigest() == g["input_sha256"]
+    assert lens.tolist() == g["row_lens"]
+    table = fsst.SymbolTable.deserialize(bytes.fromhex(g["table"]))
+    out, out_lens = table.encode_flat(flat, lens)
+    assert out.tobytes() == bytes.fromhex(g["encoded"])
+    assert out_lens.tolist() == g["encoded_lens"]
+    dec, dec_lens = table.decode_flat(out, out_lens)
+    assert np.array_equal(dec, flat) and np.array_equal(dec_lens, lens)
 
 
-def test_flat_codec_native_numpy_identical():
-    """The fused C block codec (analyze+pack / unpack on flat buffers) must
-    be byte-identical to the grouped-numpy path for every mode, including
-    b==32 raw blocks, empty rows (incl. trailing), and multi-block rows."""
-    import os
-    import numpy as np
-    from simdcomp_spark import blocks, native
+def _split_rows(flat, lens):
+    return np.split(flat, np.cumsum(lens)[:-1]) if lens.size else []
 
-    if not native.have_flat_codec():
-        import pytest
-        pytest.skip("no C toolchain")
-    rng = np.random.default_rng(123)
-    lens = np.array([0, 1, 5, 127, 128, 129, 300, 1000, 4096, 50, 0])
-    tot = int(lens.sum())
-    base = np.cumsum(rng.integers(0, 64, size=tot, dtype=np.uint32),
-                     dtype=np.uint64).astype(np.uint32)
-    wide = rng.integers(0, 2**32, size=tot, dtype=np.uint64) \
-        .astype(np.uint32)
-    mixed = np.where(rng.random(tot) < 0.05, wide, base).astype(np.uint32)
-    for mode, buf in (("plain", mixed), ("d1", base), ("for", mixed)):
-        enc_c = blocks.encode_flat(buf, lens, mode)
-        dec_c = blocks.decode_flat(lens, enc_c.widths, enc_c.inits,
-                                   enc_c.payload, enc_c.payload_lens, mode)
-        os.environ["SIMDCOMP_NO_NATIVE"] = "1"
-        native._lib, native._tried = None, False
-        try:
-            enc_n = blocks.encode_flat(buf, lens, mode)
-            dec_n = blocks.decode_flat(lens, enc_c.widths, enc_c.inits,
-                                       enc_c.payload, enc_c.payload_lens,
-                                       mode)
-        finally:
-            del os.environ["SIMDCOMP_NO_NATIVE"]
-            native._lib, native._tried = None, False
-        assert np.array_equal(enc_c.payload, enc_n.payload), mode
-        assert np.array_equal(enc_c.widths, enc_n.widths), mode
-        assert np.array_equal(enc_c.inits, enc_n.inits), mode
-        assert np.array_equal(enc_c.payload_lens, enc_n.payload_lens), mode
-        assert np.array_equal(dec_c, buf) and np.array_equal(dec_n, buf), mode
+
+def assert_dict_rle_streams(flat, lens):
+    """native.dict_streams / native.rle_runs against their definitions:
+    per row, the sorted distinct values and every token's rank among them
+    (np.unique with return_inverse), and the maximal runs of equal
+    values (never crossing a row boundary)."""
+    from simdcomp_spark import native
+    uniq, n_dict, codes = native.dict_streams(flat, lens)
+    run_vals, run_lens, rpr = native.rle_runs(flat, lens)
+    want_u, want_n, want_c, want_v, want_l, want_r = [], [], [], [], [], []
+    for row in _split_rows(flat, lens):
+        u, inv = np.unique(row, return_inverse=True)
+        want_u.append(u)
+        want_n.append(u.size)
+        want_c.append(inv.reshape(-1))
+        starts = np.flatnonzero(np.diff(row, prepend=~row[:1])) \
+            if row.size else np.zeros(0, np.int64)
+        want_v.append(row[starts])
+        want_l.append(np.diff(np.append(starts, row.size)))
+        want_r.append(starts.size)
+    cat = (lambda xs, dt: np.concatenate(xs).astype(dt) if xs
+           else np.zeros(0, dt))
+    assert np.array_equal(uniq, cat(want_u, np.uint32))
+    assert np.array_equal(n_dict, np.array(want_n, np.int64))
+    assert np.array_equal(codes, cat(want_c, np.uint32))
+    assert np.array_equal(run_vals, cat(want_v, np.uint32))
+    assert np.array_equal(run_lens, cat(want_l, np.int64))
+    assert np.array_equal(rpr, np.array(want_r, np.int64))
 
 
 def test_dict_rle_native_numpy_identical():
-    """The C dict_streams / gather_rows / dict_gather kernels must produce
-    byte-identical encodes and decodes to the pure-numpy paths for the dict
-    and rle codecs, across empty rows, constant rows, wide values, and
-    multi-block rows."""
-    import os
-    from simdcomp_spark import native
+    """The C dict_streams / rle_runs kernels build the streams their
+    definitions give (numpy per-row reference), on both dict kernels —
+    the direct-address table (bounded values) and the pair radix sort
+    (values ≥ 2^22) — across empty rows, constant rows, wide values and
+    multi-block rows; the dict and rle codecs round-trip the batch."""
     from simdcomp_spark.codecs import REGISTRY
 
-    if native._load() is None:
-        pytest.skip("no C toolchain: numpy fallback is the only path")
     rng = np.random.default_rng(41)
     rows = [np.zeros(0, np.uint32),
             rng.integers(0, 1 << 16, 300, dtype=np.int64).astype(np.uint32),
@@ -264,38 +285,45 @@ def test_dict_rle_native_numpy_identical():
                       ).astype(np.uint32),
             rng.integers(0, 1 << 31, 700, dtype=np.int64).astype(np.uint32),
             np.zeros(0, np.uint32)]
-    flat = np.concatenate(rows)
-    lens = np.fromiter((r.size for r in rows), np.int64, count=len(rows))
-    for name in ("dict", "rle"):
-        codec = REGISTRY[name]
-        ce = codec.encode_flat(flat, lens)
-        cdec = codec.decode_flat(lens, ce.widths, ce.widths_lens, ce.inits,
-                                 ce.inits_lens, ce.payload, ce.payload_lens)
-        os.environ["SIMDCOMP_NO_NATIVE"] = "1"
-        native._lib, native._tried = None, False
-        try:
-            ne = codec.encode_flat(flat, lens)
-            assert np.array_equal(ce.payload, ne.payload), name
-            assert np.array_equal(ce.payload_lens, ne.payload_lens), name
-            ndec = codec.decode_flat(lens, ne.widths, ne.widths_lens,
-                                     ne.inits, ne.inits_lens, ne.payload,
-                                     ne.payload_lens)
-        finally:
-            del os.environ["SIMDCOMP_NO_NATIVE"]
-            native._lib, native._tried = None, False
-        assert np.array_equal(cdec, ndec) and np.array_equal(cdec, flat), name
+    bounded = [r for r in rows if r.size == 0 or int(r.max()) < 1 << 22]
+    for batch in (rows, bounded):
+        flat = np.concatenate(batch)
+        lens = np.fromiter((r.size for r in batch), np.int64,
+                           count=len(batch))
+        assert_dict_rle_streams(flat, lens)
+        for name in ("dict", "rle"):
+            codec = REGISTRY[name]
+            e = codec.encode_flat(flat, lens)
+            dec = codec.decode_flat(lens, e.widths, e.widths_lens, e.inits,
+                                    e.inits_lens, e.payload, e.payload_lens)
+            assert np.array_equal(dec, flat), name
+
+
+def py_content_hash(row) -> bytes:
+    """The documented content hash (kernels.content_hash_flat), one row,
+    in plain Python integers."""
+    m64 = (1 << 64) - 1
+    out = b""
+    for p, c in ((0x9E3779B97F4A7C15, 0x9AE16A3B2F90404F),
+                 (0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9)):
+        h = 0
+        for v in row:
+            h = (h * p + (int(v) & 0xFFFFFFFF) + c) & m64
+        h ^= (len(row) * p) & m64
+        h ^= h >> 30
+        h = (h * 0xBF58476D1CE4E5B9) & m64
+        h ^= h >> 27
+        h = (h * 0x94D049BB133111EB) & m64
+        h ^= h >> 31
+        out += h.to_bytes(8, "little")
+    return out
 
 
 def test_content_hash_native_numpy_identical():
-    """The C block-Horner content hash must be bit-identical to the numpy
-    prefix-sum formulation across empty rows, tail lengths 1-3 (the
-    unroll remainder), wide values, and long rows; distinct inputs must
-    hash apart (the dedup-key contract)."""
-    import os
-    from simdcomp_spark import kernels as K, native
-
-    if native._load() is None:
-        pytest.skip("no C toolchain: numpy fallback is the only path")
+    """The C block-Horner content hash must equal the documented
+    definition (scalar Python reference) across empty rows, tail lengths
+    1-3 (the unroll remainder), wide values, and long rows; distinct
+    inputs must hash apart (the dedup-key contract)."""
     rng = np.random.default_rng(43)
     rows = [np.zeros(0, np.uint32),
             rng.integers(0, 1 << 31, 1, dtype=np.int64).astype(np.uint32),
@@ -306,33 +334,52 @@ def test_content_hash_native_numpy_identical():
             np.zeros(128, np.uint32)]
     flat = np.concatenate(rows)
     lens = np.fromiter((r.size for r in rows), np.int64, count=len(rows))
-    fast = np.asarray(K.content_hash_flat(flat, lens)).copy()
-    os.environ["SIMDCOMP_NO_NATIVE"] = "1"
-    native._lib, native._tried = None, False
-    try:
-        ref = np.asarray(K.content_hash_flat(flat, lens))
-    finally:
-        del os.environ["SIMDCOMP_NO_NATIVE"]
-        native._lib, native._tried = None, False
-    assert np.array_equal(fast, ref)
-    hs = {bytes(h) for h in fast.reshape(lens.size, 16)}
+    got = np.asarray(K.content_hash_flat(flat, lens)).tobytes()
+    assert got == b"".join(py_content_hash(r) for r in rows)
+    hs = {got[16 * i:16 * (i + 1)] for i in range(lens.size)}
     assert len(hs) == lens.size               # all-distinct rows hash apart
 
-    # int32 input with NEGATIVE values (Arrow tokens are int32): both
-    # paths must agree in the uint32 domain — a sign-extending numpy
-    # astype(uint64) would silently hash apart from the C path
+    # NEGATIVE int32 tokens (Arrow's type) hash in the uint32 domain,
+    # whether handed over as int32 or as their uint32 view
     neg = np.array([-1, 5, -2147483648, 7, 123, -42], dtype=np.int32)
     nlens = np.array([3, 3], dtype=np.int64)
-    fast_neg = np.asarray(K.content_hash_flat(neg.view(np.uint32),
-                                              nlens)).copy()
-    os.environ["SIMDCOMP_NO_NATIVE"] = "1"
-    native._lib, native._tried = None, False
-    try:
-        ref_neg = np.asarray(K.content_hash_flat(neg, nlens))
-    finally:
-        del os.environ["SIMDCOMP_NO_NATIVE"]
-        native._lib, native._tried = None, False
-    assert np.array_equal(fast_neg, ref_neg)
+    want = py_content_hash(neg[:3]) + py_content_hash(neg[3:])
+    assert np.asarray(K.content_hash_flat(neg.view(np.uint32),
+                                          nlens)).tobytes() == want
+    assert np.asarray(K.content_hash_flat(neg, nlens)).tobytes() == want
+
+
+def test_load_raises_typed_error_without_gcc(tmp_path):
+    """On a host without gcc, native._load() raises NativeBuildError
+    carrying the compiler failure, and a second call re-raises it without
+    trying to compile again."""
+    import os
+    import subprocess
+    import sys
+    (tmp_path / "bin").mkdir()
+    script = (
+        "from simdcomp_spark import native\n"
+        "try:\n"
+        "    native._load()\n"
+        "except native.NativeBuildError as e:\n"
+        "    print('ERR', e)\n"
+        "def compile_again():\n"
+        "    raise AssertionError('compiled again')\n"
+        "native._compile = compile_again\n"
+        "try:\n"
+        "    native._load()\n"
+        "except native.NativeBuildError:\n"
+        "    print('MEMOISED')\n")
+    env = dict(os.environ, PATH=str(tmp_path / "bin"),
+               SIMDCOMP_NATIVE_DIR=str(tmp_path / "native"),
+               PYTHONPATH=str(Path(__file__).resolve().parents[1]))
+    r = subprocess.run([sys.executable, "-c", script], env=env,
+                       capture_output=True, text=True, timeout=120)
+    assert r.returncode == 0, r.stderr
+    assert "ERR could not compile the simdcomp_spark C kernels" in r.stdout
+    assert "No such file or directory: 'gcc'" in r.stdout, r.stdout
+    assert "MEMOISED" in r.stdout
+    assert not list((tmp_path / "native").glob("*.so"))
 
 
 def test_dict_d1_values_extreme_deltas():

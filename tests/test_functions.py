@@ -1041,7 +1041,8 @@ def test_pack_chunks_per_group(spark):
 def test_wordpiece_tokenize(spark):
     """Greedy longest-match semantics: merges beat singles, UNK covers
     out-of-vocab chars, empty/NULL text yields empty arrays, and the
-    UDF path equals the scalar reference on every doc."""
+    UDF path equals the scalar reference on every doc; a non-string
+    text column raises."""
     from simdcomp_spark.functions import tokenize as tk
     assert tk.tokenize_word("the") == [tk.VOCAB["the"]]
     assert tk.tokenize_word("then") == [tk.VOCAB["the"], tk.VOCAB["n"]]
@@ -1056,6 +1057,11 @@ def test_wordpiece_tokenize(spark):
         want = [i for w in (t or "").split(" ") if w
                 for i in tk.tokenize_word(w)]
         assert got[d] == (want, len(want)), d
+    # the C DFA reads Arrow string buffers: other text types are refused
+    binary = spark.createDataFrame([(1, bytearray(b"the"))],
+                                   "doc_id long, text binary")
+    with pytest.raises(Exception, match="expected string or large_string"):
+        tk.wordpiece_tokenize(binary).collect()
 
 
 def test_pack_greedy_boundary_respecting(spark):
@@ -1103,8 +1109,6 @@ def test_next_fit_c_matches_python_reference():
     1-based running chunk ids — on random doc-size streams, including
     empty input and docs that exactly fill the cap."""
     from simdcomp_spark import native
-    if native._load() is None:
-        pytest.skip("no C toolchain")
 
     def py_next_fit(ns, cap):
         chunk = np.empty(ns.size, dtype=np.int64)
@@ -1140,8 +1144,6 @@ def test_tokenize_c_dfa_matches_python_reference():
     import pyarrow as pa
     from simdcomp_spark import native
     from simdcomp_spark.functions import tokenize as tk
-    if native._load() is None:
-        pytest.skip("no C toolchain")
     texts = ["the thing is", "", None, "héllo wörld ☃ the",
              "  double  spaces ", "xyz@#$ %", "a" * 300 + " the",
              "日本語テキスト the end", "ingion theing",

@@ -99,36 +99,19 @@ def test_for_search_property(seed, n, key):
 @settings(max_examples=25, deadline=None)
 @given(st.integers(0, 2**31), st.integers(1, 8), st.integers(1, 28))
 def test_dict_rle_streams_native_numpy_property(seed, nrows, maxbits):
-    """Fuzz the C dict_streams / rle_runs kernels against the pure-numpy
-    stream builders on random ragged batches (varying vocab width so the
-    radix byte-pass skipping takes every branch)."""
-    import os
-    from simdcomp_spark import native
-    from simdcomp_spark.codecs.dictionary import _dict_streams
-    from simdcomp_spark.codecs.rle import _runs_flat
+    """Fuzz the C dict_streams / rle_runs kernels against their per-row
+    numpy definitions on random ragged batches (varying vocab width so the
+    radix byte-pass skipping takes every branch, and both dict kernels —
+    direct-address table and pair radix — run)."""
+    from tests.test_codecs import assert_dict_rle_streams
 
-    if native._load() is None:
-        return
     rng = np.random.default_rng(seed)
     rows = [rng.integers(0, 2**int(maxbits), size=int(n), dtype=np.int64)
             .astype(np.uint32)
             for n in rng.integers(0, 600, size=nrows)]
     flat = (np.concatenate(rows) if rows else np.zeros(0, np.uint32))
     lens = np.fromiter((r.size for r in rows), np.int64, count=len(rows))
-    c_dict = _dict_streams(flat, lens)
-    c_rle = _runs_flat(flat, lens)
-    os.environ["SIMDCOMP_NO_NATIVE"] = "1"
-    native._lib, native._tried = None, False
-    try:
-        n_dict = _dict_streams(flat, lens)
-        n_rle = _runs_flat(flat, lens)
-    finally:
-        del os.environ["SIMDCOMP_NO_NATIVE"]
-        native._lib, native._tried = None, False
-    for a, b in zip(c_dict, n_dict):
-        assert np.array_equal(a, b)
-    for a, b in zip(c_rle, n_rle):
-        assert np.array_equal(a, b)
+    assert_dict_rle_streams(flat, lens)
 
 
 @settings(max_examples=200, deadline=None)
