@@ -28,6 +28,7 @@ Schema of the encoded table:
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
 import time
@@ -352,70 +353,64 @@ def _input_files(path: str, snapshot_id: int | None = None) -> list[str]:
     return sorted(str(p) for p in Path(path).rglob("*.parquet"))
 
 
-def distributed_file_map(spark: SparkSession, files: list[str], fn,
-                         schema: str) -> list:
-    """Run a per-file footer-extraction Arrow function as a distributed
-    job and collect the (small) per-file results: the driver only handles
-    file NAMES; it never opens a data file.  Shared scaffold of
-    :func:`_rowgroup_units` and ``iceberg._file_stats`` — at 100 TB /
-    10^5-10^6 files a sequential driver loop over footers serializes
-    minutes-to-hours of small-read I/O before any task can start."""
-    if not files:
-        return []
-    return _file_name_df(spark, files).mapInArrow(fn, schema).collect()
-
-
-def _file_name_df(spark: SparkSession, files: list[str]):
-    """(path) DataFrame over file NAMES, partitioned for footer fan-out
-    (≤4× default parallelism) — the shared scaffold that keeps the
-    driver-lists-names/executors-open-files discipline in one place."""
-    par = max(int(spark.sparkContext.defaultParallelism), 1)
-    return (spark.createDataFrame([(f,) for f in files], "path string")
-            .repartition(min(len(files), par * 4)))
+def _file_units(spark: SparkSession, groups: list[list[str]]) -> DataFrame:
+    """(path) DataFrame with one partition per group of files, planned on
+    the JVM side: ``spark.range`` gives each of the ``len(groups)``
+    partitions one id, which indexes the groups held as JSON literals in
+    the plan.  No shuffle, no Python worker, and the Spark driver only
+    handles file NAMES — it never opens a data file."""
+    k = len(groups)
+    lists = F.array(*[F.lit(json.dumps(g)) for g in groups])
+    return spark.range(k, numPartitions=k).select(F.explode(F.from_json(
+        F.element_at(lists, F.col("id").cast("int") + 1),
+        "array<string>")).alias("path"))
 
 
 def _rowgroup_units(spark: SparkSession, path: str,
                     snapshot_id: int | None = None,
                     files: list[str] | None = None) -> DataFrame:
-    """(file, row_group) work units for the fused scan of
-    :func:`encode_files` — one Spark task per parquet row group, so task
-    size is bounded by the writer's row-group size regardless of
-    file-count skew.  Input may be a plain parquet directory or an
-    Iceberg table dir (:func:`_input_files`, which refuses tables that
-    carry deletes).
+    """(path, rg) work units for the fused scan of :func:`encode_files`.
+    Input may be a plain parquet directory or an Iceberg table dir
+    (:func:`_input_files`, which refuses tables that carry deletes).
 
-    Both the footer reads AND the (path, row_group) expansion are
+    Small inputs (at most ``_UNITS_PER_CORE`` files per core, none over
+    256 MiB) become WHOLE-FILE units (rg = -1) spread over
+    ``k = min(files, defaultParallelism)`` tasks, one per core: files go
+    largest-first to the least-loaded task, by the sizes stat'ed here,
+    and the frame is built by :func:`_file_units` — so an ingest pass is
+    one stage of at most ``defaultParallelism`` tasks.
+
+    Larger inputs get one unit per parquet row group, so task size is
+    bounded by the writer's row-group size regardless of file-count
+    skew.  The footer reads AND the (path, row_group) expansion are
     DISTRIBUTED: the driver only lists file names (one directory-metadata
     pass, the same listing Spark's own file index performs — or, for
     Iceberg, one metadata-tree read); it never opens a data file and
-    never materializes the unit list.  At 100 TB ≈ 10^5-10^6 row groups
-    the old code collected the per-file counts and built a Python list of
-    every unit plus one Spark partition per row group (10^6 tasks); now
-    the counts stay in the plan, ``explode(sequence(...))`` expands them
-    executor-side, and partitions are capped at 4× default parallelism
-    (multiple units per task, round-robin balanced).  ``files`` restricts
-    the scan to an explicit subset (the resumable ingest's batch unit)."""
+    never materializes the unit list.  The counts stay in the plan,
+    ``explode(sequence(...))`` expands them executor-side, and partitions
+    are capped at ``_UNITS_PER_CORE`` × default parallelism (multiple
+    units per task, round-robin balanced).  ``files`` restricts the scan
+    to an explicit subset (the resumable ingest's batch unit)."""
     if files is None:
         files = _input_files(path, snapshot_id)
     if not files:
         return spark.createDataFrame([], "path string, rg int")
     par = max(int(spark.sparkContext.defaultParallelism), 1)
-    # small-input fast path: when the file list alone already saturates
-    # the unit budget there is nothing for row-group planning to balance
-    # UNLESS some file is large — probe sizes with one driver-side stat
-    # per file (bounded: only attempted below par*factor files) and emit
-    # WHOLE-FILE units (rg = -1), skipping the distributed footer job,
-    # its exchange, and a stage of per-task overhead.
+    k = min(len(files), par)
     if len(files) <= par * _UNITS_PER_CORE:
         try:
-            small = all(os.path.getsize(f) <= (256 << 20) for f in files)
+            sizes = [os.path.getsize(f) for f in files]
         except OSError:
-            small = False          # non-local paths: plan row groups
-        if small:
-            return (spark.createDataFrame(
-                [(f, -1) for f in files], "path string, rg int")
-                .repartition(len(files)))
-    fdf = _file_name_df(spark, files)
+            sizes = None           # non-local paths: plan row groups
+        if sizes is not None and max(sizes) <= (256 << 20):
+            groups, loads = [[] for _ in range(k)], [0] * k
+            for size, f in sorted(zip(sizes, files),
+                                  key=lambda sf: -sf[0]):
+                i = loads.index(min(loads))
+                groups[i].append(f)
+                loads[i] += size
+            return _file_units(spark, groups).withColumn("rg", F.lit(-1))
+    fdf = _file_units(spark, [files[i::k] for i in range(k)])
 
     def footer_counts(it):
         import pyarrow.parquet as pq
@@ -450,9 +445,8 @@ def encode_files(spark: SparkSession, path: str, codec: str = "auto",
                  split_threshold: int = DEFAULT_SPLIT_THRESHOLD,
                  snapshot_id: int | None = None,
                  files: list[str] | None = None) -> DataFrame:
-    """Fused scan→encode: Spark schedules one task per parquet row-group,
-    and the worker reads it with pyarrow directly — the token buffers never
-    cross the JVM row format at all.
+    """Fused scan→encode: the workers read the parquet input with pyarrow
+    directly — the token buffers never cross the JVM row format at all.
 
     ``path`` may be a plain parquet directory OR an Iceberg table dir of
     pre-tokenized sequences (the north-rule input shape): Iceberg inputs
@@ -463,8 +457,10 @@ def encode_files(spark: SparkSession, path: str, codec: str = "auto",
     consumes EVERY row and column of the tokens table, so Catalyst's scan
     pushdown has nothing to push, and the JVM per-element list conversion
     (the dominant fixed cost of the `mapInArrow`-over-scan plan) is pure
-    overhead.  Work units are (file, row_group) so task size is bounded by
-    the writer's row-group size regardless of file count skew.  Workers
+    overhead.  Work units come from :func:`_rowgroup_units`: small inputs
+    run as one task per core over whole files, with no exchange in the
+    plan; larger ones as (file, row_group) units, so task size is bounded
+    by the writer's row-group size regardless of file-count skew.  Workers
     read 2048-row batches (``_ENCODE_BATCH_ROWS``)."""
     import pyarrow.parquet as pq
 

@@ -6,7 +6,7 @@ dependency (none exists in this environment): it writes and reads the
 public Iceberg v2 table format directly —
 
     table_dir/
-      data/*.parquet                          (Spark-written data files)
+      data/snap-<id>/*.parquet                (data and delete files)
       metadata/
         version-hint.text                     ("N" → current metadata)
         vN.metadata.json                      (table metadata, v2 spec)
@@ -51,9 +51,12 @@ Two self-contained layers:
   regressed hint, so a crash anywhere leaves either the previous or the
   new version current — never a half-commit, never a wedged table.
 
-File-level stats for manifests (record_count / file_size_in_bytes) are
-gathered by a DISTRIBUTED Spark job, mirroring engine._rowgroup_units —
-no per-file driver I/O at any scale.
+Data and delete files are written by pyarrow inside the Spark tasks
+(:func:`_write_data_files`): each task streams its rows into its own
+parquet files and returns one small row per file — path, record count,
+size, column bounds from the file's own footer, partition values — so a
+write is ONE Spark job, and the Spark driver builds the manifest from
+the collected rows without opening a data file.
 
 The reference engine has no table notion at all (README.md:23-24 "does
 not define a compressed format"); this is the storage layer the north
@@ -62,6 +65,7 @@ rule adds on top of it.
 
 from __future__ import annotations
 
+import contextlib
 import io
 import json
 import os
@@ -432,80 +436,222 @@ def _sv_decode(t, b: bytes):
     raise NotImplementedError(f"single-value serialization for {t!r}")
 
 
-def _file_stats(spark: SparkSession, files: list[str]) -> list[tuple]:
-    """(path, num_rows, file_size, col_bounds) per parquet file — footer
-    reads run as a distributed Spark job (engine._rowgroup_units
-    discipline: the driver only lists names; it never opens a data file).
-    col_bounds is {column: [min, max]} from the parquet footer statistics
-    of top-level scalar columns (nested/list columns carry no usable
-    per-file bound) — the source of the manifest's lower/upper_bounds.
+# Spark's parquet.block.size default: a task flushes its open files' row
+# groups once this much Arrow data is buffered across them
+_ROW_GROUP_BYTES = 128 << 20
+_WRITTEN_SCHEMA = ("path string, rows long, bytes long, bounds string, "
+                   "partition string")
 
-    A column's bound is emitted ONLY when every row group of the file has
-    usable statistics for it: a partial-coverage bound would describe a
-    subset of the file and pruning on it could silently drop matching
-    rows."""
-    from . import engine
 
-    def fn(it):
-        import json as _json
+def _write_data_files(df: DataFrame, out_dir: str, schema: dict,
+                      spec: dict, use_ids: bool) -> list[dict]:
+    """Write ``df`` as parquet files under ``out_dir`` — the only data-file
+    writer of every Iceberg write (export, append, overwrite, both delete
+    writers, compaction).  Each Spark task writes its own files with
+    pyarrow and returns one small row per file, so the write is ONE job
+    and nothing re-reads the footers, in the Spark driver or in another
+    job.  Returns ``[{"path", "rows", "bytes", "bounds", "partition"}]``
+    sorted by path: ``bounds`` is ``{column: [min, max]}`` and ``partition``
+    ``{partition field: value}``.
 
-        import pyarrow.parquet as pq
-        for batch in it:
-            paths = batch.column(0).to_pylist()
-            rows, sizes, bounds = [], [], []
-            for p in paths:
-                md = pq.ParquetFile(p).metadata
-                rows.append(md.num_rows)
-                sizes.append(os.path.getsize(p))
-                mins, maxs, covered = {}, {}, {}
-                for rg in range(md.num_row_groups):
-                    g = md.row_group(rg)
-                    for ci in range(g.num_columns):
-                        c = g.column(ci)
-                        if "." in c.path_in_schema:      # nested/list
-                            continue
-                        st = c.statistics
-                        if st is None or not st.has_min_max:
-                            continue
-                        name = c.path_in_schema
-                        mn, mx = st.min, st.max
-                        if isinstance(mn, bytes):
-                            try:
-                                mn, mx = mn.decode(), mx.decode()
-                            except UnicodeDecodeError:
-                                continue
-                        # only int/string bounds are single-value
-                        # serializable here; skip dates/floats/etc.
-                        if not isinstance(mn, (int, str)) or \
-                                isinstance(mn, bool):
-                            continue
-                        covered[name] = covered.get(name, 0) + 1
-                        if name not in mins or mn < mins[name]:
-                            mins[name] = mn
-                        if name not in maxs or mx > maxs[name]:
-                            maxs[name] = mx
-                bounds.append(_json.dumps(
-                    {k: [mins[k], maxs[k]] for k in mins
-                     if k in maxs and covered[k] == md.num_row_groups}))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0), pa.array(rows, type=pa.int64()),
-                 pa.array(sizes, type=pa.int64()),
-                 pa.array(bounds, type=pa.string())],
-                names=["path", "rows", "bytes", "bounds"])
+    ``schema`` is an Iceberg struct whose fields name ``df``'s columns;
+    with ``use_ids`` each column (and a list's element) carries its field
+    id in the parquet footer.  ``spec``'s fields are computed as
+    ``_p_<name>`` columns (:func:`_spec_partition_exprs`); each task
+    splits its rows by them into one file per partition value and drops
+    them from the file.  A failed task removes the files it wrote; the
+    Spark driver commits only what the job returned."""
+    parts = _spec_partition_exprs(spec, schema)
+    for name, expr in parts:
+        df = df.withColumn(f"_p_{name}", expr)
+    ids = {}
+    if use_ids:
+        for f in schema["fields"]:
+            t = f["type"]
+            ids[f["name"]] = (f["id"], t.get("element-id")
+                              if isinstance(t, dict) else None)
+    Path(out_dir).mkdir(parents=True)
+    names = [n for n, _ in parts]
 
-    stats = [(r["path"], int(r["rows"]), int(r["bytes"]),
-              json.loads(r["bounds"]))
-             for r in engine.distributed_file_map(
-                 spark, files, fn,
-                 "path string, rows long, bytes long, bounds string")]
-    # Zero-record part-files (Spark emits one per empty write partition)
-    # never become table files: a boundless 0-row manifest entry defeats
-    # pruning (conservatively kept by every range scan) and bloats the
-    # manifest at 10^5-file scale.  Real Iceberg writers drop them too.
-    for p, rows, _, _ in stats:
-        if rows == 0:
-            os.remove(p)
-    return [s for s in stats if s[1] > 0]
+    def write_fn(it):
+        return _write_task(it, out_dir, names, ids)
+
+    return sorted(({**r.asDict(), "bounds": json.loads(r["bounds"]),
+                    "partition": json.loads(r["partition"])}
+                   for r in df.mapInArrow(write_fn, _WRITTEN_SCHEMA)
+                   .collect()), key=lambda s: s["path"])
+
+
+def _with_field_ids(schema: pa.Schema, ids: dict) -> pa.Schema:
+    """``schema`` with ``PARQUET:field_id`` on every column named in
+    ``ids`` (``{name: (field id, list element id or None)}``)."""
+    def tag(field, fid):
+        return field.with_metadata({b"PARQUET:field_id": str(fid)})
+
+    out = []
+    for f in schema:
+        if f.name in ids:
+            fid, eid = ids[f.name]
+            if eid is not None and pa.types.is_list(f.type):
+                f = f.with_type(pa.list_(tag(f.type.value_field, eid)))
+            f = tag(f, fid)
+        out.append(f)
+    return pa.schema(out)
+
+
+def _split_partitions(batch: pa.RecordBatch, names: list[str]):
+    """Yield (partition values, rows) of ``batch`` per distinct value of
+    its ``_p_<name>`` columns, rows in arrival order, the ``_p_`` columns
+    dropped."""
+    if not names:
+        yield (), batch
+        return
+    pcols = [f"_p_{n}" for n in names]
+    data = batch.drop_columns(pcols)
+    code = np.zeros(batch.num_rows, np.int64)
+    values, codes = [], []
+    for c in pcols:
+        enc = batch.column(c).dictionary_encode(null_encoding="encode")
+        ix = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+        values.append(enc.dictionary.to_pylist())
+        codes.append(ix)
+        code = code * len(enc.dictionary) + ix
+    uniq, inv = np.unique(code, return_inverse=True)
+    for u in range(uniq.size):
+        rows = np.flatnonzero(inv == u)
+        key = tuple(v[ix[rows[0]]] for v, ix in zip(values, codes))
+        yield key, (data if uniq.size == 1 else data.take(rows))
+
+
+def _footer_stats(md) -> dict:
+    """``{column: [min, max]}`` from a parquet footer's statistics, for
+    top-level int and string columns only (the values the manifest's
+    single-value bounds serialize).  A column's bound is emitted ONLY when
+    every row group has usable statistics for it: a partial-coverage
+    bound would describe a subset of the file and pruning on it could
+    silently drop matching rows."""
+    mins, maxs, covered = {}, {}, {}
+    for rg in range(md.num_row_groups):
+        g = md.row_group(rg)
+        for ci in range(g.num_columns):
+            c = g.column(ci)
+            if "." in c.path_in_schema:      # nested/list
+                continue
+            st = c.statistics
+            if st is None or not st.has_min_max:
+                continue
+            name = c.path_in_schema
+            mn, mx = st.min, st.max
+            if isinstance(mn, bytes):
+                try:
+                    mn, mx = mn.decode(), mx.decode()
+                except UnicodeDecodeError:
+                    continue
+            if not isinstance(mn, (int, str)) or isinstance(mn, bool):
+                continue
+            covered[name] = covered.get(name, 0) + 1
+            if name not in mins or mn < mins[name]:
+                mins[name] = mn
+            if name not in maxs or mx > maxs[name]:
+                maxs[name] = mx
+    return {k: [mins[k], maxs[k]] for k in mins
+            if covered[k] == md.num_row_groups}
+
+
+def _write_task(batches, out_dir: str, names: list[str], ids: dict):
+    """Task side of :func:`_write_data_files`: stream ``batches`` into one
+    snappy ``ParquetWriter`` per partition value, flushing a row group
+    whenever ``_ROW_GROUP_BYTES`` of Arrow data is buffered, then yield
+    one ``_WRITTEN_SCHEMA`` row per file, read from its own footer."""
+    import pyarrow.parquet as pq
+    from pyspark import TaskContext
+    ctx = TaskContext.get()
+    prefix = f"part-{ctx.partitionId():05d}-{ctx.attemptNumber()}"
+    files: dict[tuple, tuple] = {}      # key → (path, writer, buffered)
+    buffered = 0
+
+    def flush():
+        for _, w, buf in files.values():
+            if buf:
+                w.write_table(pa.Table.from_batches(buf),
+                              row_group_size=sum(b.num_rows for b in buf))
+                buf.clear()
+
+    try:
+        for batch in batches:
+            for key, rows in _split_partitions(batch, names):
+                if rows.num_rows == 0:
+                    continue
+                if key not in files:
+                    path = os.path.join(
+                        out_dir, f"{prefix}-{uuid.uuid4().hex}.parquet")
+                    files[key] = (path, pq.ParquetWriter(
+                        path, _with_field_ids(rows.schema, ids),
+                        compression="snappy"), [])
+                files[key][2].append(rows)
+                buffered += rows.nbytes
+                if buffered >= _ROW_GROUP_BYTES:
+                    flush()
+                    buffered = 0
+        flush()
+        for _, w, _ in files.values():
+            w.close()
+        out = {c: [] for c in
+               ("path", "rows", "bytes", "bounds", "partition")}
+        for key, (path, _, _) in files.items():
+            md = pq.read_metadata(path)
+            out["path"].append(path)
+            out["rows"].append(md.num_rows)
+            out["bytes"].append(os.path.getsize(path))
+            out["bounds"].append(json.dumps(_footer_stats(md)))
+            out["partition"].append(json.dumps(dict(zip(names, key))))
+    except BaseException:
+        for path, w, _ in files.values():
+            with contextlib.suppress(OSError, pa.ArrowException):
+                w.close()
+            with contextlib.suppress(OSError):
+                os.remove(path)
+        raise
+    if files:
+        yield pa.RecordBatch.from_pydict(out)
+
+
+def _file_entries(stats: list[dict], snap_id: int, content: int,
+                  fields: dict, part_names: list[str], **data_file) -> list:
+    """Manifest entries (status ADDED) for the files
+    :func:`_write_data_files` returned.  ``fields`` maps a column name to
+    its Iceberg field (id, type): its bounds become the spec's
+    lower/upper_bounds maps (fields 125/128: map<field-id, single-value
+    binary>), the basis of metadata-level file pruning.  Identity
+    partition columns get none — the partition struct holds their exact
+    value.  ``data_file`` adds fields such as ``equality_ids``."""
+    entries = []
+    for s in stats:
+        lbs, ubs = [], []
+        for name, (mn, mx) in sorted(s["bounds"].items()):
+            f = fields.get(name)
+            if f is None or not isinstance(f["type"], str) \
+                    or name in part_names:
+                continue
+            try:
+                lbs.append({"key": f["id"],
+                            "value": _sv_encode(f["type"], mn)})
+                ubs.append({"key": f["id"],
+                            "value": _sv_encode(f["type"], mx)})
+            except NotImplementedError:
+                continue
+        entries.append(
+            {"status": 1, "snapshot_id": snap_id,
+             "sequence_number": None, "file_sequence_number": None,
+             "data_file": {"content": content, "file_path": s["path"],
+                           "file_format": "PARQUET",
+                           "partition": {n: s["partition"].get(n)
+                                         for n in part_names},
+                           "record_count": s["rows"],
+                           "file_size_in_bytes": s["bytes"],
+                           "lower_bounds": lbs, "upper_bounds": ubs,
+                           **data_file}})
+    return entries
 
 
 def _current_version(table_dir: str) -> int:
@@ -732,27 +878,7 @@ def _spec_partition_exprs(spec: dict, schema: dict) -> list[tuple[str, object]]:
     return out
 
 
-def _part_values_of(path: str, part_cols: list[str],
-                    types: dict[str, str]) -> dict:
-    """Identity-partition values of a data file, parsed from its Hive-style
-    ``_p_<col>=<escaped value>`` path segments (Spark URL-escapes special
-    characters; nulls become __HIVE_DEFAULT_PARTITION__)."""
-    from urllib.parse import unquote
-    raw = {}
-    for seg in Path(path).parts:
-        if seg.startswith("_p_") and "=" in seg:
-            k, v = seg.split("=", 1)
-            raw[k[3:]] = None if v == "__HIVE_DEFAULT_PARTITION__" \
-                else unquote(v)
-    out = {}
-    for c in part_cols:
-        v = raw[c]
-        out[c] = None if v is None else (
-            int(v) if types[c] in ("int", "long") else v)
-    return out
-
-
-def _write_snapshot(spark, table_dir: str, df: DataFrame,
+def _write_snapshot(table_dir: str, df: DataFrame,
                     prev_meta: dict | None,
                     operation: str = "append",
                     partition_by: str | None = None,
@@ -766,12 +892,12 @@ def _write_snapshot(spark, table_dir: str, df: DataFrame,
     snapshot but remain readable by time travel).
 
     ``partition_by`` (new tables only) writes an identity partition spec
-    on that column: data files are physically split per value (via a
-    duplicated ``_p_<col>`` path column, so the column itself STAYS in the
-    data files as Iceberg requires), each manifest entry carries the
-    file's partition struct, and :func:`prune_files` prunes on it from
-    the spec alone — no bounds read.  Appends to a partitioned table
-    inherit the table's spec automatically."""
+    on that column: data files are physically split per value (by a
+    computed ``_p_<col>`` column the writer drops, so the column itself
+    STAYS in the data files as Iceberg requires), each manifest entry
+    carries the file's partition struct, and :func:`prune_files` prunes
+    on it from the spec alone — no bounds read.  Appends to a partitioned
+    table inherit the table's spec automatically."""
     table_dir = str(table_dir)
     mdir = _meta_dir(table_dir)
     mdir.mkdir(parents=True, exist_ok=True)
@@ -814,12 +940,10 @@ def _write_snapshot(spark, table_dir: str, df: DataFrame,
     else:
         spec = {"spec-id": 0, "fields": []}
     by_id = {f["id"]: f for f in table_schema["fields"]}
-    part_cols, part_types, part_fields = [], {}, []
+    part_fields = []
     for pf in spec["fields"]:
         tname, _param = _transform_of(pf)        # loud on unknown
         rt = _transform_result_type(tname, by_id[pf["source-id"]]["type"])
-        part_cols.append(pf["name"])
-        part_types[pf["name"]] = rt
         part_fields.append((pf["name"], rt, pf["field-id"]))
 
     # 1. data files (append into a per-snapshot subdir — no clobbering).
@@ -829,63 +953,19 @@ def _write_snapshot(spark, table_dir: str, df: DataFrame,
     use_ids = (_uses_field_ids(prev_meta) if prev_meta
                else os.environ.get("SIMDCOMP_ICEBERG_FIELD_IDS",
                                    "1") != "0")
-    if use_ids:
-        spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-        df = _stamp_field_ids(df, table_schema)
-    out = str(data_dir / f"snap-{snap_id}")
-    if part_cols:
-        dup = df
-        for name, expr in _spec_partition_exprs(spec, table_schema):
-            dup = dup.withColumn(f"_p_{name}", expr)
-        dup.write.mode("error").partitionBy(
-            *[f"_p_{c}" for c in part_cols]).parquet(out)
-        files = sorted(str(p) for p in Path(out).rglob("*.parquet"))
-    else:
-        df.write.mode("error").parquet(out)
-        files = sorted(str(p) for p in Path(out).glob("*.parquet"))
-    stats = _file_stats(spark, files)
+    stats = _write_data_files(df, str(data_dir / f"snap-{snap_id}"),
+                              table_schema, spec, use_ids)
 
-    # 2. manifest (avro), with per-file column bounds (spec fields
-    # 125/128: map<field-id, single-value binary>) from the parquet
-    # footer statistics — the basis of metadata-level file pruning.
-    # Identity-partition columns are carried in the partition struct
-    # instead (exact value, no bounds needed).
-    def _bounds_maps(col_bounds):
-        lbs, ubs = [], []
-        for name, (mn, mx) in sorted(col_bounds.items()):
-            f = by_name.get(name)
-            if f is None or not isinstance(f["type"], str) \
-                    or name in part_cols:
-                continue
-            try:
-                lbs.append({"key": f["id"],
-                            "value": _sv_encode(f["type"], mn)})
-                ubs.append({"key": f["id"],
-                            "value": _sv_encode(f["type"], mx)})
-            except NotImplementedError:
-                continue
-        return lbs, ubs
-
-    entries = []
-    for p, rows, size, col_bounds in stats:
-        lbs, ubs = _bounds_maps(col_bounds)
-        entries.append(
-            {"status": 1, "snapshot_id": snap_id,
-             "sequence_number": None, "file_sequence_number": None,
-             "data_file": {"content": 0, "file_path": p,
-                           "file_format": "PARQUET",
-                           "partition": _part_values_of(p, part_cols,
-                                                        part_types),
-                           "record_count": rows,
-                           "file_size_in_bytes": size,
-                           "lower_bounds": lbs, "upper_bounds": ubs}})
+    # 2. manifest (avro) with per-file column bounds
+    entries = _file_entries(stats, snap_id, 0, by_name,
+                            [n for n, _, _ in part_fields])
     manifest_path = str(mdir / f"manifest-{snap_id}.avro")
     _avro_write(manifest_path, _manifest_entry_schema(part_fields), entries,
                 metadata={"schema": json.dumps(table_schema),
                           "partition-spec": json.dumps(spec["fields"]),
                           "content": "data",
                           "format-version": "2"})
-    added_rows = sum(r for _, r, _, _ in stats)
+    added_rows = sum(st["rows"] for st in stats)
 
     # 3. manifest list: append carries previous manifests forward;
     # overwrite replaces the live file set with this manifest only
@@ -1096,7 +1176,7 @@ def export_encoded(df: DataFrame, table_dir: str,
     if is_iceberg_table(table_dir):
         raise FileExistsError(
             f"{table_dir} is already an Iceberg table — use append()")
-    return _write_snapshot(df.sparkSession, table_dir, df, None,
+    return _write_snapshot(table_dir, df, None,
                            partition_by=partition_by,
                            extra_summary=extra_summary)
 
@@ -1113,7 +1193,7 @@ def append(df: DataFrame, table_dir: str,
     publish ref instead of main (see :func:`create_branch`)."""
     prev = _load_metadata(table_dir)
     _check_same_schema(prev, df, "append")
-    return _write_snapshot(df.sparkSession, table_dir, df, prev,
+    return _write_snapshot(table_dir, df, prev,
                            extra_summary=extra_summary, branch=branch)
 
 
@@ -1445,7 +1525,7 @@ def overwrite(df: DataFrame, table_dir: str) -> dict:
     isolation — readers of the old snapshot are never disturbed."""
     prev = _load_metadata(table_dir)
     _check_same_schema(prev, df, "overwrite")
-    return _write_snapshot(df.sparkSession, table_dir, df, prev,
+    return _write_snapshot(table_dir, df, prev,
                            operation="overwrite")
 
 
@@ -1487,7 +1567,14 @@ def prune_files(table_dir: str, col: str, lo=None, hi=None,
     out = []
     for d in entries:
         if part_field is not None:
-            pv = (d.get("partition") or {}).get(part_field["name"])
+            part = d.get("partition") or {}
+            pv = part.get(part_field["name"])
+            if pv is None and part_field["name"] in part and \
+                    (lo is not None or hi is not None):
+                # a null partition value means every row's source value
+                # is null (each transform maps null to null): no range
+                # predicate matches
+                continue
             if pv is not None:
                 if tname == "identity":
                     # the partition struct holds the file's exact value —
@@ -1860,11 +1947,11 @@ def _spark_ddl(table_dir: str) -> str:
 # ---------------------------------------------------------------------------
 # field-id projection (schema evolution support)
 #
-# New tables stamp the Iceberg field id of every column into the parquet
-# footers (parquet's standard field_id slot, via Spark's
-# ``parquet.field.id`` StructField metadata + the native
-# ``spark.sql.parquet.fieldId.write.enabled`` writer path), and readers
-# resolve columns BY ID instead of by name
+# New tables stamp the Iceberg field id of every column, and of a list's
+# element, into the parquet footers (parquet's standard field_id slot,
+# set as ``PARQUET:field_id`` Arrow field metadata by the task-side
+# pyarrow writer, :func:`_write_data_files`), and readers resolve
+# columns BY ID instead of by name
 # (``spark.sql.parquet.fieldId.read.enabled``).  That is what makes
 # rename/drop/promote safe: a renamed column still resolves to the same
 # physical data, a dropped-then-re-added name gets a NEW id so old
@@ -1903,19 +1990,6 @@ def _spark_struct_with_ids(schema: dict):
         T.StructField(f["name"], one(f["type"]), True,
                       {"parquet.field.id": f["id"]})
         for f in schema["fields"]])
-
-
-def _stamp_field_ids(df: DataFrame, schema: dict) -> DataFrame:
-    """Alias each column with its Iceberg field id so Spark's parquet
-    writer stamps the id into the footer (write.enabled is on by
-    default; we re-assert it at the write sites).  Columns not in the
-    table schema (e.g. the duplicated ``_p_<col>`` partition-path
-    columns) pass through untouched."""
-    by_name = {f["name"]: f["id"] for f in schema["fields"]}
-    return df.select(*[
-        F.col(c).alias(c, metadata={"parquet.field.id": by_name[c]})
-        if c in by_name else F.col(c)
-        for c in df.columns])
 
 
 def _schema_reader(spark: SparkSession, meta: dict):
@@ -2115,47 +2189,25 @@ def write_position_deletes(spark: SparkSession, table_dir: str,
     snap_id = int(uuid.uuid4().int % (1 << 62)) + 1
     seq = prev_meta.get("last-sequence-number", 0) + 1
     now_ms = time.time_ns() // 1_000_000
-    out = str(Path(table_dir) / "data" / f"snap-{snap_id}")
     nfiles = (n_pos + _DELETE_ROWS_PER_FILE - 1) // _DELETE_ROWS_PER_FILE
-    # the spec's RESERVED field ids for position-delete columns are
-    # stamped into the footers on id-stamped tables (readers here match
-    # these constant names either way)
-    fp_meta = ({"parquet.field.id": _FP_FID}
-               if _uses_field_ids(prev_meta) else None)
-    pos_meta = ({"parquet.field.id": _POS_FID}
-                if _uses_field_ids(prev_meta) else None)
-    (pos_df.select(F.col("file_path").cast("string")
-                   .alias("file_path", metadata=fp_meta),
-                   F.col("pos").cast("long")
-                   .alias("pos", metadata=pos_meta))
-     .repartitionByRange(nfiles, "file_path", "pos")
-     .sortWithinPartitions("file_path", "pos")
-     .write.mode("error").parquet(out))
+    # file_path/pos under the spec's RESERVED field ids: stamped into the
+    # footers on id-stamped tables (readers here match these constant
+    # names either way), and as manifest bounds, which let a reader skip
+    # delete files irrelevant to the data file it scans
+    del_schema = {"fields": [
+        {"id": _FP_FID, "name": "file_path", "type": "string"},
+        {"id": _POS_FID, "name": "pos", "type": "long"}]}
+    stats = _write_data_files(
+        pos_df.select(F.col("file_path").cast("string"),
+                      F.col("pos").cast("long"))
+        .repartitionByRange(nfiles, "file_path", "pos")
+        .sortWithinPartitions("file_path", "pos"),
+        str(Path(table_dir) / "data" / f"snap-{snap_id}"), del_schema,
+        {"fields": []}, _uses_field_ids(prev_meta))
     pos_df.unpersist()
-    files = sorted(str(p) for p in Path(out).glob("*.parquet"))
-    stats = _file_stats(spark, files)
-
-    entries = []
-    for p, rows, size, col_bounds in stats:
-        lbs, ubs = [], []
-        # file_path/pos bounds under the spec's RESERVED field ids let a
-        # reader skip delete files irrelevant to the data file it scans
-        for name, fid, t in (("file_path", _FP_FID, "string"),
-                             ("pos", _POS_FID, "long")):
-            if name in col_bounds:
-                mn, mx = col_bounds[name]
-                lbs.append({"key": fid, "value": _sv_encode(t, mn)})
-                ubs.append({"key": fid, "value": _sv_encode(t, mx)})
-        entries.append(
-            {"status": 1, "snapshot_id": snap_id,
-             "sequence_number": None, "file_sequence_number": None,
-             "data_file": {"content": 1, "file_path": p,
-                           "file_format": "PARQUET",
-                           "partition": {n: None for n, _, _ in
-                                         part_fields},
-                           "record_count": rows,
-                           "file_size_in_bytes": size,
-                           "lower_bounds": lbs, "upper_bounds": ubs}})
+    entries = _file_entries(
+        stats, snap_id, 1, {f["name"]: f for f in del_schema["fields"]},
+        [n for n, _, _ in part_fields])
     mdir = _meta_dir(table_dir)
     manifest_path = str(mdir / f"manifest-del-{snap_id}.avro")
     _avro_write(manifest_path, _manifest_entry_schema(part_fields), entries,
@@ -2224,56 +2276,27 @@ def write_equality_deletes(spark: SparkSession, table_dir: str,
     eq_ids = [fields[c]["id"] for c in cols]
     # persist the deduplicated keys: count + write otherwise run the
     # distinct (a shuffle over the caller's whole lineage) twice
-    keys_df = keys_cached = keys_df.distinct().persist()
+    keys_df = keys_df.distinct().persist()
     n_keys = keys_df.count()
     if n_keys == 0:
-        keys_cached.unpersist()
+        keys_df.unpersist()
         return None
     snap_id = int(uuid.uuid4().int % (1 << 62)) + 1
     seq = prev_meta.get("last-sequence-number", 0) + 1
     now_ms = time.time_ns() // 1_000_000
-    out = str(Path(table_dir) / "data" / f"snap-{snap_id}")
     nfiles = (n_keys + _DELETE_ROWS_PER_FILE - 1) // _DELETE_ROWS_PER_FILE
-    if _uses_field_ids(prev_meta):
-        # key columns carry their table field ids so the read side can
-        # resolve them by id even after a later rename
-        keys_df = _stamp_field_ids(
-            keys_df, {"fields": [fields[c] for c in cols]})
-    (keys_df.repartitionByRange(nfiles, *cols)
-     .sortWithinPartitions(*cols)
-     .write.mode("error").parquet(out))
-    keys_cached.unpersist()
-    files = sorted(str(p) for p in Path(out).glob("*.parquet"))
-    stats = _file_stats(spark, files)
-
-    entries = []
-    for p, rows, size, col_bounds in stats:
-        lbs, ubs = [], []
-        for c in cols:
-            if c not in col_bounds:
-                continue
-            f = fields[c]
-            if not isinstance(f["type"], str):
-                continue
-            mn, mx = col_bounds[c]
-            try:
-                lbs.append({"key": f["id"],
-                            "value": _sv_encode(f["type"], mn)})
-                ubs.append({"key": f["id"],
-                            "value": _sv_encode(f["type"], mx)})
-            except NotImplementedError:
-                continue
-        entries.append(
-            {"status": 1, "snapshot_id": snap_id,
-             "sequence_number": None, "file_sequence_number": None,
-             "data_file": {"content": 2, "file_path": p,
-                           "file_format": "PARQUET",
-                           "partition": {n: None for n, _, _ in
-                                         part_fields},
-                           "record_count": rows,
-                           "file_size_in_bytes": size,
-                           "lower_bounds": lbs, "upper_bounds": ubs,
-                           "equality_ids": eq_ids}})
+    # on id-stamped tables the key columns carry their table field ids
+    # so the read side can resolve them by id even after a later rename
+    key_fields = {c: fields[c] for c in cols}
+    stats = _write_data_files(
+        keys_df.repartitionByRange(nfiles, *cols).sortWithinPartitions(*cols),
+        str(Path(table_dir) / "data" / f"snap-{snap_id}"),
+        {"fields": list(key_fields.values())}, {"fields": []},
+        _uses_field_ids(prev_meta))
+    keys_df.unpersist()
+    entries = _file_entries(stats, snap_id, 2, key_fields,
+                            [n for n, _, _ in part_fields],
+                            equality_ids=eq_ids)
     mdir = _meta_dir(table_dir)
     manifest_path = str(mdir / f"manifest-eqdel-{snap_id}.avro")
     _avro_write(manifest_path, _manifest_entry_schema(part_fields), entries,
@@ -2335,10 +2358,7 @@ def compact_files(spark: SparkSession, table_dir: str) -> dict:
     dirty_entries = [d for d in data if d["file_path"] in dirty]
 
     spec, part_fields = _spec_part_fields(prev_meta)
-    part_cols = [n for n, _, _ in part_fields]
-    part_types = {n: t for n, t, _ in part_fields}
     schema = _current_schema(prev_meta)
-    by_name = {f["name"]: f for f in schema["fields"]}
 
     snap_id = int(uuid.uuid4().int % (1 << 62)) + 1
     seq = prev_meta.get("last-sequence-number", 0) + 1
@@ -2349,52 +2369,13 @@ def compact_files(spark: SparkSession, table_dir: str) -> dict:
     # migrates files toward the current schema
     df = _read_with_pos(spark, table_dir, dirty_entries, dels,
                         prev_meta).drop("_file", "_pos")
-    if _uses_field_ids(prev_meta):
-        spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
-        df = _stamp_field_ids(df, schema)
-    out = str(Path(table_dir) / "data" / f"snap-{snap_id}")
-    if part_cols:
-        dup = df
-        for name, expr in _spec_partition_exprs(spec, schema):
-            dup = dup.withColumn(f"_p_{name}", expr)
-        dup.write.mode("error").partitionBy(
-            *[f"_p_{c}" for c in part_cols]).parquet(out)
-        files = sorted(str(p) for p in Path(out).rglob("*.parquet"))
-    else:
-        df.write.mode("error").parquet(out)
-        files = sorted(str(p) for p in Path(out).glob("*.parquet"))
-    stats = _file_stats(spark, files)
-
-    def _bounds_maps(col_bounds):
-        lbs, ubs = [], []
-        for name, (mn, mx) in sorted(col_bounds.items()):
-            f = by_name.get(name)
-            if f is None or not isinstance(f["type"], str) \
-                    or name in part_cols:
-                continue
-            try:
-                lbs.append({"key": f["id"],
-                            "value": _sv_encode(f["type"], mn)})
-                ubs.append({"key": f["id"],
-                            "value": _sv_encode(f["type"], mx)})
-            except NotImplementedError:
-                continue
-        return lbs, ubs
-
-    entries = []
-    for p, rows, size, col_bounds in stats:
-        lbs, ubs = _bounds_maps(col_bounds)
-        entries.append(
-            {"status": 1, "snapshot_id": snap_id,
-             "sequence_number": None, "file_sequence_number": None,
-             "data_file": {"content": 0, "file_path": p,
-                           "file_format": "PARQUET",
-                           "partition": _part_values_of(p, part_cols,
-                                                        part_types),
-                           "record_count": rows,
-                           "file_size_in_bytes": size,
-                           "lower_bounds": lbs, "upper_bounds": ubs}})
-    added_rows = sum(r for _, r, _, _ in stats)
+    stats = _write_data_files(
+        df, str(Path(table_dir) / "data" / f"snap-{snap_id}"), schema, spec,
+        _uses_field_ids(prev_meta))
+    entries = _file_entries(stats, snap_id, 0,
+                            {f["name"]: f for f in schema["fields"]},
+                            [n for n, _, _ in part_fields])
+    added_rows = sum(st["rows"] for st in stats)
     kept_rows = 0
     for d in clean:  # carry untouched files forward: metadata only
         kept_rows += int(d.get("record_count") or 0)

@@ -4,6 +4,8 @@ resume-from-manifest, metrics."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -427,6 +429,72 @@ def test_rowgroup_units_exceed_partitions(spark, tmp_path):
     dec = engine.decode(enc, reassemble=False)
     assert dec.where(F.col("doc_id") == "d00042").first()["tokens"] == \
         tokens[42]
+
+
+def test_ingest_pass_is_one_job(spark, tmp_path):
+    """encode_files over a few small files plus export_encoded is ONE
+    Spark job of at most one task per core: whole-file units are planned
+    on the JVM side (no Exchange), and each task writes its own data
+    files, so no second job re-reads footers.  Counted through a job
+    group and statusTracker."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from simdcomp_spark import iceberg
+
+    src = tmp_path / "in"
+    src.mkdir()
+    for i in range(4):
+        n = 50 + 30 * i
+        pq.write_table(pa.table({
+            "doc_id": [f"f{i}d{j}" for j in range(n)],
+            "source": ["t"] * n,
+            "tokens": pa.array([[j, i, j * 7 % 500] for j in range(n)],
+                               pa.list_(pa.int32()))}),
+            src / f"part-{i}.parquet")
+    enc = engine.encode_files(spark, str(src))
+    plan = enc._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+
+    sc = spark.sparkContext
+    gid = f"one-job-{tmp_path.name}"
+    sc.setJobGroup(gid, "ingest pass")
+    try:
+        iceberg.export_encoded(enc, str(tmp_path / "t"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(gid)
+    assert len(jobs) == 1
+    tasks = sum(st.getStageInfo(s).numCompletedTasks
+                for s in st.getJobInfo(jobs[0]).stageIds)
+    assert 0 < tasks <= sc.defaultParallelism
+    assert iceberg.read_table(spark, str(tmp_path / "t")).count() == \
+        50 + 80 + 110 + 140
+
+
+def test_whole_file_units_balance_largest_first(spark, tmp_path):
+    """Whole-file units: k = min(files, defaultParallelism) tasks, files
+    assigned largest-first to the least-loaded task, every file once."""
+    par = spark.sparkContext.defaultParallelism
+    src = tmp_path / "bal"
+    src.mkdir()
+    sizes = [5000, 4000, 3000, 1000] + [100] * (par + 2)
+    for i, n in enumerate(sizes):
+        (src / f"f{i:03d}.parquet").write_bytes(b"x" * n)
+    units = engine._rowgroup_units(spark, str(src))
+    parts = units.rdd.glom().collect()
+    assert len(parts) == par
+    got = sorted(r["path"] for p in parts for r in p)
+    assert got == sorted(str(p) for p in src.glob("*.parquet"))
+    assert all(r["rg"] == -1 for p in parts for r in p)
+    loads = sorted(sum(os.path.getsize(r["path"]) for r in p)
+                   for p in parts)
+    # the four big files sit alone; the small ones spread evenly over
+    # the other tasks
+    assert loads[-4:] == [1000, 3000, 4000, 5000]
+    assert sum(loads[:-4]) == 100 * (par + 2)
+    assert loads[-5] - loads[0] <= 100 and loads[0] > 0
 
 
 def test_point_lookup_all_codecs(spark, unit_df):

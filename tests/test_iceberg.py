@@ -512,8 +512,8 @@ def test_commit_conflict_fails_loudly(spark, unit_df, tmp_path):
     iceberg.append(unit_df.select(*cols).limit(5), table)  # A commits v2
     v2 = Path(table) / "metadata" / "v2.metadata.json"
     winner = v2.read_text()
-    meta = iceberg._write_snapshot(spark, table,
-                                   unit_df.select(*cols).limit(3), stale)
+    meta = iceberg._write_snapshot(table, unit_df.select(*cols).limit(3),
+                                   stale)
     assert v2.read_text() == winner                 # never clobbered
     assert iceberg._current_version(table) == 3
     # the rebased commit kept the winner's snapshot in the lineage
@@ -621,7 +621,7 @@ def test_partition_spec_identity_on_source(spark, tmp_path):
         spark, table, between=("source", "books", "books")).count() == 20
     # a caller-supplied partition_by on append is a loud error
     with pytest.raises(ValueError, match="inherit"):
-        iceberg._write_snapshot(spark, table, df,
+        iceberg._write_snapshot(table, df,
                                 iceberg._load_metadata(table),
                                 partition_by="source")
     # unimplemented transforms are refused, not silently mis-partitioned
@@ -630,7 +630,146 @@ def test_partition_spec_identity_on_source(spark, tmp_path):
     meta2 = iceberg._load_metadata(table)
     meta2["partition-specs"][0]["fields"][0]["transform"] = "year"
     with pytest.raises(NotImplementedError, match="transform"):
-        iceberg._write_snapshot(spark, table, df, meta2)
+        iceberg._write_snapshot(table, df, meta2)
+
+
+def test_partition_values_round_trip_exactly(spark, tmp_path):
+    """Identity partition values that a Hive-style path would have to
+    escape — '/', '=', '%', non-ASCII, null — round-trip exactly: the
+    manifest holds the input values, every data file sits under
+    data/snap-<id>/, and pruning and range reads return exactly that
+    value's rows."""
+    import pyarrow.parquet as pq
+
+    values = ["a/b", "k=v", "50%", "é", None]
+    rows = [(f"d{i:02d}", values[i % 5], i) for i in range(40)]
+    df = spark.createDataFrame(rows, "doc_id string, source string, n int")
+    table = str(tmp_path / "esc")
+    meta = iceberg.export_encoded(df, table, partition_by="source")
+    snap_dir = f"{table}/data/snap-{meta['current-snapshot-id']}/"
+    files = iceberg.data_files(table)
+    assert {d["partition"]["source"] for d in files} == set(values)
+    for d in files:
+        assert d["file_path"].startswith(snap_dir)
+        got = pq.read_table(d["file_path"]).column("source").to_pylist()
+        assert set(got) == {d["partition"]["source"]}
+        assert len(got) == d["record_count"]
+    for v in values[:-1]:
+        want = sorted(r[0] for r in rows if r[1] == v)
+        pruned = iceberg.prune_files(table, "source", v, v)
+        assert {d["partition"]["source"] for d in pruned} == {v}
+        assert sum(d["record_count"] for d in pruned) == len(want)
+        assert sorted(r["doc_id"] for r in iceberg.read_table(
+            spark, table, between=("source", v, v)).collect()) == want
+
+
+def test_failed_export_never_commits(spark, tmp_path):
+    """A task that fails after the other tasks have written their files
+    fails the export: no metadata is published, a second export to the
+    same directory succeeds and reads back only its own rows, and
+    remove_orphan_files sweeps exactly the failed export's files."""
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = str(tmp_path / "t")
+    data_dir = f"{table}/data"
+
+    def gen(it):
+        from pathlib import Path
+
+        from pyspark import TaskContext
+        pid = TaskContext.get().partitionId()
+        for _ in it:
+            pass
+        if pid == 3:
+            # wait until the other three tasks have CLOSED their files
+            deadline = time.time() + 120
+            while time.time() < deadline:
+                done = 0
+                for p in Path(data_dir).rglob("*.parquet"):
+                    try:
+                        pq.read_metadata(str(p))
+                        done += 1
+                    except (OSError, pa.ArrowException):
+                        pass
+                if done == 3:
+                    break
+                time.sleep(0.05)
+            time.sleep(0.5)
+            raise RuntimeError("injected task failure")
+        yield pa.RecordBatch.from_pydict(
+            {"doc_id": [f"p{pid}r{i}" for i in range(10)],
+             "n": list(range(10))})
+
+    bad = spark.range(4, numPartitions=4).mapInArrow(
+        gen, "doc_id string, n long")
+    with pytest.raises(Exception, match="injected task failure"):
+        iceberg.export_encoded(bad, table)
+    assert not iceberg.is_iceberg_table(table)
+    assert not (Path(table) / "metadata" / "v1.metadata.json").exists()
+    failed = sorted(str(p) for p in Path(data_dir).rglob("*.parquet"))
+    assert len(failed) == 3
+
+    good = spark.createDataFrame([("ok1", 1), ("ok2", 2)],
+                                 "doc_id string, n long")
+    iceberg.export_encoded(good, table)
+    assert sorted(r["doc_id"] for r in
+                  iceberg.read_table(spark, table).collect()) == \
+        ["ok1", "ok2"]
+    assert iceberg.remove_orphan_files(table, older_than_s=0) == failed
+    assert iceberg.read_table(spark, table).count() == 2
+
+
+def test_write_task_removes_its_files_on_failure(tmp_path, monkeypatch):
+    """The task-side writer deletes every file it opened when its input
+    raises mid-stream, so a failed task attempt leaves nothing behind."""
+    import pyarrow as pa
+    from pyspark import TaskContext
+
+    class Ctx:
+        def partitionId(self):
+            return 0
+
+        def attemptNumber(self):
+            return 0
+
+    monkeypatch.setattr(TaskContext, "get", classmethod(lambda c: Ctx()))
+    batch = pa.RecordBatch.from_pydict(
+        {"k": ["x", "y"], "_p_k": ["x", "y"]})
+
+    def batches():
+        yield batch
+        raise RuntimeError("input failed")
+
+    with pytest.raises(RuntimeError, match="input failed"):
+        list(iceberg._write_task(batches(), str(tmp_path), ["k"], {}))
+    assert list(tmp_path.iterdir()) == []
+
+
+def test_export_keeps_temporal_double_boolean_columns(spark, tmp_path):
+    """timestamp, timestamp_ntz, date, double and boolean columns survive
+    export_encoded → read_table with equal values and types, nulls and
+    values before the Gregorian cutover included."""
+    import datetime as dt
+    ddl = ("k string, ts timestamp, tn timestamp_ntz, d date, x double, "
+           "b boolean")
+    df = spark.createDataFrame([
+        ("a", dt.datetime(2024, 1, 2, 3, 4, 5, 678901),
+         dt.datetime(2024, 1, 2, 3, 4, 5, 6), dt.date(2024, 2, 29), 1.5,
+         True),
+        ("b", None, None, None, None, None),
+        ("c", dt.datetime(1969, 12, 31, 23, 59, 59),
+         dt.datetime(1970, 1, 1), dt.date(1970, 1, 1), -2.25e-300,
+         False),
+        ("d", dt.datetime(1500, 1, 2, 3, 4, 5), dt.datetime(1500, 1, 2),
+         dt.date(1000, 3, 1), float("inf"), True)], ddl)
+    table = str(tmp_path / "types")
+    iceberg.export_encoded(df, table)
+    back = iceberg.read_table(spark, table)
+    assert back.dtypes == df.dtypes
+    assert sorted(back.collect()) == sorted(df.collect())
 
 
 def test_schema_evolution_add_column(spark, unit_df, tmp_path):
@@ -868,7 +1007,7 @@ def test_concurrent_append_rebases_and_retries(spark, unit_df, tmp_path):
     iceberg.append(a, table)                    # the winner
     # the loser commits from the STALE parent: its first CAS hits the
     # winner's vN and must rebase, not raise
-    meta = iceberg._write_snapshot(spark, table, b, stale)
+    meta = iceberg._write_snapshot(table, b, stale)
     seqs = [s["sequence-number"] for s in meta["snapshots"]]
     assert seqs == sorted(seqs) and len(set(seqs)) == len(seqs)
     assert len(meta["snapshots"]) == 3
@@ -881,14 +1020,14 @@ def test_concurrent_append_rebases_and_retries(spark, unit_df, tmp_path):
     _os.environ["SIMDCOMP_COMMIT_RETRIES"] = "0"
     try:
         with pytest.raises(RuntimeError, match="commit conflict"):
-            iceberg._write_snapshot(spark, table, b.limit(2), stale2)
+            iceberg._write_snapshot(table, b.limit(2), stale2)
     finally:
         del _os.environ["SIMDCOMP_COMMIT_RETRIES"]
     # non-append commits (overwrite) keep fail-loudly semantics
     stale3 = iceberg._load_metadata(table)
     iceberg.append(b.limit(2), table)
     with pytest.raises(RuntimeError, match="commit conflict"):
-        iceberg._write_snapshot(spark, table, b.limit(2), stale3,
+        iceberg._write_snapshot(table, b.limit(2), stale3,
                                 operation="overwrite")
 
 

@@ -421,3 +421,46 @@ def test_equality_delete_on_non_role_key_fused_decode(spark, tmp_path):
     keep = tok.where("doc_id <> 'd03'")
     dec = engine.decode(iceberg.read_table(spark, table))
     assert engine.verify_roundtrip(keep, dec) == 0
+
+
+def test_delete_files_sorted_and_id_stamped(spark, tmp_path, monkeypatch):
+    """Position-delete files are sorted by (file_path, pos), as the spec
+    requires, and on id-stamped tables carry the spec's reserved field
+    ids; equality-delete files carry their key columns' table ids."""
+    import pyarrow.parquet as pq
+
+    table = str(tmp_path / "t")
+    enc = engine.encode(_tok_df(spark).repartition(4), codec="auto",
+                        split_threshold=64)
+    iceberg.export_encoded(enc, table)
+    monkeypatch.setattr(iceberg, "_DELETE_ROWS_PER_FILE", 7)
+    assert iceberg.delete_where(spark, table, "seg_id % 2 = 0") is not None
+    pos_files = iceberg.delete_files(table)
+    assert len(pos_files) > 1
+    n = 0
+    for d in pos_files:
+        pf = pq.ParquetFile(d["file_path"])
+        assert {f.name: int(f.metadata[b"PARQUET:field_id"])
+                for f in pf.schema_arrow} == {
+            "file_path": iceberg._FP_FID, "pos": iceberg._POS_FID}
+        t = pf.read()
+        coords = list(zip(t["file_path"].to_pylist(),
+                          t["pos"].to_pylist()))
+        assert coords == sorted(coords)
+        assert len(coords) == d["record_count"]
+        n += len(coords)
+    assert n == enc.where("seg_id % 2 = 0").count()
+
+    ids = {f["name"]: f["id"] for f in iceberg._current_schema(
+        iceberg._load_metadata(table))["fields"]}
+    keys = spark.createDataFrame([("d05", "unit"), ("d11", "unit")],
+                                 "doc_id string, source string")
+    assert iceberg.write_equality_deletes(spark, table, keys) is not None
+    eq_files = [d for d in iceberg.delete_files(table)
+                if d["content"] == 2]
+    assert eq_files
+    for d in eq_files:
+        assert d["equality_ids"] == [ids["doc_id"], ids["source"]]
+        assert {f.name: int(f.metadata[b"PARQUET:field_id"])
+                for f in pq.ParquetFile(d["file_path"]).schema_arrow} == \
+            {"doc_id": ids["doc_id"], "source": ids["source"]}

@@ -36,17 +36,25 @@ def table(spark, tmp_path):
 
 def test_new_tables_stamp_field_ids(spark, table):
     """Every data file footer carries the Iceberg field id of each
-    column (parquet's standard field_id slot), and the table records the
-    capability as a property."""
+    column (parquet's standard field_id slot), a list column's element
+    carries its element-id, and the table records the capability as a
+    property."""
     import pyarrow.parquet as pq
     meta = iceberg._load_metadata(table)
     assert iceberg._uses_field_ids(meta)
-    want = {f["name"]: f["id"]
-            for f in iceberg._current_schema(meta)["fields"]}
-    for f in glob.glob(table + "/data/*/*.parquet"):
+    fields = iceberg._current_schema(meta)["fields"]
+    want = {f["name"]: f["id"] for f in fields}
+    elem = next(f["type"]["element-id"] for f in fields
+                if f["name"] == "tokens")
+    files = glob.glob(table + "/data/*/*.parquet")
+    assert files
+    for f in files:
+        arrow = pq.ParquetFile(f).schema_arrow
         got = {fl.name: int(fl.metadata[b"PARQUET:field_id"])
-               for fl in pq.ParquetFile(f).schema_arrow}
+               for fl in arrow}
         assert got == want
+        vf = arrow.field("tokens").type.value_field
+        assert int(vf.metadata[b"PARQUET:field_id"]) == elem
 
 
 def test_rename_resolves_old_files_by_id(spark, table):
