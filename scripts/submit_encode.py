@@ -1,29 +1,24 @@
 #!/usr/bin/env python
 """Cluster job entry point (north rule: "run via spark-submit --py-files").
 
-Package and launch:
+Package and launch from the repository root:
 
-    cd /root/repo && zip -r /tmp/simdcomp_spark.zip simdcomp_spark
+    zip -r /tmp/simdcomp_spark.zip simdcomp_spark
     spark-submit --py-files /tmp/simdcomp_spark.zip \
         scripts/submit_encode.py \
-        --input  s3://bucket/tokens_table/ \
-        --output s3://bucket/encoded_table/ \
-        --codec auto --shards 4096 --split-threshold 65536
+        --input  /data/tokens_table \
+        --publish-iceberg /data/encoded_table \
+        --codec auto --batch-files 512 --split-threshold 65536 --verify
 
-The job is resumable: re-submitting after a failure encodes only shards
-not yet recorded as complete.  Two output modes share one resume model:
-
-* plain layout (``--output``): per-shard JSON manifests under _manifest/
-  (simdcomp_spark/manifest.encode_resumable);
-* Iceberg table (``--publish-iceberg DIR``): the table IS the output and
-  the resume state — each batch of ``--batch-files`` INPUT FILES commits
-  as one append snapshot whose summary records those files
-  (manifest.encode_files_resumable_iceberg, the fused ingest).  A
-  crashed run commits nothing (orphan data files are invisible to
-  metadata-planned readers) and the re-run encodes exactly the missing
-  files; no full-table re-export.  With ``--verify``, each batch is
-  round-tripped right after its commit and ROLLED BACK on mismatch, so
-  corrupt data never stays current.
+The output is an Iceberg v2 table, and the table is also the resume
+state: each batch of ``--batch-files`` INPUT FILES commits as one append
+snapshot whose summary records those files
+(manifest.encode_files_resumable_iceberg, the fused ingest).  A crashed
+run commits nothing (orphan data files are invisible to metadata-planned
+readers), and re-submitting encodes exactly the files no snapshot
+records; no full-table re-export.  With ``--verify``, each batch is
+round-tripped right after its commit and ROLLED BACK on mismatch, so
+corrupt data never stays current.
 
 On a cluster the session comes from spark-submit's conf; local fallback
 uses engine.get_spark().
@@ -40,9 +35,11 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def _is_local(path: str) -> bool:
-    """The self-contained Iceberg layer (simdcomp_spark/iceberg.py) does
-    plain-file I/O for the metadata tree, so Iceberg detection/publish only
-    applies to local paths; remote URIs stay on the plain-parquet paths."""
+    """Both paths go through plain file I/O: the input's files are listed
+    with a local directory walk (engine._input_files), and the
+    self-contained Iceberg layer (simdcomp_spark/iceberg.py) writes its
+    metadata tree with plain file I/O.  A URI (``scheme://``) is not a
+    local path."""
     return "://" not in path
 
 
@@ -51,11 +48,7 @@ def main() -> int:
     ap.add_argument("--input", required=True,
                     help="tokens table (parquet dir or local Iceberg "
                          "table dir)")
-    ap.add_argument("--output",
-                    help="encoded table root (plain layout with JSON "
-                         "shard manifests); optional when "
-                         "--publish-iceberg is the sink")
-    ap.add_argument("--publish-iceberg", metavar="DIR",
+    ap.add_argument("--publish-iceberg", metavar="DIR", required=True,
                     help="encode INTO an Iceberg v2 table at DIR via the "
                          "FUSED ingest: incremental append snapshots (one "
                          "per input-file batch, the batch's input files "
@@ -65,86 +58,53 @@ def main() -> int:
                     help="input files per Iceberg commit (default: all "
                          "missing files in one snapshot)")
     ap.add_argument("--codec", default="auto")
-    ap.add_argument("--shards", type=int, default=256)
     ap.add_argument("--split-threshold", type=int, default=1 << 16)
     ap.add_argument("--rewrite-manifests", action="store_true",
                     help="after the last batch lands, consolidate the "
                          "one-manifest-per-batch chain (metadata-only; "
                          "keeps planning cost flat in batch count)")
     ap.add_argument("--verify", action="store_true",
-                    help="decode + compare against the input (extra "
-                         "pass); mismatches exit 1.  With "
-                         "--publish-iceberg each batch is verified right "
-                         "after its commit and ROLLED BACK on mismatch "
-                         "(the corrupt snapshot never stays current)")
+                    help="decode + compare each batch against its input "
+                         "files right after its commit; a mismatch ROLLS "
+                         "BACK that snapshot (it never stays current) "
+                         "and exits 1")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
     from simdcomp_spark import engine, iceberg, manifest
 
-    if not args.output and not args.publish_iceberg:
-        raise ValueError("need --output and/or --publish-iceberg")
-    if args.publish_iceberg and not _is_local(args.publish_iceberg):
-        raise ValueError(
-            "--publish-iceberg requires a local path: the self-contained "
-            "Iceberg layer writes its metadata tree with plain file I/O")
+    for flag, path in (("--input", args.input),
+                       ("--publish-iceberg", args.publish_iceberg)):
+        if not _is_local(path):
+            raise ValueError(
+                f"{flag} requires a local path, got {path!r}: input files "
+                "are listed and the Iceberg metadata tree is written with "
+                "plain file I/O")
 
     spark = SparkSession.getActiveSession() or engine.get_spark("encode-job")
-    if _is_local(args.input) and \
-            (Path(args.input) / "metadata" / "version-hint.text").is_file():
-        # Iceberg table input (the north rule's input shape): read the
-        # current snapshot's live files via the metadata tree — a plain
-        # parquet read over the dir would also pick up dead/orphan files
-        df = iceberg.read_table(spark, args.input)
-    else:
-        df = spark.read.parquet(args.input)
-
-    rc = 0
-    if args.publish_iceberg:
-        try:
-            summary = manifest.encode_files_resumable_iceberg(
-                spark, args.input, args.publish_iceberg, codec=args.codec,
-                split_threshold=args.split_threshold,
-                batch_files=args.batch_files, verify=args.verify,
-                rewrite_manifests=args.rewrite_manifests)
-        except RuntimeError as e:
-            if "rolled back" not in str(e):
-                raise
-            print(json.dumps({"verify_failed": str(e),
-                              "rolled_back": True}))
-            return 1
-        enc = iceberg.read_table(spark, args.publish_iceberg)
-        metrics = engine.partition_metrics(enc)
-        metrics.write.mode("overwrite").parquet(
-            f"{args.publish_iceberg}/_metrics")
-        print(json.dumps(summary))
-        meta = iceberg._load_metadata(args.publish_iceberg)
-        print(json.dumps({
-            "iceberg_snapshot": meta["current-snapshot-id"],
-            "iceberg_table": args.publish_iceberg,
-            "verified_per_batch": bool(args.verify),
-            "snapshots_committed_this_run": summary["snapshots"]}))
-
-    if args.output:
-        summary = manifest.encode_resumable(
-            df, args.output, codec=args.codec, shards=args.shards,
-            split_threshold=args.split_threshold)
-        metrics = engine.partition_metrics(
-            manifest.read_encoded(spark, args.output))
-        metrics.write.mode("overwrite").parquet(f"{args.output}/_metrics")
-        print(json.dumps(summary))
-        if args.verify:
-            # no dropDuplicates: the staged-write resume protocol
-            # guarantees a duplicate-free table, and verification must
-            # DETECT a violation of that guarantee (decode reassembly
-            # would concatenate duplicated segments and mismatch), not
-            # mask it
-            enc = manifest.read_encoded(spark, args.output)
-            bad = engine.verify_roundtrip(df, engine.decode(enc))
-            print(json.dumps({"roundtrip_mismatches": bad}))
-            rc = 1 if bad else rc
-
-    return rc
+    try:
+        summary = manifest.encode_files_resumable_iceberg(
+            spark, args.input, args.publish_iceberg, codec=args.codec,
+            split_threshold=args.split_threshold,
+            batch_files=args.batch_files, verify=args.verify,
+            rewrite_manifests=args.rewrite_manifests)
+    except RuntimeError as e:
+        if "rolled back" not in str(e):
+            raise
+        print(json.dumps({"verify_failed": str(e), "rolled_back": True}))
+        return 1
+    enc = iceberg.read_table(spark, args.publish_iceberg)
+    metrics = engine.partition_metrics(enc)
+    metrics.write.mode("overwrite").parquet(
+        f"{args.publish_iceberg}/_metrics")
+    print(json.dumps(summary))
+    meta = iceberg._load_metadata(args.publish_iceberg)
+    print(json.dumps({
+        "iceberg_snapshot": meta["current-snapshot-id"],
+        "iceberg_table": args.publish_iceberg,
+        "verified_per_batch": bool(args.verify),
+        "snapshots_committed_this_run": summary["snapshots"]}))
+    return 0
 
 
 if __name__ == "__main__":

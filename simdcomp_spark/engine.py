@@ -6,12 +6,13 @@ Spark-first design (SURVEY.md §1.4, §4):
   binary columns move as RAW ARROW BUFFERS (one values buffer + offsets per
   batch), so there is no per-row Python and no per-row object
   materialization at all;
-* salt-based repartitioning on ``pmod(xxhash64(doc_id, seg_id), shards)``
-  spreads encode work evenly (north rule: explicit partitioning/skew
-  handling);
+* salt-based repartitioning of the ENCODED table on
+  ``pmod(xxhash64(doc_id, seg_id), shards)`` (:func:`salt_encoded`)
+  rebalances output while shuffling compressed bytes (north rule: explicit
+  partitioning/skew handling);
 * length-aware skew splitting: rows with huge ``n_tok`` are cut into
   independent segments with pure JVM expressions (``sequence``/``slice``)
-  BEFORE the shuffle, so a single 10M-token document cannot straggle a task.
+  before encoding, so a single 10M-token document cannot straggle a task.
   Blocks are independent given per-block inits (SURVEY.md §3.2), so segment
   encodes are bit-compatible with whole-row encodes;
 * one decoder: every encoded read is a DataFrame (``iceberg.read_table``,
@@ -224,33 +225,24 @@ def split_long_rows(df: DataFrame, threshold: int = DEFAULT_SPLIT_THRESHOLD
 # encode
 # ---------------------------------------------------------------------------
 
-def encode(df: DataFrame, codec: str = "auto", shards: int | None = None,
-           split_threshold: int | None = DEFAULT_SPLIT_THRESHOLD,
-           salt: bool = False) -> DataFrame:
+def encode(df: DataFrame, codec: str = "auto",
+           split_threshold: int | None = DEFAULT_SPLIT_THRESHOLD
+           ) -> DataFrame:
     """tokens table → encoded table.
 
     codec: a registry name, or 'auto' → per-partition cost-model selection
     (north rule).
 
-    Shuffle discipline (the 100 TB decision): by default the encode is
-    NARROW — scan-aligned, zero shuffles — because input task sizing is
-    already bounded by ``spark.sql.files.maxPartitionBytes`` and the
-    length-aware split bounds any single row.  ``salt=True`` inserts the
-    explicit salt-based repartition on ``pmod(xxhash64(doc_id, seg_id),
-    shards)`` BEFORE encoding, for inputs whose partitioning is itself
-    skewed (e.g. one giant input file); note it shuffles RAW token arrays
-    (4+ bytes/token in UnsafeRow) — prefer :func:`salt_encoded` afterwards,
-    which shuffles the ~2 bits/token compressed output instead."""
-    spark = df.sparkSession
+    Shuffle discipline (the 100 TB decision): the encode is NARROW —
+    scan-aligned, zero shuffles — because input task sizing is already
+    bounded by ``spark.sql.files.maxPartitionBytes`` and the length-aware
+    split bounds any single row.  For inputs whose partitioning is itself
+    skewed, salt the output with :func:`salt_encoded`, which shuffles the
+    ~2 bits/token compressed bytes rather than raw token arrays."""
     if split_threshold is not None:
         df = split_long_rows(df, split_threshold)
     elif "seg_id" not in df.columns:
         df = df.withColumn("seg_id", F.lit(0))
-    if salt:
-        shards = shards or int(spark.conf.get("spark.sql.shuffle.partitions"))
-        df = df.withColumn(
-            "_shard", F.pmod(F.xxhash64("doc_id", "seg_id"), F.lit(shards)))
-        df = df.repartition(shards, "_shard").drop("_shard")
     df = df.select("doc_id", "source", "seg_id", "tokens")
 
     def encode_fn(it):
@@ -334,7 +326,7 @@ def _input_files(path: str, snapshot_id: int | None = None) -> list[str]:
     returned — a plain directory walk over a multi-snapshot table would
     also pick up files that are dead in the current snapshot and
     double-read history.  ``snapshot_id`` time-travels.  Plain directories
-    recurse (e.g. the resumable writer's ``shard=N`` layout)."""
+    recurse (e.g. Hive-style ``key=value`` subdirectories)."""
     from pathlib import Path
 
     from . import iceberg
@@ -574,8 +566,8 @@ def decode(df_encoded: DataFrame, reassemble: bool = True) -> DataFrame:
     The ONLY decoder: every encoded read is a DataFrame handed to this
     function — ``iceberg.read_table(...)`` for Iceberg tables (snapshot,
     ref, ``between=`` / ``since_snapshot_id=`` ranges and v2 deletes are
-    resolved there), ``spark.read.parquet`` or ``manifest.read_encoded``
-    for plain directories.  Columns are addressed by their canonical
+    resolved there), or ``spark.read.parquet`` for a plain directory of
+    encoded parquet.  Columns are addressed by their canonical
     names (doc_id, source, seg_id, n_tok, codec, widths, inits, payload);
     a table whose role columns were renamed is renamed back by the
     caller (``withColumnsRenamed``).

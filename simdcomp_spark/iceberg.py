@@ -719,6 +719,15 @@ def _load_metadata(table_dir: str) -> dict:
     return meta
 
 
+def _metadata_or_none(table_dir: str) -> dict | None:
+    """The current metadata, or None when ``table_dir`` holds no table
+    yet (a resumable writer's or stream sink's first run)."""
+    try:
+        return _load_metadata(table_dir)
+    except FileNotFoundError:
+        return None
+
+
 # ---------------------------------------------------------------------------
 # Partition transforms (Iceberg spec "Partition Transforms" + Appendix B
 # 32-bit hash requirements): identity, bucket[N], truncate[W]
@@ -1195,6 +1204,17 @@ def append(df: DataFrame, table_dir: str,
     _check_same_schema(prev, df, "append")
     return _write_snapshot(table_dir, df, prev,
                            extra_summary=extra_summary, branch=branch)
+
+
+def _append_or_create(df: DataFrame, table_dir: str,
+                      extra_summary: dict[str, str]) -> dict:
+    """Commit ``df`` as an append snapshot, creating the table on the first
+    commit — the resumable writers and the stream sink start from an empty
+    dir.  :func:`append` alone keeps failing on a missing table, so a
+    mistyped path is never silently created there."""
+    if is_iceberg_table(table_dir):
+        return append(df, table_dir, extra_summary=extra_summary)
+    return export_encoded(df, table_dir, extra_summary=extra_summary)
 
 
 def add_column(table_dir: str, name: str, ftype: str) -> dict:
@@ -2421,8 +2441,48 @@ def compact_files(spark: SparkSession, table_dir: str) -> dict:
 # table maintenance: snapshot expiry + orphan-file cleanup
 # ---------------------------------------------------------------------------
 
-_LINEAGE_KEYS = ("simdcomp-shards", "simdcomp-input-files",
+# Resume lineage the resumable writers and the stream sink stamp on their
+# snapshot summaries: id sets (shard ids comma-separated, the others JSON
+# lists) and scalars.  expire_snapshots folds an expired snapshot's ids
+# into the `<key>-expired` JSON-list property and its scalars into the
+# property of the same key.
+_LINEAGE_SETS = ("simdcomp-shards", "simdcomp-input-files",
                  "simdcomp-stream-batches")
+_LINEAGE_SCALARS = ("simdcomp-total-shards", "simdcomp-stream-query")
+
+
+def _lineage(meta: dict | None,
+             snapshots: list[dict] | None = None) -> dict:
+    """The resume lineage recorded in ``snapshots`` (default: every
+    snapshot of ``meta``) together with what :func:`expire_snapshots`
+    folded into the table properties — the one reader of that format.
+
+    Each id-set key maps to its set of ids (shard ids as ints, input files
+    as relative paths, stream batch ids as ints); each scalar key to the
+    list of its values, the property's first, then the snapshots' in log
+    order (total shards as ints).  ``meta`` None (no table) has none."""
+    meta = meta or {}
+    props = meta.get("properties", {})
+    if snapshots is None:
+        snapshots = meta.get("snapshots", [])
+    summaries = [s.get("summary", {}) for s in snapshots]
+    out: dict = {}
+    for key in _LINEAGE_SETS:
+        ids = set(json.loads(props.get(f"{key}-expired", "[]")))
+        for summ in summaries:
+            v = summ.get(key, "")
+            if key == "simdcomp-shards":
+                ids |= {x for x in v.split(",") if x}
+            elif v:
+                ids |= set(json.loads(v))
+        out[key] = {int(x) for x in ids} if key == "simdcomp-shards" \
+            else ids
+    for key in _LINEAGE_SCALARS:
+        vals = [v for v in [props.get(key)] + [s.get(key) for s in summaries]
+                if v]
+        out[key] = [int(v) for v in vals] \
+            if key == "simdcomp-total-shards" else vals
+    return out
 
 
 def rewrite_manifests(table_dir: str,
@@ -2715,10 +2775,8 @@ def expire_snapshots(table_dir: str, keep_last: int = 1) -> dict:
     The resumable encoders record their lineage (shard ids / input files)
     in snapshot summaries — expiring those snapshots must NOT forget the
     work: expired summaries' lineage keys are folded into the table
-    ``properties`` first, and the completed_* readers in manifest.py union
-    properties with the live summaries, so a resume after expiry is still
-    a no-op."""
-    import json as _json
+    ``properties`` first, and :func:`_lineage` unions properties with the
+    live summaries, so a resume after expiry is still a no-op."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1 (the current snapshot "
                          "can never be expired)")
@@ -2747,22 +2805,18 @@ def expire_snapshots(table_dir: str, keep_last: int = 1) -> dict:
         raise ValueError("refusing to expire the current snapshot")
     meta = dict(meta)
     props = dict(meta.get("properties", {}))
-    for key in _LINEAGE_KEYS:
-        merged = set(_json.loads(props.get(f"{key}-expired", "[]")))
-        for s in expired:
-            v = s.get("summary", {}).get(key, "")
-            if key == "simdcomp-shards":
-                merged |= {x for x in v.split(",") if x}
-            elif v:
-                merged |= set(_json.loads(v))
-        if merged:
-            props[f"{key}-expired"] = _json.dumps(sorted(merged))
-    for s in expired:  # scalar lineage must survive expiry too: the
-        # shard modulus and the streaming sink's checkpoint query id
-        for k in ("simdcomp-total-shards", "simdcomp-stream-query"):
-            v = s.get("summary", {}).get(k)
-            if v:
-                props[k] = v
+    folded = _lineage(meta, expired)
+    for key in _LINEAGE_SETS:
+        if folded[key]:
+            # shard ids stay JSON strings, sorted as strings
+            ids = map(str, folded[key]) if key == "simdcomp-shards" \
+                else folded[key]
+            props[f"{key}-expired"] = json.dumps(sorted(ids))
+    # scalar lineage must survive expiry too: the shard modulus and the
+    # streaming sink's checkpoint query id
+    for key in _LINEAGE_SCALARS:
+        if folded[key]:
+            props[key] = str(folded[key][-1])
     meta["properties"] = props
     meta["snapshots"] = kept
     keep_ids = {s["snapshot-id"] for s in kept}

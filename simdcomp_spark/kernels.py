@@ -148,33 +148,9 @@ def pack_lanes(vals: np.ndarray, bit: int, mask: bool = False) -> np.ndarray:
     """
     assert 0 < bit < 32, bit
     vals = np.ascontiguousarray(vals, dtype=U32)
-    nblk, rows, lanes = vals.shape
-    assert lanes in (4, 8, 16)  # SSE / AVX2 / AVX-512 interleave widths
+    assert vals.shape[2] in (4, 8, 16)  # SSE / AVX2 / AVX-512 widths
     from . import native
-    res = native.pack_lanes(vals, bit, mask)
-    if res is not None:
-        return res
-    if mask:
-        vals = vals & U32((1 << bit) - 1)
-    nwords = (rows * bit + 31) // 32
-    if bit in (8, 16) and rows % (32 // bit) == 0:
-        # aligned widths: the interleaved layout degenerates to a pure
-        # byte/short transpose — no shifting at all (same bytes as the
-        # general recurrence; golden tests pin this)
-        group = 32 // bit
-        dt = np.uint8 if bit == 8 else np.uint16
-        arr = vals.astype(dt).reshape(nblk, nwords, group, lanes)
-        return np.ascontiguousarray(
-            arr.transpose(0, 1, 3, 2)).view(U32).reshape(nblk, nwords, lanes)
-    out = np.zeros((nblk, nwords, lanes), dtype=U32)
-    for k in range(rows):
-        off = k * bit
-        w, s = off >> 5, off & 31
-        v = vals[:, k, :]
-        out[:, w, :] |= v << U32(s)
-        if s + bit > 32:
-            out[:, w + 1, :] |= v >> U32(32 - s)
-    return out
+    return native.pack_lanes(vals, bit, mask)
 
 
 def unpack_lanes(words: np.ndarray, rows: int, bit: int) -> np.ndarray:
@@ -185,28 +161,8 @@ def unpack_lanes(words: np.ndarray, rows: int, bit: int) -> np.ndarray:
     """
     assert 0 < bit < 32, bit
     words = np.ascontiguousarray(words, dtype=U32)
-    nblk, _nw, lanes = words.shape
     from . import native
-    res = native.unpack_lanes(words, rows, bit)
-    if res is not None:
-        return res
-    if bit in (8, 16) and rows % (32 // bit) == 0:
-        group = 32 // bit
-        dt = np.uint8 if bit == 8 else np.uint16
-        arr = words.view(dt).reshape(nblk, -1, lanes, group)
-        return np.ascontiguousarray(
-            arr.transpose(0, 1, 3, 2)).reshape(nblk, -1, lanes)[:, :rows] \
-            .astype(U32)
-    out = np.empty((nblk, rows, lanes), dtype=U32)
-    m = U32((1 << bit) - 1)
-    for k in range(rows):
-        off = k * bit
-        w, s = off >> 5, off & 31
-        v = words[:, w, :] >> U32(s)
-        if s + bit > 32:
-            v = v | (words[:, w + 1, :] << U32(32 - s))
-        out[:, k, :] = v & m
-    return out
+    return native.unpack_lanes(words, rows, bit)
 
 
 def _to_lanes(blocks: np.ndarray) -> np.ndarray:

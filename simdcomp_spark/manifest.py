@@ -1,184 +1,34 @@
-"""Per-shard lineage manifests → checkpoint-resume of partially encoded
-tables (north rule: "resumable from checkpoint with per-partition lineage +
-metrics").
+"""Checkpoint-resume of partially encoded Iceberg tables (north rule:
+"resumable from checkpoint with per-partition lineage + metrics").
 
-Layout of an encoded table directory:
-
-    out_dir/
-      data/shard=NNN/*.parquet     (one Spark write per shard batch, append)
-      _manifest/shard=NNN.json     (atomic: tmp + rename)
-
-A shard's manifest records the input fingerprint (row/token counts — cheap,
-computed in the same job via the metrics aggregation) and its codec/metrics.
-``encode_resumable`` anti-joins the shard universe against completed
-manifests and encodes ONLY missing shards; re-running after a crash is
-idempotent.  At 100 TB scale this is the difference between re-running a
-12-hour job and re-running the 3 shards that failed.
+Resume state and table state are one mechanism, the snapshot log: each
+batch commits as one append snapshot whose summary records the batch's
+lineage — doc-hash shard ids (:func:`encode_resumable_iceberg`) or input
+files (:func:`encode_files_resumable_iceberg`).  A crashed run commits no
+snapshot, so a re-run encodes exactly the work no committed snapshot
+claims; its orphan data files are invisible to metadata-planned readers.
+The lineage format and its survival of snapshot expiry live in
+:func:`iceberg._lineage`.  At 100 TB scale this is the difference between
+re-running a 12-hour job and re-running the 3 batches that failed.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
-import tempfile
-from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from . import engine
+from . import engine, iceberg
 
-
-def _manifest_dir(out_dir: str) -> Path:
-    return Path(out_dir) / "_manifest"
-
-
-def completed_shards(out_dir: str) -> dict[int, dict]:
-    mdir = _manifest_dir(out_dir)
-    done = {}
-    if mdir.is_dir():
-        for p in sorted(mdir.glob("shard=*.json")):
-            try:
-                rec = json.loads(p.read_text())
-                if rec.get("status") == "done":
-                    done[int(rec["shard"])] = rec
-            except (ValueError, KeyError):
-                continue  # torn write → treat as incomplete, re-encode
-    return done
-
-
-def _write_manifest_atomic(out_dir: str, rec: dict) -> None:
-    mdir = _manifest_dir(out_dir)
-    mdir.mkdir(parents=True, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=mdir, suffix=".tmp")
-    with os.fdopen(fd, "w") as f:
-        json.dump(rec, f)
-    os.replace(tmp, mdir / f"shard={rec['shard']}.json")
-
-
-def encode_resumable(df: DataFrame, out_dir: str, codec: str = "auto",
-                     shards: int = 32,
-                     split_threshold: int = engine.DEFAULT_SPLIT_THRESHOLD
-                     ) -> dict:
-    """Encode ``df`` into out_dir/data partitioned by shard, skipping shards
-    whose manifest is already complete.  Returns a summary dict."""
-    done = completed_shards(out_dir)
-    todo = [s for s in range(shards) if s not in done]
-    summary = {"shards": shards, "skipped": len(done), "encoded": 0,
-               "rows": 0, "tokens": 0, "payload_bytes": 0}
-    if not todo:
-        return summary
-
-    df = engine.split_long_rows(df, split_threshold)
-    df = df.withColumn(
-        "shard", F.pmod(F.xxhash64("doc_id", "seg_id"), F.lit(shards)))
-    if len(todo) < shards:
-        df = df.where(F.col("shard").isin(todo))
-    df = df.repartition(len(todo), "shard")
-    enc = engine.encode(df.drop("shard"), codec=codec,
-                        split_threshold=None, salt=False)  # pre-split/sharded
-    enc = enc.withColumn(
-        "shard", F.pmod(F.xxhash64("doc_id", "seg_id"), F.lit(shards)))
-    data_dir = Path(out_dir) / "data"
-    staging_dir = Path(out_dir) / "_staging"
-
-    # Crash-safe write protocol: stage the whole run's output, then promote
-    # each shard with one atomic directory rename BEFORE its manifest is
-    # committed.  A crash leaves either (a) garbage under _staging (removed
-    # on the next run), or (b) a complete-but-unmanifested data/shard=K —
-    # which the next run deletes and re-encodes.  The old mode("append")
-    # write could leave PARTIAL shard files that a re-run appended to,
-    # silently duplicating rows.
-    if staging_dir.exists():
-        shutil.rmtree(staging_dir)
-    (enc.write.mode("overwrite").partitionBy("shard")
-        .parquet(str(staging_dir)))
-    data_dir.mkdir(parents=True, exist_ok=True)
-    for s in todo:
-        dst = data_dir / f"shard={s}"
-        if dst.exists():  # unmanifested leftovers from a crashed run
-            shutil.rmtree(dst)
-        src = staging_dir / f"shard={s}"
-        if src.exists():
-            os.replace(src, dst)
-    shutil.rmtree(staging_dir, ignore_errors=True)
-
-    # fingerprint + metrics per shard from the written data (one scan)
-    spark = df.sparkSession
-    written = spark.read.parquet(str(data_dir))
-    stats = (written.where(F.col("shard").isin(todo))
-             .groupBy("shard", "codec")
-             .agg(F.count("*").alias("rows"),
-                  F.sum("n_tok").alias("tokens"),
-                  F.sum(F.length("payload")).alias("payload_bytes"),
-                  (F.sum(F.length("widths")) + F.sum(F.length("inits"))
-                   ).alias("meta_bytes"))
-             ).collect()
-    by_shard: dict[int, dict] = {}
-    for r in stats:
-        rec = by_shard.setdefault(int(r["shard"]), {
-            "shard": int(r["shard"]), "status": "done", "codecs": {},
-            "rows": 0, "tokens": 0, "payload_bytes": 0, "meta_bytes": 0})
-        rec["codecs"][r["codec"]] = int(r["rows"])
-        rec["rows"] += int(r["rows"])
-        rec["tokens"] += int(r["tokens"] or 0)
-        rec["payload_bytes"] += int(r["payload_bytes"] or 0)
-        rec["meta_bytes"] += int(r["meta_bytes"] or 0)
-    for s in todo:
-        rec = by_shard.get(s, {"shard": s, "status": "done", "codecs": {},
-                               "rows": 0, "tokens": 0, "payload_bytes": 0,
-                               "meta_bytes": 0})
-        rec["fingerprint"] = f"{rec['rows']}:{rec['tokens']}"
-        _write_manifest_atomic(out_dir, rec)
-        summary["encoded"] += 1
-        summary["rows"] += rec["rows"]
-        summary["tokens"] += rec["tokens"]
-        summary["payload_bytes"] += rec["payload_bytes"]
-    return summary
-
-
-def read_encoded(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(str(Path(out_dir) / "data"))
-
-
-# ---------------------------------------------------------------------------
-# Iceberg-native resumable encode: resume state and table state are ONE
-# mechanism (the snapshot log), not two parallel metadata stacks
-# ---------------------------------------------------------------------------
 
 def completed_shards_iceberg(table_dir: str) -> set[int]:
-    """Shards already committed to the Iceberg table, read from the
-    snapshot summaries (``simdcomp-shards`` key).  A crashed run commits
-    no snapshot, so its shards are absent here and its orphan data files
-    are invisible to metadata-planned readers — exactly the resume
-    contract the JSON manifests provided, with zero extra state."""
-    from . import iceberg
-    try:
-        meta = iceberg._load_metadata(table_dir)
-    except FileNotFoundError:
-        return set()
-    done: set[int] = set()
-    for s in meta["snapshots"]:
-        ids = s.get("summary", {}).get("simdcomp-shards", "")
-        done |= {int(x) for x in ids.split(",") if x}
-    # lineage of EXPIRED snapshots survives in table properties
-    # (iceberg.expire_snapshots folds it there before dropping them)
-    expired = meta.get("properties", {}).get("simdcomp-shards-expired")
-    if expired:
-        done |= {int(x) for x in json.loads(expired)}
-    return done
-
-
-def _recorded_total_shards(meta: dict) -> set[int]:
-    """Every ``simdcomp-total-shards`` value recorded across snapshots
-    (plus the table property expire_snapshots folds it into)."""
-    out = {int(s["summary"]["simdcomp-total-shards"])
-           for s in meta["snapshots"]
-           if "simdcomp-total-shards" in s.get("summary", {})}
-    prop = meta.get("properties", {}).get("simdcomp-total-shards")
-    if prop:
-        out.add(int(prop))
-    return out
+    """Shards already committed to the Iceberg table (the ``shards``
+    lineage of :func:`encode_resumable_iceberg`, expired snapshots'
+    included).  A crashed run commits no snapshot, so its shards are
+    absent here."""
+    return iceberg._lineage(
+        iceberg._metadata_or_none(table_dir))["simdcomp-shards"]
 
 
 def _require_resumable_lineage(meta: dict | None, table_dir: str,
@@ -189,12 +39,9 @@ def _require_resumable_lineage(meta: dict | None, table_dir: str,
     a non-resumable path (export_encoded / overwrite)."""
     if meta is None or not meta["snapshots"]:
         return
-    keys = ("simdcomp-shards", "simdcomp-input-files")
-    in_summaries = any(k in s.get("summary", {})
-                       for s in meta["snapshots"] for k in keys)
-    in_props = any(f"{k}-expired" in meta.get("properties", {})
-                   for k in keys)
-    if not (in_summaries or in_props):
+    lineage = iceberg._lineage(meta)
+    if not (lineage["simdcomp-shards"]
+            or lineage["simdcomp-input-files"]):
         raise ValueError(
             f"{table_dir} is a non-empty Iceberg table with no resumable "
             f"lineage in any snapshot summary — it was not written by "
@@ -216,18 +63,16 @@ def encode_resumable_iceberg(df: DataFrame, table_dir: str,
     from the Iceberg commit protocol itself: a run that dies before its
     metadata publish leaves data files no manifest references (dead bytes,
     not duplicate rows), and `iceberg.read_table` never sees them.
-    Returns the same summary shape as :func:`encode_resumable`."""
-    from . import iceberg
-    try:
-        meta0 = iceberg._load_metadata(table_dir)
-    except FileNotFoundError:
-        meta0 = None
+    Returns ``{"shards", "skipped", "encoded", "rows", "tokens",
+    "payload_bytes", "snapshots"}``."""
+    meta0 = iceberg._metadata_or_none(table_dir)
     _require_resumable_lineage(meta0, table_dir, "encode_resumable_iceberg")
-    done = completed_shards_iceberg(table_dir)
+    lineage = iceberg._lineage(meta0)
+    done = lineage["simdcomp-shards"]
     # the recorded total is authoritative: a LARGER new count would pass a
     # range check vacuously and re-append rows already committed under the
     # old modulus (hash%new and hash%old partition the rows differently)
-    totals = _recorded_total_shards(meta0) if meta0 else set()
+    totals = set(lineage["simdcomp-total-shards"])
     if totals and totals != {shards}:
         raise ValueError(
             f"table {table_dir} was encoded with shards={sorted(totals)}, "
@@ -259,7 +104,7 @@ def encode_resumable_iceberg(df: DataFrame, table_dir: str,
         part = (base.where(F.col("shard").isin(batch))
                 .repartition(len(batch), "shard"))
         enc = engine.encode(part.drop("shard"), codec=codec,
-                            split_threshold=None, salt=False)
+                            split_threshold=None)
         enc = enc.withColumn(
             "shard", F.pmod(F.xxhash64("doc_id", "seg_id"),
                             F.lit(shards)).cast("int"))
@@ -270,11 +115,7 @@ def encode_resumable_iceberg(df: DataFrame, table_dir: str,
                           F.sum(F.length("payload")).alias("p"))
         extra = {"simdcomp-shards": ",".join(str(s) for s in batch),
                  "simdcomp-total-shards": str(shards)}
-        if iceberg.is_iceberg_table(table_dir):
-            meta = iceberg.append(enc, table_dir, extra_summary=extra)
-        else:
-            meta = iceberg.export_encoded(enc, table_dir,
-                                          extra_summary=extra)
+        meta = iceberg._append_or_create(enc, table_dir, extra)
         snap = meta["snapshots"][-1]
         summary["encoded"] += len(batch)
         summary["rows"] += int(snap["summary"]["added-records"])
@@ -286,22 +127,10 @@ def encode_resumable_iceberg(df: DataFrame, table_dir: str,
 
 def completed_input_files_iceberg(table_dir: str) -> set[str]:
     """Input files (relative paths) already ingested into the Iceberg
-    table, read from the ``simdcomp-input-files`` snapshot-summary keys."""
-    import json as _json
-
-    from . import iceberg
-    try:
-        meta = iceberg._load_metadata(table_dir)
-    except FileNotFoundError:
-        return set()
-    done: set[str] = set()
-    for s in meta["snapshots"]:
-        done |= set(_json.loads(
-            s.get("summary", {}).get("simdcomp-input-files", "[]")))
-    # lineage of EXPIRED snapshots survives in table properties
-    done |= set(_json.loads(meta.get("properties", {}).get(
-        "simdcomp-input-files-expired", "[]")))
-    return done
+    table (the input-file lineage of
+    :func:`encode_files_resumable_iceberg`, expired snapshots' included)."""
+    return iceberg._lineage(
+        iceberg._metadata_or_none(table_dir))["simdcomp-input-files"]
 
 
 def encode_files_resumable_iceberg(spark, input_path: str, table_dir: str,
@@ -343,18 +172,12 @@ def encode_files_resumable_iceberg(spark, input_path: str, table_dir: str,
     — metadata-only; resume lineage lives in the append snapshots'
     summaries, which a rewrite preserves in history, so a later resume
     is still a no-op)."""
-    import json as _json
-
-    from . import iceberg
-    try:
-        meta0 = iceberg._load_metadata(table_dir)
-    except FileNotFoundError:
-        meta0 = None
+    meta0 = iceberg._metadata_or_none(table_dir)
     _require_resumable_lineage(meta0, table_dir,
                                "encode_files_resumable_iceberg")
     all_files = engine._input_files(input_path, snapshot_id)
     rel = {f: os.path.relpath(f, input_path) for f in all_files}
-    done = completed_input_files_iceberg(table_dir)
+    done = iceberg._lineage(meta0)["simdcomp-input-files"]
     stale = done - set(rel.values())
     if stale:
         raise ValueError(
@@ -375,13 +198,9 @@ def encode_files_resumable_iceberg(spark, input_path: str, table_dir: str,
                                   split_threshold=split_threshold,
                                   files=batch)
         extra = {"simdcomp-input-files":
-                 _json.dumps([rel[f] for f in batch]),
+                 json.dumps([rel[f] for f in batch]),
                  "simdcomp-input-path": str(input_path)}
-        if iceberg.is_iceberg_table(table_dir):
-            meta = iceberg.append(enc, table_dir, extra_summary=extra)
-        else:
-            meta = iceberg.export_encoded(enc, table_dir,
-                                          extra_summary=extra)
+        meta = iceberg._append_or_create(enc, table_dir, extra)
         snap = meta["snapshots"][-1]
         if verify:
             # ignore_deletes: the ingest may target a table that already

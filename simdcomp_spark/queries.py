@@ -156,7 +156,7 @@ def _roundtrip_exploded(tok_df: DataFrame, codec: str, key_name: str,
     dominant, window-sensitive line of every bench).  Decode+explode are
     fused (:func:`_decode_exploded`), and Catalyst column pruning keeps
     pid/enc_ns/content_hash/source off the salt exchange."""
-    enc = engine.encode(tok_df, codec=codec, split_threshold=None, salt=False)
+    enc = engine.encode(tok_df, codec=codec, split_threshold=None)
     if salt:
         enc = engine.salt_encoded(enc)
     return _decode_exploded(enc, key_name)
@@ -840,8 +840,7 @@ def _engine_roundtrip(toks):
     toks = toks.select(F.col("doc_id").cast("string").alias("doc_id"),
                        "tokens", "n_tok",
                        F.lit("documents").alias("source"))
-    enc = engine.encode(toks, codec="auto", split_threshold=None,
-                        salt=False)
+    enc = engine.encode(toks, codec="auto", split_threshold=None)
     return engine.decode(enc, reassemble=False)
 
 
@@ -855,8 +854,7 @@ def q_pack_chunks(spark, sf_dir):
     from .functions import pack
     tok = tokens_table(spark, sf_dir, "lineitem", "l_orderkey",
                        "l_linenumber", "l_partkey", "lineitem")
-    enc = engine.encode(tok, codec="auto", split_threshold=None,
-                        salt=False)
+    enc = engine.encode(tok, codec="auto", split_threshold=None)
     dec = engine.decode(enc, reassemble=False)
     # skinny offset pass from the RAW table (count(*) per order ==
     # size(tokens) by construction): without it, stage 1 AND the range
@@ -1715,22 +1713,22 @@ def q_streaming_dedup(spark, sf_dir):
 
 def q_streaming_encode(spark, sf_dir):
     """Structured-Streaming encode path driven end-to-end: the orders
-    tokens table is written to a watched directory, `start_encode_stream`
-    (foreachBatch → the same engine.encode pipeline) consumes it with
-    availableNow, and the encoded micro-batch output is decoded and
-    exploded — proving the streaming sink's bytes decode bit-identically
-    to the batch oracle."""
+    tokens table is written to a watched directory,
+    `start_encode_stream_iceberg` (foreachBatch → the same engine.encode
+    pipeline, one snapshot per micro-batch) consumes it with
+    availableNow, and the table is read back through read_table →
+    engine.decode(reassemble=False) and exploded — proving the streaming
+    sink's bytes decode bit-identically to the batch oracle."""
     import os
-    from . import streaming
+    from . import iceberg, streaming
     base = _stream_tmp(sf_dir, "senc")
-    in_dir, out_dir = os.path.join(base, "in"), os.path.join(base, "out")
+    in_dir, table = os.path.join(base, "in"), os.path.join(base, "table")
     tok = tokens_table(spark, sf_dir, "orders", "o_custkey",
                        "o_orderkey", "o_orderkey", "orders")
     tok.coalesce(1).write.mode("append").parquet(in_dir)
-    streaming.start_encode_stream(spark, in_dir, out_dir,
-                                  codec="d1").awaitTermination()
-    enc = spark.read.parquet(os.path.join(out_dir, "data"))
-    dec = engine.decode(enc, reassemble=False)
+    streaming.start_encode_stream_iceberg(spark, in_dir, table,
+                                          codec="d1").awaitTermination()
+    dec = engine.decode(iceberg.read_table(spark, table), reassemble=False)
     ex = dec.select(F.col("doc_id").cast("long").alias("o_custkey"),
                     F.posexplode("tokens").alias("pos", "tok"))
     return ex.select("o_custkey", F.col("pos").cast("int").alias("pos"),

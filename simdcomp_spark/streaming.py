@@ -3,10 +3,12 @@
 The reference is batch-only; SURVEY.md §1.4 scopes streaming as an
 engine-level extension.  Three shapes:
 
-* :func:`start_encode_stream` — continuously compress appended token
-  sequences: the SAME encode pipeline (split → encode UDF) applied per
-  micro-batch via ``foreachBatch``, so batch and streaming paths cannot
-  drift;
+* :func:`start_encode_stream_iceberg` — continuously compress appended
+  token sequences into an Iceberg table, exactly once: the SAME encode
+  pipeline (split → encode UDF) applied per micro-batch via
+  ``foreachBatch``, each batch committed as one snapshot stamped with its
+  batch id (a replayed batch is a no-op), so batch and streaming paths
+  cannot drift;
 * :func:`start_dedup_stream` — CUSTOM STATEFUL operator
   (``applyInPandasWithState``): streaming exact dedup that emits only the
   first occurrence of each distinct text across the whole stream; state is
@@ -27,28 +29,6 @@ from . import engine
 from .fixtures import TOKENS_SCHEMA
 
 
-def start_encode_stream(spark: SparkSession, in_dir: str, out_dir: str,
-                        codec: str = "auto",
-                        checkpoint: str | None = None,
-                        trigger_once: bool = True):
-    """Watch ``in_dir`` for appended tokens parquet; encode each micro-batch
-    into ``out_dir``.  Returns the StreamingQuery."""
-    checkpoint = checkpoint or str(Path(out_dir) / "_checkpoint")
-    stream = (spark.readStream.schema(TOKENS_SCHEMA)
-              .parquet(in_dir))
-
-    def process(batch_df, batch_id: int):
-        enc = engine.encode(batch_df, codec=codec, salt=False)
-        (enc.write.mode("append").parquet(str(Path(out_dir) / "data")))
-
-    writer = (stream.writeStream
-              .foreachBatch(process)
-              .option("checkpointLocation", checkpoint))
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 # ---------------------------------------------------------------------------
 # exactly-once streaming ingest into an Iceberg table
 # ---------------------------------------------------------------------------
@@ -58,25 +38,10 @@ def committed_stream_batches(table_dir: str) -> tuple[set[int], str | None]:
     query id that committed them) — read from snapshot summaries, plus
     the lineage that :func:`iceberg.expire_snapshots` folded into table
     properties, so a replay after snapshot expiry is still a no-op."""
-    import json
     from . import iceberg
-    try:
-        meta = iceberg._load_metadata(table_dir)
-    except FileNotFoundError:
-        return set(), None
-    done: set[int] = set()
-    qid = meta.get("properties", {}).get("simdcomp-stream-query")
-    for s in meta["snapshots"]:
-        summ = s.get("summary", {})
-        v = summ.get("simdcomp-stream-batches")
-        if v:
-            done |= set(json.loads(v))
-            qid = summ.get("simdcomp-stream-query") or qid
-    exp = meta.get("properties", {}).get(
-        "simdcomp-stream-batches-expired")
-    if exp:
-        done |= set(json.loads(exp))
-    return done, qid
+    lineage = iceberg._lineage(iceberg._metadata_or_none(table_dir))
+    qids = lineage["simdcomp-stream-query"]
+    return lineage["simdcomp-stream-batches"], (qids[-1] if qids else None)
 
 
 def commit_encoded_stream_batch(batch_df: DataFrame, batch_id: int,
@@ -107,14 +72,11 @@ def commit_encoded_stream_batch(batch_df: DataFrame, batch_id: int,
             "original checkpoint, or ingest into a new table.")
     if batch_id in done:
         return None
-    enc = engine.encode(batch_df, codec=codec, salt=False,
+    enc = engine.encode(batch_df, codec=codec,
                         split_threshold=split_threshold)
     summ = {"simdcomp-stream-batches": json.dumps([batch_id]),
             "simdcomp-stream-query": query_id}
-    try:
-        return iceberg.append(enc, table_dir, extra_summary=summ)
-    except FileNotFoundError:
-        return iceberg.export_encoded(enc, table_dir, extra_summary=summ)
+    return iceberg._append_or_create(enc, table_dir, summ)
 
 
 def start_encode_stream_iceberg(spark: SparkSession, in_dir: str,
@@ -268,9 +230,8 @@ def consume_incremental(spark: SparkSession, table_dir: str,
     import tempfile
     from . import iceberg
 
-    try:
-        meta = iceberg._load_metadata(table_dir)
-    except FileNotFoundError:
+    meta = iceberg._metadata_or_none(table_dir)
+    if meta is None:
         # producer has not created the table yet (the consumer runs on
         # its own schedule) — caught-up no-op, mirroring
         # committed_stream_batches

@@ -1,6 +1,6 @@
 """Spark pipeline tests: round-trip identity through the full DataFrame
-path (split → salt → encode UDF → parquet → decode UDF → reassembly),
-resume-from-manifest, metrics."""
+path (split → encode UDF → parquet → decode UDF → reassembly), resumable
+Iceberg ingest, metrics."""
 
 from __future__ import annotations
 
@@ -58,51 +58,6 @@ def test_parquet_write_read_roundtrip(spark, unit_df, tmp_path):
     assert engine.verify_roundtrip(unit_df, dec) == 0
 
 
-def test_resume_from_manifest(spark, unit_df, tmp_path):
-    out = str(tmp_path / "table")
-    s1 = manifest.encode_resumable(unit_df, out, codec="bitpack", shards=8)
-    assert s1["encoded"] == 8 and s1["skipped"] == 0
-    # wipe two shards' manifests → only those re-encode
-    import os
-    for s in (2, 5):
-        os.remove(f"{out}/_manifest/shard={s}.json")
-    s2 = manifest.encode_resumable(unit_df, out, codec="bitpack", shards=8)
-    assert s2["skipped"] == 6 and s2["encoded"] == 2
-    s3 = manifest.encode_resumable(unit_df, out, codec="bitpack", shards=8)
-    assert s3["encoded"] == 0 and s3["skipped"] == 8
-    # staged-write protocol: re-encoded shards REPLACE their data dir, so a
-    # resumed table has no duplicates even without reader-side dedup
-    enc = manifest.read_encoded(spark, out)
-    assert enc.groupBy("doc_id", "seg_id").count() \
-        .where(F.col("count") > 1).count() == 0
-    dec = engine.decode(enc, reassemble=True)
-    assert engine.verify_roundtrip(unit_df, dec) == 0
-
-
-def test_resume_after_midshard_crash_no_duplicates(spark, unit_df, tmp_path):
-    """Crash simulation: a shard has SOME parquet files on disk but no
-    manifest (the exact window where the old append-mode write duplicated
-    rows).  Re-running must replace, not append."""
-    import os
-    from pathlib import Path
-    out = str(tmp_path / "crashy")
-    manifest.encode_resumable(unit_df, out, codec="bitpack", shards=8)
-    os.remove(f"{out}/_manifest/shard=3.json")
-    # make shard 3 truly partial: delete one of its data files if it has >1,
-    # otherwise leave the complete-but-unmanifested dir (both must be safe)
-    files = sorted(Path(f"{out}/data/shard=3").glob("*.parquet"))
-    assert files
-    if len(files) > 1:
-        files[0].unlink()
-    s2 = manifest.encode_resumable(unit_df, out, codec="bitpack", shards=8)
-    assert s2["encoded"] == 1 and s2["skipped"] == 7
-    enc = manifest.read_encoded(spark, out)
-    assert enc.groupBy("doc_id", "seg_id").count() \
-        .where(F.col("count") > 1).count() == 0
-    dec = engine.decode(enc, reassemble=True)
-    assert engine.verify_roundtrip(unit_df, dec) == 0
-
-
 def test_partition_metrics_shape(spark, unit_df):
     m = engine.partition_metrics(engine.encode(unit_df, codec="auto"))
     rows = m.collect()
@@ -140,11 +95,10 @@ def test_encode_files_fused_path(spark, unit_df, tmp_path):
     assert a == b
 
 
-def test_decode_plain_dirs_and_resumable_layout(spark, unit_df, tmp_path):
+def test_decode_plain_dirs(spark, unit_df, tmp_path):
     """Plain encoded directories decode through spark.read.parquet →
-    decode: segments (reassemble=False) carry seg_id + n_tok, and both a
-    length-split table and the shard-partitioned resumable layout
-    (manifest.read_encoded) round-trip to the input rows."""
+    decode: segments (reassemble=False) carry seg_id + n_tok, and a
+    length-split table round-trips to the input rows."""
     enc_dir = str(tmp_path / "enc")
     enc = engine.encode(unit_df, codec="auto", split_threshold=1 << 14)
     enc.write.parquet(enc_dir)
@@ -158,11 +112,6 @@ def test_decode_plain_dirs_and_resumable_layout(spark, unit_df, tmp_path):
     assert {d: [t for _, s in sorted(v) for t in s]
             for d, v in parts.items()} == truth
     dec = engine.decode(spark.read.parquet(enc_dir), reassemble=True)
-    assert engine.verify_roundtrip(unit_df, dec) == 0
-    # partitioned (resumable) layout
-    out = str(tmp_path / "resumable")
-    manifest.encode_resumable(unit_df, out, codec="d1", shards=4)
-    dec = engine.decode(manifest.read_encoded(spark, out), reassemble=True)
     assert engine.verify_roundtrip(unit_df, dec) == 0
 
 
@@ -530,19 +479,36 @@ def test_minmax_sorted_compressed_domain(spark, unit_df):
 
 
 def test_submit_job_script(spark, unit_df, tmp_path):
-    """The spark-submit entry point end-to-end, incl. --verify."""
+    """The spark-submit entry point end-to-end into an Iceberg table with
+    --verify, and resume through the CLI: a second submission finds every
+    input file in the snapshot log and encodes none.  A remote path is
+    refused before any work."""
     import subprocess, sys, json as _json
-    src, out = str(tmp_path / "in"), str(tmp_path / "out")
-    unit_df.write.parquet(src)
-    r = subprocess.run(
-        [sys.executable, "scripts/submit_encode.py", "--input", src,
-         "--output", out, "--codec", "bitpack", "--shards", "4",
-         "--verify"],
-        capture_output=True, text=True, cwd="/root/repo")
-    assert r.returncode == 0, r.stderr[-2000:]
-    lines = [l for l in r.stdout.splitlines() if l.startswith("{")]
-    assert _json.loads(lines[0])["encoded"] == 4
-    assert _json.loads(lines[1])["roundtrip_mismatches"] == 0
+    from pathlib import Path
+    src, table = str(tmp_path / "in"), str(tmp_path / "tbl")
+    unit_df.repartition(3).write.parquet(src)
+    n_files = len(list(Path(src).glob("*.parquet")))
+    repo = str(Path(__file__).resolve().parent.parent)
+
+    def submit(*args):
+        return subprocess.run(
+            [sys.executable, "scripts/submit_encode.py", *args],
+            capture_output=True, text=True, cwd=repo)
+
+    def summary(r):
+        assert r.returncode == 0, r.stderr[-2000:]
+        lines = [l for l in r.stdout.splitlines() if l.startswith("{")]
+        return _json.loads(lines[0])
+
+    args = ("--input", src, "--publish-iceberg", table,
+            "--codec", "bitpack", "--batch-files", "2", "--verify")
+    s1 = summary(submit(*args))
+    assert s1["encoded_files"] == n_files and s1["skipped"] == 0
+    s2 = summary(submit(*args))
+    assert s2["encoded_files"] == 0 and s2["skipped"] == n_files
+    assert s2["snapshots"] == []
+    r = submit("--input", "s3://bucket/tokens", "--publish-iceberg", table)
+    assert r.returncode != 0 and "local path" in r.stderr
 
 
 def test_range_count_mixed_codec_batches(spark, unit_df):

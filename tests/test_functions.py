@@ -515,17 +515,6 @@ def test_streaming_windowed_token_rate(spark, tmp_path):
     assert all(v == (3, 1) for v in got.values())
 
 
-def test_streaming_encode(spark, tmp_path):
-    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    df = fixtures.unit_table(spark).limit(50).cache()
-    df.write.parquet(in_dir)
-    q = streaming.start_encode_stream(spark, in_dir, out_dir, codec="bitpack")
-    q.awaitTermination(120)
-    enc = spark.read.parquet(f"{out_dir}/data")
-    dec = engine.decode(enc, reassemble=True)
-    assert engine.verify_roundtrip(df, dec) == 0
-
-
 def test_cosine_neardup_recall_and_precision(spark):
     """Planted near-dup pairs (cosine ≥ 0.9): banded LSH must recover most
     of them (theory: ~0.95 recall at 6 bands × 6 bits), and the exact

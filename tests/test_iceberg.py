@@ -1273,6 +1273,52 @@ def test_tags_pin_snapshots_through_commits_and_expiry(spark, unit_df,
         iceberg.resolve_ref(table, "run-a")
 
 
+def test_expire_folds_lineage_in_the_stored_format(tmp_path):
+    """Resume lineage keeps its on-disk format across expiry, so tables
+    written before stay resumable: expired ids fold into `<key>-expired`
+    JSON lists (shard ids as strings, sorted as strings, merged with the
+    ids folded earlier), scalars into the property of the same key, and
+    the resume readers union the folded ids with the live summaries."""
+    from simdcomp_spark import manifest, streaming
+    table = tmp_path / "t"
+    (table / "metadata").mkdir(parents=True)
+
+    def snap(sid, **summary):
+        return {"snapshot-id": sid,
+                "summary": {"operation": "append", **summary}}
+    meta = {
+        "format-version": 2, "current-snapshot-id": 4, "refs": {},
+        "properties": {"simdcomp-shards-expired": '["7"]'},
+        "snapshots": [
+            snap(1, **{"simdcomp-shards": "10,2",
+                       "simdcomp-total-shards": "12"}),
+            snap(2, **{"simdcomp-input-files":
+                       json.dumps(["b.parquet", "a.parquet"])}),
+            snap(3, **{"simdcomp-stream-batches": "[1]",
+                       "simdcomp-stream-query": "q1"}),
+            snap(4, **{"simdcomp-shards": "3",
+                       "simdcomp-stream-batches": "[0]",
+                       "simdcomp-stream-query": "q1"})],
+        "snapshot-log": []}
+    (table / "metadata" / "v1.metadata.json").write_text(json.dumps(meta))
+    (table / "metadata" / "version-hint.text").write_text("1")
+
+    assert iceberg.expire_snapshots(str(table), keep_last=1) == \
+        {"expired": 3, "retained": 1}
+    props = json.loads(
+        (table / "metadata" / "v2.metadata.json").read_text())["properties"]
+    assert props == {
+        "simdcomp-shards-expired": '["10", "2", "7"]',
+        "simdcomp-input-files-expired": '["a.parquet", "b.parquet"]',
+        "simdcomp-stream-batches-expired": "[1]",
+        "simdcomp-total-shards": "12",
+        "simdcomp-stream-query": "q1"}
+    assert manifest.completed_shards_iceberg(str(table)) == {2, 3, 7, 10}
+    assert manifest.completed_input_files_iceberg(str(table)) == \
+        {"a.parquet", "b.parquet"}
+    assert streaming.committed_stream_batches(str(table)) == ({0, 1}, "q1")
+
+
 def test_tag_gapped_history_guards(spark, unit_df, tmp_path):
     """Tag-pinned expiry leaves GAPS in the snapshot log; the consumers
     that assumed a contiguous suffix must refuse rather than silently
