@@ -51,12 +51,6 @@ class EncodedFlat:
     payload: np.ndarray       # uint8, concatenated per-block packed bytes
     payload_lens: np.ndarray  # int64 per row
 
-    def widths_offsets(self) -> np.ndarray:
-        return np.concatenate(([0], np.cumsum(self.nblocks)))
-
-    def payload_offsets(self) -> np.ndarray:
-        return np.concatenate(([0], np.cumsum(self.payload_lens)))
-
 
 def _block_table(lens: np.ndarray):
     """Vectorized block table for a batch of row lengths.
@@ -462,56 +456,8 @@ def intersect_sorted_flat(lens_a: np.ndarray, widths_a: np.ndarray,
 
 
 # ---------------------------------------------------------------------------
-# list-of-bytes wrappers (codec-registry interface; tests + pandas UDF path)
+# size bookkeeping (cost model, decode side)
 # ---------------------------------------------------------------------------
-
-def _concat_rows(arrs: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
-    nrows = len(arrs)
-    lens = np.fromiter((a.size for a in arrs), dtype=np.int64, count=nrows)
-    if nrows == 0 or lens.sum() == 0:
-        return np.zeros(0, dtype=U32), lens
-    if nrows == 1:
-        return np.ascontiguousarray(arrs[0], dtype=U32), lens
-    return np.concatenate([np.ascontiguousarray(a, dtype=U32) for a in arrs]), lens
-
-
-def encode_batch(arrs: list[np.ndarray], mode: str
-                 ) -> tuple[list[bytes], list[bytes], list[bytes]]:
-    """Encode a batch of uint32 rows. Returns per-row (widths, inits, payload).
-
-    widths = uint8 per block; inits = uint32-LE per block ('for': block min,
-    'd1': chain init; 'plain': empty); payload = concatenated packed blocks.
-    """
-    flat, lens = _concat_rows(arrs)
-    enc = encode_flat(flat, lens, mode)
-    wo = enc.widths_offsets()
-    po = enc.payload_offsets()
-    wbuf, ibuf, pbuf = enc.widths.tobytes(), enc.inits.tobytes(), \
-        enc.payload.tobytes()
-    widths_out, inits_out, payload_out = [], [], []
-    for r in range(lens.size):
-        a, b = int(wo[r]), int(wo[r + 1])
-        widths_out.append(wbuf[a:b])
-        inits_out.append(ibuf[4 * a:4 * b] if mode != "plain" else b"")
-        payload_out.append(pbuf[int(po[r]):int(po[r + 1])])
-    return widths_out, inits_out, payload_out
-
-
-def decode_batch(n_toks: np.ndarray, widths_list: list[bytes],
-                 inits_list: list[bytes], payload_list: list[bytes],
-                 mode: str) -> list[np.ndarray]:
-    """Inverse of :func:`encode_batch`. Returns list of uint32 arrays."""
-    lens = np.asarray(n_toks, dtype=np.int64)
-    widths = np.frombuffer(b"".join(widths_list), dtype=np.uint8)
-    inits = np.frombuffer(b"".join(inits_list), dtype=U32) \
-        if mode != "plain" else np.zeros(0, U32)
-    payload = np.frombuffer(b"".join(payload_list), dtype=np.uint8)
-    payload_lens = np.fromiter((len(p) for p in payload_list),
-                               dtype=np.int64, count=len(payload_list))
-    out = decode_flat(lens, widths, inits, payload, payload_lens, mode)
-    row_starts = np.concatenate(([0], np.cumsum(lens)))
-    return [out[row_starts[r]:row_starts[r + 1]] for r in range(lens.size)]
-
 
 def encoded_sizes_flat(flat: np.ndarray, lens: np.ndarray, mode: str
                        ) -> np.ndarray:
@@ -525,11 +471,6 @@ def encoded_sizes_flat(flat: np.ndarray, lens: np.ndarray, mode: str
     row_id, *_, sizes, _nblocks = _analyze(flat, lens, mode)
     np.add.at(per_row, row_id, sizes)
     return per_row
-
-
-def encoded_sizes(arrs: list[np.ndarray], mode: str) -> np.ndarray:
-    flat, lens = _concat_rows(arrs)
-    return encoded_sizes_flat(flat, lens, mode)
 
 
 def payload_bytes_from_widths(lens: np.ndarray, widths_flat: np.ndarray

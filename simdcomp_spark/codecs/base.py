@@ -89,12 +89,6 @@ class Codec:
         flat, lens = concat_rows(arrs)
         return self.payload_sizes_flat(flat, lens)
 
-    def overhead_bytes(self, arrs: list[np.ndarray]) -> np.ndarray:
-        """Per-row metadata bytes (widths + inits columns) for cost modeling."""
-        nblocks = np.fromiter(((a.size + 127) // 128 for a in arrs),
-                              dtype=np.int64, count=len(arrs))
-        return nblocks * self._per_block_overhead
-
 
 def place_rows(out: np.ndarray, dst_off: np.ndarray, src: np.ndarray,
                lens: np.ndarray) -> None:

@@ -24,7 +24,8 @@ Spark-first design (SURVEY.md §1.4, §4):
   not log-scraped.
 
 Schema of the encoded table:
-    doc_id, source, seg_id, n_tok, codec, widths, inits, payload, pid, enc_ns
+    doc_id, source, seg_id, n_tok, codec, widths, inits, payload, pid, enc_ns,
+    content_hash
 """
 
 from __future__ import annotations
@@ -198,9 +199,137 @@ def _list_from_flat(values_i32: np.ndarray, row_lens: np.ndarray) -> pa.Array:
                  type=pa.int32()))
 
 
-def _rows_view(flat: np.ndarray, lens: np.ndarray) -> list[np.ndarray]:
-    off = np.concatenate(([0], np.cumsum(lens)))
-    return [flat[off[r]:off[r + 1]] for r in range(lens.size)]
+# ---------------------------------------------------------------------------
+# the encoded-batch view: the one reader of widths/inits/payload
+# ---------------------------------------------------------------------------
+
+_LOWER_BOUND = {"d1": blocks.search_sorted_flat,
+                "for": blocks.search_sorted_for_flat}
+
+
+def _require_sorted_family(op: str, name: str) -> None:
+    if name not in _LOWER_BOUND:
+        raise ValueError(f"{op} requires a sorted-row family (d1/for), "
+                         f"got codec(s) {[name]}")
+
+
+class _EncodedBatch:
+    """One Arrow batch of encoded rows, read once: ``n_tok`` (int64 per
+    row), the codecs present (``names``, with ``ids`` indexing them per
+    row), and the ``widths``/``inits``/``payload`` binary columns as
+    flat uint8 buffers plus int64 per-row byte lengths (``widths_lens``
+    ...).  The per-block widths and inits are the metadata the reference
+    leaves to its caller (``example.c:36``); every compressed-domain
+    operator reads them through this view, and hands each single-codec
+    group of :meth:`groups` to the codec kernels.
+
+    A sub-view (:meth:`take`) gathers each flat buffer from its parent on
+    first use, so a zone prescreen that reads only widths and inits never
+    copies payload bytes."""
+
+    def __init__(self, n_tok, names, ids, lens, flats=None, source=None):
+        self.n_tok, self.names, self.ids = n_tok, names, ids
+        self.widths_lens, self.inits_lens, self.payload_lens = lens
+        if flats is not None:
+            self.widths, self.inits, self.payload = flats
+        self._source = source        # (root view, row indices) of a sub-view
+
+    @classmethod
+    def from_columns(cls, n_tok: pa.Array, codec: pa.Array,
+                     widths: pa.Array, inits: pa.Array,
+                     payload: pa.Array) -> "_EncodedBatch":
+        codec = codec.dictionary_encode()
+        (wf, wl), (inf, il), (pf, pl) = (
+            _binary_to_flat(col) for col in (widths, inits, payload))
+        return cls(n_tok.to_numpy(zero_copy_only=False).astype(np.int64),
+                   codec.dictionary.to_pylist(),
+                   codec.indices.to_numpy(zero_copy_only=False),
+                   (wl, il, pl), (wf, inf, pf))
+
+    def __getattr__(self, name):
+        # only reached for a sub-view's not-yet-gathered flat buffer
+        if (name not in ("widths", "inits", "payload")
+                or self.__dict__.get("_source") is None):
+            raise AttributeError(name)
+        root, rows = self._source
+        lens = getattr(root, name + "_lens")
+        off = np.cumsum(lens) - lens
+        flat = getattr(root, name)[kernels.multi_arange(off[rows], lens[rows])]
+        setattr(self, name, flat)
+        return flat
+
+    @property
+    def inits_u32(self) -> np.ndarray:
+        return np.ascontiguousarray(self.inits).view(np.uint32)
+
+    def take(self, rows: np.ndarray) -> "_EncodedBatch":
+        """Sub-view of ``rows`` (ascending, distinct); all rows is self."""
+        if rows.size == self.n_tok.size:
+            return self
+        if self._source is not None:
+            root, root_rows = self._source
+            return root.take(root_rows[rows])
+        return _EncodedBatch(
+            self.n_tok[rows], self.names, self.ids[rows],
+            [lens[rows] for lens in (self.widths_lens, self.inits_lens,
+                                     self.payload_lens)],
+            source=(self, rows))
+
+    def groups(self, rows: np.ndarray | None = None):
+        """(codec, row indices, single-codec sub-view) for each codec among
+        ``rows`` (ascending, distinct; default all rows).  A single-codec
+        batch yields itself: no gather, no copy."""
+        if rows is None:
+            rows = np.arange(self.n_tok.size)
+        ids = self.ids[rows]
+        for i, name in enumerate(self.names):
+            sel = rows[ids == i]
+            if sel.size:
+                yield name, sel, self.take(sel)
+
+    def _decode_as(self, name: str) -> np.ndarray:
+        return codecs.get(name).decode_flat(
+            self.n_tok, self.widths, self.widths_lens, self.inits,
+            self.inits_lens, self.payload, self.payload_lens)
+
+    def decode(self) -> tuple[np.ndarray, np.ndarray]:
+        """(flat uint32 tokens in row order, per-row lengths).  A mixed-codec
+        batch (post-shuffle) decodes per codec group and scatters each
+        group's tokens into place."""
+        groups = list(self.groups())
+        if len(groups) == 1:
+            return self._decode_as(groups[0][0]), self.n_tok
+        out = np.empty(int(self.n_tok.sum()), dtype=np.uint32)
+        tok_off = np.cumsum(self.n_tok) - self.n_tok
+        for name, rows, sub in groups:
+            out[kernels.multi_arange(tok_off[rows], sub.n_tok)] = \
+                sub._decode_as(name)
+        return out, self.n_tok
+
+    def select(self, name: str, idxs: np.ndarray) -> np.ndarray:
+        """uint32 token at ``idxs[r]`` (``0 <= idx < n_tok``) of every row of
+        this ``name``-codec view: one block per row for the block codecs
+        (``select_for``/``select_d1``, src/simdfor.c:14987,
+        src/simdpackedselect.c:8096), a decode of just these rows for the
+        others."""
+        if name in _BLOCK_MODES:
+            return blocks.select_flat(self.n_tok, self.widths, self.inits_u32,
+                                      self.payload, self.payload_lens, idxs,
+                                      _BLOCK_MODES[name])
+        return self._decode_as(name)[np.cumsum(self.n_tok) - self.n_tok
+                                     + idxs]
+
+    def lower_bound(self, key: int, op: str) -> np.ndarray:
+        """Per-row lower-bound index of ``key`` over SORTED rows, one block
+        probed per row (idx == n_tok when every value < key).  Codecs
+        outside the d1/for family raise a ValueError naming ``op``."""
+        out = np.zeros(self.n_tok.size, dtype=np.int64)
+        for name, rows, sub in self.groups():
+            _require_sorted_family(op, name)
+            out[rows] = _LOWER_BOUND[name](sub.n_tok, sub.widths,
+                                           sub.inits_u32, sub.payload,
+                                           sub.payload_lens, key)
+        return out
 
 
 # ---------------------------------------------------------------------------
@@ -501,51 +630,6 @@ def salt_encoded(df_encoded: DataFrame, shards: int | None = None) -> DataFrame:
 # decode
 # ---------------------------------------------------------------------------
 
-def _decode_batch_flat(n_tok_col: pa.Array, codec_col: pa.Array,
-                       widths_col: pa.Array, inits_col: pa.Array,
-                       payload_col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """Decode core returning (flat uint32 tokens in row order, per-row
-    lengths) WITHOUT building an Arrow list array — callers that explode
-    anyway (the roundtrip gates) skip the list build + JVM list
-    deserialization + Generate entirely (guide §4.2)."""
-    n_toks = n_tok_col.to_numpy(zero_copy_only=False).astype(np.int64)
-    names = codec_col.unique().to_pylist()
-    wf, wl = _binary_to_flat(widths_col)
-    inf, il = _binary_to_flat(inits_col)
-    pf, pl = _binary_to_flat(payload_col)
-    if len(names) == 1:
-        out = codecs.get(names[0]).decode_flat(
-            n_toks, wf, wl, inf, il, pf, pl)
-    else:
-        # mixed codecs in one batch (post-shuffle): decode per codec
-        # group via vectorized sub-gathers, scatter into place
-        out = np.empty(int(n_toks.sum()), dtype=np.uint32)
-        tok_off = np.concatenate(([0], np.cumsum(n_toks)))
-        codec_np = codec_col.to_numpy(zero_copy_only=False)
-        w_off = np.concatenate(([0], np.cumsum(wl)))
-        i_off = np.concatenate(([0], np.cumsum(il)))
-        p_off = np.concatenate(([0], np.cumsum(pl)))
-        from .kernels import multi_arange
-        for name in np.unique(codec_np):
-            sel = np.nonzero(codec_np == name)[0]
-            sub = codecs.get(str(name)).decode_flat(
-                n_toks[sel],
-                wf[multi_arange(w_off[sel], wl[sel])], wl[sel],
-                inf[multi_arange(i_off[sel], il[sel])], il[sel],
-                pf[multi_arange(p_off[sel], pl[sel])], pl[sel])
-            out[multi_arange(tok_off[sel], n_toks[sel])] = sub
-    return out, n_toks
-
-
-def _decode_batch_columns(n_tok_col: pa.Array, codec_col: pa.Array,
-                          widths_col: pa.Array, inits_col: pa.Array,
-                          payload_col: pa.Array) -> pa.Array:
-    """Decode core: encoded Arrow columns → tokens list<int32> array."""
-    out, n_toks = _decode_batch_flat(n_tok_col, codec_col, widths_col,
-                                     inits_col, payload_col)
-    return _list_from_flat(out.view(np.int32), n_toks)
-
-
 def _bare_scan_plan(df: DataFrame) -> bool:
     """True when ``df``'s optimized plan is just projections/filters over
     ONE file relation — i.e. re-executing it costs a column-pruned scan,
@@ -608,12 +692,12 @@ def decode(df_encoded: DataFrame, reassemble: bool = True) -> DataFrame:
 
     def decode_fn(it):
         for batch in it:
-            tokens_arr = _decode_batch_columns(
-                batch.column(3), batch.column(4), batch.column(5),
-                batch.column(6), batch.column(7))
+            flat, lens = _EncodedBatch.from_columns(
+                *batch.columns[3:8]).decode()
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0), batch.column(1),
-                 batch.column(2).cast(pa.int32()), tokens_arr],
+                 batch.column(2).cast(pa.int32()),
+                 _list_from_flat(flat.view(np.int32), lens)],
                 names=["doc_id", "source", "seg_id", "tokens"])
 
     dec = src.mapInArrow(decode_fn, schema=DECODED_SCHEMA)
@@ -659,9 +743,8 @@ def _decode_reassembled(src: DataFrame) -> DataFrame:
             nrows = batch.num_rows
             if nrows == 0:
                 continue
-            flat, lens = _decode_batch_flat(
-                batch.column(3), batch.column(4), batch.column(5),
-                batch.column(6), batch.column(7))
+            flat, lens = _EncodedBatch.from_columns(
+                *batch.columns[3:8]).decode()
             ids = batch.column(0)
             # contiguous same-doc runs: boundary where id[i] != id[i-1]
             neq = pc.not_equal(ids.slice(1), ids.slice(0, nrows - 1))
@@ -720,48 +803,20 @@ def point_lookup(df_encoded: DataFrame, index_col: str = "lookup_idx"
     src = df_encoded.select(*cols)
 
     def fn(it):
-        from . import blocks as B
-        from .kernels import multi_arange
         for batch in it:
-            n_toks = batch.column(2).to_numpy(zero_copy_only=False) \
-                .astype(np.int64)
-            codec_np = batch.column(3).to_numpy(zero_copy_only=False)
-            wf, wl = _binary_to_flat(batch.column(4))
-            inf, il = _binary_to_flat(batch.column(5))
-            pf, pl = _binary_to_flat(batch.column(6))
+            eb = _EncodedBatch.from_columns(*batch.columns[2:7])
             idxs = batch.column(7).to_numpy(zero_copy_only=False) \
                 .astype(np.int64)
-            w_off = np.cumsum(wl) - wl
-            i_off = np.cumsum(il) - il
-            p_off = np.cumsum(pl) - pl
-            vsel = np.nonzero((idxs >= 0) & (idxs < n_toks))[0]
-            out_val = np.zeros(vsel.size, dtype=np.uint32)
-            pos_of = np.full(n_toks.size, -1, dtype=np.int64)
-            pos_of[vsel] = np.arange(vsel.size)
-            for name in np.unique(codec_np[vsel]) if vsel.size else []:
-                sel = vsel[codec_np[vsel] == name]
-                sub_w = wf[multi_arange(w_off[sel], wl[sel])]
-                sub_i = np.ascontiguousarray(
-                    inf[multi_arange(i_off[sel], il[sel])]).view(np.uint32)
-                sub_p = pf[multi_arange(p_off[sel], pl[sel])]
-                if name in _BLOCK_MODES:
-                    vals = B.select_flat(n_toks[sel], sub_w, sub_i, sub_p,
-                                         pl[sel], idxs[sel],
-                                         _BLOCK_MODES[name])
-                else:
-                    # non-block codecs: vectorized decode of just these rows
-                    decoded = codecs.get(str(name)).decode_flat(
-                        n_toks[sel], sub_w, wl[sel], sub_i.view(np.uint8),
-                        il[sel], sub_p, pl[sel])
-                    offs = np.cumsum(n_toks[sel]) - n_toks[sel]
-                    vals = decoded[offs + idxs[sel]]
-                out_val[pos_of[sel]] = vals
+            vsel = np.nonzero((idxs >= 0) & (idxs < eb.n_tok))[0]
+            out_val = np.zeros(eb.n_tok.size, dtype=np.uint32)
+            for name, rows, sub in eb.groups(vsel):
+                out_val[rows] = sub.select(name, idxs[rows])
             take = pa.array(vsel, type=pa.int64())
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0).take(take),
                  batch.column(1).take(take).cast(pa.int32()),
                  pa.array(idxs[vsel].astype(np.int32)),
-                 pa.array(out_val.view(np.int32))],
+                 pa.array(out_val[vsel].view(np.int32))],
                 names=["doc_id", "seg_id", "idx", "val"])
 
     return src.mapInArrow(fn, schema="doc_id string, seg_id int, idx int, val int")
@@ -773,46 +828,19 @@ def search_sorted(df_encoded: DataFrame, key: int) -> DataFrame:
     simdsearchd1 semantics, src/simdpackedsearch.c) and FOR (block minima
     are block firsts → simdsearchwithlengthFOR semantics,
     src/simdfor.c:15016, lifted across blocks).  Exactly one block is
-    decoded per row, batched per (width, block-length) group.  Returns
-    (doc_id, seg_id, n_tok, idx) with idx == n_tok when every value <
-    key."""
+    decoded per row, batched per (width, block-length) group; other
+    codecs raise a ValueError.  Returns (doc_id, seg_id, n_tok, idx) with
+    idx == n_tok when every value < key."""
     cols = ["doc_id", "seg_id", "n_tok", "codec", "widths", "inits", "payload"]
     src = df_encoded.select(*cols)
 
     def fn(it):
-        from . import blocks as B
-        from .kernels import multi_arange
-        flat_search = {"d1": B.search_sorted_flat,
-                       "for": B.search_sorted_for_flat}
         for batch in it:
-            n_toks = batch.column(2).to_numpy(zero_copy_only=False) \
-                .astype(np.int64)
-            codec_np = batch.column(3).to_numpy(zero_copy_only=False)
-            wf, wl = _binary_to_flat(batch.column(4))
-            inf, il = _binary_to_flat(batch.column(5))
-            pf, pl = _binary_to_flat(batch.column(6))
-            names = np.unique(codec_np)
-            if names.size == 1:
-                idx = flat_search[str(names[0])](
-                    n_toks, wf, np.ascontiguousarray(inf).view(np.uint32),
-                    pf, pl, key)
-            else:  # mixed d1/for batch (post-shuffle): per-codec sub-gathers
-                idx = np.zeros(n_toks.size, dtype=np.int64)
-                w_off = np.cumsum(wl) - wl
-                i_off = np.cumsum(il) - il
-                p_off = np.cumsum(pl) - pl
-                for name in names:
-                    sel = np.nonzero(codec_np == name)[0]
-                    idx[sel] = flat_search[str(name)](
-                        n_toks[sel],
-                        wf[multi_arange(w_off[sel], wl[sel])],
-                        np.ascontiguousarray(
-                            inf[multi_arange(i_off[sel], il[sel])])
-                        .view(np.uint32),
-                        pf[multi_arange(p_off[sel], pl[sel])], pl[sel], key)
+            eb = _EncodedBatch.from_columns(*batch.columns[2:7])
+            idx = eb.lower_bound(key, "search_sorted")
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0), batch.column(1).cast(pa.int32()),
-                 pa.array(n_toks.astype(np.int32)),
+                 pa.array(eb.n_tok.astype(np.int32)),
                  pa.array(idx.astype(np.int32))],
                 names=["doc_id", "seg_id", "n_tok", "idx"])
 
@@ -830,49 +858,14 @@ def range_count(df_encoded: DataFrame, lo: int, hi: int) -> DataFrame:
     src = df_encoded.select(*cols)
 
     def fn(it):
-        from . import blocks as B
-        from .kernels import multi_arange
-        flat_search = {"d1": B.search_sorted_flat,
-                       "for": B.search_sorted_for_flat}
         for batch in it:
-            n_toks = batch.column(2).to_numpy(zero_copy_only=False) \
-                .astype(np.int64)
-            codec_np = batch.column(3).to_numpy(zero_copy_only=False)
-            names = np.unique(codec_np)
-            bad = [str(n) for n in names if str(n) not in flat_search]
-            if bad:
-                raise ValueError(
-                    f"range_count requires a sorted-row family (d1/for), "
-                    f"got codec(s) {bad}")
-            wf, wl = _binary_to_flat(batch.column(4))
-            inf, il = _binary_to_flat(batch.column(5))
-            pf, pl = _binary_to_flat(batch.column(6))
-            if names.size == 1:
-                search = flat_search[str(names[0])]
-                inits_u32 = np.ascontiguousarray(inf).view(np.uint32)
-                idx_lo = search(n_toks, wf, inits_u32, pf, pl, lo)
-                idx_hi = search(n_toks, wf, inits_u32, pf, pl, hi)
-            else:  # mixed d1/for batch (post-shuffle): per-codec sub-gathers
-                idx_lo = np.zeros(n_toks.size, dtype=np.int64)
-                idx_hi = np.zeros(n_toks.size, dtype=np.int64)
-                w_off = np.cumsum(wl) - wl
-                i_off = np.cumsum(il) - il
-                p_off = np.cumsum(pl) - pl
-                for name in names:
-                    sel = np.nonzero(codec_np == name)[0]
-                    search = flat_search[str(name)]
-                    n_s = n_toks[sel]
-                    wf_s = wf[multi_arange(w_off[sel], wl[sel])]
-                    in_s = np.ascontiguousarray(
-                        inf[multi_arange(i_off[sel], il[sel])]) \
-                        .view(np.uint32)
-                    pf_s = pf[multi_arange(p_off[sel], pl[sel])]
-                    idx_lo[sel] = search(n_s, wf_s, in_s, pf_s, pl[sel], lo)
-                    idx_hi[sel] = search(n_s, wf_s, in_s, pf_s, pl[sel], hi)
+            eb = _EncodedBatch.from_columns(*batch.columns[2:7])
+            n_in = (eb.lower_bound(hi, "range_count")
+                    - eb.lower_bound(lo, "range_count"))
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0), batch.column(1).cast(pa.int32()),
-                 pa.array(n_toks.astype(np.int32)),
-                 pa.array((idx_hi - idx_lo).astype(np.int32))],
+                 pa.array(eb.n_tok.astype(np.int32)),
+                 pa.array(n_in.astype(np.int32))],
                 names=["doc_id", "seg_id", "n_tok", "n_in_range"])
 
     return src.mapInArrow(
@@ -917,85 +910,57 @@ def contains_token(df_encoded: DataFrame,
 
     def fn(it):
         for batch in it:
-            n_toks = batch.column(2).to_numpy(zero_copy_only=False) \
-                .astype(np.int64)
-            codec_np = batch.column(3).to_numpy(zero_copy_only=False)
-            wf, wl = _binary_to_flat(batch.column(4))
-            inf_, il = _binary_to_flat(batch.column(5))
-            cand = n_toks > 0
-            w_off = np.cumsum(wl) - wl
-            i_off = np.cumsum(il) - il
-            for name, mode in _BLOCK_MODES.items():
-                if mode == "d1" and not assume_sorted:
-                    continue            # wrap semantics: no sound bound
-                sel = np.nonzero(cand & (codec_np == name))[0]
-                if sel.size == 0:
-                    continue
-                from .kernels import multi_arange
-                sub_w = wf[multi_arange(w_off[sel], wl[sel])] \
-                    .astype(np.int64)
-                span = np.where(sub_w >= 32, np.int64(0xFFFFFFFF),
-                                (np.int64(1) << sub_w) - 1)
-                if mode in ("for", "d1"):
-                    # inits are uint32 per block: gather the selected
-                    # rows' init bytes and reinterpret
-                    ib = inf_[multi_arange(i_off[sel], il[sel])]
-                    sub_init = np.ascontiguousarray(ib).view(np.uint32) \
-                        .astype(np.int64)
-                    lb = sub_init
+            eb = _EncodedBatch.from_columns(*batch.columns[2:7])
+            cand = eb.n_tok > 0
+            for name, rows, sub in eb.groups(np.nonzero(cand)[0]):
+                mode = _BLOCK_MODES.get(name)
+                if mode is None or (mode == "d1" and not assume_sorted):
+                    continue    # non-block codec, or unsorted d1 (wraps)
+                w = sub.widths.astype(np.int64)
+                span = np.where(w >= 32, np.int64(0xFFFFFFFF),
+                                (np.int64(1) << w) - 1)
+                if mode == "plain":
+                    lb, ub = np.zeros(w.size, dtype=np.int64), span
+                else:
+                    lb = sub.inits_u32.astype(np.int64)
                     if mode == "for":
-                        ub = np.minimum(sub_init + span, 0xFFFFFFFF)
+                        ub = np.minimum(lb + span, 0xFFFFFFFF)
                     else:
                         # sorted d1: block b ends at block b+1's init;
                         # the row's LAST block is bounded by its own
                         # cumulative-delta span
-                        counts = wl[sel]
-                        b_ends = np.cumsum(counts)
-                        last_idx = b_ends - 1
-                        ub = np.empty_like(sub_init)
-                        ub[:-1] = sub_init[1:]
-                        blen_last = n_toks[sel] - 128 * (counts - 1)
-                        ub[last_idx] = np.minimum(
-                            sub_init[last_idx]
-                            + blen_last * span[last_idx], 0xFFFFFFFF)
-                else:
-                    lb = np.zeros(sub_w.size, dtype=np.int64)
-                    ub = span
+                        last = np.cumsum(sub.widths_lens) - 1
+                        ub = np.empty_like(lb)
+                        ub[:-1] = lb[1:]
+                        blen_last = sub.n_tok - 128 * (sub.widths_lens - 1)
+                        ub[last] = np.minimum(
+                            lb[last] + blen_last * span[last], 0xFFFFFFFF)
                 # block survives iff SOME probe lands in [lb, ub]: one
                 # searchsorted over the sorted probe set per bound
                 blk_ok = (np.searchsorted(probes, lb, side="left")
                           < np.searchsorted(probes, ub, side="right"))
-                # per-row any() over variable-length block runs
-                ends = np.cumsum(wl[sel])
-                starts = ends - wl[sel]
+                # per-row any() over variable-length block runs; rows
+                # here are non-empty, so every run has >= 1 block
                 hit = np.add.reduceat(
                     blk_ok.astype(np.int64),
-                    starts) if blk_ok.size else np.zeros(0, np.int64)
-                # reduceat with repeated/empty offsets is unsafe for
-                # zero-length rows, but sel already excludes n_tok==0
-                # (wl==0 only for empty rows in the block codecs)
-                cand[sel] = hit > 0
+                    np.cumsum(sub.widths_lens) - sub.widths_lens)
+                cand[rows] = hit > 0
             hits = []
             idx = np.nonzero(cand)[0]
             if idx.size:
-                sub = batch.filter(pa.array(cand))
-                toks = _decode_batch_columns(
-                    sub.column(2), sub.column(3), sub.column(4),
-                    sub.column(5), sub.column(6))
-                flat, lens = _list_to_flat(toks)
+                flat, lens = eb.take(idx).decode()
                 row_of = np.repeat(np.arange(lens.size), lens)
-                u32 = flat.view(np.uint32)
                 if probes.size == 1 and 0 <= probes[0] <= 0xFFFFFFFF:
                     # dominant single-probe path: straight vectorized
                     # uint32 compare, no int64 widening copy
-                    present = u32 == np.uint32(probes[0])
+                    present = flat == np.uint32(probes[0])
                 else:
-                    vals = u32.astype(np.int64)
+                    vals = flat.astype(np.int64)
                     present = (np.searchsorted(probes, vals, "left")
                                < np.searchsorted(probes, vals, "right"))
                 got = np.unique(row_of[present])
                 hits = idx[got]
-            mask = np.zeros(n_toks.size, dtype=bool)
+            mask = np.zeros(eb.n_tok.size, dtype=bool)
             mask[hits] = True
             out = batch.filter(pa.array(mask))
             yield pa.RecordBatch.from_arrays(
@@ -1011,48 +976,29 @@ def minmax_sorted(df_encoded: DataFrame) -> DataFrame:
     compressed-domain select (blocks.select_flat) — the engine-level analog
     of ``simdmaxmin`` (/root/reference/src/simdcomputil.c:95-156) running
     on zone-map probes instead of a scan.  Works for the d1 and FOR
-    families (sorted rows).  Returns (doc_id, seg_id, n_tok, min_tok,
+    families (sorted rows); other codecs raise a ValueError.  Returns (doc_id, seg_id, n_tok, min_tok,
     max_tok); empty rows are dropped."""
     cols = ["doc_id", "seg_id", "n_tok", "codec", "widths", "inits",
             "payload"]
     src = df_encoded.select(*cols)
 
     def fn(it):
-        from . import blocks as B
-        from .kernels import multi_arange
         for batch in it:
-            n_toks = batch.column(2).to_numpy(zero_copy_only=False) \
-                .astype(np.int64)
-            codec_np = batch.column(3).to_numpy(zero_copy_only=False)
-            wf, wl = _binary_to_flat(batch.column(4))
-            inf, il = _binary_to_flat(batch.column(5))
-            pf, pl = _binary_to_flat(batch.column(6))
-            vsel = np.nonzero(n_toks > 0)[0]
-            mn = np.zeros(vsel.size, dtype=np.uint32)
-            mx = np.zeros(vsel.size, dtype=np.uint32)
-            pos_of = np.full(n_toks.size, -1, dtype=np.int64)
-            pos_of[vsel] = np.arange(vsel.size)
-            w_off = np.cumsum(wl) - wl
-            i_off = np.cumsum(il) - il
-            p_off = np.cumsum(pl) - pl
-            for name in np.unique(codec_np[vsel]) if vsel.size else []:
-                sel = vsel[codec_np[vsel] == name]
-                mode = _BLOCK_MODES[str(name)]
-                sub_w = wf[multi_arange(w_off[sel], wl[sel])]
-                sub_i = np.ascontiguousarray(
-                    inf[multi_arange(i_off[sel], il[sel])]).view(np.uint32)
-                sub_p = pf[multi_arange(p_off[sel], pl[sel])]
-                args = (n_toks[sel], sub_w, sub_i, sub_p, pl[sel])
-                mn[pos_of[sel]] = B.select_flat(
-                    *args, np.zeros(sel.size, np.int64), mode)
-                mx[pos_of[sel]] = B.select_flat(
-                    *args, n_toks[sel] - 1, mode)
+            eb = _EncodedBatch.from_columns(*batch.columns[2:7])
+            vsel = np.nonzero(eb.n_tok > 0)[0]
+            mn = np.zeros(eb.n_tok.size, dtype=np.uint32)
+            mx = np.zeros(eb.n_tok.size, dtype=np.uint32)
+            for name, rows, sub in eb.groups(vsel):
+                _require_sorted_family("minmax_sorted", name)
+                mn[rows] = sub.select(name, np.zeros(rows.size, np.int64))
+                mx[rows] = sub.select(name, sub.n_tok - 1)
             take = pa.array(vsel, type=pa.int64())
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0).take(take),
                  batch.column(1).take(take).cast(pa.int32()),
-                 pa.array(n_toks[vsel].astype(np.int32)),
-                 pa.array(mn.view(np.int32)), pa.array(mx.view(np.int32))],
+                 pa.array(eb.n_tok[vsel].astype(np.int32)),
+                 pa.array(mn[vsel].view(np.int32)),
+                 pa.array(mx[vsel].view(np.int32))],
                 names=["doc_id", "seg_id", "n_tok", "min_tok", "max_tok"])
 
     return src.mapInArrow(
@@ -1084,27 +1030,17 @@ def intersect_encoded(df_pairs: DataFrame, key_cols: list[str]
                            for f in src.schema.fields[:nk])
 
     def fn(it):
-        from . import blocks as B
         for batch in it:
-            col = {n: batch.column(nk + i) for i, n in enumerate(sides)}
-            bad = set()
-            for s in ("a", "b"):
-                bad |= set(col[f"{s}_codec"].unique().to_pylist()) - {"d1"}
+            a, b = (_EncodedBatch.from_columns(*batch.columns[i:i + 5])
+                    for i in (nk, nk + 5))
+            bad = set(a.names + b.names) - {"d1"}
             if bad:
                 raise ValueError(
                     f"intersect_encoded: d1-only (sorted zone maps); got "
                     f"codec(s) {sorted(bad)} — re-encode with codec='d1'")
-            args = []
-            for s in ("a", "b"):
-                n_toks = col[f"{s}_n_tok"].to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                wf, _wl = _binary_to_flat(col[f"{s}_widths"])
-                inf_, _il = _binary_to_flat(col[f"{s}_inits"])
-                pf, pl = _binary_to_flat(col[f"{s}_payload"])
-                args += [n_toks, wf,
-                         np.ascontiguousarray(inf_).view(np.uint32),
-                         pf, pl]
-            out_flat, out_lens = B.intersect_sorted_flat(*args)
+            out_flat, out_lens = blocks.intersect_sorted_flat(
+                a.n_tok, a.widths, a.inits_u32, a.payload, a.payload_lens,
+                b.n_tok, b.widths, b.inits_u32, b.payload, b.payload_lens)
             yield pa.RecordBatch.from_arrays(
                 [*(batch.column(i) for i in range(nk)),
                  _list_from_flat(out_flat.view(np.int32), out_lens),
@@ -1132,18 +1068,12 @@ def _strong_content_hash(cand: DataFrame) -> DataFrame:
 
     def fn(it):
         for batch in it:
-            tokens_arr = _decode_batch_columns(
-                batch.column(2), batch.column(3), batch.column(4),
-                batch.column(5), batch.column(6))
-            la = tokens_arr.combine_chunks() if isinstance(
-                tokens_arr, pa.ChunkedArray) else tokens_arr
-            offs = la.offsets.to_numpy().astype(np.int64)
-            raw = np.ascontiguousarray(
-                la.values.to_numpy(zero_copy_only=False).astype(
-                    "<i4", copy=False)).tobytes()
-            mv = memoryview(raw)
-            digs = [hashlib.sha256(mv[offs[i] * 4:offs[i + 1] * 4]).digest()
-                    for i in range(len(offs) - 1)]
+            flat, lens = _EncodedBatch.from_columns(
+                *batch.columns[2:7]).decode()
+            raw = memoryview(flat.astype("<u4", copy=False)).cast("B")
+            ends = (np.cumsum(lens) * 4).tolist()
+            digs = [hashlib.sha256(raw[e - 4 * n:e]).digest()
+                    for e, n in zip(ends, lens.tolist())]
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0), batch.column(1),
                  pa.array(digs, type=pa.binary())],

@@ -38,15 +38,6 @@ def set_decoder(kind: str, fn: Callable[[bytes, dict], np.ndarray]) -> None:
     _DECODERS[kind] = fn
 
 
-def _decode(kind: str, payload: bytes, meta: dict) -> np.ndarray:
-    fn = _DECODERS.get(kind)
-    if fn is None:
-        raise NotImplementedError(
-            f"no {kind!r} decoder registered in this environment — "
-            "install the media libs and call set_decoder()")
-    return fn(payload, meta)
-
-
 def wav_audio_decoder() -> Callable[[bytes, dict], np.ndarray]:
     """PCM-WAV decoder built on the stdlib ``wave`` module — real audio
     decode with zero optional dependencies.  Returns float32 samples in

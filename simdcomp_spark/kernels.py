@@ -67,12 +67,6 @@ def maxbits(arr: np.ndarray) -> int:
     return int(bits_u32(np.asarray([acc]))[0])
 
 
-def maxbits_rows(mat: np.ndarray) -> np.ndarray:
-    """Per-row maxbits over a (n, m) uint32 matrix (vectorized analyze pass)."""
-    acc = np.bitwise_or.reduce(np.ascontiguousarray(mat, dtype=U32), axis=1)
-    return bits_u32(acc)
-
-
 def minmax(arr: np.ndarray) -> tuple[int, int]:
     """``simdmaxmin``/``simdmaxmin_length`` (src/simdcomputil.c:95-156)."""
     arr = np.ascontiguousarray(arr, dtype=U32)

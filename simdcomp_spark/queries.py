@@ -121,7 +121,7 @@ def _seg_cumsum_u32(vals: np.ndarray, lens: np.ndarray,
 def _decode_exploded(enc: DataFrame, key_name: str) -> DataFrame:
     """Fused decode→explode for the roundtrip gates: one ``mapInArrow``
     yields (key, pos, tok) rows straight from the engine's flat decode
-    core (``engine._decode_batch_flat`` — same mixed-codec routing as
+    (``engine._EncodedBatch.decode`` — same mixed-codec routing as
     ``engine.decode``), skipping the Arrow list-array build, the JVM
     list deserialization, and the Generate/posexplode over millions of
     rows (guide §4.2).  Row-identical to
@@ -133,9 +133,8 @@ def _decode_exploded(enc: DataFrame, key_name: str) -> DataFrame:
 
     def fn(it):
         for batch in it:
-            flat, lens = engine._decode_batch_flat(
-                batch.column(1), batch.column(2), batch.column(3),
-                batch.column(4), batch.column(5))
+            flat, lens = engine._EncodedBatch.from_columns(
+                *batch.columns[1:6]).decode()
             uids = pc.cast(batch.column(0), pa_.int64()).to_numpy(
                 zero_copy_only=False)
             starts = np.cumsum(lens) - lens
@@ -233,7 +232,7 @@ def q_auto_roundtrip(spark, sf_dir):
                    F.size("tokens").alias("n_tok"), F.lit("ev").alias("source")))
     # salted post-encode: when auto picks different codecs per partition,
     # the shuffled batches interleave them — keeps the mixed-codec decode
-    # routing (engine._decode_batch_columns) covered by a gate query
+    # routing (engine._EncodedBatch.decode) covered by a gate query
     return _roundtrip_exploded(tok, "auto", "user_id", salt=True)
 
 
@@ -248,16 +247,18 @@ def _maxbits_of_widths(enc: DataFrame, key_name: str,
     Arrow batch, no Python loop over rows."""
     import pyarrow as pa_
     import pyarrow.compute as pc
-    src = enc.select("doc_id", "widths")
+    src = enc.select("doc_id", "n_tok", "codec", "widths", "inits",
+                     "payload")
 
     def f(it):
         for batch in it:
-            wf, wl = engine._binary_to_flat(batch.column(1))
+            eb = engine._EncodedBatch.from_columns(*batch.columns[1:6])
+            wl = eb.widths_lens
             mb = np.zeros(wl.size, dtype=np.int64)
             nz = wl > 0
-            if wf.size:
+            if eb.widths.size:
                 starts = (np.cumsum(wl) - wl)[nz]
-                mb[nz] = np.maximum.reduceat(wf, starts)
+                mb[nz] = np.maximum.reduceat(eb.widths, starts)
             yield pa_.RecordBatch.from_arrays(
                 [pc.cast(batch.column(0), pa_.int64()),
                  pa_.array(mb.astype(np.int32), type=pa_.int32())],
@@ -444,34 +445,29 @@ def q_avx_roundtrip(spark, sf_dir):
         f, schema="user_id long, pos int, tok int")
 
 
-def _fastset_shim(enc, mode: str, last_element: bool = False):
+def _fastset_shim(enc, last_element: bool = False):
     """Shared batched shape of the three fastset gate queries: one
     kernels.fastset_rows in-place write over the batch's concatenated
     payloads (stored value 0 — each variant's semantics reduce to a zero
-    delta/offset write), then ONE blocks.decode_flat for the whole batch.
+    delta/offset write), then ONE flat decode for the whole batch.
     Rows are single-block by construction (n_tok ≤ 128).  Arrow-native:
-    the binary columns are viewed as flat buffers (engine._binary_to_flat),
-    no per-row bytes materialization."""
+    the encoded columns are read through the engine's encoded-batch view
+    (engine._EncodedBatch), no per-row bytes materialization."""
     import pyarrow as pa_
     import pyarrow.compute as pc
-    src = enc.select("doc_id", "n_tok", "widths", "inits", "payload")
+    src = enc.select("doc_id", "n_tok", "codec", "widths", "inits",
+                     "payload")
 
     def f(it):
-        from . import blocks
         for batch in it:
-            n = batch.column(1).to_numpy(zero_copy_only=False) \
-                .astype(np.int64)
-            wf, _wl = engine._binary_to_flat(batch.column(2))
-            inf, _il = engine._binary_to_flat(batch.column(3))
-            pf, pl = engine._binary_to_flat(batch.column(4))
-            flat = pf.copy()                      # in-place write target
-            starts = np.cumsum(pl) - pl
+            eb = engine._EncodedBatch.from_columns(*batch.columns[1:6])
+            n = eb.n_tok
+            eb.payload = eb.payload.copy()        # in-place write target
+            starts = np.cumsum(eb.payload_lens) - eb.payload_lens
             idxs = (n - 1) if last_element else np.minimum(50, n - 1)
-            K.fastset_rows(flat, starts, wf.astype(np.int64),
+            K.fastset_rows(eb.payload, starts, eb.widths.astype(np.int64),
                            np.zeros(n.size, np.uint64), idxs)
-            inits = (np.ascontiguousarray(inf).view(np.uint32)
-                     if mode != "plain" else np.zeros(0, np.uint32))
-            back = blocks.decode_flat(n, wf, inits, flat, pl, mode)
+            back, _ = eb.decode()
             uids = pc.cast(batch.column(0), pa_.int64()) \
                 .to_numpy(zero_copy_only=False)
             tot = int(n.sum())
@@ -495,7 +491,7 @@ def q_fastset(spark, sf_dir):
                        "o_orderkey", "o_orderkey", "orders")
     tok = tok.where(F.col("n_tok").between(1, 128))
     enc = engine.encode(tok, codec="bitpack", split_threshold=None)
-    return _fastset_shim(enc, "plain")
+    return _fastset_shim(enc)
 
 
 def q_search_sorted(spark, sf_dir):
@@ -523,7 +519,7 @@ def q_fastset_for(spark, sf_dir):
     tok = tok.where(F.col("n_tok").between(1, 128))
     enc = engine.encode(tok, codec="for", split_threshold=None)
     # fastset_for stores value - init; writing the block base is a 0 write
-    return _fastset_shim(enc, "for")
+    return _fastset_shim(enc)
 
 
 def q_masked_d1(spark, sf_dir):
@@ -566,7 +562,7 @@ def q_fastset_d1(spark, sf_dir):
     enc = engine.encode(tok, codec="d1", split_threshold=None)
     # setting the LAST element to its predecessor == writing delta 0 at
     # n-1, with no following delta to adjust — a pure fastset_rows write
-    return _fastset_shim(enc, "d1", last_element=True)
+    return _fastset_shim(enc, last_element=True)
 
 
 def q_search_sorted_for(spark, sf_dir):

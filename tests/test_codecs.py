@@ -9,7 +9,7 @@ from pathlib import Path
 import numpy as np
 import pytest
 
-from simdcomp_spark import blocks, kernels as K
+from simdcomp_spark import codecs, kernels as K
 from simdcomp_spark.codecs import REGISTRY
 from simdcomp_spark.codecs import fsst
 from simdcomp_spark.codecs.auto import choose_codec
@@ -58,19 +58,19 @@ def edge_batch(kind: str) -> list[np.ndarray]:
                     np.cumsum(EDGE_LENS)[:-1])
 
 
-def _assert_block_roundtrip(arrs, widths, inits, payloads, mode):
+def _assert_block_roundtrip(arrs, widths, inits, payloads, name):
     n_toks = np.array([a.size for a in arrs])
-    back = blocks.decode_batch(n_toks, widths, inits, payloads, mode)
+    back = codecs.get(name).decode_rows(n_toks, widths, inits, payloads)
     for a, b in zip(arrs, back):
         np.testing.assert_array_equal(a, b)
 
 
 def test_block_batch_matches_single_array_kernels():
-    """encode_batch('plain') must byte-match simdpack_length applied per row
+    """bitpack encode_rows must byte-match simdpack_length applied per row
     with per-block maxbits — i.e. the demo format of example.c minus the
     inline headers — and decode back to the input."""
     arrs = corpus() + edge_batch("mixed")
-    widths, inits, payloads = blocks.encode_batch(arrs, "plain")
+    widths, inits, payloads = codecs.get("bitpack").encode_rows(arrs)
     for a, w, p in zip(arrs, widths, payloads):
         wid = np.frombuffer(w, dtype=np.uint8)
         expect = b""
@@ -81,12 +81,12 @@ def test_block_batch_matches_single_array_kernels():
             expect += K.simdpack_length(blk, b)
         assert p == expect
     assert 32 in b"".join(widths)
-    _assert_block_roundtrip(arrs, widths, inits, payloads, "plain")
+    _assert_block_roundtrip(arrs, widths, inits, payloads, "bitpack")
 
 
 def test_block_batch_for_matches_kernel():
     arrs = [a for a in corpus() if a.size] + edge_batch("mixed")
-    widths, inits, payloads = blocks.encode_batch(arrs, "for")
+    widths, inits, payloads = codecs.get("for").encode_rows(arrs)
     for a, w, ini, p in zip(arrs, widths, inits, payloads):
         wid = np.frombuffer(w, dtype=np.uint8)
         bases = np.frombuffer(ini, dtype=U32)
@@ -112,7 +112,7 @@ def test_block_batch_d1_matches_reference_chaining():
     the short layout over deltas, b==32 blocks hold the raw values."""
     a = np.cumsum(RNG.integers(0, 100, size=512, dtype=U32)).astype(U32)
     arrs = [a] + edge_batch("sorted") + edge_batch("mixed")
-    widths, inits, payloads = blocks.encode_batch(arrs, "d1")
+    widths, inits, payloads = codecs.get("d1").encode_rows(arrs)
     for row, w, ini, p in zip(arrs, widths, inits, payloads):
         wid = np.frombuffer(w, np.uint8)
         ini = np.frombuffer(ini, U32)
@@ -160,7 +160,7 @@ def test_bitpack_size_is_reference_bound():
     """north rule: compressed size ≤ reference bits(max)-per-block packing.
     For the bitpack codec it's exactly equal; the selector can only improve."""
     arrs = [a for a in corpus() if a.size]
-    _, _, payloads = blocks.encode_batch(arrs, "plain")
+    _, _, payloads = codecs.get("bitpack").encode_rows(arrs)
     for a, p in zip(arrs, payloads):
         bound = sum(K.compressed_bytes(min(128, a.size - i), K.maxbits(a[i:i + 128]))
                     for i in range(0, a.size, 128))

@@ -513,12 +513,14 @@ def test_submit_job_script(spark, unit_df, tmp_path):
 
 def test_range_count_mixed_codec_batches(spark, unit_df):
     """range_count must route mixed d1/FOR batches per codec group (a
-    post-shuffle encoded table can interleave both sorted-row families)."""
+    post-shuffle encoded table can interleave both sorted-row families);
+    so must every other compressed-domain operator, on the same frame."""
     sdf = unit_df.where(F.col("n_tok") > 0) \
         .withColumn("tokens", F.array_sort("tokens")) \
         .where(F.array_min("tokens") >= 0)  # signed sort == uint32 sort
-    truth = {r["doc_id"]: sum(2000 <= t < 60000 for t in r["tokens"])
-             for r in sdf.collect()}
+    raw = {r["doc_id"]: r["tokens"] for r in sdf.collect()}
+    truth = {d: sum(2000 <= t < 60000 for t in toks)
+             for d, toks in raw.items()}
     even = F.xxhash64("doc_id") % 2 == 0
     enc = (engine.encode(sdf.where(even), codec="d1", split_threshold=None)
            .unionByName(engine.encode(sdf.where(~even), codec="for",
@@ -528,13 +530,33 @@ def test_range_count_mixed_codec_batches(spark, unit_df):
     assert len(rows) == len(truth)
     for r in rows:
         assert r["n_in_range"] == truth[r["doc_id"]], r["doc_id"]
+    rows = engine.search_sorted(enc, 2000).collect()
+    assert len(rows) == len(raw)
+    for r in rows:
+        assert r["idx"] == sum(t < 2000 for t in raw[r["doc_id"]]), r
+    rows = engine.minmax_sorted(enc).collect()
+    assert len(rows) == len(raw)
+    for r in rows:
+        assert (r["min_tok"], r["max_tok"]) == \
+            (raw[r["doc_id"]][0], raw[r["doc_id"]][-1]), r["doc_id"]
+    look = enc.withColumn(
+        "lookup_idx", F.pmod(F.xxhash64("doc_id"), F.col("n_tok")).cast("int"))
+    rows = engine.point_lookup(look).collect()
+    assert len(rows) == len(raw)
+    for r in rows:
+        assert r["val"] == raw[r["doc_id"]][r["idx"]], r
+    probes = sorted({toks[len(toks) // 2] for toks in raw.values()})[:3]
+    got = {r["doc_id"] for r in
+           engine.contains_token(enc, probes, assume_sorted=True).collect()}
+    assert got and got == {d for d, toks in raw.items()
+                           if set(probes) & set(toks)}
 
 
 def test_salt_encoded_mixed_codec_decode(spark, unit_df):
     """The bench/gate sentinel shape: salt the ENCODED table (compressed
     bytes shuffled, not raw tokens), then decode the shuffled, guaranteed
     mixed-codec batches.  Asserts both that >1 codec is present after the
-    salt (so the per-codec sub-gather routing in _decode_batch_columns is
+    salt (so the per-codec grouping of engine._EncodedBatch.decode is
     genuinely exercised) and that the round-trip stays bit-identical."""
     even = F.xxhash64("doc_id") % 2 == 0
     enc = (engine.encode(unit_df.where(even), codec="bitpack",
@@ -593,11 +615,19 @@ def test_encoded_dedup_legacy_table_requires_fixed_codec(spark, unit_df):
 
 
 def test_range_count_rejects_unsorted_family(spark, unit_df):
+    """range_count, search_sorted and minmax_sorted raise the same typed
+    error, naming the operator and the codec, on every non-sorted family."""
     from pyspark.errors.exceptions.captured import PythonException
-    enc = engine.encode(unit_df.where(F.col("n_tok") > 0),
-                        codec="bitpack", split_threshold=None)
-    with pytest.raises(PythonException, match="sorted-row family"):
-        engine.range_count(enc, 0, 10).collect()
+    for codec in ("bitpack", "rle", "dict"):
+        enc = engine.encode(unit_df.where(F.col("n_tok") > 0),
+                            codec=codec, split_threshold=None)
+        for op, out in (("range_count", engine.range_count(enc, 0, 10)),
+                        ("search_sorted", engine.search_sorted(enc, 10)),
+                        ("minmax_sorted", engine.minmax_sorted(enc))):
+            with pytest.raises(PythonException, match=(
+                    rf"{op} requires a sorted-row family \(d1/for\), "
+                    rf"got codec\(s\) \['{codec}'\]")):
+                out.collect()
 
 
 def test_encoded_dedup_rejects_null_content_hash(spark, unit_df):
