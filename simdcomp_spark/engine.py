@@ -15,10 +15,12 @@ Spark-first design (SURVEY.md §1.4, §4):
   before encoding, so a single 10M-token document cannot straggle a task.
   Blocks are independent given per-block inits (SURVEY.md §3.2), so segment
   encodes are bit-compatible with whole-row encodes;
-* one decoder: every encoded read is a DataFrame (``iceberg.read_table``,
-  or ``spark.read.parquet`` for plain directories) handed to
-  :func:`decode`, whose reassembly shuffles the COMPRESSED segments by
-  doc_id and stitches them after a per-partition sort;
+* one decoder, one reassembly: every encoded read is a DataFrame
+  (``iceberg.read_table``, or ``spark.read.parquet`` for plain
+  directories) handed to :func:`decode`, which is lazy (calling it
+  starts no Spark job) and whose one reassembly plan shuffles the
+  COMPRESSED segments by doc_id and stitches them after a per-partition
+  sort;
 * metrics are plain DataFrame aggregations over the encoded output plus
   per-task encode timings carried as constant batch columns — queryable,
   not log-scraped.
@@ -630,20 +632,6 @@ def salt_encoded(df_encoded: DataFrame, shards: int | None = None) -> DataFrame:
 # decode
 # ---------------------------------------------------------------------------
 
-def _bare_scan_plan(df: DataFrame) -> bool:
-    """True when ``df``'s optimized plan is just projections/filters over
-    ONE file relation — i.e. re-executing it costs a column-pruned scan,
-    not an arbitrary subtree.  Used to gate cheap metadata probes; any
-    parse surprise returns False (probe skipped, never wrong results)."""
-    try:
-        tree = df._jdf.queryExecution().optimizedPlan().treeString()
-    except Exception:
-        return False
-    ok = ("Project", "Filter", "Relation", "LogicalRelation", "RelationV2")
-    names = [ln.lstrip(" :+-") for ln in tree.splitlines() if ln.strip()]
-    return 0 < len(names) <= 4 and all(n.startswith(ok) for n in names)
-
-
 def decode(df_encoded: DataFrame, reassemble: bool = True) -> DataFrame:
     """encoded table → tokens table (doc_id, source, tokens, n_tok).
 
@@ -661,34 +649,23 @@ def decode(df_encoded: DataFrame, reassemble: bool = True) -> DataFrame:
     exceeded the split threshold, or when the consumer works per
     segment.
 
-    reassemble=True avoids the reassembly when it can PROVE it is a
-    no-op: if the input is a bare scan (cheap to re-read — never an
-    arbitrary subtree), a one-pass probe of (max seg_id, count, distinct
-    doc_ids) checks that every doc is a single segment, and the shuffle
-    is then dropped from the plan.
+    reassemble=True always runs the one reassembly plan: the shuffle
+    moves the COMPRESSED segments (repartition by doc_id + sort by
+    seg_id, decode-and-concatenate post-shuffle in one vectorized pass)
+    rather than decoded 32-bit arrays — 3-16× fewer bytes across the
+    exchange.  Concatenation in seg_id order is just merged row lengths
+    over the already-ordered flat decode buffer.  Rows with a DUPLICATE
+    (doc_id, seg_id) — malformed input the writer never emits —
+    concatenate in partition order; a null doc_id raises ``ValueError``
+    (it names no document to stitch into).
 
-    When reassembly IS needed, the shuffle moves the COMPRESSED segments
-    (repartition by doc_id + sort by seg_id, decode-and-concatenate
-    post-shuffle in one vectorized pass) rather than decoded 32-bit
-    arrays — 3-16× fewer bytes across the exchange.  Concatenation in
-    seg_id order is just merged row lengths over the already-ordered
-    flat decode buffer.  Rows with a DUPLICATE (doc_id, seg_id) —
-    malformed input the writer never emits — concatenate in partition
-    order."""
+    Either way the result is lazy: calling ``decode`` starts no Spark
+    job."""
     cols = ["doc_id", "source", "seg_id", "n_tok", "codec", "widths",
             "inits", "payload"]
     src = df_encoded.select(*cols)
-    single_segment = False
-    if reassemble and _bare_scan_plan(df_encoded):
-        # two-step probe, cheapest first: a pruned seg_id-only scan
-        # answers the common split-table case without touching doc_id;
-        # the distinct check runs only when seg_ids are all 0
-        mx = df_encoded.select("seg_id").agg(F.max("seg_id")).first()[0]
-        if mx is None or mx == 0:
-            probe = df_encoded.select("doc_id").agg(
-                F.count("*").alias("n"),
-                F.countDistinct("doc_id").alias("nd")).first()
-            single_segment = probe["n"] == probe["nd"]
+    if reassemble:
+        return _decode_reassembled(src)
 
     def decode_fn(it):
         for batch in it:
@@ -700,16 +677,8 @@ def decode(df_encoded: DataFrame, reassemble: bool = True) -> DataFrame:
                  _list_from_flat(flat.view(np.int32), lens)],
                 names=["doc_id", "source", "seg_id", "tokens"])
 
-    dec = src.mapInArrow(decode_fn, schema=DECODED_SCHEMA)
-    if not reassemble:
-        return dec.withColumn("n_tok", F.size("tokens"))
-    if single_segment:
-        # provably one segment per doc: row-identical to the groupBy
-        # (each "group" is one row; flatten of one sorted element is the
-        # element) with the array-moving exchange removed
-        return dec.select("doc_id", "source", "tokens") \
-            .withColumn("n_tok", F.size("tokens"))
-    return _decode_reassembled(src)
+    return src.mapInArrow(decode_fn, schema=DECODED_SCHEMA) \
+        .withColumn("n_tok", F.size("tokens"))
 
 
 def _decode_reassembled(src: DataFrame) -> DataFrame:
@@ -743,6 +712,12 @@ def _decode_reassembled(src: DataFrame) -> DataFrame:
             nrows = batch.num_rows
             if nrows == 0:
                 continue
+            if batch.column(0).null_count:
+                # a null id names no document to stitch into: raise
+                # rather than merge it with its neighbours
+                raise ValueError(
+                    "decode(reassemble=True): encoded input has a null "
+                    "doc_id; decode it with reassemble=False")
             flat, lens = _EncodedBatch.from_columns(
                 *batch.columns[3:8]).decode()
             ids = batch.column(0)

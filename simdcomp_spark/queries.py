@@ -118,31 +118,6 @@ def _seg_cumsum_u32(vals: np.ndarray, lens: np.ndarray,
     return (cum - np.repeat(base_row, lens)).astype(np.uint32)
 
 
-def _decode_exploded(enc: DataFrame, key_name: str) -> DataFrame:
-    """Fused decode→explode for the roundtrip gates: one ``mapInArrow``
-    yields (key, pos, tok) rows straight from the engine's flat decode
-    (``engine._EncodedBatch.decode`` — same mixed-codec routing as
-    ``engine.decode``), skipping the Arrow list-array build, the JVM
-    list deserialization, and the Generate/posexplode over millions of
-    rows (guide §4.2).  Row-identical to
-    ``decode → posexplode → cast``."""
-    import pyarrow as pa_
-    import pyarrow.compute as pc
-    src = enc.select("doc_id", "n_tok", "codec", "widths", "inits",
-                     "payload")
-
-    def fn(it):
-        for batch in it:
-            flat, lens = engine._EncodedBatch.from_columns(
-                *batch.columns[1:6]).decode()
-            uids = pc.cast(batch.column(0), pa_.int64()).to_numpy(
-                zero_copy_only=False)
-            starts = np.cumsum(lens) - lens
-            yield _explode_batch(key_name, uids, lens, starts, flat)
-
-    return src.mapInArrow(fn, schema=f"{key_name} long, pos int, tok int")
-
-
 def _roundtrip_exploded(tok_df: DataFrame, codec: str, key_name: str,
                         salt: bool = False) -> DataFrame:
     """Narrow (zero-shuffle) encode→decode by default — the plan the engine
@@ -152,13 +127,17 @@ def _roundtrip_exploded(tok_df: DataFrame, codec: str, key_name: str,
     compressed bytes instead of raw 32-bit token arrays, which is both the
     plan a real job would run and ~10x less sensitive to the sandbox's
     shuffle-I/O weather (the old pre-encode raw-token salt made this the
-    dominant, window-sensitive line of every bench).  Decode+explode are
-    fused (:func:`_decode_exploded`), and Catalyst column pruning keeps
-    pid/enc_ns/content_hash/source off the salt exchange."""
+    dominant, window-sensitive line of every bench).  The gate decodes
+    through the public decoder, ``engine.decode(reassemble=False)`` —
+    every document is one segment here — then posexplodes, so it checks
+    ``engine.decode`` itself; Catalyst column pruning keeps
+    pid/enc_ns/content_hash off the salt exchange."""
     enc = engine.encode(tok_df, codec=codec, split_threshold=None)
     if salt:
         enc = engine.salt_encoded(enc)
-    return _decode_exploded(enc, key_name)
+    dec = engine.decode(enc, reassemble=False)
+    return dec.select(F.col("doc_id").cast("long").alias(key_name),
+                      F.posexplode("tokens").alias("pos", "tok"))
 
 
 _RT_ORACLE = """
@@ -1888,8 +1867,8 @@ QUERIES = {
     "encoded_dedup": q_encoded_dedup,
     "contains_token": q_contains_token,
     # iceberg_dedup_delete (not exact_dedup, whose shape is untouched)
-    # sits in the window: it exercises the round-7 compressed-segment
-    # reassembly path of decode(reassemble=True)
+    # sits in the window: its split documents go through the one
+    # reassembly plan of decode(reassemble=True)
     "iceberg_dedup_delete": q_iceberg_dedup_delete,
     "iceberg_roundtrip": q_iceberg_roundtrip,
     "iceberg_pos_delete": q_iceberg_pos_delete,

@@ -813,30 +813,25 @@ def test_resumable_ingest_final_manifest_rewrite(spark, unit_df, tmp_path):
     assert engine.verify_roundtrip(unit_df, dec) == 0
 
 
-def test_decode_single_segment_shortcut_r7(spark, tmp_path):
-    """r7: decode(reassemble=True) over a bare scan of a provably
-    single-segment table drops the reassembly exchange; split tables
-    keep the exchange.  Both reproduce the input rows exactly."""
-    from pyspark.sql import functions as F
-
+def test_decode_reassembles_single_and_split_tables(spark, tmp_path):
+    """decode(reassemble=True) runs the one reassembly plan (compressed
+    segment exchange → sort → stitch) whether or not any document was
+    split; both tables reproduce the input rows exactly."""
     rows = [(f"d{i}", "s", list(range(i % 9 + 1))) for i in range(300)]
     df = spark.createDataFrame(
         rows, "doc_id string, source string, tokens array<int>") \
         .withColumn("n_tok", F.size("tokens"))
-    enc = engine.encode(df, codec="auto", split_threshold=None)
-    p = str(tmp_path / "enc.parquet")
-    enc.write.parquet(p)
-    enc2 = spark.read.parquet(p)
-
-    fast = engine.decode(enc2, reassemble=True)
-    assert "Exchange" not in fast._jdf.queryExecution() \
-        .executedPlan().toString()
     norm = lambda d: sorted((r["doc_id"], r["source"], tuple(r["tokens"]),
                              r["n_tok"]) for r in d.collect())
     want = norm(df.select("doc_id", "source", "tokens", "n_tok"))
-    assert norm(fast) == want
 
-    # split table: shortcut must NOT fire, rows reassemble exactly
+    enc = engine.encode(df, codec="auto", split_threshold=None)
+    p = str(tmp_path / "enc.parquet")
+    enc.write.parquet(p)
+    assert norm(engine.decode(spark.read.parquet(p), reassemble=True)) \
+        == want
+
+    # split table: segments stitch back exactly through the exchange
     enc_s = engine.encode(df, codec="auto", split_threshold=4)
     ps = str(tmp_path / "enc_s.parquet")
     enc_s.write.parquet(ps)
@@ -844,3 +839,51 @@ def test_decode_single_segment_shortcut_r7(spark, tmp_path):
     assert "Exchange" in dec_s._jdf.queryExecution() \
         .executedPlan().toString()
     assert norm(dec_s) == want
+
+
+def test_decode_is_lazy(spark, tmp_path):
+    """engine.decode(reassemble=True) over a bare Iceberg scan of a split
+    table starts no Spark job until its result is consumed, and the read
+    itself is at most two jobs (exchange, stitch).  Counted through a job
+    group and statusTracker, as in test_ingest_pass_is_one_job."""
+    from simdcomp_spark import iceberg
+
+    rows = [(f"d{i}", "s", list(range(i % 50 + 1))) for i in range(60)]
+    df = spark.createDataFrame(
+        rows, "doc_id string, source string, tokens array<int>") \
+        .withColumn("n_tok", F.size("tokens"))
+    table = str(tmp_path / "t")
+    iceberg.export_encoded(
+        engine.encode(df, codec="bitpack", split_threshold=8), table)
+    scan = iceberg.read_table(spark, table)
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    gid = f"lazy-decode-{tmp_path.name}"
+    sc.setJobGroup(gid, "decode")
+    try:
+        dec = engine.decode(scan, reassemble=True)
+        assert list(st.getJobIdsForGroup(gid)) == []
+        got = sorted((r["doc_id"], tuple(r["tokens"])) for r in dec.collect())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 0 < len(st.getJobIdsForGroup(gid)) <= 2
+    assert got == sorted((d, tuple(t)) for d, _, t in rows)
+
+
+def test_decode_reassemble_rejects_null_doc_id(spark):
+    """A null doc_id names no document to stitch into: reassemble=True
+    raises a ValueError naming it instead of merging the next document
+    into the null row; reassemble=False passes every segment through."""
+    from pyspark.errors.exceptions.captured import PythonException
+    df = spark.createDataFrame(
+        [(None, "s", [7, 7, 7]), ("a", "s", [1, 2, 3]), ("b", "s", [4, 5])],
+        "doc_id string, source string, tokens array<int>") \
+        .withColumn("n_tok", F.size("tokens"))
+    enc = engine.encode(df, codec="bitpack", split_threshold=None)
+    with pytest.raises(PythonException, match=r"ValueError: .*null doc_id"):
+        engine.decode(enc, reassemble=True).collect()
+    got = engine.decode(enc, reassemble=False).collect()
+    assert len(got) == 3
+    assert {r["doc_id"]: r["tokens"] for r in got} == \
+        {None: [7, 7, 7], "a": [1, 2, 3], "b": [4, 5]}
