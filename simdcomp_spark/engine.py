@@ -453,22 +453,17 @@ def _input_files(path: str, snapshot_id: int | None = None) -> list[str]:
 
     Iceberg table dirs (``metadata/version-hint.text`` present) resolve
     through the snapshot's metadata → manifest-list → manifest tree
-    (:func:`iceberg.data_files`): only the snapshot's LIVE files are
-    returned — a plain directory walk over a multi-snapshot table would
-    also pick up files that are dead in the current snapshot and
-    double-read history.  ``snapshot_id`` time-travels.  Plain directories
-    recurse (e.g. Hive-style ``key=value`` subdirectories)."""
+    (:func:`iceberg.data_files`, which refuses a snapshot that carries
+    delete files): only the snapshot's LIVE files are returned — a plain
+    directory walk over a multi-snapshot table would also pick up files
+    that are dead in the current snapshot and double-read history.
+    ``snapshot_id`` time-travels.  Plain directories recurse (e.g.
+    Hive-style ``key=value`` subdirectories)."""
     from pathlib import Path
 
     from . import iceberg
     if iceberg.is_iceberg_table(path):
-        # ONE metadata-tree walk: name-safety guard (renamed/promoted/
-        # re-added columns make name-addressed reads unsafe), delete
-        # refusal, and the live-file list all come from the same
-        # _snapshot_entries read
-        _, data, dels = iceberg.fused_plan(path, snapshot_id)
-        iceberg.refuse_raw_scan_on_deletes(path, dels)
-        return [d["file_path"] for d in data]
+        return [d["file_path"] for d in iceberg.data_files(path, snapshot_id)]
     if snapshot_id is not None:
         raise ValueError(
             f"snapshot_id={snapshot_id} given but {path!r} is not an "
@@ -551,19 +546,6 @@ def _rowgroup_units(spark: SparkSession, path: str,
     return units.repartition(par * _UNITS_PER_CORE)
 
 
-def _role_columns(path: str, roles: list[str]) -> dict:
-    """Physical column names for the engine's canonical roles: identity
-    on plain parquet dirs; rename-aware resolution (by field id through
-    schema history) on Iceberg tables — see
-    :func:`iceberg.fused_role_columns`.  The resolution is always against
-    the CURRENT schema: the fused guard (assert_fused_name_safe) has
-    already refused any snapshot whose live files carry other names."""
-    from . import iceberg
-    if iceberg.is_iceberg_table(path):
-        return iceberg.fused_role_columns(path, roles)
-    return {r: r for r in roles}
-
-
 def encode_files(spark: SparkSession, path: str, codec: str = "auto",
                  split_threshold: int = DEFAULT_SPLIT_THRESHOLD,
                  snapshot_id: int | None = None,
@@ -574,7 +556,15 @@ def encode_files(spark: SparkSession, path: str, codec: str = "auto",
     ``path`` may be a plain parquet directory OR an Iceberg table dir of
     pre-tokenized sequences (the north-rule input shape): Iceberg inputs
     plan work units from the snapshot's live data files only, and
-    ``snapshot_id`` encodes a historic snapshot (time travel).
+    ``snapshot_id`` encodes a historic snapshot (time travel).  A plain
+    directory's columns are read by name (``doc_id``, ``tokens``,
+    ``source``); an Iceberg table's roles resolve to field ids through
+    the schema history (:func:`iceberg.fused_role_columns`, so renamed
+    role columns read as is), and each worker maps those ids to the
+    file's own column names through its footer's ``PARQUET:field_id``
+    metadata.  A file lacking a role's field id — written without ids,
+    or before a drop + re-add of the role column — raises a
+    ``ValueError`` naming the file, the role and the id.
 
     This is the maximum-throughput ingest path for the 100 TB job: encode
     consumes EVERY row and column of the tokens table, so Catalyst's scan
@@ -587,9 +577,26 @@ def encode_files(spark: SparkSession, path: str, codec: str = "auto",
     read 2048-row batches (``_ENCODE_BATCH_ROWS``)."""
     import pyarrow.parquet as pq
 
+    from . import iceberg
     fdf = _rowgroup_units(spark, path, snapshot_id, files)
-    cm = _role_columns(path, ["doc_id", "tokens", "source"])
-    cols = [cm["doc_id"], cm["tokens"], cm["source"]]
+    roles = ["doc_id", "tokens", "source"]
+    fids = (iceberg.fused_role_columns(path, roles)
+            if iceberg.is_iceberg_table(path) else None)
+
+    def columns_of(pf, path_):
+        """The file's physical names for ``roles``, in role order."""
+        if fids is None:
+            return roles
+        by_id = {int(f.metadata[b"PARQUET:field_id"]): f.name
+                 for f in pf.schema_arrow
+                 if f.metadata and b"PARQUET:field_id" in f.metadata}
+        for r in roles:
+            if fids[r] not in by_id:
+                raise ValueError(
+                    f"{path_}: no column with field id {fids[r]} for role "
+                    f"{r!r} (a file written without field ids, or before "
+                    "a drop + re-add of the role column)")
+        return [by_id[fids[r]] for r in roles]
 
     def fn(it):
         pid = _partition_id()
@@ -599,6 +606,7 @@ def encode_files(spark: SparkSession, path: str, codec: str = "auto",
             for path_, rg in zip(batch.column(0).to_pylist(),
                                  batch.column(1).to_pylist()):
                 pf = pq.ParquetFile(path_, pre_buffer=True)
+                cols = columns_of(pf, path_)
                 rgs = [rg] if rg >= 0 else None   # -1 = whole-file unit
                 for rb in pf.iter_batches(batch_size=_ENCODE_BATCH_ROWS,
                                           row_groups=rgs,

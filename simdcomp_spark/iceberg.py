@@ -444,7 +444,7 @@ _WRITTEN_SCHEMA = ("path string, rows long, bytes long, bounds string, "
 
 
 def _write_data_files(df: DataFrame, out_dir: str, schema: dict,
-                      spec: dict, use_ids: bool) -> list[dict]:
+                      spec: dict) -> list[dict]:
     """Write ``df`` as parquet files under ``out_dir`` — the only data-file
     writer of every Iceberg write (export, append, overwrite, both delete
     writers, compaction).  Each Spark task writes its own files with
@@ -455,8 +455,8 @@ def _write_data_files(df: DataFrame, out_dir: str, schema: dict,
     ``{partition field: value}``.
 
     ``schema`` is an Iceberg struct whose fields name ``df``'s columns;
-    with ``use_ids`` each column (and a list's element) carries its field
-    id in the parquet footer.  ``spec``'s fields are computed as
+    each column (and a list's element) carries its field id in the
+    parquet footer.  ``spec``'s fields are computed as
     ``_p_<name>`` columns (:func:`_spec_partition_exprs`); each task
     splits its rows by them into one file per partition value and drops
     them from the file.  A failed task removes the files it wrote; the
@@ -464,12 +464,9 @@ def _write_data_files(df: DataFrame, out_dir: str, schema: dict,
     parts = _spec_partition_exprs(spec, schema)
     for name, expr in parts:
         df = df.withColumn(f"_p_{name}", expr)
-    ids = {}
-    if use_ids:
-        for f in schema["fields"]:
-            t = f["type"]
-            ids[f["name"]] = (f["id"], t.get("element-id")
-                              if isinstance(t, dict) else None)
+    ids = {f["name"]: (f["id"], f["type"].get("element-id")
+                       if isinstance(f["type"], dict) else None)
+           for f in schema["fields"]}
     Path(out_dir).mkdir(parents=True)
     names = [n for n, _ in parts]
 
@@ -887,6 +884,10 @@ def _spec_partition_exprs(spec: dict, schema: dict) -> list[tuple[str, object]]:
     return out
 
 
+# rebase-and-retry attempts of an append that loses the commit race
+_COMMIT_RETRIES = 5
+
+
 def _write_snapshot(table_dir: str, df: DataFrame,
                     prev_meta: dict | None,
                     operation: str = "append",
@@ -955,15 +956,10 @@ def _write_snapshot(table_dir: str, df: DataFrame,
         rt = _transform_result_type(tname, by_id[pf["source-id"]]["type"])
         part_fields.append((pf["name"], rt, pf["field-id"]))
 
-    # 1. data files (append into a per-snapshot subdir — no clobbering).
-    # Field-id stamping: new tables always (rename/drop/promote safe),
-    # appends follow the table's property so a table stays uniformly
-    # id-stamped or uniformly not.
-    use_ids = (_uses_field_ids(prev_meta) if prev_meta
-               else os.environ.get("SIMDCOMP_ICEBERG_FIELD_IDS",
-                                   "1") != "0")
+    # 1. data files (append into a per-snapshot subdir — no clobbering),
+    # field ids stamped in every footer
     stats = _write_data_files(df, str(data_dir / f"snap-{snap_id}"),
-                              table_schema, spec, use_ids)
+                              table_schema, spec)
 
     # 2. manifest (avro) with per-file column bounds
     entries = _file_entries(stats, snap_id, 0, by_name,
@@ -1020,14 +1016,14 @@ def _write_snapshot(table_dir: str, df: DataFrame,
         # manifest list + sequence number against it, and re-attach.
         # Overwrite/delete/replace keep fail-loudly semantics (what they
         # computed may be invalidated by the concurrent commit).
-        retries = int(os.environ.get("SIMDCOMP_COMMIT_RETRIES", "5"))
         cur_meta = prev_meta
-        for attempt in range(retries + 1):
+        for attempt in range(_COMMIT_RETRIES + 1):
             try:
                 return _attach_snapshot(table_dir, cur_meta, snapshot,
                                         branch=branch)
             except RuntimeError as e:
-                if "commit conflict" not in str(e) or attempt == retries:
+                if "commit conflict" not in str(e) \
+                        or attempt == _COMMIT_RETRIES:
                     raise
             time.sleep(0.02 * (attempt + 1)
                        * (1 + (uuid.uuid4().int & 0xFF) / 256))
@@ -1058,9 +1054,7 @@ def _write_snapshot(table_dir: str, df: DataFrame,
                     [999] + [pf["field-id"] for pf in spec["fields"]]),
                 "default-sort-order-id": 0,
                 "sort-orders": [{"order-id": 0, "fields": []}],
-                "properties": {"write.format.default": "parquet",
-                               **({_FIELD_IDS_PROP: "true"}
-                                  if use_ids else {})},
+                "properties": {"write.format.default": "parquet"},
                 "snapshots": [snapshot],
                 "snapshot-log": [{"snapshot-id": snap_id,
                                   "timestamp-ms": now_ms}],
@@ -1224,14 +1218,11 @@ def add_column(table_dir: str, name: str, ftype: str) -> dict:
     next field id, moves current-schema-id, and publishes through the
     same atomic no-overwrite vN protocol as data commits — concurrent
     writers conflict loudly, readers see old-or-new.  Existing data files
-    are untouched: read_table projects the CURRENT schema (by field id on
-    id-stamped tables, by name on legacy ones), so old files surface the
-    new column as NULL (Iceberg's add-column semantics).  Scalar types
-    only.  Renaming / dropping / promoting live in
-    :func:`rename_column` / :func:`drop_column` / :func:`promote_column`
-    — those require field-id-stamped data files (every table created
-    since field-id stamping landed) and refuse on legacy name-based
-    tables rather than misread."""
+    are untouched: read_table projects the CURRENT schema by field id,
+    so old files, which lack the new id, surface the new column as NULL
+    (Iceberg's add-column semantics).  Scalar types only.  Renaming /
+    dropping / promoting live in :func:`rename_column` /
+    :func:`drop_column` / :func:`promote_column`."""
     if ftype not in ("string", "int", "long", "double", "float",
                      "boolean", "binary"):
         raise NotImplementedError(
@@ -1244,26 +1235,18 @@ def add_column(table_dir: str, name: str, ftype: str) -> dict:
         meta["last-column-id"] = new_id
         return cur["fields"] + [{"id": new_id, "name": name,
                                  "required": False, "type": ftype}]
-    return _evolve_schema(table_dir, "addcol", mutate,
-                          require_ids=False)
+    return _evolve_schema(table_dir, "addcol", mutate)
 
 
-def _evolve_schema(table_dir: str, op: str, mutate,
-                   require_ids: bool = True) -> dict:
+def _evolve_schema(table_dir: str, op: str, mutate) -> dict:
     """Shared metadata-only schema commit: append a new schema
     (schema-id = max+1) built by ``mutate(meta, current_schema) ->
     new_fields``, move current-schema-id, publish atomically (same vN
-    no-overwrite protocol as data commits).  ``require_ids`` refuses on
-    tables whose data files lack parquet field ids — every evolution
-    except ADD needs field-id projection to be executed safely."""
+    no-overwrite protocol as data commits).  Data files are never
+    touched: every reader resolves columns by field id, which is what
+    makes a metadata-only rename / drop / promote safe."""
     meta = _load_metadata(table_dir)
     version = meta.pop("__loaded_version")
-    if require_ids and not _uses_field_ids(meta):
-        raise NotImplementedError(
-            f"{op}: table {table_dir!r} predates field-id stamping (no "
-            f"{_FIELD_IDS_PROP!r} property) — its files resolve columns "
-            "by NAME, so this evolution cannot be executed safely; only "
-            "add_column is supported on legacy tables")
     meta = dict(meta)
     cur = _current_schema(meta)
     new_fields = mutate(meta, cur)
@@ -1295,9 +1278,8 @@ def rename_column(table_dir: str, old: str, new: str) -> dict:
     file keyed on the old name still applies: its key columns are also
     id-resolved).  Partition source columns refuse (the spec names the
     partition path layout after them).  The fused ingest
-    (engine.encode_files) addresses physical columns by name and
-    refuses a renamed table until its files are rewritten — read_table
-    remains the full-fidelity reader (see assert_fused_name_safe)."""
+    (engine.encode_files) resolves its role columns by field id too
+    (:func:`fused_role_columns`), so it reads a renamed table as is."""
     def mutate(meta, cur):
         by_name = {f["name"]: f for f in cur["fields"]}
         if old not in by_name:
@@ -1370,115 +1352,13 @@ def promote_column(table_dir: str, name: str, new_type: str) -> dict:
     return _evolve_schema(table_dir, "promote", mutate)
 
 
-def assert_fused_name_safe(table_dir: str,
-                           snapshot_id: int | None = None,
-                           preloaded: tuple[dict, list[dict]] | None = None
-                           ) -> None:
-    """Refuse the file-level fused ingest on tables whose LIVE data files
-    may carry columns under names the CURRENT schema does not mean: the
-    fused Arrow reader (engine.encode_files) addresses physical parquet
-    columns BY NAME.  Each live file's WRITE schema is
-    resolved through its snapshot's recorded schema-id; a file whose
-    write schema gave a shared field id a different name or type
-    (rename / promote), or used a current name for a DIFFERENT field id
-    (drop + re-add), makes name-addressing unsafe — read_table
-    (field-id projection) remains correct, and rewriting the files
-    (overwrite, or compact_files for delete-dirtied ones) re-aligns
-    them, after which this check passes again.  Pure adds always pass:
-    old files simply lack the new column.  A live file whose snapshot
-    was expired on an evolved table cannot prove its write schema and
-    refuses conservatively.
-
-    ``preloaded=(meta, data_entries)`` skips the metadata-tree walk —
-    callers that already hold a :func:`_snapshot_entries` result (the
-    fused planner, via :func:`fused_plan`) must not pay a second full
-    manifest read at 10^5-10^6 files just for the guard."""
-    if preloaded is not None:
-        meta, data = preloaded
-        if len(meta["schemas"]) == 1:
-            return                      # never evolved — trivially safe
-    else:
-        meta = _load_metadata(table_dir)
-        if len(meta["schemas"]) == 1:
-            return                      # never evolved — trivially safe
-        meta, data, _ = _snapshot_entries(table_dir, snapshot_id)
-    cur = _current_schema(meta)
-    cur_sid = cur.get("schema-id", 0)
-    snap_schema = {s["snapshot-id"]: s.get("schema-id", 0)
-                   for s in meta["snapshots"]}
-    schema_by_id = {s.get("schema-id", 0): s for s in meta["schemas"]}
-    write_sids = set()
-    for e in data:
-        sid = snap_schema.get(e["_snapshot_id"])
-        if sid is None:
-            # expired snapshot on an evolved table: write schema
-            # unprovable — check against the whole history
-            write_sids = set(schema_by_id) - {cur_sid}
-            break
-        if sid != cur_sid:
-            write_sids.add(sid)
-    cur_by_id = {f["id"]: f for f in cur["fields"]}
-    cur_by_name = {f["name"]: f for f in cur["fields"]}
-    for sid in sorted(write_sids):
-        for f in schema_by_id[sid]["fields"]:
-            c = cur_by_id.get(f["id"])
-            if c is not None and (c["name"] != f["name"]
-                                  or c["type"] != f["type"]):
-                raise ValueError(
-                    f"{table_dir}: live files written under schema "
-                    f"{sid} carry field id {f['id']} as "
-                    f"{f['name']!r}:{f['type']}, now "
-                    f"{c['name']!r}:{c['type']}; the fused file-level "
-                    "paths address physical columns by name — use "
-                    "read_table, or rewrite the files (overwrite) to "
-                    "re-align them")
-            n = cur_by_name.get(f["name"])
-            if n is not None and n["id"] != f["id"]:
-                raise ValueError(
-                    f"{table_dir}: column name {f['name']!r} was "
-                    f"re-used for a different field id ({f['id']} -> "
-                    f"{n['id']}, drop + re-add); physical columns under "
-                    "the stale name would resurrect dead data in a "
-                    "name-addressed read — use read_table, or rewrite "
-                    "the files (overwrite)")
-
-
-def fused_plan(table_dir: str, snapshot_id: int | None = None
-               ) -> tuple[dict, list[dict], list[dict]]:
-    """ONE metadata-tree walk for the fused ingest planner
-    (engine.encode_files): returns ``(meta, data_entries,
-    delete_entries)`` from a single :func:`_snapshot_entries` read and
-    runs :func:`assert_fused_name_safe` against that same result, rather
-    than three independent full manifest reads (guard, delete_files,
-    data_files) per call."""
-    meta, data, dels = _snapshot_entries(table_dir, snapshot_id)
-    assert_fused_name_safe(table_dir, snapshot_id,
-                           preloaded=(meta, data))
-    return meta, data, dels
-
-
-def refuse_raw_scan_on_deletes(table_dir: str, dels: list[dict]) -> None:
-    """Raise when a snapshot carries delete files and the caller is a raw
-    file-level scan that would resurrect deleted rows.  Shared by
-    :func:`data_files` and the fused ingest planner."""
-    if dels:
-        npos = sum(1 for d in dels if d.get("content", 0) == 1)
-        raise NotImplementedError(
-            f"{table_dir}: the snapshot carries {npos} position-delete "
-            f"and {len(dels) - npos} equality-delete file(s); a raw "
-            "file-level scan would resurrect deleted rows. Read via "
-            "iceberg.read_table (applies the deletes), or run "
-            "iceberg.compact_files first for file-level consumers "
-            "(engine.encode_files).")
-
-
 def fused_role_columns(table_dir: str, roles: list[str]) -> dict:
     """Map the engine's canonical role-column names (``doc_id``,
-    ``payload``, …) to the table's CURRENT physical names, following
-    renames through field ids.  Used by the fused ingest after
-    :func:`assert_fused_name_safe` — once that guard passes, live files
-    carry the current schema's names, so resolving roles against the
-    current schema is exactly what reads the right physical columns.
+    ``payload``, …) to the field ids of the table's CURRENT schema that
+    serve them.  The fused ingest (engine.encode_files) reads each data
+    file's columns through these ids (the file's ``PARQUET:field_id``
+    footer metadata), so a file written under any earlier name of the
+    field reads the same.
 
     Resolution per role: FIELD-ID LINEAGE, walked oldest→newest through
     schema history — the role binds to the field id its name had at the
@@ -1492,8 +1372,7 @@ def fused_role_columns(table_dir: str, roles: list[str]) -> dict:
     source values as doc ids with no error.  A role whose field was
     dropped (and never re-added) raises."""
     meta = _load_metadata(table_dir)
-    cur = _current_schema(meta)
-    cur_by_id = {f["id"]: f["name"] for f in cur["fields"]}
+    cur_ids = {f["id"] for f in _current_schema(meta)["fields"]}
     history = sorted(meta["schemas"], key=lambda s: s.get("schema-id", 0))
     out = {}
     for r in roles:
@@ -1506,14 +1385,14 @@ def fused_role_columns(table_dir: str, roles: list[str]) -> dict:
                         if f["name"] == r), None)
             if hit is not None:
                 fid = hit           # first binding, or re-add after drop
-        if fid is None or fid not in cur_by_id:
+        if fid is None or fid not in cur_ids:
             raise ValueError(
                 f"{table_dir}: required column {r!r} is not in the "
                 "current schema and no rename of it survives — not a "
                 "decodable encoded table" if fid is None else
                 f"{table_dir}: required column {r!r} (field id {fid}) "
                 "was dropped from the schema")
-        out[r] = cur_by_id[fid]
+        out[r] = fid
     return out
 
 
@@ -1701,8 +1580,15 @@ def data_files(table_dir: str, snapshot_id: int | None = None,
     :func:`read_table` (which applies the deletes) or
     :func:`compact_files` (which rewrites them away)."""
     _, data, dels = _snapshot_entries(table_dir, snapshot_id)
-    if not ignore_deletes:
-        refuse_raw_scan_on_deletes(table_dir, dels)
+    if dels and not ignore_deletes:
+        npos = sum(1 for d in dels if d.get("content", 0) == 1)
+        raise NotImplementedError(
+            f"{table_dir}: the snapshot carries {npos} position-delete "
+            f"and {len(dels) - npos} equality-delete file(s); a raw "
+            "file-level scan would resurrect deleted rows. Read via "
+            "iceberg.read_table (applies the deletes), or run "
+            "iceberg.compact_files first for file-level consumers "
+            "(engine.encode_files).")
     return data
 
 
@@ -1768,15 +1654,11 @@ def _apply_equality_deletes(spark: SparkSession, df: DataFrame,
     Small delete sets broadcast; larger ones shuffle on the key."""
     fields = {f["name"]: f for f in _current_schema(meta)["fields"]}
     for cols, ds in _eq_delete_groups(meta, eq_dels).items():
-        if _uses_field_ids(meta):
-            # key columns resolve BY FIELD ID (current names requested):
-            # a delete file written before a rename still applies
-            spark.conf.set("spark.sql.parquet.fieldId.read.enabled",
-                           "true")
-            reader = spark.read.schema(_spark_struct_with_ids(
-                {"fields": [fields[c] for c in cols]}))
-        else:
-            reader = spark.read
+        # key columns resolve BY FIELD ID (current names requested): a
+        # delete file written before a rename still applies
+        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+        reader = spark.read.schema(_spark_struct_with_ids(
+            {"fields": [fields[c] for c in cols]}))
         keys = None
         for d in ds:
             k = (reader.parquet(d["file_path"]).select(*cols)
@@ -1927,10 +1809,9 @@ def read_table(spark: SparkSession, table_dir: str,
         df = _read_with_pos(spark, table_dir, files, dels, meta) \
             .drop("_file", "_pos")
     else:
-        # explicit CURRENT schema: files written before an add_column
-        # lack the new column and must surface it as NULL; id-stamped
-        # tables additionally resolve renamed/promoted columns by
-        # field id (see _schema_reader)
+        # explicit CURRENT schema, resolved by field id (see
+        # _schema_reader): files written before an add_column surface
+        # the new column as NULL, renamed/promoted columns resolve
         df = _schema_reader(spark, meta).parquet(*paths)
     if between is not None:
         col, lo, hi = between
@@ -1955,39 +1836,27 @@ def _ddl_type(t) -> str:
     return _ICEBERG_TO_SPARK_DDL.get(t, t)
 
 
-def _ddl_of_schema(schema: dict) -> str:
-    return ", ".join(f"{f['name']} {_ddl_type(f['type'])}"
-                     for f in schema["fields"])
-
-
 def _spark_ddl(table_dir: str) -> str:
-    return _ddl_of_schema(_current_schema(_load_metadata(table_dir)))
+    return ", ".join(f"{f['name']} {_ddl_type(f['type'])}" for f in
+                     _current_schema(_load_metadata(table_dir))["fields"])
 
 
 # ---------------------------------------------------------------------------
 # field-id projection (schema evolution support)
 #
-# New tables stamp the Iceberg field id of every column, and of a list's
-# element, into the parquet footers (parquet's standard field_id slot,
-# set as ``PARQUET:field_id`` Arrow field metadata by the task-side
-# pyarrow writer, :func:`_write_data_files`), and readers resolve
-# columns BY ID instead of by name
-# (``spark.sql.parquet.fieldId.read.enabled``).  That is what makes
-# rename/drop/promote safe: a renamed column still resolves to the same
-# physical data, a dropped-then-re-added name gets a NEW id so old
-# physical columns with the stale name surface NULL instead of
-# resurrecting dead data, and int->long promotion widens on read.
-# Tables created before this capability (no ``schema.field-ids-in-files``
-# property) keep the name-based read path and REFUSE rename/drop/promote
-# — a name-based reader cannot execute them safely.
+# Every writer stamps the Iceberg field id of every column, and of a
+# list's element, into the parquet footers (parquet's standard field_id
+# slot, set as ``PARQUET:field_id`` Arrow field metadata by the
+# task-side pyarrow writer, :func:`_write_data_files`), and every reader
+# resolves columns BY ID, never by name: read_table and the delete
+# readers through ``spark.sql.parquet.fieldId.read.enabled``, the fused
+# ingest (engine.encode_files) through each file's footer metadata.
+# That is what makes rename/drop/promote safe: a renamed column still
+# resolves to the same physical data, a dropped-then-re-added name gets
+# a NEW id so old physical columns with the stale name surface NULL
+# instead of resurrecting dead data, and int->long promotion widens on
+# read.  A data file without field ids fails the read loudly.
 # ---------------------------------------------------------------------------
-
-_FIELD_IDS_PROP = "schema.field-ids-in-files"
-
-
-def _uses_field_ids(meta: dict) -> bool:
-    return meta.get("properties", {}).get(_FIELD_IDS_PROP) == "true"
-
 
 def _spark_struct_with_ids(schema: dict):
     """The current schema as a StructType whose every field carries
@@ -2013,15 +1882,11 @@ def _spark_struct_with_ids(schema: dict):
 
 
 def _schema_reader(spark: SparkSession, meta: dict):
-    """A DataFrameReader projecting the table's CURRENT schema — by
-    field id when the table stamps ids (rename/drop/promote safe), by
-    name otherwise (legacy tables; evolution beyond add_column refuses
-    there)."""
-    if _uses_field_ids(meta):
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        return spark.read.schema(
-            _spark_struct_with_ids(_current_schema(meta)))
-    return spark.read.schema(_ddl_of_schema(_current_schema(meta)))
+    """A DataFrameReader projecting the table's CURRENT schema by field
+    id (rename/drop/promote safe).  A file with no field ids fails the
+    scan (Spark: "Parquet file schema doesn't contain any field Ids")."""
+    spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+    return spark.read.schema(_spark_struct_with_ids(_current_schema(meta)))
 
 
 def snapshots(table_dir: str) -> list[dict]:
@@ -2211,9 +2076,9 @@ def write_position_deletes(spark: SparkSession, table_dir: str,
     now_ms = time.time_ns() // 1_000_000
     nfiles = (n_pos + _DELETE_ROWS_PER_FILE - 1) // _DELETE_ROWS_PER_FILE
     # file_path/pos under the spec's RESERVED field ids: stamped into the
-    # footers on id-stamped tables (readers here match these constant
-    # names either way), and as manifest bounds, which let a reader skip
-    # delete files irrelevant to the data file it scans
+    # footers (readers here match these constant names), and as manifest
+    # bounds, which let a reader skip delete files irrelevant to the
+    # data file it scans
     del_schema = {"fields": [
         {"id": _FP_FID, "name": "file_path", "type": "string"},
         {"id": _POS_FID, "name": "pos", "type": "long"}]}
@@ -2223,7 +2088,7 @@ def write_position_deletes(spark: SparkSession, table_dir: str,
         .repartitionByRange(nfiles, "file_path", "pos")
         .sortWithinPartitions("file_path", "pos"),
         str(Path(table_dir) / "data" / f"snap-{snap_id}"), del_schema,
-        {"fields": []}, _uses_field_ids(prev_meta))
+        {"fields": []})
     pos_df.unpersist()
     entries = _file_entries(
         stats, snap_id, 1, {f["name"]: f for f in del_schema["fields"]},
@@ -2305,14 +2170,13 @@ def write_equality_deletes(spark: SparkSession, table_dir: str,
     seq = prev_meta.get("last-sequence-number", 0) + 1
     now_ms = time.time_ns() // 1_000_000
     nfiles = (n_keys + _DELETE_ROWS_PER_FILE - 1) // _DELETE_ROWS_PER_FILE
-    # on id-stamped tables the key columns carry their table field ids
-    # so the read side can resolve them by id even after a later rename
+    # the key columns carry their table field ids so the read side can
+    # resolve them by id even after a later rename
     key_fields = {c: fields[c] for c in cols}
     stats = _write_data_files(
         keys_df.repartitionByRange(nfiles, *cols).sortWithinPartitions(*cols),
         str(Path(table_dir) / "data" / f"snap-{snap_id}"),
-        {"fields": list(key_fields.values())}, {"fields": []},
-        _uses_field_ids(prev_meta))
+        {"fields": list(key_fields.values())}, {"fields": []})
     keys_df.unpersist()
     entries = _file_entries(stats, snap_id, 2, key_fields,
                             [n for n, _, _ in part_fields],
@@ -2390,8 +2254,7 @@ def compact_files(spark: SparkSession, table_dir: str) -> dict:
     df = _read_with_pos(spark, table_dir, dirty_entries, dels,
                         prev_meta).drop("_file", "_pos")
     stats = _write_data_files(
-        df, str(Path(table_dir) / "data" / f"snap-{snap_id}"), schema, spec,
-        _uses_field_ids(prev_meta))
+        df, str(Path(table_dir) / "data" / f"snap-{snap_id}"), schema, spec)
     entries = _file_entries(stats, snap_id, 0,
                             {f["name"]: f for f in schema["fields"]},
                             [n for n, _, _ in part_fields])

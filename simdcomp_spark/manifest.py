@@ -133,6 +133,22 @@ def completed_input_files_iceberg(table_dir: str) -> set[str]:
         iceberg._metadata_or_none(table_dir))["simdcomp-input-files"]
 
 
+def _read_roles(spark, input_path: str, files: list[str]) -> DataFrame:
+    """``files`` of the ingest input with their ``doc_id`` and ``tokens``
+    columns under those role names, resolved as
+    :func:`engine.encode_files` resolves them: by name in a plain
+    directory, by field id in an Iceberg table (renamed roles read back
+    under their role names)."""
+    if not iceberg.is_iceberg_table(input_path):
+        return spark.read.parquet(*files)
+    meta = iceberg._load_metadata(input_path)
+    fids = iceberg.fused_role_columns(input_path, ["doc_id", "tokens"])
+    name = {f["id"]: f["name"]
+            for f in iceberg._current_schema(meta)["fields"]}
+    return (iceberg._schema_reader(spark, meta).parquet(*files)
+            .select(*[F.col(name[fid]).alias(r) for r, fid in fids.items()]))
+
+
 def encode_files_resumable_iceberg(spark, input_path: str, table_dir: str,
                                    codec: str = "auto",
                                    split_threshold: int =
@@ -161,7 +177,8 @@ def encode_files_resumable_iceberg(spark, input_path: str, table_dir: str,
     input is a DataFrame with no stable file identity.
 
     ``verify=True`` round-trips EACH batch right after its commit
-    (decode of the batch's data files vs the batch's input files) and on
+    (decode of the batch's data files vs the batch's input files, read
+    the way the encode read them: :func:`_read_roles`) and on
     mismatch ROLLS BACK that snapshot (iceberg.rollback_last_snapshot)
     before raising — corrupt data never stays current, and the dropped
     snapshot's lineage vanishes with it, so the re-run (with the fixed
@@ -215,7 +232,7 @@ def encode_files_resumable_iceberg(spark, input_path: str, table_dir: str,
             dec = engine.decode(spark.read.parquet(*new_files),
                                 reassemble=True)
             bad = engine.verify_roundtrip(
-                spark.read.parquet(*batch), dec)
+                _read_roles(spark, input_path, batch), dec)
             if bad:
                 # pin the snapshot being reverted: a concurrent append
                 # landing between this batch's commit and the rollback

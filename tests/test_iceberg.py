@@ -774,7 +774,7 @@ def test_export_keeps_temporal_double_boolean_columns(spark, tmp_path):
 
 def test_schema_evolution_add_column(spark, unit_df, tmp_path):
     """add_column is a metadata-only commit: a new schema-id becomes
-    current, old data files surface the column as NULL (name-based
+    current, old data files surface the column as NULL (field-id
     projection against the CURRENT schema), appends must carry the new
     schema, and the commit goes through the same atomic vN protocol."""
     table = str(tmp_path / "evo")
@@ -990,7 +990,8 @@ def test_avro_codec_property(records):
     assert got_schema == schema and got == records
 
 
-def test_concurrent_append_rebases_and_retries(spark, unit_df, tmp_path):
+def test_concurrent_append_rebases_and_retries(spark, unit_df, tmp_path,
+                                               monkeypatch):
     """Two appends racing from the same parent: the CAS loser REBASES —
     reloads the winner's metadata, rebuilds its manifest list + sequence
     number, re-attaches — instead of failing (appends invalidate
@@ -1016,13 +1017,9 @@ def test_concurrent_append_rebases_and_retries(spark, unit_df, tmp_path):
     # with retries disabled the same race fails loudly
     stale2 = iceberg._load_metadata(table)
     iceberg.append(b.limit(3), table)
-    import os as _os
-    _os.environ["SIMDCOMP_COMMIT_RETRIES"] = "0"
-    try:
-        with pytest.raises(RuntimeError, match="commit conflict"):
-            iceberg._write_snapshot(table, b.limit(2), stale2)
-    finally:
-        del _os.environ["SIMDCOMP_COMMIT_RETRIES"]
+    monkeypatch.setattr(iceberg, "_COMMIT_RETRIES", 0)
+    with pytest.raises(RuntimeError, match="commit conflict"):
+        iceberg._write_snapshot(table, b.limit(2), stale2)
     # non-append commits (overwrite) keep fail-loudly semantics
     stale3 = iceberg._load_metadata(table)
     iceberg.append(b.limit(2), table)

@@ -1,20 +1,24 @@
-"""Schema evolution on field-id-stamped Iceberg tables: rename / drop /
-promote resolve physical columns by parquet field id (the only safe way
-to execute them — reference analog: the reference has no tables at all,
-reference/README.md:23-24; semantics follow the Iceberg v2 spec), legacy
-name-based tables refuse, and the fused file-level ingest
-(engine.encode_files) refuses tables whose live files carry stale
-physical names until a rewrite re-aligns them."""
+"""Schema evolution on Iceberg tables: every data file carries parquet
+field ids, and rename / drop / promote resolve physical columns by them
+(the only safe way to execute them — reference analog: the reference has
+no tables at all, reference/README.md:23-24; semantics follow the
+Iceberg v2 spec).  Every reader resolves by id: read_table through
+Spark's field-id projection, the fused file-level ingest
+(engine.encode_files) through each file's footer metadata, so both read
+a renamed table as is.  A data file without field ids, or one that
+predates a drop + re-add of a role column, fails loudly."""
 
 from __future__ import annotations
 
 import glob
-import os
+import re
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from simdcomp_spark import engine, fixtures, iceberg
+from simdcomp_spark import engine, fixtures, iceberg, manifest
 
 
 @pytest.fixture(scope="module")
@@ -24,7 +28,8 @@ def unit_df(spark):
 
 @pytest.fixture()
 def table(spark, tmp_path):
-    """A fresh 20-row tokens table (the BASELINE.json input shape)."""
+    """A fresh 20-row tokens table (the BASELINE.json input shape):
+    doc ``str(i)`` holds tokens ``[1, 2, i]``."""
     t = str(tmp_path / "t")
     df = spark.createDataFrame(
         [(str(i), "web" if i % 2 else "book", 3, [1, 2, i])
@@ -34,14 +39,24 @@ def table(spark, tmp_path):
     return t
 
 
+def _truth(spark, extra=()):
+    """(doc_id, tokens) of the ``table`` fixture plus ``extra`` rows."""
+    return spark.createDataFrame(
+        [(str(i), [1, 2, i]) for i in range(20)] + list(extra),
+        "doc_id string, tokens array<int>")
+
+
+def _field_ids(table):
+    """{current column name: field id}."""
+    return {f["name"]: f["id"] for f in iceberg._current_schema(
+        iceberg._load_metadata(table))["fields"]}
+
+
 def test_new_tables_stamp_field_ids(spark, table):
     """Every data file footer carries the Iceberg field id of each
-    column (parquet's standard field_id slot), a list column's element
-    carries its element-id, and the table records the capability as a
-    property."""
-    import pyarrow.parquet as pq
+    column (parquet's standard field_id slot), and a list column's
+    element carries its element-id."""
     meta = iceberg._load_metadata(table)
-    assert iceberg._uses_field_ids(meta)
     fields = iceberg._current_schema(meta)["fields"]
     want = {f["name"]: f["id"] for f in fields}
     elem = next(f["type"]["element-id"] for f in fields
@@ -138,36 +153,6 @@ def test_promote_int_to_long(spark, table):
     assert len(every) > len(hit)
 
 
-def test_legacy_tables_refuse_rename_drop_promote(spark, tmp_path):
-    """Tables written without field ids (the pre-evolution layout) keep
-    working for read/append/add_column but refuse the evolutions a
-    name-based reader cannot execute safely."""
-    t = str(tmp_path / "legacy")
-    df = spark.createDataFrame([("a", 1, [1, 2])],
-                               "doc_id string, n_tok int, "
-                               "tokens array<int>")
-    os.environ["SIMDCOMP_ICEBERG_FIELD_IDS"] = "0"
-    try:
-        iceberg.export_encoded(df, t)
-    finally:
-        del os.environ["SIMDCOMP_ICEBERG_FIELD_IDS"]
-    assert not iceberg._uses_field_ids(iceberg._load_metadata(t))
-    iceberg.append(df, t)                        # appends stay id-less
-    import pyarrow.parquet as pq
-    for f in glob.glob(t + "/data/*/*.parquet"):
-        assert all(fl.metadata is None or
-                   b"PARQUET:field_id" not in fl.metadata
-                   for fl in pq.ParquetFile(f).schema_arrow)
-    assert iceberg.read_table(spark, t).count() == 2
-    for op in (lambda: iceberg.rename_column(t, "n_tok", "x"),
-               lambda: iceberg.drop_column(t, "n_tok"),
-               lambda: iceberg.promote_column(t, "n_tok", "long")):
-        with pytest.raises(NotImplementedError, match="field-id"):
-            op()
-    iceberg.add_column(t, "lang", "string")      # ADD alone stays legal
-    assert iceberg.read_table(spark, t).columns[-1] == "lang"
-
-
 def test_equality_delete_applies_across_rename(spark, table):
     """An equality-delete file written BEFORE a rename still applies
     after it: its key columns are resolved by field id too."""
@@ -197,13 +182,13 @@ def test_drop_refuses_live_equality_delete_key(spark, table):
     assert "source" not in iceberg.read_table(spark, table).columns
 
 
-def test_fused_paths_refuse_stale_names_until_rewrite(spark, unit_df,
-                                                      tmp_path):
+def test_encode_files_reads_renamed_roles_by_field_id(spark, unit_df,
+                                                    tmp_path):
     """The fused ingest (encode_files over an Iceberg TOKENS table)
-    addresses physical columns by NAME: it refuses a table whose live
-    files predate a rename of a role column, and accepts again once an
-    overwrite rewrites them under the current names.  Pure add_column
-    never trips the guard."""
+    resolves its role columns by field id: right after a rename of a
+    role column — no rewrite in between — it reads the files written
+    under the old name, and appends written under the new name, and the
+    encoded rows carry the canonical role names."""
     t = str(tmp_path / "tok")
     cols = ["doc_id", "source", "n_tok", "tokens"]
     tok = unit_df.select(*cols).orderBy("doc_id").limit(30)
@@ -214,57 +199,115 @@ def test_fused_paths_refuse_stale_names_until_rewrite(spark, unit_df,
     iceberg.add_column(t, "note", "string")
     assert enc().count() == n0                 # adds are fine
     iceberg.rename_column(t, "note", "remark")
-    # live files never carried 'note' -> still name-safe
     assert enc().count() == n0
     iceberg.rename_column(t, "doc_id", "document_id")
-    with pytest.raises(ValueError, match="fused|by name"):
-        enc().count()
-    # overwrite rewrites every live file under the current schema
-    iceberg.overwrite(iceberg.read_table(spark, t), t)
     out = enc()
     assert out.count() == n0
-    # the renamed role column is read from 'document_id' and the
-    # encoded rows carry the canonical role names
     assert engine.verify_roundtrip(
         tok, engine.decode(out, reassemble=True)) == 0
+    extra = spark.createDataFrame(
+        [("new", "web", 2, [7, 8], None)],
+        "document_id string, source string, n_tok int, "
+        "tokens array<int>, remark string")
+    iceberg.append(extra, t)
+    assert engine.verify_roundtrip(
+        tok.select("doc_id", "tokens").union(
+            extra.select("document_id", "tokens")),
+        engine.decode(enc(), reassemble=True)) == 0
 
 
-def test_fused_guard_conservative_on_expired_snapshots(spark, table):
-    """A live file whose snapshot was EXPIRED on an evolved table cannot
-    prove its write schema — the fused guard refuses conservatively
-    (the file may predate the rename), and an overwrite (whose snapshot
-    is live and current-schema) clears it."""
-    iceberg.rename_column(table, "n_tok", "tc")
+def test_encode_files_after_rename_append_expire(spark, table):
+    """rename → append → expire_snapshots: the original files outlive
+    the snapshot that wrote them (EXISTING entries) and still carry the
+    old name; encode_files reads them and the append by field id."""
+    iceberg.rename_column(table, "doc_id", "did")
     extra = spark.createDataFrame(
         [("z", "web", 1, [5])],
-        "doc_id string, source string, tc int, tokens array<int>")
+        "did string, source string, n_tok int, tokens array<int>")
     iceberg.append(extra, table)          # lives under schema 1
     iceberg.expire_snapshots(table, keep_last=1)
-    # the ORIGINAL files' snapshot is gone; only the append's survives,
-    # but the original files are still live (EXISTING entries)
-    with pytest.raises(ValueError, match="fused|by name|expired|schema"):
-        iceberg.assert_fused_name_safe(table)
-    iceberg.overwrite(iceberg.read_table(spark, table), table)
-    iceberg.assert_fused_name_safe(table)            # realigned
+    out = engine.encode_files(spark, table, codec="bitpack")
+    assert engine.verify_roundtrip(
+        _truth(spark, [("z", [5])]),
+        engine.decode(out, reassemble=True)) == 0
+
+
+def test_file_without_field_ids_fails_loudly(spark, table):
+    """A data file written without field ids cannot be resolved by id:
+    read_table's scan and encode_files both raise, encode_files naming
+    the file, the role and the id."""
+    victim = iceberg.data_files(table)[0]["file_path"]
+    rows = pq.read_table(victim)
+    bare = pa.schema([pa.field(f.name, pa.list_(f.type.value_type)
+                               if pa.types.is_list(f.type) else f.type)
+                      for f in rows.schema])
+    pq.write_table(rows.cast(bare), victim)
+    assert all(b"PARQUET:field_id" not in (f.metadata or {})
+               for f in pq.ParquetFile(victim).schema_arrow)
+    # a bare count() requests no column, so Spark checks no ids; any
+    # scan that reads a column raises
+    with pytest.raises(Exception, match="field Ids"):
+        iceberg.read_table(spark, table).collect()
+    doc_id = _field_ids(table)["doc_id"]
+    with pytest.raises(Exception, match=(
+            re.escape(victim) + f": no column with field id {doc_id} "
+            "for role 'doc_id'")):
+        engine.encode_files(spark, table, codec="bitpack").count()
+
+
+def test_encode_files_refuses_readded_role(spark, table):
+    """drop + re-add of doc_id gives the role a NEW field id that no
+    existing file carries: encode_files raises naming the role and the
+    id instead of reading the dead column under its recycled name."""
+    old = _field_ids(table)["doc_id"]
+    iceberg.drop_column(table, "doc_id")
+    iceberg.add_column(table, "doc_id", "string")
+    new = _field_ids(table)["doc_id"]
+    assert new != old
+    with pytest.raises(Exception, match=(
+            f"no column with field id {new} for role 'doc_id'")):
+        engine.encode_files(spark, table, codec="bitpack").count()
+
+
+def test_resumable_verify_reads_renamed_input(spark, table, tmp_path):
+    """encode_files_resumable_iceberg(verify=True) on an Iceberg input
+    whose doc_id was renamed: the verify arm reads the batch by field id
+    and renames the roles back, so the batch commits with no rollback."""
+    iceberg.rename_column(table, "doc_id", "document_id")
+    iceberg.append(spark.createDataFrame(
+        [("z", "web", 1, [5])],
+        "document_id string, source string, n_tok int, tokens array<int>"),
+        table)
+    out = str(tmp_path / "enc")
+    s = manifest.encode_files_resumable_iceberg(
+        spark, table, out, codec="bitpack", verify=True)
+    assert s["encoded_files"] == s["input_files"] and s["rows"] == 21
+    assert [x["snapshot-id"] for x in iceberg.snapshots(out)] \
+        == s["snapshots"]
+    assert engine.verify_roundtrip(
+        _truth(spark, [("z", [5])]),
+        engine.decode(iceberg.read_table(spark, out))) == 0
 
 
 def test_fused_role_columns_resolution(spark, table):
     roles = ["doc_id", "source", "n_tok"]
+    ids = _field_ids(table)
     assert iceberg.fused_role_columns(table, roles) == {
-        r: r for r in roles}
+        r: ids[r] for r in roles}
     iceberg.rename_column(table, "n_tok", "tc")
-    assert iceberg.fused_role_columns(table, roles)["n_tok"] == "tc"
+    assert iceberg.fused_role_columns(table, roles)["n_tok"] == ids["n_tok"]
     iceberg.drop_column(table, "tc")
     with pytest.raises(ValueError, match="dropped"):
         iceberg.fused_role_columns(table, roles)
     # re-adding the original NAME resolves to the re-added column
     iceberg.add_column(table, "n_tok", "int")
-    assert iceberg.fused_role_columns(table, roles)["n_tok"] == "n_tok"
+    readded = _field_ids(table)["n_tok"]
+    assert readded != ids["n_tok"]
+    assert iceberg.fused_role_columns(table, roles)["n_tok"] == readded
 
 
 def test_schema_id_recorded_on_snapshots(spark, table):
-    """Snapshots record the schema they were written under — the basis
-    of the fused guard's per-file write-schema resolution."""
+    """Snapshots record the schema they were written under."""
     iceberg.rename_column(table, "n_tok", "tc")
     extra = spark.createDataFrame(
         [("z", "web", 1, [5])],
@@ -299,8 +342,9 @@ def test_decode_after_role_rename(spark, tmp_path):
 def test_fused_roles_resist_name_reuse_chain(spark, tmp_path):
     """A rename chain that RE-USES a role name for a different field
     (doc_id→did, then source→doc_id) must resolve by FIELD-ID lineage:
-    role doc_id → physical 'did', role source → physical 'doc_id'.
-    Name-first resolution silently read source values as doc ids."""
+    role doc_id → the original doc_id field (now 'did'), role source →
+    the original source field (now 'doc_id').  Name-first resolution
+    silently read source values as doc ids."""
     t = str(tmp_path / "enc")
     tok = spark.createDataFrame(
         [(f"d{i}", f"src{i % 3}", 4, [i, 2 * i, 3 * i, 4 * i])
@@ -308,13 +352,17 @@ def test_fused_roles_resist_name_reuse_chain(spark, tmp_path):
         "doc_id string, source string, n_tok int, tokens array<int>")
     enc = engine.encode(tok, codec="bitpack", split_threshold=None)
     iceberg.export_encoded(enc, t)
+    ids = _field_ids(t)
     iceberg.rename_column(t, "doc_id", "did")
     iceberg.rename_column(t, "source", "doc_id")
     iceberg.overwrite(iceberg.read_table(spark, t), t)
     cm = iceberg.fused_role_columns(t, ["doc_id", "source"])
-    assert cm == {"doc_id": "did", "source": "doc_id"}
+    assert cm == {"doc_id": ids["doc_id"], "source": ids["source"]}
+    name_of = {fid: name for name, fid in _field_ids(t).items()}
+    assert {r: name_of[fid] for r, fid in cm.items()} == {
+        "doc_id": "did", "source": "doc_id"}
     # the renames swap names, so map every column in one projection
-    role_of = {phys: role for role, phys in cm.items()}
+    role_of = {name_of[fid]: role for role, fid in cm.items()}
     back = iceberg.read_table(spark, t)
     back = back.select(*[F.col(c).alias(role_of.get(c, c))
                          for c in back.columns])
