@@ -4,7 +4,7 @@
 Package and launch from the repository root:
 
     zip -r /tmp/simdcomp_spark.zip simdcomp_spark
-    spark-submit --py-files /tmp/simdcomp_spark.zip \
+    spark-submit --master local[8] --py-files /tmp/simdcomp_spark.zip \
         scripts/submit_encode.py \
         --input  /data/tokens_table \
         --publish-iceberg /data/encoded_table \
@@ -20,8 +20,10 @@ records; no full-table re-export.  With ``--verify``, each batch is
 round-tripped right after its commit and ROLLED BACK on mismatch, so
 corrupt data never stays current.
 
-On a cluster the session comes from spark-submit's conf; local fallback
-uses engine.get_spark().
+The session is engine.get_spark(): under spark-submit the submitted
+``--master`` and ``--driver-memory`` stand and get_spark adds the engine's
+other settings; run as a plain script it starts ``local[<usable CPUs>]``
+(or ``local[$SPARK_GRAFT_CPUS]``).
 """
 
 from __future__ import annotations

@@ -87,16 +87,24 @@ def _scratch_dir() -> str:
 
 def get_spark(app: str = "simdcomp_spark", cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """The engine's SparkSession: ``local[cores]`` (``cores`` defaults to
+    ``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on) with the
+    settings below.  Under spark-submit (the JVM gateway already exists,
+    ``PYSPARK_GATEWAY_PORT`` is set) the submitted ``--master`` and
+    ``--driver-memory`` stand; every other setting still applies."""
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) \
+        or len(os.sched_getaffinity(0))
     shuffle_partitions = shuffle_partitions or cores
+    builder = SparkSession.builder
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        builder = builder.master(f"local[{cores}]").config(
+            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
     return (
-        SparkSession.builder
-        .master(f"local[{cores}]")
+        builder
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # 2048-row Arrow batches keep the per-thread token working set near
@@ -120,6 +128,11 @@ def get_spark(app: str = "simdcomp_spark", cores: int | None = None,
                 os.environ.get("SIMDCOMP_WORKER_THREADS", "1"))
         .config("spark.executorEnv.ARROW_IO_THREADS",
                 os.environ.get("SIMDCOMP_ARROW_IO_THREADS", "2"))
+        # a reused worker keeps its imports and the stat-guarded zip-import
+        # cache that importing simdcomp_spark installs in it (see
+        # simdcomp_spark._install_zip_import_cache): PySpark's per-task
+        # importlib.invalidate_caches() then costs a stat per archive
+        # instead of re-parsing pyspark.zip and the Spark jar
         .config("spark.python.worker.reuse", "true")
         .config("spark.ui.enabled", "false")
         # shuffle/spill scratch on tmpfs when it has headroom (see
