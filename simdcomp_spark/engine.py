@@ -18,9 +18,11 @@ Spark-first design (SURVEY.md §1.4, §4):
 * one decoder, one reassembly: every encoded read is a DataFrame
   (``iceberg.read_table``, or ``spark.read.parquet`` for plain
   directories) handed to :func:`decode`, which is lazy (calling it
-  starts no Spark job) and whose one reassembly plan shuffles the
-  COMPRESSED segments by doc_id and stitches them after a per-partition
-  sort;
+  starts no Spark job) and whose one stitch reassembles documents
+  straight over the scan when ``read_table`` vouches that the writer
+  stored every document's segments as whole runs, and otherwise after
+  shuffling the COMPRESSED segments by doc_id and sorting each
+  partition;
 * metrics are plain DataFrame aggregations over the encoded output plus
   per-task encode timings carried as constant batch columns — queryable,
   not log-scraped.
@@ -36,9 +38,11 @@ import json
 import os
 import tempfile
 import time
+import weakref
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -48,7 +52,8 @@ from .codecs.auto import choose_codec_flat
 ENCODED_SCHEMA = ("doc_id string, source string, seg_id int, n_tok int, "
                   "codec string, widths binary, inits binary, payload binary, "
                   "pid int, enc_ns long, content_hash binary")
-DECODED_SCHEMA = "doc_id string, source string, seg_id int, tokens array<int>"
+DECODED_SCHEMA = ("doc_id string, source string, seg_id int, "
+                  "tokens array<int>, n_tok int")
 
 DEFAULT_SPLIT_THRESHOLD = 1 << 16  # tokens per segment
 # rows per pyarrow batch in encode_files: 2048 rows ≈ 7 MB of tokens keeps
@@ -670,23 +675,41 @@ def decode(df_encoded: DataFrame, reassemble: bool = True) -> DataFrame:
     exceeded the split threshold, or when the consumer works per
     segment.
 
-    reassemble=True always runs the one reassembly plan: the shuffle
-    moves the COMPRESSED segments (repartition by doc_id + sort by
-    seg_id, decode-and-concatenate post-shuffle in one vectorized pass)
-    rather than decoded 32-bit arrays — 3-16× fewer bytes across the
-    exchange.  Concatenation in seg_id order is just merged row lengths
-    over the already-ordered flat decode buffer.  Rows with a DUPLICATE
-    (doc_id, seg_id) — malformed input the writer never emits —
-    concatenate in partition order; a null doc_id raises ``ValueError``
-    (it names no document to stitch into).
+    reassemble=True stitches each document's segments back into one row
+    with one stitch (:func:`_stitch`) over one of two plans:
 
-    Either way the result is lazy: calling ``decode`` starts no Spark
-    job."""
+    * the frame :func:`iceberg.read_table` returned for a table whose
+      writer certified that every data file holds each document's
+      segments as whole runs (seg_id 0, 1, …, k−1 in one row group; see
+      ``iceberg._WHOLE_RUNS_PROP``) is stitched straight over the scan,
+      with no exchange: Spark gives each row group to exactly one scan
+      split and reads a split in file order, so every run arrives whole.
+      The stitch checks each run's seg_ids against their positions and
+      raises a ``ValueError`` naming the doc_id on a mismatch, so a wrong
+      certificate fails the job instead of returning wrong tokens.  A
+      doc_id stored twice as two whole runs decodes as two rows here;
+    * any other frame (a derived frame, ``spark.read.parquet``, a salted
+      or delete-carrying table, a table from another writer) takes the
+      exchange: the COMPRESSED segments are repartitioned by doc_id and
+      sorted by seg_id — 3-16× fewer bytes across the exchange than
+      decoded 32-bit arrays.  Rows with a DUPLICATE (doc_id, seg_id) —
+      malformed input the writer never emits — concatenate in partition
+      order.
+
+    Either way concatenation in seg_id order is just merged row lengths
+    over the already-ordered flat decode buffer, a null doc_id raises
+    ``ValueError`` (it names no document to stitch into), and the result
+    is lazy: calling ``decode`` starts no Spark job."""
     cols = ["doc_id", "source", "seg_id", "n_tok", "codec", "widths",
             "inits", "payload"]
     src = df_encoded.select(*cols)
     if reassemble:
-        return _decode_reassembled(src)
+        if df_encoded in _WHOLE_RUN_SCANS:
+            return _stitch(src, whole_runs=True)
+        n = int(src.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        return _stitch(src.repartition(n, "doc_id")
+                       .sortWithinPartitions("doc_id", "seg_id"),
+                       whole_runs=False)
 
     def decode_fn(it):
         for batch in it:
@@ -695,29 +718,69 @@ def decode(df_encoded: DataFrame, reassemble: bool = True) -> DataFrame:
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0), batch.column(1),
                  batch.column(2).cast(pa.int32()),
-                 _list_from_flat(flat.view(np.int32), lens)],
-                names=["doc_id", "source", "seg_id", "tokens"])
+                 _list_from_flat(flat.view(np.int32), lens),
+                 pa.array(lens, type=pa.int32())],
+                names=["doc_id", "source", "seg_id", "tokens", "n_tok"])
 
-    return src.mapInArrow(decode_fn, schema=DECODED_SCHEMA) \
-        .withColumn("n_tok", F.size("tokens"))
+    return src.mapInArrow(decode_fn, schema=DECODED_SCHEMA)
 
 
-def _decode_reassembled(src: DataFrame) -> DataFrame:
-    """Reassembling decode over ENCODED segments: shuffle compressed
-    bytes by doc_id, sort segments in place, decode each partition's
-    batches through the flat core and merge contiguous same-doc rows by
-    summing their lengths (the flat buffer is already in concatenation
-    order).  The only state across Arrow batches is the open tail doc."""
-    spark = src.sparkSession
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    srt = (src.repartition(n, "doc_id")
-           .sortWithinPartitions("doc_id", "seg_id"))
+# the DataFrames iceberg.read_table returned as bare scans of files whose
+# writer checked the whole-run rule (_whole_run_breaks) in every row
+# group, held weakly: only such an exact object skips decode()'s exchange
+_WHOLE_RUN_SCANS = weakref.WeakSet()
 
+
+def _run_breaks(ids: pa.Array, open_id) -> np.ndarray:
+    """bool per row of ``ids``: the row starts a new run of equal ids.
+    Row 0 does unless it equals ``open_id``, the id of the run the
+    previous batch left open (None: no open run).  A null id always
+    starts a run."""
+    n = len(ids)
+    brk = np.ones(n, dtype=bool)
+    if n > 1:
+        brk[1:] = pc.fill_null(pc.not_equal(
+            ids.slice(1), ids.slice(0, n - 1)), True).to_numpy(
+                zero_copy_only=False)
+    if n and open_id is not None:
+        brk[0] = ids[0].as_py() != open_id
+    return brk
+
+
+def _whole_run_breaks(ids: pa.Array, seg_ids: pa.Array, open_id,
+                      open_len: int) -> tuple[np.ndarray, int]:
+    """The whole-run rule over one batch of (doc_id, seg_id) rows, shared
+    by the writer's check (``iceberg._write_task``) and the no-exchange
+    stitch: a run starts where doc_id changes or seg_id is 0, and each
+    seg_id equals its position in its run.  ``open_id``/``open_len`` are
+    the id and segment count of the run the previous batch left open.
+    Returns the run-start mask (as :func:`_run_breaks`) and the first row
+    that breaks the rule, or -1."""
+    segs = pc.fill_null(seg_ids, -1).to_numpy(zero_copy_only=False)
+    brk = _run_breaks(ids, open_id) | (segs == 0)
+    idx = np.arange(len(ids))
+    first = np.maximum.accumulate(np.where(brk, idx, 0))
+    pos = idx - first
+    if len(ids) and not brk[0]:
+        pos[first == 0] += open_len
+    bad = np.flatnonzero(segs != pos)
+    return brk, int(bad[0]) if bad.size else -1
+
+
+def _stitch(src: DataFrame, whole_runs: bool) -> DataFrame:
+    """The reassembling stitch over ENCODED segments that arrive in
+    stitch order: each partition's batches decode through the flat core,
+    and each run of a document's segments merges by summing its lengths
+    (the flat buffer is already in concatenation order).  The only state
+    across Arrow batches is the open tail doc.  ``whole_runs`` (the
+    no-exchange plan) splits runs and checks seg_ids by
+    :func:`_whole_run_breaks`; otherwise a run is a stretch of equal
+    doc_ids (the exchange sorted them)."""
     def fn(it):
-        import pyarrow.compute as pc
         carry_id = None          # python str of the open doc
         carry_src = None
         carry_flat: list[np.ndarray] = []
+        carry_segs = 0           # segments of the open doc so far
 
         def emit_carry():
             flat = (carry_flat[0] if len(carry_flat) == 1
@@ -726,37 +789,43 @@ def _decode_reassembled(src: DataFrame) -> DataFrame:
                 [pa.array([carry_id], type=pa.string()),
                  pa.array([carry_src], type=pa.string()),
                  _list_from_flat(flat.view(np.int32),
-                                 np.array([flat.size], dtype=np.int64))],
-                names=["doc_id", "source", "tokens"])
+                                 np.array([flat.size], dtype=np.int64)),
+                 pa.array([flat.size], type=pa.int32())],
+                names=["doc_id", "source", "tokens", "n_tok"])
 
         for batch in it:
             nrows = batch.num_rows
             if nrows == 0:
                 continue
-            if batch.column(0).null_count:
+            ids = batch.column(0)
+            if ids.null_count:
                 # a null id names no document to stitch into: raise
                 # rather than merge it with its neighbours
                 raise ValueError(
                     "decode(reassemble=True): encoded input has a null "
                     "doc_id; decode it with reassemble=False")
+            if whole_runs:
+                brk, bad = _whole_run_breaks(ids, batch.column(2),
+                                             carry_id, carry_segs)
+                if bad >= 0:
+                    raise ValueError(
+                        f"decode(reassemble=True): doc_id "
+                        f"{ids[bad].as_py()!r} has seg_id "
+                        f"{batch.column(2)[bad].as_py()} out of place in "
+                        "its run; the table's segments are not whole "
+                        "runs, so its whole-run certificate is wrong")
+            else:
+                brk = _run_breaks(ids, carry_id)
             flat, lens = _EncodedBatch.from_columns(
                 *batch.columns[3:8]).decode()
-            ids = batch.column(0)
-            # contiguous same-doc runs: boundary where id[i] != id[i-1]
-            neq = pc.not_equal(ids.slice(1), ids.slice(0, nrows - 1))
-            neq = neq.to_numpy(zero_copy_only=False).astype(bool) \
-                if nrows > 1 else np.zeros(0, dtype=bool)
-            starts = np.concatenate(([0], np.flatnonzero(neq) + 1))
+            starts = np.flatnonzero(brk)
             ends = np.concatenate((starts[1:], [nrows]))
             off = np.concatenate(([0], np.cumsum(lens)))
-            first_id = ids[0].as_py()
-            if carry_id is not None and first_id == carry_id:
-                carry_flat.append(flat[:off[ends[0]]])
-                starts, ends = starts[1:], ends[1:]
-            elif carry_id is not None:
-                yield emit_carry()
-                carry_id = None
-                carry_flat = []
+            if not brk[0]:
+                # the batch opens inside the carried doc
+                head = int(starts[0]) if starts.size else nrows
+                carry_flat.append(flat[:off[head]])
+                carry_segs += head
             if starts.size:
                 if carry_id is not None:
                     yield emit_carry()
@@ -764,6 +833,7 @@ def _decode_reassembled(src: DataFrame) -> DataFrame:
                 carry_id = ids[starts[-1]].as_py()
                 carry_src = batch.column(1)[starts[-1]].as_py()
                 carry_flat = [flat[off[starts[-1]]:off[ends[-1]]]]
+                carry_segs = int(ends[-1] - starts[-1])
                 starts, ends = starts[:-1], ends[:-1]
             if starts.size:
                 doc_lens = off[ends] - off[starts]
@@ -772,14 +842,15 @@ def _decode_reassembled(src: DataFrame) -> DataFrame:
                     [ids.take(take), batch.column(1).take(take),
                      _list_from_flat(
                          flat[off[starts[0]]:off[ends[-1]]]
-                         .view(np.int32), doc_lens)],
-                    names=["doc_id", "source", "tokens"])
+                         .view(np.int32), doc_lens),
+                     pa.array(doc_lens, type=pa.int32())],
+                    names=["doc_id", "source", "tokens", "n_tok"])
         if carry_id is not None:
             yield emit_carry()
 
-    out = srt.mapInArrow(
-        fn, schema="doc_id string, source string, tokens array<int>")
-    return out.withColumn("n_tok", F.size("tokens"))
+    return src.mapInArrow(
+        fn, schema="doc_id string, source string, tokens array<int>, "
+                   "n_tok int")
 
 
 def point_lookup(df_encoded: DataFrame, index_col: str = "lookup_idx"

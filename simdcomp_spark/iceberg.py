@@ -82,6 +82,8 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from . import engine
+
 # ---------------------------------------------------------------------------
 # Minimal Avro 1.11 object-container codec (public spec, generic datum
 # reader/writer driven by the JSON schema)
@@ -440,7 +442,11 @@ def _sv_decode(t, b: bytes):
 # groups once this much Arrow data is buffered across them
 _ROW_GROUP_BYTES = 128 << 20
 _WRITTEN_SCHEMA = ("path string, rows long, bytes long, bounds string, "
-                   "partition string")
+                   "partition string, whole_runs boolean")
+# table property: every data file committed at a data sequence number at
+# or below this value passed the writer's whole-run check (_RunCheck), so
+# read_table may let engine.decode stitch it without an exchange
+_WHOLE_RUNS_PROP = "simdcomp.whole-segment-runs-through-seq"
 
 
 def _write_data_files(df: DataFrame, out_dir: str, schema: dict,
@@ -450,9 +456,10 @@ def _write_data_files(df: DataFrame, out_dir: str, schema: dict,
     writers, compaction).  Each Spark task writes its own files with
     pyarrow and returns one small row per file, so the write is ONE job
     and nothing re-reads the footers, in the Spark driver or in another
-    job.  Returns ``[{"path", "rows", "bytes", "bounds", "partition"}]``
-    sorted by path: ``bounds`` is ``{column: [min, max]}`` and ``partition``
-    ``{partition field: value}``.
+    job.  Returns ``[{"path", "rows", "bytes", "bounds", "partition",
+    "whole_runs"}]`` sorted by path: ``bounds`` is ``{column: [min,
+    max]}``, ``partition`` ``{partition field: value}`` and
+    ``whole_runs`` whether the file passed :class:`_RunCheck`.
 
     ``schema`` is an Iceberg struct whose fields name ``df``'s columns;
     each column (and a list's element) carries its field id in the
@@ -555,24 +562,61 @@ def _footer_stats(md) -> dict:
             if covered[k] == md.num_row_groups}
 
 
+class _RunCheck:
+    """The writer's whole-run check of one data file: in every row group,
+    each document's segments form whole runs under
+    ``engine._whole_run_breaks`` (a run starts at seg_id 0 or a new
+    doc_id, and its seg_ids are 0, 1, …, k−1).  The open run carries
+    across Arrow batches; :meth:`flush` ends it at a row-group boundary,
+    so a run straddling one fails.  A file without doc_id and seg_id
+    columns fails."""
+
+    def __init__(self):
+        self.ok, self.open_id, self.open_len = True, None, 0
+
+    def feed(self, rows: pa.RecordBatch) -> None:
+        if not self.ok or rows.num_rows == 0:
+            return
+        if not {"doc_id", "seg_id"} <= set(rows.schema.names):
+            self.ok = False
+            return
+        ids = rows.column("doc_id")
+        brk, bad = engine._whole_run_breaks(ids, rows.column("seg_id"),
+                                            self.open_id, self.open_len)
+        if bad >= 0:
+            self.ok = False
+            return
+        starts = np.flatnonzero(brk)
+        if starts.size:
+            self.open_id = ids[int(starts[-1])].as_py()
+            self.open_len = rows.num_rows - int(starts[-1])
+        else:
+            self.open_len += rows.num_rows
+
+    def flush(self) -> None:
+        self.open_id, self.open_len = None, 0
+
+
 def _write_task(batches, out_dir: str, names: list[str], ids: dict):
     """Task side of :func:`_write_data_files`: stream ``batches`` into one
     snappy ``ParquetWriter`` per partition value, flushing a row group
     whenever ``_ROW_GROUP_BYTES`` of Arrow data is buffered, then yield
-    one ``_WRITTEN_SCHEMA`` row per file, read from its own footer."""
+    one ``_WRITTEN_SCHEMA`` row per file, read from its own footer, with
+    its :class:`_RunCheck` verdict."""
     import pyarrow.parquet as pq
     from pyspark import TaskContext
     ctx = TaskContext.get()
     prefix = f"part-{ctx.partitionId():05d}-{ctx.attemptNumber()}"
-    files: dict[tuple, tuple] = {}      # key → (path, writer, buffered)
+    files: dict[tuple, tuple] = {}  # key → (path, writer, buffered, check)
     buffered = 0
 
     def flush():
-        for _, w, buf in files.values():
+        for _, w, buf, check in files.values():
             if buf:
                 w.write_table(pa.Table.from_batches(buf),
                               row_group_size=sum(b.num_rows for b in buf))
                 buf.clear()
+                check.flush()
 
     try:
         for batch in batches:
@@ -584,26 +628,28 @@ def _write_task(batches, out_dir: str, names: list[str], ids: dict):
                         out_dir, f"{prefix}-{uuid.uuid4().hex}.parquet")
                     files[key] = (path, pq.ParquetWriter(
                         path, _with_field_ids(rows.schema, ids),
-                        compression="snappy"), [])
+                        compression="snappy"), [], _RunCheck())
                 files[key][2].append(rows)
+                files[key][3].feed(rows)
                 buffered += rows.nbytes
                 if buffered >= _ROW_GROUP_BYTES:
                     flush()
                     buffered = 0
         flush()
-        for _, w, _ in files.values():
+        for _, w, _, _ in files.values():
             w.close()
-        out = {c: [] for c in
-               ("path", "rows", "bytes", "bounds", "partition")}
-        for key, (path, _, _) in files.items():
+        out = {c: [] for c in ("path", "rows", "bytes", "bounds",
+                               "partition", "whole_runs")}
+        for key, (path, _, _, check) in files.items():
             md = pq.read_metadata(path)
             out["path"].append(path)
             out["rows"].append(md.num_rows)
             out["bytes"].append(os.path.getsize(path))
             out["bounds"].append(json.dumps(_footer_stats(md)))
             out["partition"].append(json.dumps(dict(zip(names, key))))
+            out["whole_runs"].append(check.ok)
     except BaseException:
-        for path, w, _ in files.values():
+        for path, w, _, _ in files.values():
             with contextlib.suppress(OSError, pa.ArrowException):
                 w.close()
             with contextlib.suppress(OSError):
@@ -971,6 +1017,7 @@ def _write_snapshot(table_dir: str, df: DataFrame,
                           "content": "data",
                           "format-version": "2"})
     added_rows = sum(st["rows"] for st in stats)
+    whole_runs = all(st["whole_runs"] for st in stats)
 
     # 3. manifest list: append carries previous manifests forward;
     # overwrite replaces the live file set with this manifest only
@@ -1020,6 +1067,7 @@ def _write_snapshot(table_dir: str, df: DataFrame,
         for attempt in range(_COMMIT_RETRIES + 1):
             try:
                 return _attach_snapshot(table_dir, cur_meta, snapshot,
+                                        whole_runs=whole_runs,
                                         branch=branch)
             except RuntimeError as e:
                 if "commit conflict" not in str(e) \
@@ -1034,7 +1082,7 @@ def _write_snapshot(table_dir: str, df: DataFrame,
                 cur_meta, cur_meta.get("last-sequence-number", 0) + 1)
     if prev_meta:
         return _attach_snapshot(table_dir, prev_meta, snapshot,
-                                branch=branch)
+                                whole_runs=whole_runs, branch=branch)
     else:
         # last-column-id is the HIGHEST assigned field id including list
         # element-ids (v2 spec) — excluding them invites id collisions
@@ -1054,7 +1102,9 @@ def _write_snapshot(table_dir: str, df: DataFrame,
                     [999] + [pf["field-id"] for pf in spec["fields"]]),
                 "default-sort-order-id": 0,
                 "sort-orders": [{"order-id": 0, "fields": []}],
-                "properties": {"write.format.default": "parquet"},
+                "properties": _with_whole_runs(
+                    {"write.format.default": "parquet"}, None, seq,
+                    whole_runs),
                 "snapshots": [snapshot],
                 "snapshot-log": [{"snapshot-id": snap_id,
                                   "timestamp-ms": now_ms}],
@@ -1069,13 +1119,41 @@ def _write_snapshot(table_dir: str, df: DataFrame,
     return meta
 
 
+def _with_whole_runs(props: dict, prev_meta: dict | None, seq: int,
+                     whole_runs: bool) -> dict:
+    """``props`` with ``_WHOLE_RUNS_PROP`` as a commit at sequence number
+    ``seq`` leaves it.  The commit raises it to ``seq`` when every data
+    file it adds passed the writer's whole-run check (vacuously, when it
+    adds none) and every earlier data file did too: the table is new, or
+    the property equals the base's ``last-sequence-number``.  Otherwise
+    it drops to at most ``seq - 1``, so files committed from then on are
+    never vouched for.  The rule holds for every data file ever
+    committed, so a time-travel read may trust it too; for that reason an
+    overwrite does not re-certify a table it replaces."""
+    props = dict(props)
+    if prev_meta is None:
+        through = seq if whole_runs else 0
+    else:
+        prev = int(prev_meta.get("properties", {}).get(_WHOLE_RUNS_PROP, 0))
+        through = (seq if whole_runs and
+                   prev == prev_meta.get("last-sequence-number", 0)
+                   else min(prev, seq - 1))
+    if through > 0:
+        props[_WHOLE_RUNS_PROP] = str(through)
+    else:
+        props.pop(_WHOLE_RUNS_PROP, None)
+    return props
+
+
 def _attach_snapshot(table_dir: str, prev_meta: dict, snapshot: dict,
-                     branch: str = "main") -> dict:
+                     whole_runs: bool, branch: str = "main") -> dict:
     """Shared commit tail for every snapshot-producing operation on an
     EXISTING table (append/overwrite/delete/replace): attach ``snapshot``
     (whose manifest-list avro is already on disk) to ``prev_meta``,
-    advance the target ref / sequence counters, and publish the next
-    metadata version atomically (:func:`_publish_metadata`).
+    advance the target ref / sequence counters and ``_WHOLE_RUNS_PROP``
+    (``whole_runs``: every data file the commit adds passed the writer's
+    whole-run check), and publish the next metadata version atomically
+    (:func:`_publish_metadata`).
 
     ``branch`` targets a staging ref (write-audit-publish): the
     snapshot joins the log and moves ONLY that ref — ``main`` and
@@ -1122,6 +1200,9 @@ def _attach_snapshot(table_dir: str, prev_meta: dict, snapshot: dict,
              "timestamp-ms": snapshot["timestamp-ms"]}]
     version = prev_meta.get("__loaded_version",
                             _current_version(table_dir)) + 1
+    meta["properties"] = _with_whole_runs(
+        prev_meta.get("properties", {}), prev_meta,
+        snapshot["sequence-number"], whole_runs)
     meta["last-sequence-number"] = snapshot["sequence-number"]
     meta["last-updated-ms"] = snapshot["timestamp-ms"]
     if branch == "main":
@@ -1785,7 +1866,12 @@ def read_table(spark: SparkSession, table_dir: str,
     deletes by null-safe key anti-join under the sequence-number rule;
     both broadcast when small.  ``ref`` reads the snapshot a named tag
     (or ``"main"``) points at — mutually exclusive with
-    ``snapshot_id``.  Encoded tables decode with ``engine.decode``."""
+    ``snapshot_id``.  Encoded tables decode with ``engine.decode``.
+
+    When the snapshot has no delete files, ``between`` is unset and every
+    scanned file's data sequence number is at most ``_WHOLE_RUNS_PROP``,
+    the returned frame itself (not one derived from it) is marked for
+    ``engine.decode`` to stitch without an exchange."""
     if ref is not None:
         if snapshot_id is not None:
             raise ValueError("pass ref OR snapshot_id, not both")
@@ -1813,6 +1899,10 @@ def read_table(spark: SparkSession, table_dir: str,
         # _schema_reader): files written before an add_column surface
         # the new column as NULL, renamed/promoted columns resolve
         df = _schema_reader(spark, meta).parquet(*paths)
+        through = int(meta.get("properties", {}).get(_WHOLE_RUNS_PROP, 0))
+        if between is None and all(d["_sequence_number"] <= through
+                                   for d in files):
+            engine._WHOLE_RUN_SCANS.add(df)
     if between is not None:
         col, lo, hi = between
         if lo is not None:
@@ -2114,7 +2204,8 @@ def write_position_deletes(spark: SparkSession, table_dir: str,
                             "added-position-delete-files": str(len(stats)),
                             "added-position-deletes": str(n_pos),
                             **(extra_summary or {})}}
-    return _attach_snapshot(table_dir, prev_meta, snapshot)
+    return _attach_snapshot(table_dir, prev_meta, snapshot,
+                            whole_runs=True)  # adds no data file
 
 
 def delete_where(spark: SparkSession, table_dir: str, predicate
@@ -2204,7 +2295,8 @@ def write_equality_deletes(spark: SparkSession, table_dir: str,
                             "equality-field-ids":
                                 ",".join(map(str, eq_ids)),
                             **(extra_summary or {})}}
-    return _attach_snapshot(table_dir, prev_meta, snapshot)
+    return _attach_snapshot(table_dir, prev_meta, snapshot,
+                            whole_runs=True)  # adds no data file
 
 
 def compact_files(spark: SparkSession, table_dir: str) -> dict:
@@ -2295,7 +2387,8 @@ def compact_files(spark: SparkSession, table_dir: str) -> dict:
                                 str(len(pos_dels)),
                             "removed-equality-delete-files":
                                 str(len(eq_dels))}}
-    meta = _attach_snapshot(table_dir, prev_meta, snapshot)
+    meta = _attach_snapshot(table_dir, prev_meta, snapshot, whole_runs=all(
+        st["whole_runs"] for st in stats))
     return {"meta": meta, "rewritten_files": len(dirty_entries),
             "kept_files": len(clean), "removed_delete_files": len(dels)}
 
@@ -2425,7 +2518,8 @@ def rewrite_manifests(table_dir: str,
                             "manifests-replaced":
                                 str(len(data_records)),
                             "manifests-created": str(len(new_mlist))}}
-    meta = _attach_snapshot(table_dir, prev_meta, snapshot)
+    meta = _attach_snapshot(table_dir, prev_meta, snapshot,
+                            whole_runs=True)  # adds no data file
     return {"meta": meta, "manifests_before": len(data_records),
             "manifests_after": len(new_mlist)}
 

@@ -149,6 +149,26 @@ def _read_roles(spark, input_path: str, files: list[str]) -> DataFrame:
             .select(*[F.col(name[fid]).alias(r) for r, fid in fids.items()]))
 
 
+def _duplicate_ids(spark, input_path: str, files: list[str]
+                   ) -> tuple[int, list[tuple[str, list[str]]]] | None:
+    """(number of doc_ids stored more than once across ``files``, up to 5
+    of them with the input files holding each, paths relative to
+    ``input_path``), or None when every doc_id is unique."""
+    rows = (_read_roles(spark, input_path, files)
+            .select("doc_id", F.regexp_replace(
+                F.input_file_name(), "^file:/+", "/").alias("file"))
+            .groupBy("doc_id")
+            .agg(F.count("*").alias("n"),
+                 F.sort_array(F.collect_set("file")).alias("files"))
+            .where("n > 1").orderBy("doc_id"))
+    n = rows.count()
+    if not n:
+        return None
+    return n, [(r["doc_id"],
+                [os.path.relpath(f, input_path) for f in r["files"]])
+               for r in rows.limit(5).collect()]
+
+
 def encode_files_resumable_iceberg(spark, input_path: str, table_dir: str,
                                    codec: str = "auto",
                                    split_threshold: int =
@@ -182,7 +202,10 @@ def encode_files_resumable_iceberg(spark, input_path: str, table_dir: str,
     mismatch ROLLS BACK that snapshot (iceberg.rollback_last_snapshot)
     before raising — corrupt data never stays current, and the dropped
     snapshot's lineage vanishes with it, so the re-run (with the fixed
-    encoder) re-encodes exactly the failed batch.
+    encoder) re-encodes exactly the failed batch.  When the batch's input
+    holds a doc_id more than once (the check pairs documents by doc_id),
+    the rollback raises a ``ValueError`` naming up to 5 such ids and
+    their input files instead.
 
     ``rewrite_manifests=True`` consolidates the one-manifest-per-batch
     chain after the last batch lands (:func:`iceberg.rewrite_manifests`
@@ -239,6 +262,14 @@ def encode_files_resumable_iceberg(spark, input_path: str, table_dir: str,
                 # must fail the rollback, not be silently destroyed
                 iceberg.rollback_last_snapshot(
                     table_dir, expected_id=snap["snapshot-id"])
+                dups = _duplicate_ids(spark, input_path, batch)
+                if dups:
+                    raise ValueError(
+                        f"batch {i // step} holds {dups[0]} doc_id(s) "
+                        "more than once, so its round trip cannot pair "
+                        "documents — snapshot "
+                        f"{snap['snapshot-id']} rolled back; e.g. "
+                        + "; ".join(f"{d!r} in {fs}" for d, fs in dups[1]))
                 raise RuntimeError(
                     f"round-trip verification failed for {bad} rows in "
                     f"batch {i // step} — snapshot "

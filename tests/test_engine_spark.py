@@ -789,6 +789,37 @@ def test_rollback_last_snapshot_to_empty(spark, unit_df, tmp_path):
     assert iceberg.read_table(spark, table).count() == 5
 
 
+def test_resumable_verify_names_duplicate_doc_ids(spark, tmp_path):
+    """verify=True on a batch whose input files share doc_ids: the round
+    trip cannot pair those documents, so the batch is rolled back with a
+    ValueError naming the duplicated ids and their input files instead of
+    blaming a corrupt batch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from simdcomp_spark import iceberg
+    rows = fixtures.unit_rows()
+    schema = pa.schema([("doc_id", pa.string()),
+                        ("tokens", pa.list_(pa.int32())),
+                        ("n_tok", pa.int32()), ("source", pa.string())])
+    src = tmp_path / "in"
+    src.mkdir()
+    for k, (lo, hi) in enumerate([(0, 20), (15, 40), (40, 60)]):
+        part = rows[lo:hi]
+        pq.write_table(pa.table(
+            {c: [r[j] for r in part] for j, c in enumerate(schema.names)},
+            schema=schema), src / f"part-{k}.parquet")
+    table = str(tmp_path / "t")
+    first = min(r[0] for r in rows[15:20])
+    with pytest.raises(ValueError, match=(
+            r"batch 0 holds 5 doc_id\(s\) more than once.*rolled back; "
+            rf"e\.g\. '{first}' in \['part-0\.parquet', "
+            r"'part-1\.parquet'\]")):
+        manifest.encode_files_resumable_iceberg(
+            spark, str(src), table, codec="bitpack", verify=True)
+    assert iceberg.read_table(spark, table).count() == 0
+
+
 def test_resumable_ingest_final_manifest_rewrite(spark, unit_df, tmp_path):
     """rewrite_manifests=True consolidates the one-manifest-per-batch
     chain after the last batch; resume lineage survives (a later run is
@@ -844,8 +875,10 @@ def test_decode_reassembles_single_and_split_tables(spark, tmp_path):
 def test_decode_is_lazy(spark, tmp_path):
     """engine.decode(reassemble=True) over a bare Iceberg scan of a split
     table starts no Spark job until its result is consumed, and the read
-    itself is at most two jobs (exchange, stitch).  Counted through a job
-    group and statusTracker, as in test_ingest_pass_is_one_job."""
+    itself is exactly one job: the writer certified the table's segment
+    runs, so the stitch runs over the scan with no exchange.  Counted
+    through a job group and statusTracker, as in
+    test_ingest_pass_is_one_job."""
     from simdcomp_spark import iceberg
 
     rows = [(f"d{i}", "s", list(range(i % 50 + 1))) for i in range(60)]
@@ -867,7 +900,7 @@ def test_decode_is_lazy(spark, tmp_path):
         got = sorted((r["doc_id"], tuple(r["tokens"])) for r in dec.collect())
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert 0 < len(st.getJobIdsForGroup(gid)) <= 2
+    assert len(st.getJobIdsForGroup(gid)) == 1
     assert got == sorted((d, tuple(t)) for d, _, t in rows)
 
 
