@@ -90,9 +90,7 @@ def main() -> int:
             split_threshold=args.split_threshold,
             batch_files=args.batch_files, verify=args.verify,
             rewrite_manifests=args.rewrite_manifests)
-    except RuntimeError as e:
-        if "rolled back" not in str(e):
-            raise
+    except manifest.RolledBack as e:
         print(json.dumps({"verify_failed": str(e), "rolled_back": True}))
         return 1
     enc = iceberg.read_table(spark, args.publish_iceberg)

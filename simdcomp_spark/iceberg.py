@@ -42,14 +42,24 @@ Two self-contained layers:
   version-hint → metadata → manifest list → manifests → data files —
   applying v2 POSITION DELETES (``delete_where`` /
   ``write_position_deletes`` commit them, ``compact_files`` folds them
-  into the dirtied data files only) — and ``snapshots`` lists the log.  Commits follow Iceberg's
-  HadoopTableOperations discipline: data + manifests are written first,
-  then the COMMIT POINT is an atomic no-overwrite publish of the complete
-  vN.metadata.json (os.link from a tmp file — exactly one concurrent
-  writer wins, the loser gets a loud conflict); version-hint.text is an
-  advisory fast-path updated after, and readers probe past a stale or
-  regressed hint, so a crash anywhere leaves either the previous or the
-  new version current — never a half-commit, never a wedged table.
+  into the dirtied data files only) — and ``snapshots`` lists the log.
+  Every metadata change goes through ONE commit path, :func:`_commit`,
+  under Iceberg's optimistic concurrency: data + manifests are written
+  first, then the COMMIT POINT is an atomic no-overwrite publish of the
+  complete vN.metadata.json (os.link from a tmp file — exactly one
+  concurrent writer wins); version-hint.text is an advisory fast-path
+  updated after, and readers probe past a stale or regressed hint, so a
+  crash anywhere leaves either the previous or the new version current —
+  never a half-commit, never a wedged table.  A writer that loses vN
+  reloads the table and, by its kind's rule, re-applies its change or
+  raises :class:`CommitConflict`: appends (main or branch) rebase while
+  the current schema is unchanged; position deletes rebase while every
+  commit since their base is an append or a delete (no file they target
+  can have been rewritten); schema changes re-run while the current
+  schema id is unchanged; tag, branch and expiry changes re-run on the
+  new state with the values the caller resolved (the snapshot a tag
+  pins); overwrite, compaction, manifest rewrite, equality deletes,
+  rollback and table creation never rebase.
 
 Data and delete files are written by pyarrow inside the Spark tasks
 (:func:`_write_data_files`): each task streams its rows into its own
@@ -75,6 +85,7 @@ import time
 import uuid
 import zlib
 from pathlib import Path
+from typing import NamedTuple
 
 import numpy as np
 
@@ -660,14 +671,16 @@ def _write_task(batches, out_dir: str, names: list[str], ids: dict):
 
 
 def _file_entries(stats: list[dict], snap_id: int, content: int,
-                  fields: dict, part_names: list[str], **data_file) -> list:
+                  fields: dict, spec: dict, **data_file) -> list:
     """Manifest entries (status ADDED) for the files
     :func:`_write_data_files` returned.  ``fields`` maps a column name to
     its Iceberg field (id, type): its bounds become the spec's
     lower/upper_bounds maps (fields 125/128: map<field-id, single-value
-    binary>), the basis of metadata-level file pruning.  Identity
-    partition columns get none — the partition struct holds their exact
-    value.  ``data_file`` adds fields such as ``equality_ids``."""
+    binary>), the basis of metadata-level file pruning.  The partition
+    struct follows the table's ``spec``; partition columns get no
+    bounds — the partition struct holds their exact value.
+    ``data_file`` adds fields such as ``equality_ids``."""
+    part_names = [pf["name"] for pf in spec["fields"]]
     entries = []
     for s in stats:
         lbs, ubs = [], []
@@ -695,6 +708,40 @@ def _file_entries(stats: list[dict], snap_id: int, content: int,
                            "lower_bounds": lbs, "upper_bounds": ubs,
                            **data_file}})
     return entries
+
+
+def _write_manifest(path: str, entries: list[dict], schema: dict,
+                    spec: dict, deletes: bool = False) -> dict:
+    """Write ``entries`` as a manifest avro at ``path`` under the table's
+    ``schema`` and ``spec``, and return its manifest-list record (spec
+    ``manifest_file`` struct; added and existing counts from the entries'
+    status).  :func:`_commit` stamps its sequence numbers."""
+    _avro_write(path, _manifest_entry_schema(_part_fields(spec, schema)),
+                entries, metadata={
+                    "schema": json.dumps(schema),
+                    "partition-spec": json.dumps(spec["fields"]),
+                    "content": "deletes" if deletes else "data",
+                    "format-version": "2"})
+    added = [e["data_file"] for e in entries if e["status"] == 1]
+    existing = [e for e in entries if e["status"] == 0]
+    return {"manifest_path": path,
+            "manifest_length": os.path.getsize(path),
+            "partition_spec_id": spec["spec-id"], "content": int(deletes),
+            "sequence_number": None,
+            "min_sequence_number": min(
+                (e["sequence_number"] for e in existing), default=None),
+            "added_snapshot_id": None,
+            "added_data_files_count": len(added),
+            "existing_data_files_count": len(existing),
+            "deleted_data_files_count": 0,
+            "added_rows_count": sum(d["record_count"] for d in added),
+            "existing_rows_count": sum(e["data_file"]["record_count"]
+                                       for e in existing),
+            "deleted_rows_count": 0}
+
+
+def _new_snapshot_id() -> int:
+    return int(uuid.uuid4().int % (1 << 62)) + 1
 
 
 def _current_version(table_dir: str) -> int:
@@ -732,7 +779,6 @@ def _current_version(table_dir: str) -> int:
         v += 1
 
 
-
 def is_iceberg_table(table_dir: str) -> bool:
     """True when ``table_dir`` holds a committed table: the hint fast-path
     OR a published v1.metadata.json (hint-less first-commit crash window —
@@ -749,17 +795,16 @@ def _current_schema(meta: dict) -> dict:
     return next(s for s in meta["schemas"] if s.get("schema-id", 0) == sid)
 
 
-def _load_metadata(table_dir: str) -> dict:
+def _load_base(table_dir: str) -> tuple[int, dict]:
+    """``(version, metadata)`` of the current table state: the base a
+    commit plans against and publishes ``version + 1`` over."""
     v = _current_version(table_dir)
-    meta = json.loads(
+    return v, json.loads(
         (_meta_dir(table_dir) / f"v{v}.metadata.json").read_text())
-    # remember which version this metadata was loaded AS (in-memory only,
-    # stripped before write): a committing writer must publish parent+1,
-    # not current+1 — re-reading the directory at commit time would let a
-    # STALE writer skip past a concurrent winner and silently drop its
-    # snapshot instead of failing the optimistic-concurrency check
-    meta["__loaded_version"] = v
-    return meta
+
+
+def _load_metadata(table_dir: str) -> dict:
+    return _load_base(table_dir)[1]
 
 
 def _metadata_or_none(table_dir: str) -> dict | None:
@@ -866,10 +911,6 @@ def _transform_of(pf: dict) -> tuple[str, int | None]:
     return m.group(1), int(m.group(2))
 
 
-def _transform_result_type(tname: str, src_type: str) -> str:
-    return "int" if tname == "bucket" else src_type
-
-
 def _transform_column(tname: str, param: int | None, src_col: str,
                       src_type: str):
     """Spark Column computing a transform of ``src_col`` — identity and
@@ -930,22 +971,20 @@ def _spec_partition_exprs(spec: dict, schema: dict) -> list[tuple[str, object]]:
     return out
 
 
-# rebase-and-retry attempts of an append that loses the commit race
-_COMMIT_RETRIES = 5
-
-
 def _write_snapshot(table_dir: str, df: DataFrame,
-                    prev_meta: dict | None,
+                    base: tuple[int, dict] | None,
                     operation: str = "append",
                     partition_by: str | None = None,
                     extra_summary: dict[str, str] | None = None,
                     branch: str = "main") -> dict:
-    """Write data files + manifest + manifest list, then COMMIT by
-    atomically publishing the new metadata json (see module docstring for
-    the protocol).  ``operation`` is "append" (manifest list carries
-    previous manifests forward) or "overwrite" (manifest list holds ONLY
-    the new manifest — previous snapshots' files become dead in the new
-    snapshot but remain readable by time travel).
+    """Write ``df``'s data files and manifest, then commit them as one
+    snapshot through :func:`_commit`.  ``base`` is the ``(version,
+    metadata)`` the write was planned against, None for a new table.
+    ``operation`` is "append" (the snapshot carries the target ref's
+    manifests forward, and rebases onto a concurrent commit that kept the
+    schema) or "overwrite" (the snapshot holds ONLY the new manifest —
+    previous snapshots' files become dead in it but remain readable by
+    time travel).
 
     ``partition_by`` (new tables only) writes an identity partition spec
     on that column: data files are physically split per value (by a
@@ -957,19 +996,15 @@ def _write_snapshot(table_dir: str, df: DataFrame,
     table_dir = str(table_dir)
     mdir = _meta_dir(table_dir)
     mdir.mkdir(parents=True, exist_ok=True)
-    data_dir = Path(table_dir) / "data"
-    snap_id = int(uuid.uuid4().int % (1 << 62)) + 1
-    seq = (prev_meta.get("last-sequence-number", 0) + 1) if prev_meta else 1
-    now_ms = time.time_ns() // 1_000_000
-
+    prev_meta = base[1] if base else None
+    snap_id = _new_snapshot_id()
     table_schema = (_current_schema(prev_meta) if prev_meta
                     else _iceberg_schema_of(df))
     by_name = {f["name"]: f for f in table_schema["fields"]}
 
     # partition spec: inherited from the table, or new from partition_by
     if prev_meta:
-        spec = prev_meta["partition-specs"][prev_meta.get(
-            "default-spec-id", 0)]
+        spec = _default_spec(prev_meta)
         if partition_by is not None:
             raise ValueError("partition_by is set at table creation; "
                              "appends inherit the table's spec")
@@ -981,10 +1016,6 @@ def _write_snapshot(table_dir: str, df: DataFrame,
                 f"partition_by={partition_by!r}: need an existing "
                 f"string/int/long column, have "
                 f"{ {k: v['type'] for k, v in by_name.items()} }")
-        if tname == "bucket" and f["type"] not in ("int", "long",
-                                                   "string"):
-            raise NotImplementedError(
-                f"bucket over {f['type']!r} (int/long/string)")
         if param is not None and param <= 0:
             raise ValueError(f"{tname} parameter must be positive")
         pname = (src_col if tname == "identity"
@@ -995,128 +1026,47 @@ def _write_snapshot(table_dir: str, df: DataFrame,
              "source-id": f["id"], "field-id": 1000}]}
     else:
         spec = {"spec-id": 0, "fields": []}
-    by_id = {f["id"]: f for f in table_schema["fields"]}
-    part_fields = []
-    for pf in spec["fields"]:
-        tname, _param = _transform_of(pf)        # loud on unknown
-        rt = _transform_result_type(tname, by_id[pf["source-id"]]["type"])
-        part_fields.append((pf["name"], rt, pf["field-id"]))
 
-    # 1. data files (append into a per-snapshot subdir — no clobbering),
-    # field ids stamped in every footer
-    stats = _write_data_files(df, str(data_dir / f"snap-{snap_id}"),
+    # data files (a per-snapshot subdir — no clobbering), field ids
+    # stamped in every footer, then the manifest with per-file bounds
+    stats = _write_data_files(df, str(Path(table_dir) / "data"
+                                      / f"snap-{snap_id}"),
                               table_schema, spec)
-
-    # 2. manifest (avro) with per-file column bounds
-    entries = _file_entries(stats, snap_id, 0, by_name,
-                            [n for n, _, _ in part_fields])
-    manifest_path = str(mdir / f"manifest-{snap_id}.avro")
-    _avro_write(manifest_path, _manifest_entry_schema(part_fields), entries,
-                metadata={"schema": json.dumps(table_schema),
-                          "partition-spec": json.dumps(spec["fields"]),
-                          "content": "data",
-                          "format-version": "2"})
-    added_rows = sum(st["rows"] for st in stats)
-    whole_runs = all(st["whole_runs"] for st in stats)
-
-    # 3. manifest list: append carries previous manifests forward;
-    # overwrite replaces the live file set with this manifest only
-    mlist_path = str(mdir / f"snap-{snap_id}.avro")
-
-    def _mk_snapshot(base_meta, seq_):
-        """Build + write the manifest list and snapshot record against
-        ``base_meta`` — re-runnable on a rebase retry: the data files and
-        our manifest avro never change, only the carried-forward previous
-        manifests and the sequence number do (snap-{snap_id}.avro is ours
-        alone, so rewriting it is safe)."""
-        prev_manifests = []
-        if base_meta and operation == "append":
-            base_sid = None
-            if branch != "main":
-                ref = base_meta.get("refs", {}).get(branch)
-                if ref is None or ref.get("type") != "branch":
-                    raise ValueError(
-                        f"{table_dir}: no branch ref {branch!r} "
-                        "(create_branch first)")
-                # carry forward the BRANCH head's manifests — main's
-                # would silently drop every earlier staged batch
-                base_sid = ref["snapshot-id"]
-            prev_manifests = _prev_manifest_records(base_meta, base_sid)
-        mlist = prev_manifests + [_mlist_record(
-            manifest_path, 0, 0, seq_, seq_, snap_id,
-            len(stats), added_rows)]
-        _avro_write(mlist_path, _MANIFEST_FILE_SCHEMA, mlist,
-                    metadata={"format-version": "2"})
-        return {"snapshot-id": snap_id, "sequence-number": seq_,
-                "timestamp-ms": now_ms, "manifest-list": mlist_path,
-                "schema-id": table_schema.get("schema-id", 0),
-                "summary": {"operation": operation,
-                            "added-data-files": str(len(stats)),
-                            "added-records": str(added_rows),
-                            **(extra_summary or {})}}
-
-    snapshot = _mk_snapshot(prev_meta, seq)
-    if prev_meta and operation == "append":
-        # optimistic-concurrency retry, appends only: an append commits
-        # new files and invalidates nothing, so losing the CAS race just
-        # means REBASING — reload the winner's metadata, rebuild the
-        # manifest list + sequence number against it, and re-attach.
-        # Overwrite/delete/replace keep fail-loudly semantics (what they
-        # computed may be invalidated by the concurrent commit).
-        cur_meta = prev_meta
-        for attempt in range(_COMMIT_RETRIES + 1):
-            try:
-                return _attach_snapshot(table_dir, cur_meta, snapshot,
-                                        whole_runs=whole_runs,
-                                        branch=branch)
-            except RuntimeError as e:
-                if "commit conflict" not in str(e) \
-                        or attempt == _COMMIT_RETRIES:
-                    raise
-            time.sleep(0.02 * (attempt + 1)
-                       * (1 + (uuid.uuid4().int & 0xFF) / 256))
-            cur_meta = _load_metadata(table_dir)
-            # the winner may have evolved the schema out from under us
-            _check_same_schema(cur_meta, df, "append")
-            snapshot = _mk_snapshot(
-                cur_meta, cur_meta.get("last-sequence-number", 0) + 1)
-    if prev_meta:
-        return _attach_snapshot(table_dir, prev_meta, snapshot,
-                                whole_runs=whole_runs, branch=branch)
-    else:
-        # last-column-id is the HIGHEST assigned field id including list
-        # element-ids (v2 spec) — excluding them invites id collisions
-        # when a real engine evolves the schema
-        last_id = max(
-            max(f["id"], f["type"].get("element-id", 0)
-                if isinstance(f["type"], dict) else 0)
-            for f in table_schema["fields"])
-        meta = {"format-version": 2, "table-uuid": str(uuid.uuid4()),
-                "location": table_dir,
-                "last-column-id": last_id,
-                "current-schema-id": 0,
-                "schemas": [table_schema],
-                "default-spec-id": 0,
-                "partition-specs": [spec],
-                "last-partition-id": max(
-                    [999] + [pf["field-id"] for pf in spec["fields"]]),
-                "default-sort-order-id": 0,
-                "sort-orders": [{"order-id": 0, "fields": []}],
-                "properties": _with_whole_runs(
-                    {"write.format.default": "parquet"}, None, seq,
-                    whole_runs),
-                "snapshots": [snapshot],
-                "snapshot-log": [{"snapshot-id": snap_id,
-                                  "timestamp-ms": now_ms}],
-                "metadata-log": []}
-        version = 1
-    meta["current-snapshot-id"] = snap_id
-    meta["last-sequence-number"] = seq
-    meta["last-updated-ms"] = now_ms
-    meta["refs"] = {"main": {"snapshot-id": snap_id, "type": "branch"}}
-    # 5. the commit point (see _publish_metadata)
-    _publish_metadata(mdir, meta, version, snap_id)
-    return meta
+    manifest = _write_manifest(
+        str(mdir / f"manifest-{snap_id}.avro"),
+        _file_entries(stats, snap_id, 0, by_name, spec), table_schema, spec)
+    snapshot = _NewSnapshot(
+        snap_id, [manifest], (0, 1) if operation == "append" else (),
+        {"operation": operation, "added-data-files": str(len(stats)),
+         "added-records": str(sum(st["rows"] for st in stats)),
+         **(extra_summary or {})},
+        branch, all(st["whole_runs"] for st in stats))
+    if base is not None:
+        return _commit(table_dir, snapshot=snapshot, base=base,
+                       validate=_same_schema if operation == "append"
+                       else None)
+    # last-column-id is the HIGHEST assigned field id including list
+    # element-ids (v2 spec) — excluding them invites id collisions when a
+    # real engine evolves the schema
+    last_id = max(
+        max(f["id"], f["type"].get("element-id", 0)
+            if isinstance(f["type"], dict) else 0)
+        for f in table_schema["fields"])
+    return _commit(table_dir, lambda _: {
+        "format-version": 2, "table-uuid": str(uuid.uuid4()),
+        "location": table_dir,
+        "last-column-id": last_id,
+        "current-schema-id": 0,
+        "schemas": [table_schema],
+        "default-spec-id": 0,
+        "partition-specs": [spec],
+        "last-partition-id": max(
+            [999] + [pf["field-id"] for pf in spec["fields"]]),
+        "default-sort-order-id": 0,
+        "sort-orders": [{"order-id": 0, "fields": []}],
+        "properties": {"write.format.default": "parquet"},
+        "snapshots": [], "snapshot-log": [], "metadata-log": []},
+        snapshot=snapshot, base=(0, None))
 
 
 def _with_whole_runs(props: dict, prev_meta: dict | None, seq: int,
@@ -1145,106 +1095,190 @@ def _with_whole_runs(props: dict, prev_meta: dict | None, seq: int,
     return props
 
 
-def _attach_snapshot(table_dir: str, prev_meta: dict, snapshot: dict,
-                     whole_runs: bool, branch: str = "main") -> dict:
-    """Shared commit tail for every snapshot-producing operation on an
-    EXISTING table (append/overwrite/delete/replace): attach ``snapshot``
-    (whose manifest-list avro is already on disk) to ``prev_meta``,
-    advance the target ref / sequence counters and ``_WHOLE_RUNS_PROP``
-    (``whole_runs``: every data file the commit adds passed the writer's
-    whole-run check), and publish the next metadata version atomically
-    (:func:`_publish_metadata`).
-
-    ``branch`` targets a staging ref (write-audit-publish): the
-    snapshot joins the log and moves ONLY that ref — ``main`` and
-    ``current-snapshot-id`` stay put, so readers are unaffected until
-    :func:`fast_forward` publishes.  While a staging branch is ahead,
-    main-targeted commits refuse (the linear log cannot represent a
-    true divergence — publish or :func:`drop_branch` first)."""
-    snap_id = snapshot["snapshot-id"]
-    refs = dict(prev_meta.get("refs", {}))  # tags survive every commit
-    staged = [n for n, r in refs.items()
-              if r.get("type") == "branch" and n != "main"]
-    meta = dict(prev_meta)
-    meta.pop("__loaded_version", None)
-    if branch == "main":
-        if staged:
-            raise ValueError(
-                f"{table_dir}: staging branch(es) {staged} are ahead of "
-                "main — fast_forward (publish) or drop_branch first; a "
-                "linear snapshot log cannot hold a divergent main commit")
-        parent = prev_meta.get("current-snapshot-id")
-    else:
-        ref = refs.get(branch)
-        if ref is None or ref.get("type") != "branch":
-            raise ValueError(
-                f"{table_dir}: no branch ref {branch!r} (create_branch "
-                "first)")
-        parent = ref["snapshot-id"]
-        if prev_meta["snapshots"] and \
-                prev_meta["snapshots"][-1]["snapshot-id"] != parent:
-            raise ValueError(
-                f"{table_dir}: branch {branch!r} head is not the log "
-                "tail — concurrent commit? reload and retry")
-    if parent is not None and parent != -1:
-        snapshot = {**snapshot, "parent-snapshot-id": parent}
-    meta["snapshots"] = prev_meta["snapshots"] + [snapshot]
-    if branch == "main":
-        # spec: snapshot-log records changes to the CURRENT snapshot —
-        # staged branch commits don't change it (fast_forward logs the
-        # publish); a spec-conformant external reader doing
-        # timestamp-based time travel must never resolve to unaudited
-        # staged state
-        meta["snapshot-log"] = prev_meta.get("snapshot-log", []) + [
-            {"snapshot-id": snap_id,
-             "timestamp-ms": snapshot["timestamp-ms"]}]
-    version = prev_meta.get("__loaded_version",
-                            _current_version(table_dir)) + 1
-    meta["properties"] = _with_whole_runs(
-        prev_meta.get("properties", {}), prev_meta,
-        snapshot["sequence-number"], whole_runs)
-    meta["last-sequence-number"] = snapshot["sequence-number"]
-    meta["last-updated-ms"] = snapshot["timestamp-ms"]
-    if branch == "main":
-        meta["current-snapshot-id"] = snap_id
-        refs["main"] = {"snapshot-id": snap_id, "type": "branch"}
-    else:
-        refs[branch] = {"snapshot-id": snap_id, "type": "branch"}
-    meta["refs"] = refs
-    _publish_metadata(_meta_dir(table_dir), meta, version, snap_id)
-    return meta
+class CommitConflict(RuntimeError):
+    """A commit lost the optimistic-concurrency race — another writer
+    published the metadata version it meant to publish — and its change
+    may not be re-applied to the newer table state."""
 
 
-def _publish_metadata(mdir: Path, meta: dict, version: int,
-                      uniquifier) -> None:
+class _NewSnapshot(NamedTuple):
+    """A snapshot a commit adds: its manifests (:func:`_write_manifest`
+    records), the manifest contents it carries forward from its ref's head
+    (0 data, 1 deletes), its summary, that ref, and whether every data
+    file it adds passed the writer's whole-run check."""
+    id: int
+    manifests: list
+    carry: tuple
+    summary: dict
+    branch: str = "main"
+    whole_runs: bool = True
+
+
+# re-applications of a change that keeps losing the commit race
+_COMMIT_RETRIES = 5
+
+
+def _reapply(start: dict, cur: dict) -> None:
+    """Validation of ref and expiry changes: they re-run on any newer
+    base."""
+    return None
+
+
+def _same_schema(start: dict, cur: dict) -> str | None:
+    """Validation of appends and schema changes: re-apply only while the
+    table keeps the schema the change was planned against."""
+    a = start.get("current-schema-id", 0)
+    b = cur.get("current-schema-id", 0)
+    return None if a == b else f"the current schema moved from {a} to {b}"
+
+
+def _no_rewrite_since(start: dict, cur: dict) -> str | None:
+    """Validation of position deletes, which name their target files by
+    path: re-apply only while no file can have been rewritten — every
+    snapshot committed since ``start`` is an append or a delete, and
+    ``start``'s current snapshot was not rolled back."""
+    seen = {s["snapshot-id"] for s in start["snapshots"]}
+    for s in cur["snapshots"]:
+        op = s.get("summary", {}).get("operation")
+        if s["snapshot-id"] not in seen and op not in ("append", "delete"):
+            return (f"snapshot {s['snapshot-id']} ({op}) may have "
+                    "rewritten a file the deletes target")
+    if start["current-snapshot-id"] not in \
+            {s["snapshot-id"] for s in cur["snapshots"]} | {-1}:
+        return f"snapshot {start['current-snapshot-id']} was rolled back"
+    return None
+
+
+def _commit(table_dir: str, change=None, *, snapshot=None, validate=None,
+            base: tuple[int, dict | None] | None = None) -> dict:
+    """THE commit path: the only publisher of table metadata.
+    ``change(base)`` returns the new metadata from the base metadata alone
+    (default: unchanged); ``snapshot`` (:class:`_NewSnapshot`) is one the
+    commit adds, its manifest list written against the base.  This stamps
+    what every commit shares — sequence number, ``parent-snapshot-id``,
+    ``_WHOLE_RUNS_PROP``, the ``main`` ref (= the current snapshot), the
+    snapshot log (current-snapshot changes, retained snapshots only), the
+    base's ``simdcomp-*`` lineage properties, ``last-updated-ms`` — and
+    publishes ``version + 1`` of ``base``, the ``(version, metadata)`` the
+    caller planned against (default: loaded here; ``(0, None)`` creates
+    the table).  After a lost race ``validate(start, cur)`` returns None
+    to re-apply the change to the reloaded table (up to
+    ``_COMMIT_RETRIES`` times) or why not, raised as
+    :class:`CommitConflict`; without ``validate`` every lost race
+    raises."""
+    table_dir = str(table_dir)
+    version, start = base if base is not None else _load_base(table_dir)
+    cur = start
+    for attempt in range(_COMMIT_RETRIES + 1):
+        meta = dict(change(cur) if change else cur)
+        now = time.time_ns() // 1_000_000
+        if snapshot is not None:
+            seq = meta.get("last-sequence-number", 0) + 1
+            refs = meta.get("refs", {})
+            if snapshot.branch == "main":
+                staged = [n for n, r in refs.items()
+                          if r.get("type") == "branch" and n != "main"]
+                if staged:
+                    raise ValueError(
+                        f"{table_dir}: staging branch(es) {staged} are "
+                        "ahead of main — fast_forward or drop_branch first "
+                        "(the snapshot log is linear)")
+                parent = meta.get("current-snapshot-id")
+            else:
+                ref = refs.get(snapshot.branch)
+                if ref is None or ref.get("type") != "branch":
+                    raise ValueError(
+                        f"{table_dir}: no branch ref {snapshot.branch!r} "
+                        "(create_branch first)")
+                parent = ref["snapshot-id"]
+                if meta["snapshots"][-1]["snapshot-id"] != parent:
+                    raise ValueError(
+                        f"{table_dir}: branch {snapshot.branch!r} head is "
+                        "not the log tail")
+                meta["refs"] = {**refs, snapshot.branch: {
+                    "snapshot-id": snapshot.id, "type": "branch"}}
+            carried = [r for r in _prev_manifest_records(meta, parent)
+                       if r.get("content", 0) in snapshot.carry
+                       ] if snapshot.carry else []
+            mlist = str(_meta_dir(table_dir) / f"snap-{snapshot.id}.avro")
+            _avro_write(mlist, _MANIFEST_FILE_SCHEMA, carried + [
+                {**r, "sequence_number": seq, "min_sequence_number":
+                 min(seq, r["min_sequence_number"] or seq),
+                 "added_snapshot_id": snapshot.id}
+                for r in snapshot.manifests],
+                metadata={"format-version": "2"})
+            record = {"snapshot-id": snapshot.id, "sequence-number": seq,
+                      "timestamp-ms": now, "manifest-list": mlist,
+                      "schema-id": meta.get("current-schema-id", 0),
+                      "summary": snapshot.summary}
+            if parent not in (None, -1):
+                record["parent-snapshot-id"] = parent
+            meta["snapshots"] = meta["snapshots"] + [record]
+            if snapshot.branch == "main":
+                meta["current-snapshot-id"] = snapshot.id
+            meta["properties"] = _with_whole_runs(
+                meta["properties"], cur, seq, snapshot.whole_runs)
+            meta["last-sequence-number"] = seq
+        current = meta.get("current-snapshot-id", -1)
+        meta["refs"] = {n: r for n, r in meta.get("refs", {}).items()
+                        if n != "main"}
+        kept = {s["snapshot-id"] for s in meta["snapshots"]}
+        meta["snapshot-log"] = [e for e in meta.get("snapshot-log", [])
+                                if e["snapshot-id"] in kept]
+        if current not in (None, -1):
+            meta["refs"]["main"] = {"snapshot-id": current,
+                                    "type": "branch"}
+            # spec: the log records changes of the CURRENT snapshot, so a
+            # staged branch commit stays out of it (a timestamp time
+            # travel never resolves to unaudited state)
+            if current != (cur or {}).get("current-snapshot-id"):
+                meta["snapshot-log"].append({"snapshot-id": current,
+                                             "timestamp-ms": now})
+        meta["properties"] = {
+            **{k: v for k, v in (cur or {}).get("properties", {}).items()
+               if k.startswith("simdcomp-")},
+            **meta.get("properties", {})}
+        meta["last-updated-ms"] = now
+        try:
+            _publish_metadata(_meta_dir(table_dir), meta, version + 1)
+            return meta
+        except FileExistsError:
+            lost = version + 1
+        version, cur = _load_base(table_dir)
+        why = (validate(start, cur) if validate else
+               "this commit is not re-applied to a newer table state")
+        if why is None and attempt == _COMMIT_RETRIES:
+            why = f"it lost {attempt + 1} races in a row"
+        if why is not None:
+            tail = cur["snapshots"][-1]["snapshot-id"] \
+                if cur["snapshots"] else None
+            raise CommitConflict(
+                f"{table_dir}: commit conflict: another writer published "
+                f"v{lost} (newest snapshot {tail}); {why} — re-read the "
+                "table and retry")
+        time.sleep(0.02 * (attempt + 1)
+                   * (1 + (uuid.uuid4().int & 0xFF) / 256))
+
+
+def _publish_metadata(mdir: Path, meta: dict, version: int) -> None:
     """THE COMMIT POINT: publish vN.metadata.json atomically with
-    NO-OVERWRITE semantics (write complete content to a tmp file, then
-    os.link — link fails with EEXIST instead of clobbering).  Two
-    writers based on the same parent compute the same N; exactly one
-    link succeeds, the loser fails loudly and must re-read + retry —
-    and the retry CAN succeed, because _current_version probes past the
-    hint and sees the winner's vN (no permanent wedge if the winner
-    crashes before updating the hint).  Readers never see a torn vN:
-    the file appears only with complete content.  The hint update after
-    is advisory only (a crash there, or an out-of-order update by a
-    slower earlier writer, is healed by the reader-side upward probe)."""
+    NO-OVERWRITE semantics (complete content in a tmp file, then os.link,
+    which fails with EEXIST instead of clobbering): of two writers based
+    on the same parent exactly one wins, the loser gets
+    ``FileExistsError``, and its retry sees the winner's vN because
+    _current_version probes past the hint.  Readers never see a torn vN.
+    The hint update after is advisory (a crash there, or an out-of-order
+    update, is healed by that probe).  Both tmp names carry a fresh random
+    token: a shared tmp file would let one writer publish the other's
+    content, or move the other's hint out from under it."""
     vpath = mdir / f"v{version}.metadata.json"
-    # the tmp name carries a fresh random token: a caller-supplied
-    # uniquifier can be deterministic (two concurrent add_column commits
-    # compute the same schema-id), and a SHARED tmp inode would let one
-    # writer publish the other's content as its own (lost commit)
-    vtmp = mdir / f".v{version}.{uniquifier}.{uuid.uuid4().hex[:8]}.tmp"
+    vtmp = mdir / f".v{version}.{uuid.uuid4().hex}.tmp"
     vtmp.write_text(json.dumps(meta))
     try:
         os.link(vtmp, vpath)
-    except FileExistsError:
-        raise RuntimeError(
-            f"commit conflict: {vpath.name} already exists — another "
-            "writer committed concurrently; re-read the table and retry"
-        ) from None
     finally:
         vtmp.unlink(missing_ok=True)
-    tmp = mdir / f".version-hint.{uniquifier}.tmp"
+    tmp = mdir / f".version-hint.{uuid.uuid4().hex}.tmp"
     tmp.write_text(str(version))
     os.replace(tmp, mdir / "version-hint.text")
 
@@ -1275,9 +1309,9 @@ def append(df: DataFrame, table_dir: str,
     spec's summary map is string->string; e.g. the resumable encoder's
     shard lineage).  ``branch`` stages the append on a write-audit-
     publish ref instead of main (see :func:`create_branch`)."""
-    prev = _load_metadata(table_dir)
-    _check_same_schema(prev, df, "append")
-    return _write_snapshot(table_dir, df, prev,
+    base = _load_base(table_dir)
+    _check_same_schema(base[1], df, "append")
+    return _write_snapshot(table_dir, df, base,
                            extra_summary=extra_summary, branch=branch)
 
 
@@ -1296,9 +1330,8 @@ def add_column(table_dir: str, name: str, ftype: str) -> dict:
     """Schema evolution: ADD an optional column (metadata-only commit).
 
     Appends a new schema (schema-id = max+1) with the column assigned the
-    next field id, moves current-schema-id, and publishes through the
-    same atomic no-overwrite vN protocol as data commits — concurrent
-    writers conflict loudly, readers see old-or-new.  Existing data files
+    next field id and moves current-schema-id, through :func:`_commit`
+    like every commit — readers see old-or-new.  Existing data files
     are untouched: read_table projects the CURRENT schema by field id,
     so old files, which lack the new id, surface the new column as NULL
     (Iceberg's add-column semantics).  Scalar types only.  Renaming /
@@ -1316,34 +1349,31 @@ def add_column(table_dir: str, name: str, ftype: str) -> dict:
         meta["last-column-id"] = new_id
         return cur["fields"] + [{"id": new_id, "name": name,
                                  "required": False, "type": ftype}]
-    return _evolve_schema(table_dir, "addcol", mutate)
+    return _evolve_schema(table_dir, mutate)
 
 
-def _evolve_schema(table_dir: str, op: str, mutate) -> dict:
+def _evolve_schema(table_dir: str, mutate) -> dict:
     """Shared metadata-only schema commit: append a new schema
     (schema-id = max+1) built by ``mutate(meta, current_schema) ->
-    new_fields``, move current-schema-id, publish atomically (same vN
-    no-overwrite protocol as data commits).  Data files are never
-    touched: every reader resolves columns by field id, which is what
-    makes a metadata-only rename / drop / promote safe."""
-    meta = _load_metadata(table_dir)
-    version = meta.pop("__loaded_version")
-    meta = dict(meta)
-    cur = _current_schema(meta)
-    new_fields = mutate(meta, cur)
-    new_sid = max(s.get("schema-id", 0) for s in meta["schemas"]) + 1
-    meta["schemas"] = meta["schemas"] + [
-        {"type": "struct", "schema-id": new_sid, "fields": new_fields}]
-    meta["current-schema-id"] = new_sid
-    meta["last-updated-ms"] = time.time_ns() // 1_000_000
-    _publish_metadata(_meta_dir(table_dir), meta, version + 1,
-                      f"{op}-{new_sid}")
-    return meta
+    new_fields`` and move current-schema-id.  A commit that loses the
+    race re-runs ``mutate`` on the new base while the current schema is
+    unchanged.  Data files are never touched: every reader resolves
+    columns by field id, which is what makes a metadata-only rename /
+    drop / promote safe."""
+    def change(base):
+        meta = dict(base)
+        new_fields = mutate(meta, _current_schema(base))
+        new_sid = max(s.get("schema-id", 0) for s in base["schemas"]) + 1
+        meta["schemas"] = base["schemas"] + [
+            {"type": "struct", "schema-id": new_sid, "fields": new_fields}]
+        meta["current-schema-id"] = new_sid
+        return meta
+    return _commit(table_dir, change, validate=_same_schema)
 
 
 def _refuse_partition_source(meta: dict, field: dict, op: str) -> None:
-    spec = meta["partition-specs"][meta.get("default-spec-id", 0)]
-    if any(pf["source-id"] == field["id"] for pf in spec["fields"]):
+    if any(pf["source-id"] == field["id"]
+           for pf in _default_spec(meta)["fields"]):
         raise ValueError(
             f"{op}: column {field['name']!r} (field id {field['id']}) "
             "is a partition source column — evolving it would desync "
@@ -1371,7 +1401,7 @@ def rename_column(table_dir: str, old: str, new: str) -> dict:
         _refuse_partition_source(meta, by_name[old], "rename_column")
         return [dict(f, name=new) if f["name"] == old else f
                 for f in cur["fields"]]
-    return _evolve_schema(table_dir, "rename", mutate)
+    return _evolve_schema(table_dir, mutate)
 
 
 def drop_column(table_dir: str, name: str) -> dict:
@@ -1400,7 +1430,7 @@ def drop_column(table_dir: str, name: str) -> dict:
                     "equality-delete key of a live delete file "
                     f"({d['file_path']}) — run compact_files first")
         return [g for g in cur["fields"] if g["name"] != name]
-    return _evolve_schema(table_dir, "dropcol", mutate)
+    return _evolve_schema(table_dir, mutate)
 
 
 _PROMOTIONS = {("int", "long"), ("float", "double")}
@@ -1430,7 +1460,7 @@ def promote_column(table_dir: str, name: str, new_type: str) -> dict:
         _refuse_partition_source(meta, f, "promote_column")
         return [dict(g, type=new_type) if g["name"] == name else g
                 for g in cur["fields"]]
-    return _evolve_schema(table_dir, "promote", mutate)
+    return _evolve_schema(table_dir, mutate)
 
 
 def fused_role_columns(table_dir: str, roles: list[str]) -> dict:
@@ -1503,10 +1533,9 @@ def overwrite(df: DataFrame, table_dir: str) -> dict:
     snapshot.  This is the natural sink for dedup/filter pipelines that
     REWRITE a table (e.g. ``encoded_dedup`` output) with snapshot
     isolation — readers of the old snapshot are never disturbed."""
-    prev = _load_metadata(table_dir)
-    _check_same_schema(prev, df, "overwrite")
-    return _write_snapshot(table_dir, df, prev,
-                           operation="overwrite")
+    base = _load_base(table_dir)
+    _check_same_schema(base[1], df, "overwrite")
+    return _write_snapshot(table_dir, df, base, operation="overwrite")
 
 
 def prune_files(table_dir: str, col: str, lo=None, hi=None,
@@ -1535,8 +1564,7 @@ def prune_files(table_dir: str, col: str, lo=None, hi=None,
         raise KeyError(f"column {col!r} not in table schema "
                        f"({sorted(fields)})")
     fid, ftype = fields[col]["id"], fields[col]["type"]
-    spec = meta["partition-specs"][meta.get("default-spec-id", 0)]
-    part_field = next((pf for pf in spec["fields"]
+    part_field = next((pf for pf in _default_spec(meta)["fields"]
                        if pf["source-id"] == fid), None)
     tname = param = None
     if part_field is not None:
@@ -1595,7 +1623,8 @@ def prune_files(table_dir: str, col: str, lo=None, hi=None,
     return out
 
 
-def _snapshot_entries(table_dir: str, snapshot_id: int | None = None
+def _snapshot_entries(table_dir: str, snapshot_id: int | None = None,
+                      meta: dict | None = None
                       ) -> tuple[dict, list[dict], list[dict]]:
     """Walk metadata → manifest list → manifests for a snapshot (current
     by default) and return ``(meta, data_entries, delete_entries)``.
@@ -1607,8 +1636,10 @@ def _snapshot_entries(table_dir: str, snapshot_id: int | None = None
     compaction needs them to carry untouched files forward as EXISTING
     entries without rewriting a byte.  ``delete_entries`` are POSITION
     delete files (content=1) and EQUALITY delete files (content=2);
-    callers split on ``content``."""
-    meta = _load_metadata(table_dir)
+    callers split on ``content``.  ``meta`` reuses metadata the caller
+    already loaded."""
+    if meta is None:
+        meta = _load_metadata(table_dir)
     sid = snapshot_id or meta["current-snapshot-id"]
     if snapshot_id is None and (sid == -1 or not meta["snapshots"]):
         return meta, [], []  # empty table (all snapshots rolled back)
@@ -2081,55 +2112,71 @@ _FP_FID, _POS_FID = 2147483546, 2147483545
 _DELETE_ROWS_PER_FILE = 2_000_000
 
 
-def _spec_part_fields(meta: dict) -> tuple[dict, list[tuple]]:
-    """(partition spec, [(name, iceberg_type, partition_field_id)]) of the
-    table's default spec — the manifest-entry partition-struct schema."""
-    spec = meta["partition-specs"][meta.get("default-spec-id", 0)]
-    by_id = {f["id"]: f for f in _current_schema(meta)["fields"]}
-    return spec, [
-        (pf["name"],
-         _transform_result_type(_transform_of(pf)[0],
-                                by_id[pf["source-id"]]["type"]),
-         pf["field-id"]) for pf in spec["fields"]]
+def _default_spec(meta: dict) -> dict:
+    return meta["partition-specs"][meta.get("default-spec-id", 0)]
 
 
-def _mlist_record(manifest_path: str, spec_id: int, content: int,
-                  seq: int, min_seq: int, snap_id: int,
-                  added_files: int, added_rows: int,
-                  existing_files: int = 0, existing_rows: int = 0
-                  ) -> dict:
-    """One manifest-list entry (spec `manifest_file` struct) — the single
-    source of its 14-field shape for every snapshot-producing writer
-    (append/overwrite, both delete writers, compaction, manifest
-    rewrite); a spec-field addition lands here once."""
-    return {"manifest_path": manifest_path,
-            "manifest_length": os.path.getsize(manifest_path),
-            "partition_spec_id": spec_id, "content": content,
-            "sequence_number": seq, "min_sequence_number": min_seq,
-            "added_snapshot_id": snap_id,
-            "added_data_files_count": added_files,
-            "existing_data_files_count": existing_files,
-            "deleted_data_files_count": 0,
-            "added_rows_count": added_rows,
-            "existing_rows_count": existing_rows,
-            "deleted_rows_count": 0}
+def _part_fields(spec: dict, schema: dict) -> list[tuple]:
+    """[(name, iceberg_type, partition_field_id)] of ``spec`` over
+    ``schema`` — the manifest-entry partition-struct schema."""
+    by_id = {f["id"]: f for f in schema["fields"]}
+    return [(pf["name"], "int" if _transform_of(pf)[0] == "bucket"
+             else by_id[pf["source-id"]]["type"], pf["field-id"])
+            for pf in spec["fields"]]
 
 
 def _prev_manifest_records(prev_meta: dict,
                            base_snapshot_id: int | None = None
                            ) -> list[dict]:
-    """A snapshot's manifest-list records (data AND delete manifests),
-    for carry-forward commits.  Default base = the current snapshot;
-    branch-targeted appends pass the BRANCH head — carrying forward
-    main's manifests instead would silently drop every earlier staged
-    batch from the published table."""
+    """A snapshot's manifest-list records (data AND delete manifests):
+    the current snapshot's, or ``base_snapshot_id``'s (a branch head)."""
     sid = (base_snapshot_id if base_snapshot_id is not None
-           else prev_meta["current-snapshot-id"])
+           else prev_meta.get("current-snapshot-id"))
     cur = [s for s in prev_meta["snapshots"] if s["snapshot-id"] == sid]
     if not cur:
         return []
     _, records = _avro_read(cur[0]["manifest-list"])
     return records
+
+
+def _write_deletes(table_dir: str, base: tuple[int, dict], rows: DataFrame,
+                   fields: list[dict], kind: str, validate,
+                   summary: dict[str, str], **data_file) -> dict | None:
+    """Commit ``rows`` as one DELETE snapshot of "position" (content=1)
+    or "equality" (content=2) delete files, ~2M rows each and sorted by
+    the columns as the spec requires — both delete writers' tail.
+    ``fields`` (the columns' Iceberg fields) go into the footers and the
+    manifest bounds.  Returns the new metadata, or None (no commit) when
+    ``rows`` is empty."""
+    # the rows' lineage is often the expensive part (delete_where / dedup
+    # scan the whole table, equality keys run a distinct): persist so
+    # count + write run it once
+    rows = rows.persist()
+    n = rows.count()
+    if n == 0:
+        rows.unpersist()
+        return None
+    meta = base[1]
+    snap_id = _new_snapshot_id()
+    cols = [f["name"] for f in fields]
+    nfiles = (n + _DELETE_ROWS_PER_FILE - 1) // _DELETE_ROWS_PER_FILE
+    stats = _write_data_files(
+        rows.repartitionByRange(nfiles, *cols).sortWithinPartitions(*cols),
+        str(Path(table_dir) / "data" / f"snap-{snap_id}"),
+        {"fields": fields}, {"fields": []})
+    rows.unpersist()
+    spec = _default_spec(meta)
+    entries = _file_entries(stats, snap_id, 1 if kind == "position" else 2,
+                            {f["name"]: f for f in fields}, spec,
+                            **data_file)
+    manifest = _write_manifest(
+        str(_meta_dir(table_dir) / f"manifest-{kind}-del-{snap_id}.avro"),
+        entries, _current_schema(meta), spec, deletes=True)
+    return _commit(table_dir, snapshot=_NewSnapshot(
+        snap_id, [manifest], (0, 1),
+        {"operation": "delete", f"added-{kind}-delete-files": str(len(stats)),
+         f"added-{kind}-deletes": str(n), **summary}),
+        validate=validate, base=base)
 
 
 def write_position_deletes(spark: SparkSession, table_dir: str,
@@ -2146,66 +2193,23 @@ def write_position_deletes(spark: SparkSession, table_dir: str,
     manifest forward.  At 100 TB this is the only sane shape for
     sub-percent row removal — dedup losers, takedowns, PII scrubs —
     because the alternative rewrites every dirtied data file for rows
-    that are 16 bytes of coordinates each.
+    that are 16 bytes of coordinates each.  A commit that loses the race
+    rebases while every commit since its base is an append or a delete
+    (no file it targets can have been rewritten).
 
     Readers: :func:`read_table` applies the deletes; raw file-level
     consumers are refused by :func:`data_files` until
     :func:`compact_files` rewrites the dirtied files.  Returns the new
     table metadata, or None (no commit) when ``pos_df`` is empty."""
-    prev_meta = _load_metadata(table_dir)
-    spec, part_fields = _spec_part_fields(prev_meta)
-    # the coordinate lineage is often the expensive part (delete_where /
-    # dedup scan the whole table): persist so count + write run it once
-    pos_df = pos_df.persist()
-    n_pos = pos_df.count()
-    if n_pos == 0:
-        pos_df.unpersist()
-        return None
-    snap_id = int(uuid.uuid4().int % (1 << 62)) + 1
-    seq = prev_meta.get("last-sequence-number", 0) + 1
-    now_ms = time.time_ns() // 1_000_000
-    nfiles = (n_pos + _DELETE_ROWS_PER_FILE - 1) // _DELETE_ROWS_PER_FILE
-    # file_path/pos under the spec's RESERVED field ids: stamped into the
-    # footers (readers here match these constant names), and as manifest
-    # bounds, which let a reader skip delete files irrelevant to the
-    # data file it scans
-    del_schema = {"fields": [
-        {"id": _FP_FID, "name": "file_path", "type": "string"},
-        {"id": _POS_FID, "name": "pos", "type": "long"}]}
-    stats = _write_data_files(
+    # file_path/pos under the spec's RESERVED field ids (readers here
+    # match these constant names)
+    return _write_deletes(
+        table_dir, _load_base(table_dir),
         pos_df.select(F.col("file_path").cast("string"),
-                      F.col("pos").cast("long"))
-        .repartitionByRange(nfiles, "file_path", "pos")
-        .sortWithinPartitions("file_path", "pos"),
-        str(Path(table_dir) / "data" / f"snap-{snap_id}"), del_schema,
-        {"fields": []})
-    pos_df.unpersist()
-    entries = _file_entries(
-        stats, snap_id, 1, {f["name"]: f for f in del_schema["fields"]},
-        [n for n, _, _ in part_fields])
-    mdir = _meta_dir(table_dir)
-    manifest_path = str(mdir / f"manifest-del-{snap_id}.avro")
-    _avro_write(manifest_path, _manifest_entry_schema(part_fields), entries,
-                metadata={"schema": json.dumps(_current_schema(prev_meta)),
-                          "partition-spec": json.dumps(spec["fields"]),
-                          "content": "deletes",
-                          "format-version": "2"})
-    mlist = _prev_manifest_records(prev_meta) + [_mlist_record(
-        manifest_path, spec["spec-id"], 1, seq, seq, snap_id,
-        len(stats), n_pos)]
-    mlist_path = str(mdir / f"snap-{snap_id}.avro")
-    _avro_write(mlist_path, _MANIFEST_FILE_SCHEMA, mlist,
-                metadata={"format-version": "2"})
-    snapshot = {"snapshot-id": snap_id, "sequence-number": seq,
-                "timestamp-ms": now_ms, "manifest-list": mlist_path,
-                "schema-id": _current_schema(prev_meta).get("schema-id",
-                                                            0),
-                "summary": {"operation": "delete",
-                            "added-position-delete-files": str(len(stats)),
-                            "added-position-deletes": str(n_pos),
-                            **(extra_summary or {})}}
-    return _attach_snapshot(table_dir, prev_meta, snapshot,
-                            whole_runs=True)  # adds no data file
+                      F.col("pos").cast("long")),
+        [{"id": _FP_FID, "name": "file_path", "type": "string"},
+         {"id": _POS_FID, "name": "pos", "type": "long"}],
+        "position", _no_rewrite_since, extra_summary or {})
 
 
 def delete_where(spark: SparkSession, table_dir: str, predicate
@@ -2238,65 +2242,26 @@ def write_equality_deletes(spark: SparkSession, table_dir: str,
     needed — the writer never has to read the table, which is what CDC /
     takedown-by-id pipelines want at 100 TB.  Key-column bounds are
     stamped on the delete file so compaction can skip data files whose
-    bounds cannot intersect.  Returns the new table metadata, or None
-    (no commit) when ``keys_df`` is empty."""
-    prev_meta = _load_metadata(table_dir)
-    spec, part_fields = _spec_part_fields(prev_meta)
-    fields = {f["name"]: f for f in _current_schema(prev_meta)["fields"]}
+    bounds cannot intersect.  A commit that loses the race raises
+    :class:`CommitConflict`: at a later sequence number the keys would
+    also delete the concurrent commit's rows.  Returns the new table
+    metadata, or None (no commit) when ``keys_df`` is empty."""
+    base = _load_base(table_dir)
+    fields = {f["name"]: f for f in _current_schema(base[1])["fields"]}
     cols = list(keys_df.columns)
     unknown = [c for c in cols if c not in fields]
     if not cols or unknown:
         raise ValueError(
             f"equality-delete key columns {unknown or cols} not in the "
             f"table schema {sorted(fields)}")
-    eq_ids = [fields[c]["id"] for c in cols]
-    # persist the deduplicated keys: count + write otherwise run the
-    # distinct (a shuffle over the caller's whole lineage) twice
-    keys_df = keys_df.distinct().persist()
-    n_keys = keys_df.count()
-    if n_keys == 0:
-        keys_df.unpersist()
-        return None
-    snap_id = int(uuid.uuid4().int % (1 << 62)) + 1
-    seq = prev_meta.get("last-sequence-number", 0) + 1
-    now_ms = time.time_ns() // 1_000_000
-    nfiles = (n_keys + _DELETE_ROWS_PER_FILE - 1) // _DELETE_ROWS_PER_FILE
     # the key columns carry their table field ids so the read side can
     # resolve them by id even after a later rename
-    key_fields = {c: fields[c] for c in cols}
-    stats = _write_data_files(
-        keys_df.repartitionByRange(nfiles, *cols).sortWithinPartitions(*cols),
-        str(Path(table_dir) / "data" / f"snap-{snap_id}"),
-        {"fields": list(key_fields.values())}, {"fields": []})
-    keys_df.unpersist()
-    entries = _file_entries(stats, snap_id, 2, key_fields,
-                            [n for n, _, _ in part_fields],
-                            equality_ids=eq_ids)
-    mdir = _meta_dir(table_dir)
-    manifest_path = str(mdir / f"manifest-eqdel-{snap_id}.avro")
-    _avro_write(manifest_path, _manifest_entry_schema(part_fields), entries,
-                metadata={"schema": json.dumps(_current_schema(prev_meta)),
-                          "partition-spec": json.dumps(spec["fields"]),
-                          "content": "deletes",
-                          "format-version": "2"})
-    mlist = _prev_manifest_records(prev_meta) + [_mlist_record(
-        manifest_path, spec["spec-id"], 1, seq, seq, snap_id,
-        len(stats), n_keys)]
-    mlist_path = str(mdir / f"snap-{snap_id}.avro")
-    _avro_write(mlist_path, _MANIFEST_FILE_SCHEMA, mlist,
-                metadata={"format-version": "2"})
-    snapshot = {"snapshot-id": snap_id, "sequence-number": seq,
-                "timestamp-ms": now_ms, "manifest-list": mlist_path,
-                "schema-id": _current_schema(prev_meta).get("schema-id",
-                                                            0),
-                "summary": {"operation": "delete",
-                            "added-equality-delete-files": str(len(stats)),
-                            "added-equality-deletes": str(n_keys),
-                            "equality-field-ids":
-                                ",".join(map(str, eq_ids)),
-                            **(extra_summary or {})}}
-    return _attach_snapshot(table_dir, prev_meta, snapshot,
-                            whole_runs=True)  # adds no data file
+    eq_ids = [fields[c]["id"] for c in cols]
+    return _write_deletes(
+        table_dir, base, keys_df.distinct(), [fields[c] for c in cols],
+        "equality", None,
+        {"equality-field-ids": ",".join(map(str, eq_ids)),
+         **(extra_summary or {})}, equality_ids=eq_ids)
 
 
 def compact_files(spark: SparkSession, table_dir: str) -> dict:
@@ -2306,15 +2271,17 @@ def compact_files(spark: SparkSession, table_dir: str) -> dict:
     sequence numbers per the spec), so compaction cost scales with the
     dirtied fraction, not the table.  At 100 TB with 0.1% of rows
     deleted across 1% of files, 99% of the table is a metadata-only
-    carry-forward.
+    carry-forward.  A compaction that loses the commit race raises
+    :class:`CommitConflict` naming a file it rewrote.
 
     After compaction the current snapshot has no delete files, so the
     fused ingest (engine.encode_files) accepts the table again.  Earlier
     snapshots still time-travel (their delete files stay referenced
-    until expire_snapshots + remove_orphan_files reclaim them).  Returns ``{"meta", "rewritten_files", "kept_files",
-    "removed_delete_files"}``; no commit when the table has no
-    deletes."""
-    prev_meta, data, dels = _snapshot_entries(table_dir)
+    until expire_snapshots + remove_orphan_files reclaim them).  Returns
+    ``{"meta", "rewritten_files", "kept_files", "removed_delete_files"}``;
+    no commit when the table has no deletes."""
+    base = _load_base(table_dir)
+    prev_meta, data, dels = _snapshot_entries(table_dir, meta=base[1])
     if not dels:
         return {"meta": None, "rewritten_files": 0,
                 "kept_files": len(data), "removed_delete_files": 0}
@@ -2333,12 +2300,9 @@ def compact_files(spark: SparkSession, table_dir: str) -> dict:
     clean = [d for d in data if d["file_path"] not in dirty]
     dirty_entries = [d for d in data if d["file_path"] in dirty]
 
-    spec, part_fields = _spec_part_fields(prev_meta)
+    spec = _default_spec(prev_meta)
     schema = _current_schema(prev_meta)
-
-    snap_id = int(uuid.uuid4().int % (1 << 62)) + 1
-    seq = prev_meta.get("last-sequence-number", 0) + 1
-    now_ms = time.time_ns() // 1_000_000
+    snap_id = _new_snapshot_id()
 
     # rewrite ONLY the dirtied files, deletes applied; rewritten files
     # are stamped with CURRENT field ids and names, so compaction also
@@ -2348,49 +2312,36 @@ def compact_files(spark: SparkSession, table_dir: str) -> dict:
     stats = _write_data_files(
         df, str(Path(table_dir) / "data" / f"snap-{snap_id}"), schema, spec)
     entries = _file_entries(stats, snap_id, 0,
-                            {f["name"]: f for f in schema["fields"]},
-                            [n for n, _, _ in part_fields])
-    added_rows = sum(st["rows"] for st in stats)
-    kept_rows = 0
-    for d in clean:  # carry untouched files forward: metadata only
-        kept_rows += int(d.get("record_count") or 0)
-        dd = {k: v for k, v in d.items() if not k.startswith("_")}
-        entries.append(
-            {"status": 0, "snapshot_id": d["_snapshot_id"],
-             "sequence_number": d["_sequence_number"],
-             "file_sequence_number": d["_sequence_number"],
-             "data_file": dd})
-    mdir = _meta_dir(table_dir)
-    manifest_path = str(mdir / f"manifest-{snap_id}.avro")
-    _avro_write(manifest_path, _manifest_entry_schema(part_fields), entries,
-                metadata={"schema": json.dumps(schema),
-                          "partition-spec": json.dumps(spec["fields"]),
-                          "content": "data",
-                          "format-version": "2"})
-    min_seq = min([seq] + [d["_sequence_number"] for d in clean])
-    mlist = [_mlist_record(
-        manifest_path, spec["spec-id"], 0, seq, min_seq, snap_id,
-        len(stats), added_rows,
-        existing_files=len(clean), existing_rows=kept_rows)]
-    mlist_path = str(mdir / f"snap-{snap_id}.avro")
-    _avro_write(mlist_path, _MANIFEST_FILE_SCHEMA, mlist,
-                metadata={"format-version": "2"})
-    snapshot = {"snapshot-id": snap_id, "sequence-number": seq,
-                "timestamp-ms": now_ms, "manifest-list": mlist_path,
-                "schema-id": schema.get("schema-id", 0),
-                "summary": {"operation": "replace",
-                            "added-data-files": str(len(stats)),
-                            "added-records": str(added_rows),
-                            "rewritten-data-files": str(len(dirty_entries)),
-                            "kept-data-files": str(len(clean)),
-                            "removed-position-delete-files":
-                                str(len(pos_dels)),
-                            "removed-equality-delete-files":
-                                str(len(eq_dels))}}
-    meta = _attach_snapshot(table_dir, prev_meta, snapshot, whole_runs=all(
-        st["whole_runs"] for st in stats))
+                            {f["name"]: f for f in schema["fields"]}, spec)
+    entries += _existing_entries(clean)  # untouched files: metadata only
+    manifest = _write_manifest(str(_meta_dir(table_dir)
+                                   / f"manifest-{snap_id}.avro"),
+                               entries, schema, spec)
+    rewritten = (f"it rewrote {dirty_entries[0]['file_path']}"
+                 if dirty_entries else "it drops the delete files")
+    meta = _commit(table_dir, snapshot=_NewSnapshot(
+        snap_id, [manifest], (),
+        {"operation": "replace",
+         "added-data-files": str(len(stats)),
+         "added-records": str(sum(st["rows"] for st in stats)),
+         "rewritten-data-files": str(len(dirty_entries)),
+         "kept-data-files": str(len(clean)),
+         "removed-position-delete-files": str(len(pos_dels)),
+         "removed-equality-delete-files": str(len(eq_dels))},
+        whole_runs=all(st["whole_runs"] for st in stats)),
+        validate=lambda start, cur: rewritten, base=base)
     return {"meta": meta, "rewritten_files": len(dirty_entries),
             "kept_files": len(clean), "removed_delete_files": len(dels)}
+
+
+def _existing_entries(data: list[dict]) -> list[dict]:
+    """EXISTING (status=0) manifest entries carrying ``data`` forward
+    unchanged, with their original snapshot and sequence numbers."""
+    return [{"status": 0, "snapshot_id": d["_snapshot_id"],
+             "sequence_number": d["_sequence_number"],
+             "file_sequence_number": d["_sequence_number"],
+             "data_file": {k: v for k, v in d.items()
+                           if not k.startswith("_")}} for d in data]
 
 
 # ---------------------------------------------------------------------------
@@ -2467,61 +2418,30 @@ def rewrite_manifests(table_dir: str,
         raise ValueError(
             f"rewrite_manifests: target_entries must be >= 1, got "
             f"{target_entries}")
-    prev_meta = _load_metadata(table_dir)
-    prev_records = _prev_manifest_records(prev_meta)
-    data_records = [r for r in prev_records if r.get("content", 0) == 0]
-    del_records = [r for r in prev_records if r.get("content", 0) == 1]
-    _, data, _ = _snapshot_entries(table_dir)
+    base = _load_base(table_dir)
+    prev_meta, data, _ = _snapshot_entries(table_dir, meta=base[1])
+    n_before = sum(1 for r in _prev_manifest_records(prev_meta)
+                   if r.get("content", 0) == 0)
     need = max(1, -(-len(data) // target_entries))
-    if not data or len(data_records) <= need:
-        return {"meta": None, "manifests_before": len(data_records),
-                "manifests_after": len(data_records)}
-    spec, part_fields = _spec_part_fields(prev_meta)
+    if not data or n_before <= need:
+        return {"meta": None, "manifests_before": n_before,
+                "manifests_after": n_before}
+    spec = _default_spec(prev_meta)
     schema = _current_schema(prev_meta)
-    snap_id = int(uuid.uuid4().int % (1 << 62)) + 1
-    seq = prev_meta.get("last-sequence-number", 0) + 1
-    now_ms = time.time_ns() // 1_000_000
-    entries = []
-    for d in data:
-        dd = {k: v for k, v in d.items() if not k.startswith("_")}
-        entries.append({"status": 0, "snapshot_id": d["_snapshot_id"],
-                        "sequence_number": d["_sequence_number"],
-                        "file_sequence_number": d["_sequence_number"],
-                        "data_file": dd})
+    snap_id = _new_snapshot_id()
+    entries = _existing_entries(data)
     mdir = _meta_dir(table_dir)
-    new_mlist = []
-    for gi in range(0, len(entries), target_entries):
-        chunk = entries[gi:gi + target_entries]
-        mp = str(mdir / f"manifest-rw-{snap_id}-"
-                        f"{gi // target_entries}.avro")
-        _avro_write(mp, _manifest_entry_schema(part_fields), chunk,
-                    metadata={"schema": json.dumps(schema),
-                              "partition-spec":
-                                  json.dumps(spec["fields"]),
-                              "content": "data",
-                              "format-version": "2"})
-        rows = sum(int(e["data_file"].get("record_count") or 0)
-                   for e in chunk)
-        new_mlist.append(_mlist_record(
-            mp, spec["spec-id"], 0, seq,
-            min(e["sequence_number"] for e in chunk), snap_id,
-            0, 0, existing_files=len(chunk), existing_rows=rows))
-    mlist_path = str(mdir / f"snap-{snap_id}.avro")
-    _avro_write(mlist_path, _MANIFEST_FILE_SCHEMA,
-                new_mlist + del_records,
-                metadata={"format-version": "2"})
-    snapshot = {"snapshot-id": snap_id, "sequence-number": seq,
-                "timestamp-ms": now_ms, "manifest-list": mlist_path,
-                "schema-id": schema.get("schema-id", 0),
-                "summary": {"operation": "replace",
-                            "rewrite-manifests": "true",
-                            "manifests-replaced":
-                                str(len(data_records)),
-                            "manifests-created": str(len(new_mlist))}}
-    meta = _attach_snapshot(table_dir, prev_meta, snapshot,
-                            whole_runs=True)  # adds no data file
-    return {"meta": meta, "manifests_before": len(data_records),
-            "manifests_after": len(new_mlist)}
+    manifests = [
+        _write_manifest(str(mdir / f"manifest-rw-{snap_id}-{i}.avro"),
+                        entries[gi:gi + target_entries], schema, spec)
+        for i, gi in enumerate(range(0, len(entries), target_entries))]
+    meta = _commit(table_dir, snapshot=_NewSnapshot(
+        snap_id, manifests, (1,),
+        {"operation": "replace", "rewrite-manifests": "true",
+         "manifests-replaced": str(n_before),
+         "manifests-created": str(len(manifests))}), base=base)
+    return {"meta": meta, "manifests_before": n_before,
+            "manifests_after": len(manifests)}
 
 
 def _is_parent(a: dict, b: dict) -> bool:
@@ -2539,10 +2459,13 @@ def _check_ref_name(name: str) -> None:
     if name == "main":
         raise ValueError("'main' is the reserved branch ref")
     if not name or not all(c.isalnum() or c in "._-" for c in name):
-        # the name lands in commit-artifact filenames; path separators
-        # or emptiness would fail deep in _publish_metadata instead
         raise ValueError(
             f"invalid ref name {name!r}: need [A-Za-z0-9._-]+")
+
+
+def _without_ref(meta: dict, name: str) -> dict:
+    return {**meta, "refs": {n: r for n, r in meta["refs"].items()
+                             if n != name}}
 
 
 def resolve_ref(table_dir: str, name: str) -> int:
@@ -2559,58 +2482,49 @@ def resolve_ref(table_dir: str, name: str) -> int:
 def create_tag(table_dir: str, name: str,
                snapshot_id: int | None = None) -> dict:
     """Metadata-only commit adding a named TAG ref (Iceberg v2 ``refs``
-    map) pinning ``snapshot_id`` (default: current) — the reproducibility
-    primitive: a training run tags the exact corpus snapshot it consumed
-    ("run-2026-08-18"), later commits never move it,
+    map) pinning ``snapshot_id`` (default: current when called) — the
+    reproducibility primitive: a training run tags the exact corpus
+    snapshot it consumed ("run-2026-08-18"), later commits never move it,
     :func:`expire_snapshots` never expires it, and
     :func:`read_table`\\ ``(ref=...)`` reads exactly it forever (until
     :func:`remove_tag`)."""
     _check_ref_name(name)
-    meta = _load_metadata(table_dir)
-    version = meta.pop("__loaded_version")
+    base = _load_base(table_dir)
     sid = snapshot_id if snapshot_id is not None \
-        else meta["current-snapshot-id"]
-    if sid not in {s["snapshot-id"] for s in meta["snapshots"]}:
-        raise ValueError(f"{table_dir}: snapshot {sid} not in the log")
-    refs = dict(meta.get("refs", {}))
-    if name in refs:
-        raise ValueError(
-            f"{table_dir}: ref {name!r} already exists "
-            f"(-> {refs[name]['snapshot-id']}); tags are immutable — "
-            "remove_tag first to repoint")
-    meta = dict(meta)
-    refs[name] = {"snapshot-id": sid, "type": "tag"}
-    meta["refs"] = refs
-    meta["last-updated-ms"] = time.time_ns() // 1_000_000
-    _publish_metadata(_meta_dir(table_dir), meta, version + 1,
-                      f"tag-{name}")
-    return meta
+        else base[1]["current-snapshot-id"]
+
+    def change(meta):
+        if sid not in {s["snapshot-id"] for s in meta["snapshots"]}:
+            raise ValueError(f"{table_dir}: snapshot {sid} not in the log")
+        if name in meta.get("refs", {}):
+            raise ValueError(
+                f"{table_dir}: ref {name!r} already exists "
+                f"(-> {meta['refs'][name]['snapshot-id']}); tags are "
+                "immutable — remove_tag first to repoint")
+        return {**meta, "refs": {**meta.get("refs", {}), name: {
+            "snapshot-id": sid, "type": "tag"}}}
+    return _commit(table_dir, change, validate=_reapply, base=base)
 
 
 def remove_tag(table_dir: str, name: str) -> dict:
     """Metadata-only commit dropping a tag ref (the snapshot itself
     stays in the log until :func:`expire_snapshots` takes it)."""
     _check_ref_name(name)
-    meta = _load_metadata(table_dir)
-    version = meta.pop("__loaded_version")
-    refs = dict(meta.get("refs", {}))
-    if name not in refs:
-        raise ValueError(f"{table_dir}: no ref {name!r}")
-    if refs[name].get("type") == "branch":
-        # deleting just the ref would orphan the staged snapshots IN the
-        # log (time travel would expose unpublished data, and the
-        # main-commit freeze would silently lift)
-        raise ValueError(
-            f"{table_dir}: {name!r} is a staging BRANCH — use "
-            "drop_branch (removes its staged snapshots too) or "
-            "fast_forward (publishes them)")
-    del refs[name]
-    meta = dict(meta)
-    meta["refs"] = refs
-    meta["last-updated-ms"] = time.time_ns() // 1_000_000
-    _publish_metadata(_meta_dir(table_dir), meta, version + 1,
-                      f"untag-{name}")
-    return meta
+
+    def change(meta):
+        ref = meta.get("refs", {}).get(name)
+        if ref is None:
+            raise ValueError(f"{table_dir}: no ref {name!r}")
+        if ref.get("type") == "branch":
+            # deleting just the ref would orphan the staged snapshots IN
+            # the log (time travel would expose unpublished data, and the
+            # main-commit freeze would silently lift)
+            raise ValueError(
+                f"{table_dir}: {name!r} is a staging BRANCH — use "
+                "drop_branch (removes its staged snapshots too) or "
+                "fast_forward (publishes them)")
+        return _without_ref(meta, name)
+    return _commit(table_dir, change, validate=_reapply)
 
 
 def create_branch(table_dir: str, name: str) -> dict:
@@ -2622,28 +2536,23 @@ def create_branch(table_dir: str, name: str) -> dict:
     time — the linear snapshot log cannot represent true divergence, so
     main-targeted commits refuse while a branch exists."""
     _check_ref_name(name)
-    meta = _load_metadata(table_dir)
-    version = meta.pop("__loaded_version")
-    refs = dict(meta.get("refs", {}))
-    if name in refs:
-        raise ValueError(f"{table_dir}: ref {name!r} already exists")
-    existing = [n for n, r in refs.items()
-                if r.get("type") == "branch" and n != "main"]
-    if existing:
-        raise ValueError(
-            f"{table_dir}: staging branch {existing[0]!r} already open "
-            "— one at a time (linear log)")
-    if meta["current-snapshot-id"] in (None, -1):
-        raise ValueError(f"{table_dir}: empty table has no snapshot "
-                         "to branch from")
-    meta = dict(meta)
-    refs[name] = {"snapshot-id": meta["current-snapshot-id"],
-                  "type": "branch"}
-    meta["refs"] = refs
-    meta["last-updated-ms"] = time.time_ns() // 1_000_000
-    _publish_metadata(_meta_dir(table_dir), meta, version + 1,
-                      f"branch-{name}")
-    return meta
+
+    def change(meta):
+        refs = meta.get("refs", {})
+        if name in refs:
+            raise ValueError(f"{table_dir}: ref {name!r} already exists")
+        existing = [n for n, r in refs.items()
+                    if r.get("type") == "branch" and n != "main"]
+        if existing:
+            raise ValueError(
+                f"{table_dir}: staging branch {existing[0]!r} already open "
+                "— one at a time (linear log)")
+        if meta["current-snapshot-id"] in (None, -1):
+            raise ValueError(f"{table_dir}: empty table has no snapshot "
+                             "to branch from")
+        return {**meta, "refs": {**refs, name: {
+            "snapshot-id": meta["current-snapshot-id"], "type": "branch"}}}
+    return _commit(table_dir, change, validate=_reapply)
 
 
 def fast_forward(table_dir: str, branch: str) -> dict:
@@ -2653,32 +2562,19 @@ def fast_forward(table_dir: str, branch: str) -> dict:
     switch from pre-branch main to the full staged state in one
     metadata swap."""
     _check_ref_name(branch)
-    meta = _load_metadata(table_dir)
-    version = meta.pop("__loaded_version")
-    refs = dict(meta.get("refs", {}))
-    ref = refs.get(branch)
-    if ref is None or ref.get("type") != "branch":
-        raise ValueError(f"{table_dir}: no branch ref {branch!r}")
-    head = ref["snapshot-id"]
-    if not meta["snapshots"] or \
-            meta["snapshots"][-1]["snapshot-id"] != head:
-        raise ValueError(
-            f"{table_dir}: branch {branch!r} head is not the log tail "
-            "— cannot fast-forward")
-    meta = dict(meta)
-    del refs[branch]
-    refs["main"] = {"snapshot-id": head, "type": "branch"}
-    meta["refs"] = refs
-    meta["current-snapshot-id"] = head
-    now = time.time_ns() // 1_000_000
-    # the publish is when CURRENT changes — log it now (staged commits
-    # deliberately skipped snapshot-log; see _attach_snapshot)
-    meta["snapshot-log"] = meta.get("snapshot-log", []) + [
-        {"snapshot-id": head, "timestamp-ms": now}]
-    meta["last-updated-ms"] = now
-    _publish_metadata(_meta_dir(table_dir), meta, version + 1,
-                      f"publish-{branch}")
-    return meta
+
+    def change(meta):
+        ref = meta.get("refs", {}).get(branch)
+        if ref is None or ref.get("type") != "branch":
+            raise ValueError(f"{table_dir}: no branch ref {branch!r}")
+        head = ref["snapshot-id"]
+        if not meta["snapshots"] or \
+                meta["snapshots"][-1]["snapshot-id"] != head:
+            raise ValueError(
+                f"{table_dir}: branch {branch!r} head is not the log tail "
+                "— cannot fast-forward")
+        return {**_without_ref(meta, branch), "current-snapshot-id": head}
+    return _commit(table_dir, change, validate=_reapply)
 
 
 def drop_branch(table_dir: str, name: str) -> dict:
@@ -2689,37 +2585,42 @@ def drop_branch(table_dir: str, name: str) -> dict:
     dropped snapshots' files become orphans (remove_orphan_files
     reclaims them); a tag pinning one of them blocks the drop."""
     _check_ref_name(name)
-    meta = _load_metadata(table_dir)
-    version = meta.pop("__loaded_version")
-    refs = dict(meta.get("refs", {}))
-    ref = refs.get(name)
-    if ref is None or ref.get("type") != "branch":
-        raise ValueError(f"{table_dir}: no branch ref {name!r}")
-    cur = meta["current-snapshot-id"]
-    keep, dropping = [], []
-    past_main = False
-    for s in meta["snapshots"]:
-        (dropping if past_main else keep).append(s)
-        if s["snapshot-id"] == cur:
-            past_main = True
-    for s in dropping:
-        pins = [n for n, r in refs.items()
-                if n != name and r["snapshot-id"] == s["snapshot-id"]]
-        if pins:
-            raise ValueError(
-                f"{table_dir}: ref(s) {pins} pin staged snapshot "
-                f"{s['snapshot-id']} — remove them before drop_branch")
-    meta = dict(meta)
-    del refs[name]
-    meta["refs"] = refs
-    meta["snapshots"] = keep
-    keep_ids = {s["snapshot-id"] for s in keep}
-    meta["snapshot-log"] = [e for e in meta.get("snapshot-log", [])
-                            if e["snapshot-id"] in keep_ids]
-    meta["last-updated-ms"] = time.time_ns() // 1_000_000
-    _publish_metadata(_meta_dir(table_dir), meta, version + 1,
-                      f"dropbranch-{name}")
-    return meta
+
+    def change(meta):
+        refs = meta.get("refs", {})
+        ref = refs.get(name)
+        if ref is None or ref.get("type") != "branch":
+            raise ValueError(f"{table_dir}: no branch ref {name!r}")
+        ids = [s["snapshot-id"] for s in meta["snapshots"]]
+        cut = ids.index(meta["current-snapshot-id"]) + 1 \
+            if meta["current-snapshot-id"] in ids else len(ids)
+        for sid in ids[cut:]:
+            pins = [n for n, r in refs.items()
+                    if n != name and r["snapshot-id"] == sid]
+            if pins:
+                raise ValueError(
+                    f"{table_dir}: ref(s) {pins} pin staged snapshot "
+                    f"{sid} — remove them before drop_branch")
+        return {**_without_ref(meta, name),
+                "snapshots": meta["snapshots"][:cut]}
+    return _commit(table_dir, change, validate=_reapply)
+
+
+def _expired(meta: dict, keep_last: int) -> list[dict]:
+    """The snapshots :func:`expire_snapshots` drops from ``meta``: all of
+    main's history but the last ``keep_last``, except ref-pinned ones
+    (tags pin training-run inputs) and the STAGED region of an open
+    branch (the snapshots after current) — expiring a staged
+    intermediate would both gap the chain fast_forward publishes and
+    fold a never-published batch's resume lineage into properties as
+    done."""
+    snaps = meta["snapshots"]
+    pinned = {r["snapshot-id"] for r in meta.get("refs", {}).values()}
+    cur_idx = next((i for i, s in enumerate(snaps)
+                    if s["snapshot-id"] == meta["current-snapshot-id"]),
+                   len(snaps) - 1)
+    return [s for s in snaps[:cur_idx + 1][:-keep_last]
+            if s["snapshot-id"] not in pinned]
 
 
 def expire_snapshots(table_dir: str, keep_last: int = 1) -> dict:
@@ -2737,52 +2638,31 @@ def expire_snapshots(table_dir: str, keep_last: int = 1) -> dict:
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1 (the current snapshot "
                          "can never be expired)")
-    meta = _load_metadata(table_dir)
-    version = meta.pop("__loaded_version")
-    snaps = meta["snapshots"]
-    if len(snaps) <= keep_last:
-        return {"expired": 0, "retained": len(snaps)}
-    # ref-protected snapshots (tags pin training-run inputs) never
-    # expire, and neither does the STAGED region of an open branch (the
-    # snapshots after current): expiring a staged intermediate would
-    # both gap the chain fast_forward publishes and fold a
-    # never-published batch's resume lineage into properties as done
-    pinned = {r["snapshot-id"] for r in meta.get("refs", {}).values()}
-    cur_idx = next((i for i, s in enumerate(snaps)
-                    if s["snapshot-id"] == meta["current-snapshot-id"]),
-                   len(snaps) - 1)
-    main_hist = snaps[:cur_idx + 1]
-    expired = [s for s in main_hist[:-keep_last]
-               if s["snapshot-id"] not in pinned]
-    if not expired:
-        return {"expired": 0, "retained": len(snaps)}
-    gone = {s["snapshot-id"] for s in expired}
-    kept = [s for s in snaps if s["snapshot-id"] not in gone]
-    if meta["current-snapshot-id"] not in {s["snapshot-id"] for s in kept}:
-        raise ValueError("refusing to expire the current snapshot")
-    meta = dict(meta)
-    props = dict(meta.get("properties", {}))
-    folded = _lineage(meta, expired)
-    for key in _LINEAGE_SETS:
-        if folded[key]:
-            # shard ids stay JSON strings, sorted as strings
-            ids = map(str, folded[key]) if key == "simdcomp-shards" \
-                else folded[key]
-            props[f"{key}-expired"] = json.dumps(sorted(ids))
-    # scalar lineage must survive expiry too: the shard modulus and the
-    # streaming sink's checkpoint query id
-    for key in _LINEAGE_SCALARS:
-        if folded[key]:
-            props[key] = str(folded[key][-1])
-    meta["properties"] = props
-    meta["snapshots"] = kept
-    keep_ids = {s["snapshot-id"] for s in kept}
-    meta["snapshot-log"] = [e for e in meta.get("snapshot-log", [])
-                            if e["snapshot-id"] in keep_ids]
-    meta["last-updated-ms"] = time.time_ns() // 1_000_000
-    _publish_metadata(_meta_dir(table_dir), meta, version + 1,
-                      f"expire-{len(expired)}")
-    return {"expired": len(expired), "retained": len(kept)}
+    base = _load_base(table_dir)
+    if not _expired(base[1], keep_last):
+        return {"expired": 0, "retained": len(base[1]["snapshots"])}
+    expired: list[dict] = []
+
+    def change(meta):
+        expired[:] = _expired(meta, keep_last)
+        gone = {s["snapshot-id"] for s in expired}
+        props = dict(meta.get("properties", {}))
+        folded = _lineage(meta, expired)
+        for key in _LINEAGE_SETS:
+            if folded[key]:
+                # shard ids stay JSON strings, sorted as strings
+                ids = map(str, folded[key]) if key == "simdcomp-shards" \
+                    else folded[key]
+                props[f"{key}-expired"] = json.dumps(sorted(ids))
+        # scalar lineage must survive expiry too: the shard modulus and
+        # the streaming sink's checkpoint query id
+        for key in _LINEAGE_SCALARS:
+            if folded[key]:
+                props[key] = str(folded[key][-1])
+        return {**meta, "properties": props, "snapshots": [
+            s for s in meta["snapshots"] if s["snapshot-id"] not in gone]}
+    meta = _commit(table_dir, change, validate=_reapply, base=base)
+    return {"expired": len(expired), "retained": len(meta["snapshots"])}
 
 
 def remove_orphan_files(table_dir: str, older_than_s: float = 86400.0,
@@ -2803,45 +2683,30 @@ def remove_orphan_files(table_dir: str, older_than_s: float = 86400.0,
     forever.  Returns the removed (or, with dry_run, would-be-removed)
     paths."""
     meta = _load_metadata(table_dir)
-    referenced: set[str] = set()
-    ref_avros: set[str] = set()
+    live: set[str] = set()       # data files, manifest lists, manifests
     for s in meta["snapshots"]:
-        ref_avros.add(s["manifest-list"])
+        live.add(s["manifest-list"])
         _, manifests = _avro_read(s["manifest-list"])
         for m in manifests:
-            ref_avros.add(m["manifest_path"])
+            live.add(m["manifest_path"])
             _, entries = _avro_read(m["manifest_path"])
-            referenced |= {e["data_file"]["file_path"] for e in entries}
+            live |= {e["data_file"]["file_path"] for e in entries}
     now = time.time()
     out = []
-    for p in sorted((Path(table_dir) / "data").rglob("*.parquet")):
-        sp = str(p)
-        if sp in referenced:
+    # unreferenced data files and avros, plus the .tmp files a publisher
+    # killed inside _publish_metadata leaves behind (vtmp before its
+    # finally-unlink, hint tmp before os.replace)
+    mdir = _meta_dir(table_dir)
+    for p in (sorted((Path(table_dir) / "data").rglob("*.parquet"))
+              + sorted(mdir.glob("*.avro")) + sorted(mdir.glob(".*.tmp"))):
+        if str(p) in live:
             continue
         try:
             if now - p.stat().st_mtime < older_than_s:
                 continue
             if not dry_run:
                 p.unlink()
-            out.append(sp)
-        except OSError:
-            continue
-    # unreferenced avros, plus the .tmp files a publisher killed inside
-    # _publish_metadata leaves behind (vtmp before its finally-unlink,
-    # hint tmp before os.replace)
-    mdir_ = Path(table_dir) / "metadata"
-    stale_meta = sorted(mdir_.glob("*.avro")) + \
-        sorted(p for p in mdir_.glob(".*.tmp"))
-    for p in stale_meta:
-        sp = str(p)
-        if sp in ref_avros:
-            continue
-        try:
-            if now - p.stat().st_mtime < older_than_s:
-                continue
-            if not dry_run:
-                p.unlink()
-            out.append(sp)
+            out.append(str(p))
         except OSError:
             continue
     if not dry_run:  # drop now-empty per-snapshot dirs (+ _SUCCESS marks)
@@ -2876,50 +2741,35 @@ def rollback_last_snapshot(table_dir: str, expected_id: int | None = None
     ``expected_id`` pins WHICH snapshot the caller intends to drop: if a
     concurrent append landed after it, the log tail is an innocent
     snapshot and blind rollback would destroy it while leaving the bad
-    one current — the same optimistic-concurrency discipline the commit
-    path enforces, applied to the undo path.  Callers reverting a
-    specific commit must pass it."""
-    meta = _load_metadata(table_dir)
-    version = meta.pop("__loaded_version")
-    if not meta["snapshots"]:
-        raise ValueError(f"{table_dir}: no snapshot to roll back")
-    dropped = meta["snapshots"][-1]
-    if expected_id is not None and dropped["snapshot-id"] != expected_id:
-        raise RuntimeError(
-            f"{table_dir}: refusing rollback — expected snapshot "
-            f"{expected_id} at the log tail but found "
-            f"{dropped['snapshot-id']} (a concurrent commit landed after "
-            "the snapshot being reverted; resolve it explicitly instead "
-            "of dropping an innocent snapshot)")
-    for name, r in meta.get("refs", {}).items():
-        if name != "main" and r["snapshot-id"] == dropped["snapshot-id"]:
-            raise ValueError(
-                f"refusing to roll back snapshot "
-                f"{dropped['snapshot-id']}: ref {name!r} pins it "
-                "(remove_tag first if the pin is stale)")
-    meta = dict(meta)
-    meta["snapshots"] = meta["snapshots"][:-1]
-    keep_ids = {s["snapshot-id"] for s in meta["snapshots"]}
-    meta["snapshot-log"] = [e for e in meta.get("snapshot-log", [])
-                            if e["snapshot-id"] in keep_ids]
-    refs = {n: r for n, r in meta.get("refs", {}).items()
-            if n != "main"}  # tags point at retained snapshots (guarded)
-    if meta["snapshots"]:
-        prev = meta["snapshots"][-1]
-        if not _is_parent(prev, dropped):
+    one current.  Callers reverting a specific commit must pass it.  A
+    rollback that loses the commit race raises :class:`CommitConflict`
+    rather than drop whatever is the tail by then."""
+    def change(meta):
+        if not meta["snapshots"]:
+            raise ValueError(f"{table_dir}: no snapshot to roll back")
+        dropped = meta["snapshots"][-1]
+        if expected_id is not None and dropped["snapshot-id"] != expected_id:
+            raise RuntimeError(
+                f"{table_dir}: refusing rollback — expected snapshot "
+                f"{expected_id} at the log tail but found "
+                f"{dropped['snapshot-id']} (a concurrent commit landed "
+                "after the snapshot being reverted; resolve it explicitly "
+                "instead of dropping an innocent snapshot)")
+        for name, r in meta.get("refs", {}).items():
+            if name != "main" and r["snapshot-id"] == dropped["snapshot-id"]:
+                raise ValueError(
+                    f"refusing to roll back snapshot "
+                    f"{dropped['snapshot-id']}: ref {name!r} pins it "
+                    "(remove_tag first if the pin is stale)")
+        kept = meta["snapshots"][:-1]
+        if kept and not _is_parent(kept[-1], dropped):
             raise ValueError(
                 f"refusing to roll back snapshot "
                 f"{dropped['snapshot-id']}: its parent was expired "
                 "(tag-gapped history) — restoring the older retained "
-                f"snapshot {prev['snapshot-id']} would silently drop "
+                f"snapshot {kept[-1]['snapshot-id']} would silently drop "
                 "the expired commits' rows from the current view")
-        cur = prev["snapshot-id"]
-        meta["current-snapshot-id"] = cur
-        refs["main"] = {"snapshot-id": cur, "type": "branch"}
-    else:
-        meta["current-snapshot-id"] = -1      # spec: no current snapshot
-    meta["refs"] = refs
-    meta["last-updated-ms"] = time.time_ns() // 1_000_000
-    _publish_metadata(_meta_dir(table_dir), meta, version + 1,
-                      f"rollback-{dropped['snapshot-id']}")
-    return meta
+        # spec: -1 when no snapshot is current
+        return {**meta, "snapshots": kept, "current-snapshot-id":
+                kept[-1]["snapshot-id"] if kept else -1}
+    return _commit(table_dir, change)

@@ -22,6 +22,11 @@ from pyspark.sql import DataFrame, functions as F
 from . import engine, iceberg
 
 
+class RolledBack(RuntimeError):
+    """A verified batch failed its round trip, and its snapshot was
+    rolled back: the table's current state excludes it."""
+
+
 def completed_shards_iceberg(table_dir: str) -> set[int]:
     """Shards already committed to the Iceberg table (the ``shards``
     lineage of :func:`encode_resumable_iceberg`, expired snapshots'
@@ -200,9 +205,9 @@ def encode_files_resumable_iceberg(spark, input_path: str, table_dir: str,
     (decode of the batch's data files vs the batch's input files, read
     the way the encode read them: :func:`_read_roles`) and on
     mismatch ROLLS BACK that snapshot (iceberg.rollback_last_snapshot)
-    before raising — corrupt data never stays current, and the dropped
-    snapshot's lineage vanishes with it, so the re-run (with the fixed
-    encoder) re-encodes exactly the failed batch.  When the batch's input
+    before raising :class:`RolledBack` — corrupt data never stays
+    current, and the dropped snapshot's lineage vanishes with it, so the
+    re-run (with the fixed encoder) re-encodes exactly the failed batch.  When the batch's input
     holds a doc_id more than once (the check pairs documents by doc_id),
     the rollback raises a ``ValueError`` naming up to 5 such ids and
     their input files instead.
@@ -270,7 +275,7 @@ def encode_files_resumable_iceberg(spark, input_path: str, table_dir: str,
                         "documents — snapshot "
                         f"{snap['snapshot-id']} rolled back; e.g. "
                         + "; ".join(f"{d!r} in {fs}" for d, fs in dups[1]))
-                raise RuntimeError(
+                raise RolledBack(
                     f"round-trip verification failed for {bad} rows in "
                     f"batch {i // step} — snapshot "
                     f"{snap['snapshot-id']} rolled back; the table's "

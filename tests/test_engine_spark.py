@@ -755,7 +755,7 @@ def test_verify_rolls_back_corrupt_batch(spark, unit_df, tmp_path,
         return 7 if calls["n"] == 2 else real(a, b)
 
     monkeypatch.setattr(engine, "verify_roundtrip", flaky)
-    with pytest.raises(RuntimeError, match="rolled back"):
+    with pytest.raises(manifest.RolledBack, match="rolled back"):
         manifest.encode_files_resumable_iceberg(
             spark, src, table, codec="bitpack", batch_files=2, verify=True)
     monkeypatch.setattr(engine, "verify_roundtrip", real)

@@ -5,6 +5,7 @@ conformance of the written metadata tree."""
 from __future__ import annotations
 
 import json
+import os
 from pathlib import Path
 
 import pytest
@@ -508,7 +509,7 @@ def test_commit_conflict_fails_loudly(spark, unit_df, tmp_path):
     table = str(tmp_path / "conflict")
     cols = ["doc_id", "source", "n_tok", "tokens"]
     iceberg.export_encoded(unit_df.select(*cols), table)
-    stale = iceberg._load_metadata(table)           # writer B loads v1
+    stale = iceberg._load_base(table)               # writer B loads v1
     iceberg.append(unit_df.select(*cols).limit(5), table)  # A commits v2
     v2 = Path(table) / "metadata" / "v2.metadata.json"
     winner = v2.read_text()
@@ -517,8 +518,17 @@ def test_commit_conflict_fails_loudly(spark, unit_df, tmp_path):
     assert v2.read_text() == winner                 # never clobbered
     assert iceberg._current_version(table) == 3
     # the rebased commit kept the winner's snapshot in the lineage
-    assert {s["snapshot-id"] for s in stale["snapshots"]}         < {s["snapshot-id"] for s in meta["snapshots"]}
+    assert {s["snapshot-id"] for s in stale[1]["snapshots"]} \
+        < {s["snapshot-id"] for s in meta["snapshots"]}
     assert len(meta["snapshots"]) == 3
+    # a non-append loser (overwrite) fails with the typed conflict and
+    # leaves v3 as it was
+    v3 = Path(table) / "metadata" / "v3.metadata.json"
+    winner = v3.read_text()
+    with pytest.raises(iceberg.CommitConflict, match="published v2"):
+        iceberg._write_snapshot(table, unit_df.select(*cols).limit(3),
+                                stale, operation="overwrite")
+    assert v3.read_text() == winner
 
 
 def test_append_type_mismatch_rejected(spark, unit_df, tmp_path):
@@ -621,16 +631,15 @@ def test_partition_spec_identity_on_source(spark, tmp_path):
         spark, table, between=("source", "books", "books")).count() == 20
     # a caller-supplied partition_by on append is a loud error
     with pytest.raises(ValueError, match="inherit"):
-        iceberg._write_snapshot(table, df,
-                                iceberg._load_metadata(table),
+        iceberg._write_snapshot(table, df, iceberg._load_base(table),
                                 partition_by="source")
     # unimplemented transforms are refused, not silently mis-partitioned
     # (bucket[N]/truncate[W] are implemented — see
     # test_partition_transforms_end_to_end)
-    meta2 = iceberg._load_metadata(table)
+    version, meta2 = iceberg._load_base(table)
     meta2["partition-specs"][0]["fields"][0]["transform"] = "year"
     with pytest.raises(NotImplementedError, match="transform"):
-        iceberg._write_snapshot(table, df, meta2)
+        iceberg._write_snapshot(table, df, (version, meta2))
 
 
 def test_partition_values_round_trip_exactly(spark, tmp_path):
@@ -1004,7 +1013,7 @@ def test_concurrent_append_rebases_and_retries(spark, unit_df, tmp_path,
     a = enc.where("cast(doc_id as string) < '3'")
     b = enc.where("cast(doc_id as string) >= '3'")
     iceberg.export_encoded(a.limit(5), table)
-    stale = iceberg._load_metadata(table)       # both racers' parent
+    stale = iceberg._load_base(table)           # both racers' parent
     iceberg.append(a, table)                    # the winner
     # the loser commits from the STALE parent: its first CAS hits the
     # winner's vN and must rebase, not raise
@@ -1015,15 +1024,15 @@ def test_concurrent_append_rebases_and_retries(spark, unit_df, tmp_path,
     n = (a.limit(5).count() + a.count() + b.count())
     assert iceberg.read_table(spark, table).count() == n
     # with retries disabled the same race fails loudly
-    stale2 = iceberg._load_metadata(table)
+    stale2 = iceberg._load_base(table)
     iceberg.append(b.limit(3), table)
     monkeypatch.setattr(iceberg, "_COMMIT_RETRIES", 0)
-    with pytest.raises(RuntimeError, match="commit conflict"):
+    with pytest.raises(iceberg.CommitConflict, match="commit conflict"):
         iceberg._write_snapshot(table, b.limit(2), stale2)
     # non-append commits (overwrite) keep fail-loudly semantics
-    stale3 = iceberg._load_metadata(table)
+    stale3 = iceberg._load_base(table)
     iceberg.append(b.limit(2), table)
-    with pytest.raises(RuntimeError, match="commit conflict"):
+    with pytest.raises(iceberg.CommitConflict, match="commit conflict"):
         iceberg._write_snapshot(table, b.limit(2), stale3,
                                 operation="overwrite")
 
@@ -1454,3 +1463,330 @@ def test_wap_fused_audit_read(spark, unit_df, tmp_path):
     assert dec(snapshot_id=staged).count() == lo.count() + hi.count()
     assert dec(ref="audit").count() == lo.count() + hi.count()
     iceberg.drop_branch(table, "audit")
+
+
+# ---------------------------------------------------------------------------
+# the one commit path (iceberg._commit): each commit kind's rebase rule, the
+# invariants every commit keeps, and the publisher guard
+# ---------------------------------------------------------------------------
+
+def _race(monkeypatch, commit):
+    """Land ``commit`` (another writer) just before the next metadata
+    publish, so that publish loses the optimistic-concurrency race."""
+    real = iceberg._publish_metadata
+    armed = [True]
+
+    def publish(mdir, meta, version):
+        if armed[0]:
+            armed[0] = False
+            commit()
+        real(mdir, meta, version)
+    monkeypatch.setattr(iceberg, "_publish_metadata", publish)
+
+
+def _count(spark, table):
+    return iceberg.read_table(spark, table).count()
+
+
+@pytest.fixture(scope="module")
+def enc30(unit_df):
+    return engine.encode(
+        unit_df.select("doc_id", "source", "n_tok", "tokens").limit(30),
+        codec="bitpack", split_threshold=None).cache()
+
+
+def test_compaction_racing_an_append_conflicts(spark, enc30, tmp_path,
+                                               monkeypatch):
+    """A compaction that loses the race to an append raises CommitConflict
+    naming a data file it rewrote; the append's rows are never lost and
+    the delete files stay live."""
+    table = str(tmp_path / "t")
+    iceberg.export_encoded(enc30, table)
+    doc = enc30.select("doc_id").first()["doc_id"]
+    iceberg.delete_where(spark, table, F.col("doc_id") == doc)
+    n = _count(spark, table)
+    live = [d["file_path"]
+            for d in iceberg.data_files(table, ignore_deletes=True)]
+    _race(monkeypatch, lambda: iceberg.append(enc30.limit(4), table))
+    with pytest.raises(iceberg.CommitConflict) as err:
+        iceberg.compact_files(spark, table)
+    assert table in str(err.value)
+    assert any(p in str(err.value) for p in live)
+    assert _count(spark, table) == n + 4
+    assert iceberg.snapshots(table)[-1]["operation"] == "append"
+    assert iceberg.delete_files(table)
+
+
+def test_schema_change_and_append_race_rules(spark, enc30, tmp_path,
+                                             monkeypatch):
+    """add_column racing an append re-runs on the new base and keeps both
+    changes; an append or a schema change losing to a schema change
+    raises CommitConflict (the schema it was planned against moved)."""
+    table = str(tmp_path / "t")
+    iceberg.export_encoded(enc30, table)
+    _race(monkeypatch, lambda: iceberg.append(enc30.limit(4), table))
+    meta = iceberg.add_column(table, "lang", "string")
+    assert iceberg._current_version(table) == 3
+    assert "lang" in [f["name"] for f in
+                      iceberg._current_schema(meta)["fields"]]
+    assert len(meta["snapshots"]) == 2
+    assert _count(spark, table) == 34
+
+    other = str(tmp_path / "u")
+    iceberg.export_encoded(enc30, other)
+    _race(monkeypatch, lambda: iceberg.add_column(other, "x", "int"))
+    with pytest.raises(iceberg.CommitConflict, match="schema"):
+        iceberg.append(enc30.limit(2), other)
+    assert _count(spark, other) == 30
+    _race(monkeypatch, lambda: iceberg.add_column(other, "y", "int"))
+    with pytest.raises(iceberg.CommitConflict, match="schema"):
+        iceberg.add_column(other, "z", "int")
+    assert [f["name"] for f in iceberg._current_schema(
+        iceberg._load_metadata(other))["fields"]][-2:] == ["x", "y"]
+
+
+def test_position_deletes_rebase_over_appends_only(spark, enc30, tmp_path,
+                                                   monkeypatch):
+    """Position deletes name their files by path: they rebase onto a
+    concurrent append, and raise CommitConflict when an overwrite (which
+    may rewrite the files they target) landed first."""
+    table = str(tmp_path / "t")
+    iceberg.export_encoded(enc30, table)
+    doc = enc30.select("doc_id").first()["doc_id"]
+    _race(monkeypatch, lambda: iceberg.append(enc30.limit(4), table))
+    iceberg.delete_where(spark, table, F.col("doc_id") == doc)
+    assert _count(spark, table) == 33
+    assert [s["operation"] for s in iceberg.snapshots(table)] == \
+        ["append", "append", "delete"]
+    _race(monkeypatch, lambda: iceberg.overwrite(enc30.limit(5), table))
+    with pytest.raises(iceberg.CommitConflict, match="overwrite"):
+        iceberg.delete_where(spark, table, F.col("doc_id") != doc)
+    assert _count(spark, table) == 5
+
+
+def test_never_rebasing_commits_conflict(spark, enc30, tmp_path,
+                                         monkeypatch):
+    """overwrite, rewrite_manifests, equality deletes and table creation
+    raise CommitConflict on any lost race, naming the table, the version
+    lost and the newest snapshot; the winner's rows stay."""
+    table = str(tmp_path / "t")
+    iceberg.export_encoded(enc30, table)
+    iceberg.append(enc30.limit(3), table)
+    ops = [lambda: iceberg.overwrite(enc30.limit(5), table),
+           lambda: iceberg.rewrite_manifests(table),
+           lambda: iceberg.write_equality_deletes(
+               spark, table, enc30.select("doc_id").limit(1))]
+    n = 33
+    for op in ops:
+        v = iceberg._current_version(table)
+        _race(monkeypatch, lambda: iceberg.append(enc30.limit(2), table))
+        with pytest.raises(iceberg.CommitConflict) as err:
+            op()
+        n += 2
+        tail = iceberg.snapshots(table)[-1]["snapshot-id"]
+        assert f"{table}: commit conflict: another writer published " \
+            f"v{v + 1} (newest snapshot {tail})" in str(err.value)
+        assert _count(spark, table) == n
+    fresh = str(tmp_path / "new")
+    _race(monkeypatch, lambda: iceberg.export_encoded(enc30.limit(7), fresh))
+    with pytest.raises(iceberg.CommitConflict, match="published v1"):
+        iceberg.export_encoded(enc30, fresh)
+    assert _count(spark, fresh) == 7
+
+
+def test_rollback_racing_an_append_keeps_the_innocent(spark, enc30, tmp_path,
+                                                      monkeypatch):
+    """A rollback that loses the race to an append raises CommitConflict,
+    with or without expected_id: the innocent snapshot is never
+    dropped."""
+    table = str(tmp_path / "t")
+    iceberg.export_encoded(enc30, table)
+    bad = iceberg.append(enc30.limit(3), table)["current-snapshot-id"]
+    for expected in (bad, None):
+        _race(monkeypatch, lambda: iceberg.append(enc30.limit(2), table))
+        with pytest.raises(iceberg.CommitConflict):
+            iceberg.rollback_last_snapshot(table, expected_id=expected)
+    snaps = iceberg.snapshots(table)
+    assert len(snaps) == 4 and bad == snaps[1]["snapshot-id"]
+    assert snaps[-1]["is-current"]
+    assert _count(spark, table) == 37
+
+
+def test_ref_and_expiry_changes_rerun_with_caller_values(spark, enc30,
+                                                         tmp_path,
+                                                         monkeypatch):
+    """A tag that loses the race still pins the snapshot that was current
+    when create_tag was called; expiry re-runs on the new base."""
+    table = str(tmp_path / "t")
+    iceberg.export_encoded(enc30, table)
+    iceberg.append(enc30.limit(3), table)
+    cur0 = iceberg.snapshots(table)[-1]["snapshot-id"]
+    _race(monkeypatch, lambda: iceberg.append(enc30.limit(2), table))
+    iceberg.create_tag(table, "run-a")
+    assert iceberg.resolve_ref(table, "run-a") == cur0
+    assert iceberg.snapshots(table)[-1]["snapshot-id"] != cur0
+    _race(monkeypatch, lambda: iceberg.append(enc30.limit(1), table))
+    # planned on 3 snapshots, re-run on 4: the tag pins cur0
+    assert iceberg.expire_snapshots(table, keep_last=1) == \
+        {"expired": 2, "retained": 2}
+    assert _count(spark, table) == 36
+
+
+def test_interleaved_hint_writes_both_commit(tmp_path, monkeypatch):
+    """Two commits whose version-hint writes interleave both return: each
+    hint tmp file carries its own random token, so one writer's
+    os.replace can never move the other's file away."""
+    table = tmp_path / "t"
+    (table / "metadata").mkdir(parents=True)
+    meta = {"format-version": 2, "current-snapshot-id": 4, "refs": {},
+            "properties": {}, "snapshot-log": [],
+            "snapshots": [{"snapshot-id": i, "sequence-number": i,
+                           "summary": {"operation": "append"}}
+                          for i in range(1, 5)]}
+    (table / "metadata" / "v1.metadata.json").write_text(json.dumps(meta))
+    (table / "metadata" / "version-hint.text").write_text("1")
+    real = os.replace
+    inner = []
+
+    def replace(src, dst):
+        if str(dst).endswith("version-hint.text") and not inner:
+            inner.append(None)        # the second commit, mid-hint-write
+            inner.append(iceberg.expire_snapshots(str(table), keep_last=2))
+        real(src, dst)
+    monkeypatch.setattr(os, "replace", replace)
+    assert iceberg.expire_snapshots(str(table), keep_last=3) == \
+        {"expired": 1, "retained": 3}
+    assert inner[1] == {"expired": 1, "retained": 2}
+    assert iceberg._current_version(str(table)) == 3
+    assert len(iceberg._load_metadata(str(table))["snapshots"]) == 2
+
+
+@pytest.fixture(scope="module")
+def lineage_table(spark, enc30, tmp_path_factory):
+    """A table with folded resume lineage in its properties (shard 0's
+    snapshot expired) and three data manifests in its current snapshot."""
+    table = str(tmp_path_factory.mktemp("lineage") / "t")
+    iceberg.export_encoded(enc30, table, extra_summary={
+        "simdcomp-shards": "0", "simdcomp-total-shards": "4"})
+    iceberg.append(enc30.limit(3), table,
+                   extra_summary={"simdcomp-shards": "1"})
+    iceberg.append(enc30.limit(2), table,
+                   extra_summary={"simdcomp-shards": "2"})
+    iceberg.expire_snapshots(table, keep_last=2)
+    return table
+
+
+def _doc_is_first(enc):
+    return F.col("doc_id") == enc.select("doc_id").first()["doc_id"]
+
+
+_COMMIT_OPS = {
+    # name: (prepare, commit), each called with (spark, table, enc)
+    "export_encoded": (None, lambda s, t, e: iceberg.export_encoded(e, t)),
+    "append": (None, lambda s, t, e: iceberg.append(e.limit(2), t)),
+    "append_branch": (
+        lambda s, t, e: iceberg.create_branch(t, "b"),
+        lambda s, t, e: iceberg.append(e.limit(2), t, branch="b")),
+    "overwrite": (None, lambda s, t, e: iceberg.overwrite(e.limit(5), t)),
+    "delete_where": (None, lambda s, t, e: iceberg.delete_where(
+        s, t, _doc_is_first(e))),
+    "write_equality_deletes": (None, lambda s, t, e:
+                               iceberg.write_equality_deletes(
+                                   s, t, e.select("doc_id").limit(1))),
+    "compact_files": (
+        lambda s, t, e: iceberg.delete_where(s, t, _doc_is_first(e)),
+        lambda s, t, e: iceberg.compact_files(s, t)),
+    "rewrite_manifests": (None, lambda s, t, e:
+                          iceberg.rewrite_manifests(t)),
+    "add_column": (None, lambda s, t, e:
+                   iceberg.add_column(t, "lang", "string")),
+    "rename_column": (None, lambda s, t, e:
+                      iceberg.rename_column(t, "source", "src")),
+    "drop_column": (None, lambda s, t, e: iceberg.drop_column(t, "source")),
+    "promote_column": (None, lambda s, t, e:
+                       iceberg.promote_column(t, "n_tok", "long")),
+    "create_tag": (None, lambda s, t, e: iceberg.create_tag(t, "x")),
+    "remove_tag": (lambda s, t, e: iceberg.create_tag(t, "x"),
+                   lambda s, t, e: iceberg.remove_tag(t, "x")),
+    "create_branch": (None, lambda s, t, e: iceberg.create_branch(t, "b")),
+    "fast_forward": (
+        lambda s, t, e: (iceberg.create_branch(t, "b"),
+                         iceberg.append(e.limit(2), t, branch="b")),
+        lambda s, t, e: iceberg.fast_forward(t, "b")),
+    "drop_branch": (
+        lambda s, t, e: (iceberg.create_branch(t, "b"),
+                         iceberg.append(e.limit(2), t, branch="b")),
+        lambda s, t, e: iceberg.drop_branch(t, "b")),
+    "expire_snapshots": (None, lambda s, t, e:
+                         iceberg.expire_snapshots(t, keep_last=1)),
+    "rollback_last_snapshot": (None, lambda s, t, e:
+                               iceberg.rollback_last_snapshot(t)),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_COMMIT_OPS))
+def test_every_commit_keeps_the_table_invariants(spark, enc30, lineage_table,
+                                                 tmp_path, op):
+    """Every public commit op publishes exactly version + 1, leaves
+    ``simdcomp.whole-segment-runs-through-seq`` where _with_whole_runs
+    puts it (never above last-sequence-number), keeps the simdcomp-*
+    lineage properties, and writes no in-memory key to disk."""
+    import shutil
+    prepare, commit = _COMMIT_OPS[op]
+    table = str(tmp_path / "t")
+    if op != "export_encoded":
+        # a copy of the module's table: its metadata still names the
+        # original's (unchanged) files, and every new file lands here
+        shutil.copytree(lineage_table, table)
+    if prepare is not None:
+        prepare(spark, table, enc30)
+    if op == "export_encoded":
+        v0, before = 0, {"properties": {}, "last-sequence-number": 0}
+    else:
+        v0, before = iceberg._load_base(table)
+    commit(spark, table, enc30)
+    v1, after = iceberg._load_base(table)
+    assert v1 == v0 + 1
+    prop = iceberg._WHOLE_RUNS_PROP
+    props0, props1 = before["properties"], after["properties"]
+    seq = after["last-sequence-number"]
+    if seq > before["last-sequence-number"]:
+        want = iceberg._with_whole_runs(
+            props0, before if v0 else None, seq, True).get(prop)
+    else:
+        want = props0.get(prop)
+    assert props1.get(prop) == want
+    assert int(props1.get(prop, 0)) <= seq
+    for k, v in props0.items():
+        if k.startswith("simdcomp-"):
+            assert k in props1
+            assert op == "expire_snapshots" or props1[k] == v
+    for p in (Path(table) / "metadata").glob("v*.metadata.json"):
+        assert "__loaded_version" not in json.loads(p.read_text())
+
+
+def test_commit_is_the_only_publisher():
+    """Only _commit publishes metadata and stamps last-updated-ms: a new
+    commit op supplies a change and a validation, not its own version
+    bump."""
+    import ast
+    pkg = Path(iceberg.__file__).parent
+    offenders, calls = [], 0
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            owner = (path.name, getattr(top, "name", None))
+            for node in ast.walk(top):
+                name = getattr(node, "id", getattr(node, "attr", None))
+                if name == "_publish_metadata" and \
+                        isinstance(getattr(node, "ctx", None), ast.Load):
+                    offenders.append((owner, node.lineno))
+                keys = (node.keys if isinstance(node, ast.Dict) else
+                        [node.slice] if isinstance(node, ast.Subscript)
+                        and isinstance(node.ctx, ast.Store) else [])
+                if any(isinstance(k, ast.Constant)
+                       and k.value == "last-updated-ms" for k in keys):
+                    offenders.append((owner, node.lineno))
+    commit = [o for o in offenders if o[0] == ("iceberg.py", "_commit")]
+    assert len(commit) == 2, commit   # one publish, one stamp
+    assert [o for o in offenders if o not in commit] == []
