@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import tempfile
 import time
 import weakref
@@ -139,6 +140,9 @@ def get_spark(app: str = "simdcomp_spark", cores: int | None = None,
         # importlib.invalidate_caches() then costs a stat per archive
         # instead of re-parsing pyspark.zip and the Spark jar
         .config("spark.python.worker.reuse", "true")
+        # PySpark's call-site capture only feeds error messages, at ~5
+        # py4j calls per decorated pyspark.sql.functions call
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         # shuffle/spill scratch on tmpfs when it has headroom (see
         # _scratch_dir): the engine's plans shuffle compressed bytes (or
@@ -406,7 +410,7 @@ def encode(df: DataFrame, codec: str = "auto",
                 lens, chosen, pid, total_ns)
             yield rb
 
-    return df.mapInArrow(encode_fn, schema=ENCODED_SCHEMA)
+    return _encode_plan(df, encode_fn)
 
 
 def _partition_id() -> int:
@@ -592,7 +596,15 @@ def encode_files(spark: SparkSession, path: str, codec: str = "auto",
     run as one task per core over whole files, with no exchange in the
     plan; larger ones as (file, row_group) units, so task size is bounded
     by the writer's row-group size regardless of file-count skew.  Workers
-    read 2048-row batches (``_ENCODE_BATCH_ROWS``)."""
+    read 2048-row batches (``_ENCODE_BATCH_ROWS``).
+
+    ``iceberg.export_encoded`` / ``append`` of the returned frame itself
+    — uncached, to an unpartitioned table — runs this encoder inside the
+    Iceberg writer's task (:func:`_fused_encoder`): an ingest pass is one
+    job, one stage and one Python worker per task.  A cached frame is
+    written from its cache, and a frame derived from this one (or a
+    partitioned write) keeps the encoder and the writer as two stacked
+    ``mapInArrow`` stages."""
     import pyarrow.parquet as pq
 
     from . import iceberg
@@ -639,7 +651,98 @@ def encode_files(spark: SparkSession, path: str, codec: str = "auto",
                         flat, lens, chosen, pid, total_ns)
                     yield out
 
-    return fdf.mapInArrow(fn, schema=ENCODED_SCHEMA)
+    return _encode_plan(fdf, fn)
+
+
+# the DataFrames encode() and encode_files() returned, held weakly, each
+# → (input frame, batch function): iceberg's writer runs such an exact
+# frame's encoder inside its own mapInArrow (see _fused_encoder)
+_ENCODE_PLANS = weakref.WeakKeyDictionary()
+
+
+def _encode_plan(src: DataFrame, fn) -> DataFrame:
+    out = src.mapInArrow(fn, schema=ENCODED_SCHEMA)
+    _ENCODE_PLANS[out] = (src, fn)
+    return out
+
+
+def _fused_encoder(df: DataFrame):
+    """``(input frame, batch function)`` when ``df`` is the exact frame
+    :func:`encode` or :func:`encode_files` returned, else None.  Over the
+    input frame's batches, the function yields ``df``'s rows in the
+    batches Spark would hand a ``mapInArrow`` over ``df`` itself
+    (:func:`_spark_batches`), so a writer fed by them in one Python stage
+    writes the files it writes in two."""
+    plan = _ENCODE_PLANS.get(df)
+    if plan is None:
+        return None
+    from pyspark.sql.pandas.types import to_arrow_schema
+    src, fn = plan
+    schema = to_arrow_schema(df.schema)
+    conf = df.sparkSession.conf
+    max_rows = int(conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    max_bytes = _conf_bytes(
+        conf.get("spark.sql.execution.arrow.maxBytesPerBatch"))
+
+    def batches(it):
+        return _spark_batches(fn(it), schema, max_rows, max_bytes)
+    return src, batches
+
+
+def _conf_bytes(value: str) -> int:
+    """A Spark byte-size conf value ("64m", "67108864b") in bytes."""
+    n, unit = re.fullmatch(r"(\d+)([kmgtp]?)b?", value.strip().lower()
+                           ).groups()
+    return int(n) << (10 * "_kmgtp".index(unit or "_"))
+
+
+def _spark_batches(batches, schema: pa.Schema, max_rows: int,
+                   max_bytes: int):
+    """``batches``' rows, cast to ``schema``, cut where Spark's Arrow
+    runner cuts the rows it hands a ``mapInArrow``: a batch closes at
+    ``max_rows`` rows (``maxRecordsPerBatch``; ≤ 0: no limit), or before
+    the row that would start while its JVM buffers already hold
+    ``max_bytes`` (``maxBytesPerBatch``).  The JVM size is, per column, a
+    validity bitmap, plus offsets (4 bytes a row and one more) and the
+    values of a string/binary column, or the fixed-width values."""
+    var = [pa.types.is_string(f.type) or pa.types.is_binary(f.type)
+           for f in schema]
+    fixed = sum(f.type.bit_width // 8 for f, v in zip(schema, var)
+                if not v)
+    base, bitmaps = 4 * sum(var), len(schema)
+    if max_rows <= 0:
+        max_rows = 1 << 62
+    parts, k, size = [], 0, base
+
+    def cut():
+        t = pa.Table.from_batches(parts).combine_chunks()
+        parts.clear()
+        return t.to_batches()[0]
+
+    for b in batches:
+        if b.schema != schema:
+            b = b.cast(schema)
+        row = np.full(b.num_rows, fixed, np.int64)
+        for col, v in zip(b.columns, var):
+            if v:
+                row += pc.binary_length(col).fill_null(0).to_numpy() + 4
+        cum = np.concatenate([[0], np.cumsum(row)])
+        i = 0
+        while i < b.num_rows:
+            # the open batch's row count and JVM size before each next row
+            n = k + np.arange(b.num_rows - i)
+            held = size + cum[i:-1] - cum[i] + bitmaps * ((n + 7) // 8)
+            take = int(np.count_nonzero((n < max_rows) & (held < max_bytes)))
+            take = take or (0 if k else 1)
+            if take:
+                parts.append(b.slice(i, take))
+                size += int(cum[i + take] - cum[i])
+                k, i = k + take, i + take
+            if i < b.num_rows:
+                yield cut()
+                k, size = 0, base
+    if parts:
+        yield cut()
 
 
 def salt_encoded(df_encoded: DataFrame, shards: int | None = None) -> DataFrame:
@@ -1265,7 +1368,9 @@ def dedup_delete_iceberg(spark: SparkSession, table_dir: str,
     (reference/README.md — codecs never update in place); row removal
     happens in table metadata, never in payload bytes."""
     from . import iceberg
-    enc = iceberg.read_table_with_pos(spark, table_dir)
+    base = iceberg._load_base(table_dir)
+    enc = iceberg.read_table_with_pos(spark, table_dir,
+                                      base[1].get("current-snapshot-id"))
     if "content_hash" not in enc.columns:
         raise ValueError(
             f"{table_dir} has no content_hash column (pre-hash legacy "
@@ -1319,7 +1424,8 @@ def dedup_delete_iceberg(spark: SparkSession, table_dir: str,
         return iceberg.write_position_deletes(
             spark, table_dir, pos,
             extra_summary={"simdcomp-dedup-delete":
-                           "exact-doc" + ("-verified" if verify else "")})
+                           "exact-doc" + ("-verified" if verify else "")},
+            base=base)
     finally:
         losers.unpersist()
         sig.unpersist()

@@ -66,7 +66,11 @@ Data and delete files are written by pyarrow inside the Spark tasks
 parquet files and returns one small row per file — path, record count,
 size, column bounds from the file's own footer, partition values — so a
 write is ONE Spark job, and the Spark driver builds the manifest from
-the collected rows without opening a data file.
+the collected rows without opening a data file.  Writing the exact,
+uncached frame ``engine.encode_files`` or ``engine.encode`` returned to
+an unpartitioned table is also ONE Python stage: the writer runs the
+encoder in its own task, on the encoder's input, so encoded rows never
+cross into the JVM and back.
 
 The reference engine has no table notion at all (README.md:23-24 "does
 not define a compressed format"); this is the storage layer the north
@@ -478,8 +482,21 @@ def _write_data_files(df: DataFrame, out_dir: str, schema: dict,
     ``_p_<name>`` columns (:func:`_spec_partition_exprs`); each task
     splits its rows by them into one file per partition value and drops
     them from the file.  A failed task removes the files it wrote; the
-    Spark driver commits only what the job returned."""
+    Spark driver commits only what the job returned.
+
+    When ``df`` is the exact frame ``engine.encode_files`` or
+    ``engine.encode`` returned (:func:`engine._fused_encoder`), the write
+    is fused: one ``mapInArrow`` over the encoder's input, each task
+    feeding the encoder's batches, re-cut as Spark would have cut them,
+    straight into :func:`_write_task` — one Python worker per task
+    instead of two, the same files.  Three frames keep the two-stage
+    plan: a cached one (it must be written from its cache, never
+    re-encoded: its input may be gone), a derived one (its rows are no
+    longer the encoder's), and any write to a partitioned spec (the
+    ``_p_`` columns are Spark expressions over the encoded rows)."""
     parts = _spec_partition_exprs(spec, schema)
+    fused = (None if parts or df.is_cached
+             else engine._fused_encoder(df))
     for name, expr in parts:
         df = df.withColumn(f"_p_{name}", expr)
     ids = {f["name"]: (f["id"], f["type"].get("element-id")
@@ -487,9 +504,10 @@ def _write_data_files(df: DataFrame, out_dir: str, schema: dict,
            for f in schema["fields"]}
     Path(out_dir).mkdir(parents=True)
     names = [n for n, _ in parts]
+    df, rows_of = fused or (df, lambda it: it)
 
     def write_fn(it):
-        return _write_task(it, out_dir, names, ids)
+        return _write_task(rows_of(it), out_dir, names, ids)
 
     return sorted(({**r.asDict(), "bounds": json.loads(r["bounds"]),
                     "partition": json.loads(r["partition"])}
@@ -1641,7 +1659,7 @@ def _snapshot_entries(table_dir: str, snapshot_id: int | None = None,
     if meta is None:
         meta = _load_metadata(table_dir)
     sid = snapshot_id or meta["current-snapshot-id"]
-    if snapshot_id is None and (sid == -1 or not meta["snapshots"]):
+    if sid == -1 or (snapshot_id is None and not meta["snapshots"]):
         return meta, [], []  # empty table (all snapshots rolled back)
     snaps = [s for s in meta["snapshots"] if s["snapshot-id"] == sid]
     if not snaps:
@@ -2181,7 +2199,8 @@ def _write_deletes(table_dir: str, base: tuple[int, dict], rows: DataFrame,
 
 def write_position_deletes(spark: SparkSession, table_dir: str,
                            pos_df: DataFrame,
-                           extra_summary: dict[str, str] | None = None
+                           extra_summary: dict[str, str] | None = None,
+                           base: tuple[int, dict] | None = None
                            ) -> dict | None:
     """Commit a DELETE snapshot from a DataFrame of row coordinates
     ``(file_path string, pos long)`` — the v2 position-delete format
@@ -2195,7 +2214,11 @@ def write_position_deletes(spark: SparkSession, table_dir: str,
     because the alternative rewrites every dirtied data file for rows
     that are 16 bytes of coordinates each.  A commit that loses the race
     rebases while every commit since its base is an append or a delete
-    (no file it targets can have been rewritten).
+    (no file it targets can have been rewritten).  ``base`` is the
+    ``(version, metadata)`` whose current snapshot ``pos_df`` was read
+    from (:func:`_load_base`, then :func:`read_table_with_pos` at that
+    snapshot); it defaults to the table as loaded here, which validates
+    only the commits that land after this call starts.
 
     Readers: :func:`read_table` applies the deletes; raw file-level
     consumers are refused by :func:`data_files` until
@@ -2204,7 +2227,7 @@ def write_position_deletes(spark: SparkSession, table_dir: str,
     # file_path/pos under the spec's RESERVED field ids (readers here
     # match these constant names)
     return _write_deletes(
-        table_dir, _load_base(table_dir),
+        table_dir, base or _load_base(table_dir),
         pos_df.select(F.col("file_path").cast("string"),
                       F.col("pos").cast("long")),
         [{"id": _FP_FID, "name": "file_path", "type": "string"},
@@ -2217,14 +2240,18 @@ def delete_where(spark: SparkSession, table_dir: str, predicate
     """Row-level DELETE by predicate (a SQL string or a Column) committed
     as position-delete files — no data-file rewrite.  Rows already
     deleted by earlier snapshots are never re-matched (the scan applies
-    them).  Returns the new metadata, or None when nothing matched."""
-    df = read_table_with_pos(spark, table_dir)
+    them).  The rows are read from the current snapshot of the commit's
+    base, so a commit that lands after the read is validated against the
+    deletes.  Returns the new metadata, or None when nothing matched."""
+    base = _load_base(table_dir)
+    df = read_table_with_pos(spark, table_dir,
+                             base[1].get("current-snapshot-id"))
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
     pos = df.where(cond).select(F.col("_file").alias("file_path"),
                                 F.col("_pos").alias("pos"))
     return write_position_deletes(
         spark, table_dir, pos,
-        extra_summary={"delete-predicate": str(predicate)})
+        extra_summary={"delete-predicate": str(predicate)}, base=base)
 
 
 def write_equality_deletes(spark: SparkSession, table_dir: str,

@@ -782,6 +782,7 @@ def test_rollback_last_snapshot_to_empty(spark, unit_df, tmp_path):
     iceberg.rollback_last_snapshot(table)
     assert iceberg.data_files(table) == []
     assert iceberg.read_table(spark, table).count() == 0
+    assert iceberg.delete_where(spark, table, "true") is None
     with pytest.raises(ValueError, match="no snapshot"):
         iceberg.rollback_last_snapshot(table)
     # the table is still appendable afterwards

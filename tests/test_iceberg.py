@@ -1564,6 +1564,70 @@ def test_position_deletes_rebase_over_appends_only(spark, enc30, tmp_path,
     assert _count(spark, table) == 5
 
 
+def _commit_after_read(monkeypatch, commit):
+    """Land ``commit`` (another writer) right after the next
+    ``read_table_with_pos``: between a delete writer's read of its target
+    rows and its commit."""
+    real = iceberg.read_table_with_pos
+
+    def read(*a, **kw):
+        df = real(*a, **kw)
+        monkeypatch.setattr(iceberg, "read_table_with_pos", real)
+        commit()
+        return df
+    monkeypatch.setattr(iceberg, "read_table_with_pos", read)
+
+
+def _delete_first_doc(spark, table, doc):
+    return iceberg.delete_where(spark, table, F.col("doc_id") == doc)
+
+
+def _dedup(spark, table, doc):
+    return engine.dedup_delete_iceberg(spark, table)
+
+
+@pytest.mark.parametrize("delete", [_delete_first_doc, _dedup])
+def test_overwrite_after_the_delete_read_conflicts(spark, enc30, tmp_path,
+                                                   monkeypatch, delete):
+    """An overwrite that lands between a position-delete writer's read and
+    its commit may have rewritten the files the deletes name: the commit
+    raises CommitConflict (its base is the snapshot it read), and the
+    overwrite's rows stay."""
+    table = str(tmp_path / "t")
+    iceberg.export_encoded(enc30, table)
+    doc = enc30.select("doc_id").first()["doc_id"]
+    # a renamed copy of one document: the duplicate dedup deletes
+    iceberg.append(enc30.where(F.col("doc_id") == doc)
+                   .withColumn("doc_id", F.concat(F.lit("~"), "doc_id")),
+                   table)
+    _commit_after_read(monkeypatch,
+                       lambda: iceberg.overwrite(enc30, table))
+    with pytest.raises(iceberg.CommitConflict, match="overwrite"):
+        delete(spark, table, doc)
+    assert [s["operation"] for s in iceberg.snapshots(table)] == \
+        ["append", "append", "overwrite"]
+    assert _count(spark, table) == 30
+
+
+def test_append_after_the_delete_read_rebases(spark, enc30, tmp_path,
+                                              monkeypatch):
+    """An append that lands between delete_where's read and its commit
+    cannot have rewritten a file: the deletes rebase onto it, and the
+    appended rows stay."""
+    table = str(tmp_path / "t")
+    iceberg.export_encoded(enc30, table)
+    doc = enc30.select("doc_id").first()["doc_id"]
+    _commit_after_read(monkeypatch,
+                       lambda: iceberg.append(enc30.limit(4), table))
+    iceberg.delete_where(spark, table, F.col("doc_id") == doc)
+    assert [s["operation"] for s in iceberg.snapshots(table)] == \
+        ["append", "append", "delete"]
+    assert _count(spark, table) == 33
+    left = iceberg.read_table(spark, table).where(F.col("doc_id") == doc)
+    assert left.count() == (1 if doc in {
+        r["doc_id"] for r in enc30.limit(4).collect()} else 0)
+
+
 def test_never_rebasing_commits_conflict(spark, enc30, tmp_path,
                                          monkeypatch):
     """overwrite, rewrite_manifests, equality deletes and table creation
