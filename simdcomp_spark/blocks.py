@@ -243,82 +243,21 @@ def select_flat(lens: np.ndarray, widths: np.ndarray, inits: np.ndarray,
     return out
 
 
-def search_sorted_flat(lens: np.ndarray, widths: np.ndarray,
-                       inits: np.ndarray, payload: np.ndarray,
-                       payload_lens: np.ndarray, key: int) -> np.ndarray:
-    """Lower-bound index of ``key`` in every d1-encoded SORTED row, probing
-    exactly one block per row: the per-block chain inits are the zone map
-    (init of block j+1 == last value of block j), so only each row's LAST
-    block and its single TARGET block are ever touched.  Returns int64 per
-    row; idx == n when every value < key."""
-    lens = np.asarray(lens, dtype=np.int64)
-    out = np.zeros(lens.size, dtype=np.int64)
-    if lens.size == 0 or int(lens.sum()) == 0:
-        return out
-    (row_id, blk_len, nblocks, widths, _sizes, excl,
-     row_first_block) = _block_geometry(lens, widths)
-    payload = np.ascontiguousarray(payload, dtype=np.uint8)
-    inits = np.ascontiguousarray(inits, dtype=U32)
-    row_pl_starts = np.concatenate(([0], np.cumsum(payload_lens)[:-1]))
-    k32 = U32(key & 0xFFFFFFFF)
-    total_blocks = row_id.size
+def _lower_bound_flat(lens: np.ndarray, widths: np.ndarray,
+                      inits: np.ndarray, payload: np.ndarray,
+                      payload_lens: np.ndarray, key: int,
+                      mode: str) -> np.ndarray:
+    """Lower-bound index of ``key`` in every SORTED row of a d1 or FOR
+    batch, decoding exactly one block per row.  Returns int64 per row;
+    idx == n when every value < key.
 
-    # zone map: last value of block j. Interior blocks read it from the next
-    # block's chain init; each row's final block is decoded (grouped).
-    lasts = np.empty(total_blocks, dtype=U32)
-    lasts[:-1] = inits[1:]
-    ne = np.nonzero(nblocks > 0)[0]
-    last_blk = row_first_block[ne] + nblocks[ne] - 1
-    src_last = row_pl_starts[ne] + (excl[last_blk] - excl[row_first_block[ne]])
-    b_l = widths[last_blk].astype(np.int64)
-    blen_l = blk_len[last_blk]
-    keys_l = blen_l * 64 + b_l
-    for kk in np.unique(keys_l):
-        blen, b = int(kk) // 64, int(kk) % 64
-        sel = np.nonzero(keys_l == kk)[0]
-        vals = _decode_block_group(payload, src_last[sel], blen, b, "d1",
-                                   inits[last_blk[sel]])
-        lasts[last_blk[sel]] = vals[:, -1]
-
-    # first block per row whose last value >= key (count of blocks < key)
-    j = np.add.reduceat((lasts < k32).astype(np.int64),
-                        row_first_block[ne])
-    found = j < nblocks[ne]
-    out[ne[~found]] = lens[ne[~found]]          # every value < key
-    probe_rows = ne[found]
-    if probe_rows.size:
-        jf = j[found]
-        tb = row_first_block[probe_rows] + jf
-        src = row_pl_starts[probe_rows] + \
-            (excl[tb] - excl[row_first_block[probe_rows]])
-        b_t = widths[tb].astype(np.int64)
-        blen_t = blk_len[tb]
-        keys_t = blen_t * 64 + b_t
-        within = np.empty(probe_rows.size, dtype=np.int64)
-        for kk in np.unique(keys_t):
-            blen, b = int(kk) // 64, int(kk) % 64
-            sel = np.nonzero(keys_t == kk)[0]
-            vals = _decode_block_group(payload, src[sel], blen, b, "d1",
-                                       inits[tb[sel]])
-            within[sel] = (vals < k32).sum(axis=1)
-        out[probe_rows] = jf * K.FULL_BLOCK + within
-    return out
-
-
-def search_sorted_for_flat(lens: np.ndarray, widths: np.ndarray,
-                           inits: np.ndarray, payload: np.ndarray,
-                           payload_lens: np.ndarray, key: int) -> np.ndarray:
-    """Lower-bound search over FOR-encoded SORTED rows, probing exactly one
-    block per row — the engine-level multi-block extension of
-    ``simdsearchwithlengthFOR`` (/root/reference/src/simdfor.c:15016-15032).
-
-    Zone map: FOR stores each block's min as its init, which for sorted
-    rows is the block's FIRST value.  The target is the first block j with
-    (j is the last block) or first[j+1] >= key: every earlier block's last
-    value ≤ first[j+1] < key, and if the probe finds nothing (< key
-    throughout) the answer is the start of block j+1, whose first value is
-    ≥ key by construction.  Returns int64 per row; idx == n when every
-    value < key."""
+    Zone map: for sorted rows each non-first block's init is a bound on
+    the values before it — FOR stores the block's min, its FIRST value;
+    d1 chains from the previous block's LAST value.  Either way, the
+    count j of non-first blocks whose init is < key is the target block:
+    every block before j ends at or below block j's init, which is < key,
+    and block j+1 (if any) starts at or above its init, which is ≥ key.  The answer is
+    ``min(j·128 + #(block j's values < key), n)``."""
     lens = np.asarray(lens, dtype=np.int64)
     out = np.zeros(lens.size, dtype=np.int64)
     if lens.size == 0 or int(lens.sum()) == 0:
@@ -331,13 +270,11 @@ def search_sorted_for_flat(lens: np.ndarray, widths: np.ndarray,
     k32 = U32(key & 0xFFFFFFFF)
 
     ne = np.nonzero(nblocks > 0)[0]
-    # count of blocks j' (excluding block 0) with first[j'] < key, per row —
-    # that IS the target block index j (see docstring)
     not_first = np.ones(row_id.size, dtype=bool)
     # rows with 0 blocks have row_first_block == the NEXT row's first block
     # (or one past the end for a trailing empty row) — only mark rows that
     # actually own a first block, else a trailing empty row indexes OOB
-    not_first[row_first_block[nblocks > 0]] = False
+    not_first[row_first_block[ne]] = False
     lt = (inits < k32) & not_first
     j = np.add.reduceat(lt.astype(np.int64), row_first_block[ne])
 
@@ -350,12 +287,32 @@ def search_sorted_for_flat(lens: np.ndarray, widths: np.ndarray,
     for kk in np.unique(keys_t):
         blen, b = int(kk) // 64, int(kk) % 64
         sel = np.nonzero(keys_t == kk)[0]
-        vals = _decode_block_group(payload, src[sel], blen, b, "for",
+        vals = _decode_block_group(payload, src[sel], blen, b, mode,
                                    inits[tb[sel]])
         within[sel] = (vals < k32).sum(axis=1)
     # within == blen ⇒ answer is the start of the next block (or n)
     out[ne] = np.minimum(j * K.FULL_BLOCK + within, lens[ne])
     return out
+
+
+def search_sorted_flat(lens: np.ndarray, widths: np.ndarray,
+                       inits: np.ndarray, payload: np.ndarray,
+                       payload_lens: np.ndarray, key: int) -> np.ndarray:
+    """Lower-bound index of ``key`` in every d1-encoded SORTED row
+    (``simdsearchd1`` lifted across blocks, src/simdpackedsearch.c):
+    one block decoded per row (:func:`_lower_bound_flat`)."""
+    return _lower_bound_flat(lens, widths, inits, payload, payload_lens,
+                             key, "d1")
+
+
+def search_sorted_for_flat(lens: np.ndarray, widths: np.ndarray,
+                           inits: np.ndarray, payload: np.ndarray,
+                           payload_lens: np.ndarray, key: int) -> np.ndarray:
+    """Lower-bound index of ``key`` in every FOR-encoded SORTED row
+    (``simdsearchwithlengthFOR``, src/simdfor.c:15016-15032, lifted
+    across blocks): one block decoded per row (:func:`_lower_bound_flat`)."""
+    return _lower_bound_flat(lens, widths, inits, payload, payload_lens,
+                             key, "for")
 
 
 def intersect_sorted_flat(lens_a: np.ndarray, widths_a: np.ndarray,

@@ -10,11 +10,15 @@ Spark-first design (SURVEY.md §1.4, §4):
   ``pmod(xxhash64(doc_id, seg_id), shards)`` (:func:`salt_encoded`)
   rebalances output while shuffling compressed bytes (north rule: explicit
   partitioning/skew handling);
-* length-aware skew splitting: rows with huge ``n_tok`` are cut into
-  independent segments with pure JVM expressions (``sequence``/``slice``)
-  before encoding, so a single 10M-token document cannot straggle a task.
-  Blocks are independent given per-block inits (SURVEY.md §3.2), so segment
-  encodes are bit-compatible with whole-row encodes;
+* one encode core: every encoder task (:func:`encode`,
+  :func:`encode_files`, and the Iceberg writer's fused stage) runs
+  :func:`_encode_task` — flatten, cut rows longer than the split threshold
+  into segments (:func:`_split_flat`), encode.  Splitting bounds a
+  segment's size (and so a payload cell and a decode buffer); it does not
+  rebalance tasks, since a document's segments are encoded in the task
+  that read it.  Blocks are independent given per-block inits
+  (SURVEY.md §3.2), so segment encodes are bit-compatible with whole-row
+  encodes;
 * one decoder, one reassembly: every encoded read is a DataFrame
   (``iceberg.read_table``, or ``spark.read.parquet`` for plain
   directories) handed to :func:`decode`, which is lazy (calling it
@@ -36,7 +40,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import tempfile
 import time
 import weakref
@@ -57,6 +60,9 @@ DECODED_SCHEMA = ("doc_id string, source string, seg_id int, "
                   "tokens array<int>, n_tok int")
 
 DEFAULT_SPLIT_THRESHOLD = 1 << 16  # tokens per segment
+# encode(split_threshold=None): a Spark array holds at most 2**31 - 1
+# elements, so no row is longer
+_NO_SPLIT = np.iinfo(np.int32).max
 # rows per pyarrow batch in encode_files: 2048 rows ≈ 7 MB of tokens keeps
 # the per-thread working set near the L3 share at full thread count
 # (measured +7-10% over 8192 at 8 and 32 cores; 1024 regresses)
@@ -357,60 +363,32 @@ class _EncodedBatch:
 
 
 # ---------------------------------------------------------------------------
-# length-aware skew splitting (JVM-side, no Python)
-# ---------------------------------------------------------------------------
-
-def split_long_rows(df: DataFrame, threshold: int = DEFAULT_SPLIT_THRESHOLD
-                    ) -> DataFrame:
-    """Cut rows with n_tok > threshold into (doc_id, seg_id) segments of at
-    most ``threshold`` tokens.  Pure Catalyst expressions — stays in
-    whole-stage codegen, no UDF."""
-    nseg = F.greatest(F.ceil(F.col("n_tok") / threshold).cast("int"), F.lit(1))
-    return (
-        df.withColumn("seg_id", F.explode(F.sequence(F.lit(0), nseg - 1)))
-        .withColumn("tokens", F.slice("tokens",
-                                      F.col("seg_id") * threshold + 1, threshold))
-        .withColumn("n_tok", F.size("tokens"))
-    )
-
-
-# ---------------------------------------------------------------------------
 # encode
 # ---------------------------------------------------------------------------
 
 def encode(df: DataFrame, codec: str = "auto",
            split_threshold: int | None = DEFAULT_SPLIT_THRESHOLD
            ) -> DataFrame:
-    """tokens table → encoded table.
+    """tokens table (``doc_id``, ``source``, ``tokens``) → encoded table.
 
     codec: a registry name, or 'auto' → per-partition cost-model selection
     (north rule).
 
+    Each task runs :func:`_encode_task`, the encode core it shares with
+    :func:`encode_files`: a row longer than ``split_threshold`` tokens is
+    cut into segments (seg_id 0, 1, …) of at most that many tokens in the
+    worker (:func:`_split_flat`); ``split_threshold=None`` keeps every row
+    whole as seg_id 0.
+
     Shuffle discipline (the 100 TB decision): the encode is NARROW —
     scan-aligned, zero shuffles — because input task sizing is already
-    bounded by ``spark.sql.files.maxPartitionBytes`` and the length-aware
-    split bounds any single row.  For inputs whose partitioning is itself
-    skewed, salt the output with :func:`salt_encoded`, which shuffles the
-    ~2 bits/token compressed bytes rather than raw token arrays."""
-    if split_threshold is not None:
-        df = split_long_rows(df, split_threshold)
-    elif "seg_id" not in df.columns:
-        df = df.withColumn("seg_id", F.lit(0))
-    df = df.select("doc_id", "source", "seg_id", "tokens")
-
-    def encode_fn(it):
-        pid = _partition_id()
-        chosen = None if codec == "auto" else codec
-        total_ns = 0
-        for batch in it:
-            flat_i32, lens = _list_to_flat(batch.column(3))
-            rb, chosen, total_ns = _encode_batch(
-                batch.column(0), batch.column(1),
-                batch.column(2).cast(pa.int32()), flat_i32.view(np.uint32),
-                lens, chosen, pid, total_ns)
-            yield rb
-
-    return _encode_plan(df, encode_fn)
+    bounded by ``spark.sql.files.maxPartitionBytes``.  For inputs whose
+    partitioning is itself skewed, salt the output with
+    :func:`salt_encoded`, which shuffles the ~2 bits/token compressed
+    bytes rather than raw token arrays."""
+    threshold = _NO_SPLIT if split_threshold is None else split_threshold
+    return _encode_plan(df.select("doc_id", "tokens", "source"),
+                        lambda it: _encode_task(it, codec, threshold))
 
 
 def _partition_id() -> int:
@@ -419,55 +397,64 @@ def _partition_id() -> int:
     return ctx.partitionId() if ctx else -1
 
 
-def _encode_batch(doc_ids: pa.Array, sources: pa.Array, seg_ids: pa.Array,
-                  flat: np.ndarray, lens: np.ndarray, chosen: str | None,
-                  pid: int, total_ns: int
-                  ) -> tuple[pa.RecordBatch, str, int]:
-    """The encode core shared by :func:`encode` and :func:`encode_files`:
-    one batch of uint32 token rows → one ``ENCODED_SCHEMA`` RecordBatch.
+def _encode_task(batches, codec: str, threshold: int):
+    """The encode core of every encoder task: each Arrow batch of
+    (doc_id, tokens, source) rows → its rows' segments
+    (:func:`_split_flat`) as one ``ENCODED_SCHEMA`` RecordBatch.
 
-    ``chosen`` is the task's codec, or None to pick one on this batch
-    (auto); ``total_ns`` is the task's cumulative codec time so far — the
-    ``enc_ns`` column carries the running total, metrics take max() per
-    pid.  Returns (batch, codec, new total_ns)."""
-    t0 = time.perf_counter_ns()
-    if chosen is None:
-        chosen, _costs = choose_codec_flat(flat, lens)
-    e = codecs.get(chosen).encode_flat(flat, lens)
-    ch = kernels.content_hash_flat(flat, lens)
-    total_ns += time.perf_counter_ns() - t0
-    n = lens.size
-    rb = pa.RecordBatch.from_arrays(
-        [doc_ids, sources, seg_ids, pa.array(lens.astype(np.int32)),
-         pa.array([chosen] * n, type=pa.string()),
-         _binary_from_flat(e.widths, e.widths_lens),
-         _binary_from_flat(e.inits, e.inits_lens),
-         _binary_from_flat(e.payload, e.payload_lens),
-         pa.array(np.full(n, pid, dtype=np.int32)),
-         pa.array(np.full(n, total_ns, dtype=np.int64)),
-         _binary_from_flat(ch, np.full(n, 16, dtype=np.int64))],
-        names=["doc_id", "source", "seg_id", "n_tok", "codec", "widths",
-               "inits", "payload", "pid", "enc_ns", "content_hash"])
-    return rb, chosen, total_ns
+    ``codec`` 'auto' picks the task's codec on its first batch.  The
+    ``enc_ns`` column carries the task's cumulative codec time so far;
+    metrics take max() per pid."""
+    pid = _partition_id()
+    chosen = None if codec == "auto" else codec
+    total_ns = 0
+    for batch in batches:
+        flat_i32, lens = _list_to_flat(batch.column(1))
+        doc_ids, sources, seg_ids, flat, lens = _split_flat(
+            batch.column(0), batch.column(2), flat_i32.view(np.uint32),
+            lens, threshold)
+        t0 = time.perf_counter_ns()
+        if chosen is None:
+            chosen, _costs = choose_codec_flat(flat, lens)
+        e = codecs.get(chosen).encode_flat(flat, lens)
+        ch = kernels.content_hash_flat(flat, lens)
+        total_ns += time.perf_counter_ns() - t0
+        n = lens.size
+        # input files may store large_string ids; the output types are
+        # ENCODED_SCHEMA's in every batch of a task
+        yield pa.RecordBatch.from_arrays(
+            [doc_ids.cast(pa.string()), sources.cast(pa.string()),
+             pa.array(seg_ids, pa.int32()),
+             pa.array(lens.astype(np.int32)),
+             pa.array([chosen] * n, type=pa.string()),
+             _binary_from_flat(e.widths, e.widths_lens),
+             _binary_from_flat(e.inits, e.inits_lens),
+             _binary_from_flat(e.payload, e.payload_lens),
+             pa.array(np.full(n, pid, dtype=np.int32)),
+             pa.array(np.full(n, total_ns, dtype=np.int64)),
+             _binary_from_flat(ch, np.full(n, 16, dtype=np.int64))],
+            names=["doc_id", "source", "seg_id", "n_tok", "codec",
+                   "widths", "inits", "payload", "pid", "enc_ns",
+                   "content_hash"])
 
 
 def _split_flat(doc_ids, sources, flat, lens, threshold):
-    """numpy equivalent of :func:`split_long_rows` for the fused path:
-    returns (doc_ids, sources, seg_ids, flat, lens) with every row ≤
-    threshold tokens.  flat is unchanged (segments are contiguous slices)."""
+    """Cut every row longer than ``threshold`` tokens into segments of
+    ``threshold`` tokens and a shorter tail — the one place a seg_id is
+    made.  Returns (doc_ids, sources, seg_ids, flat, lens) per segment; a
+    row of 0 tokens (or null tokens) is one empty segment.  flat is
+    unchanged (segments are contiguous slices)."""
     lens = np.asarray(lens, dtype=np.int64)
     nseg = np.maximum((lens + threshold - 1) // threshold, 1)
     if int(nseg.sum()) == lens.size:
         return (doc_ids, sources, np.zeros(lens.size, np.int32), flat, lens)
-    rep = nseg.astype(np.int64)
-    seg_ids = (np.arange(int(rep.sum()), dtype=np.int64)
-               - np.repeat(np.cumsum(rep) - rep, rep)).astype(np.int32)
-    new_lens = np.minimum(
-        np.repeat(lens, rep) - seg_ids.astype(np.int64) * threshold,
-        threshold)
-    new_lens = np.maximum(new_lens, 0)
-    idx = np.repeat(np.arange(lens.size), rep)
-    return (doc_ids.take(idx), sources.take(idx), seg_ids, flat, new_lens)
+    seg_ids = (np.arange(int(nseg.sum()), dtype=np.int64)
+               - np.repeat(np.cumsum(nseg) - nseg, nseg))
+    new_lens = np.minimum(np.repeat(lens, nseg) - seg_ids * threshold,
+                          threshold)
+    idx = np.repeat(np.arange(lens.size), nseg)
+    return (doc_ids.take(idx), sources.take(idx), seg_ids.astype(np.int32),
+            flat, new_lens)
 
 
 def _input_files(path: str, snapshot_id: int | None = None) -> list[str]:
@@ -600,8 +587,8 @@ def encode_files(spark: SparkSession, path: str, codec: str = "auto",
 
     ``iceberg.export_encoded`` / ``append`` of the returned frame itself
     — uncached, to an unpartitioned table — runs this encoder inside the
-    Iceberg writer's task (:func:`_fused_encoder`): an ingest pass is one
-    job, one stage and one Python worker per task.  A cached frame is
+    Iceberg writer's task (``_ENCODE_PLANS``): an ingest pass is one job,
+    one stage and one Python worker per task.  A cached frame is
     written from its cache, and a frame derived from this one (or a
     partitioned write) keeps the encoder and the writer as two stacked
     ``mapInArrow`` stages."""
@@ -628,10 +615,7 @@ def encode_files(spark: SparkSession, path: str, codec: str = "auto",
                     "a drop + re-add of the role column)")
         return [by_id[fids[r]] for r in roles]
 
-    def fn(it):
-        pid = _partition_id()
-        chosen = None if codec == "auto" else codec
-        total_ns = 0
+    def read(it):
         for batch in it:
             for path_, rg in zip(batch.column(0).to_pylist(),
                                  batch.column(1).to_pylist()):
@@ -639,24 +623,17 @@ def encode_files(spark: SparkSession, path: str, codec: str = "auto",
                 cols = columns_of(pf, path_)
                 rgs = [rg] if rg >= 0 else None   # -1 = whole-file unit
                 for rb in pf.iter_batches(batch_size=_ENCODE_BATCH_ROWS,
-                                          row_groups=rgs,
-                                          columns=cols):
-                    rb = rb.select(cols)  # parquet yields file order
-                    flat_i32, lens = _list_to_flat(rb.column(1))
-                    doc_ids, sources, seg_ids, flat, lens = _split_flat(
-                        rb.column(0), rb.column(2),
-                        flat_i32.view(np.uint32), lens, split_threshold)
-                    out, chosen, total_ns = _encode_batch(
-                        doc_ids, sources, pa.array(seg_ids, pa.int32()),
-                        flat, lens, chosen, pid, total_ns)
-                    yield out
+                                          row_groups=rgs, columns=cols):
+                    yield rb.select(cols)  # parquet yields file order
 
-    return _encode_plan(fdf, fn)
+    return _encode_plan(
+        fdf, lambda it: _encode_task(read(it), codec, split_threshold))
 
 
 # the DataFrames encode() and encode_files() returned, held weakly, each
 # → (input frame, batch function): iceberg's writer runs such an exact
-# frame's encoder inside its own mapInArrow (see _fused_encoder)
+# frame's encoder inside its own mapInArrow, over the input frame's
+# batches, and writes the encoded batches as they come
 _ENCODE_PLANS = weakref.WeakKeyDictionary()
 
 
@@ -664,85 +641,6 @@ def _encode_plan(src: DataFrame, fn) -> DataFrame:
     out = src.mapInArrow(fn, schema=ENCODED_SCHEMA)
     _ENCODE_PLANS[out] = (src, fn)
     return out
-
-
-def _fused_encoder(df: DataFrame):
-    """``(input frame, batch function)`` when ``df`` is the exact frame
-    :func:`encode` or :func:`encode_files` returned, else None.  Over the
-    input frame's batches, the function yields ``df``'s rows in the
-    batches Spark would hand a ``mapInArrow`` over ``df`` itself
-    (:func:`_spark_batches`), so a writer fed by them in one Python stage
-    writes the files it writes in two."""
-    plan = _ENCODE_PLANS.get(df)
-    if plan is None:
-        return None
-    from pyspark.sql.pandas.types import to_arrow_schema
-    src, fn = plan
-    schema = to_arrow_schema(df.schema)
-    conf = df.sparkSession.conf
-    max_rows = int(conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
-    max_bytes = _conf_bytes(
-        conf.get("spark.sql.execution.arrow.maxBytesPerBatch"))
-
-    def batches(it):
-        return _spark_batches(fn(it), schema, max_rows, max_bytes)
-    return src, batches
-
-
-def _conf_bytes(value: str) -> int:
-    """A Spark byte-size conf value ("64m", "67108864b") in bytes."""
-    n, unit = re.fullmatch(r"(\d+)([kmgtp]?)b?", value.strip().lower()
-                           ).groups()
-    return int(n) << (10 * "_kmgtp".index(unit or "_"))
-
-
-def _spark_batches(batches, schema: pa.Schema, max_rows: int,
-                   max_bytes: int):
-    """``batches``' rows, cast to ``schema``, cut where Spark's Arrow
-    runner cuts the rows it hands a ``mapInArrow``: a batch closes at
-    ``max_rows`` rows (``maxRecordsPerBatch``; ≤ 0: no limit), or before
-    the row that would start while its JVM buffers already hold
-    ``max_bytes`` (``maxBytesPerBatch``).  The JVM size is, per column, a
-    validity bitmap, plus offsets (4 bytes a row and one more) and the
-    values of a string/binary column, or the fixed-width values."""
-    var = [pa.types.is_string(f.type) or pa.types.is_binary(f.type)
-           for f in schema]
-    fixed = sum(f.type.bit_width // 8 for f, v in zip(schema, var)
-                if not v)
-    base, bitmaps = 4 * sum(var), len(schema)
-    if max_rows <= 0:
-        max_rows = 1 << 62
-    parts, k, size = [], 0, base
-
-    def cut():
-        t = pa.Table.from_batches(parts).combine_chunks()
-        parts.clear()
-        return t.to_batches()[0]
-
-    for b in batches:
-        if b.schema != schema:
-            b = b.cast(schema)
-        row = np.full(b.num_rows, fixed, np.int64)
-        for col, v in zip(b.columns, var):
-            if v:
-                row += pc.binary_length(col).fill_null(0).to_numpy() + 4
-        cum = np.concatenate([[0], np.cumsum(row)])
-        i = 0
-        while i < b.num_rows:
-            # the open batch's row count and JVM size before each next row
-            n = k + np.arange(b.num_rows - i)
-            held = size + cum[i:-1] - cum[i] + bitmaps * ((n + 7) // 8)
-            take = int(np.count_nonzero((n < max_rows) & (held < max_bytes)))
-            take = take or (0 if k else 1)
-            if take:
-                parts.append(b.slice(i, take))
-                size += int(cum[i + take] - cum[i])
-                k, i = k + take, i + take
-            if i < b.num_rows:
-                yield cut()
-                k, size = 0, base
-    if parts:
-        yield cut()
 
 
 def salt_encoded(df_encoded: DataFrame, shards: int | None = None) -> DataFrame:
@@ -1336,7 +1234,7 @@ def encoded_dedup(df_encoded: DataFrame, verify: bool = True) -> DataFrame:
 def _doc_signature(rows: DataFrame, hash_col: str) -> DataFrame:
     """(doc_id, sig): a per-DOCUMENT identity from per-segment content
     hashes — sha256 over the sorted ``seg_id:hash`` list, so a document
-    split into segments (split_long_rows) compares as a whole and
+    split into segments (:func:`_split_flat`) compares as a whole and
     segment count/order differences cannot collide."""
     return rows.groupBy("doc_id").agg(
         F.sha2(F.concat_ws(",", F.array_sort(F.collect_list(

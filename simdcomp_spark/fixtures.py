@@ -73,67 +73,6 @@ def _gen_partition_rows(start: int, count: int, seed: int, vocab: int,
     return lens, toks, offs
 
 
-_ZIPF_CDF_CACHE: dict = {}
-
-
-def _zipf_cdf(vocab: int, a: float = 1.3) -> np.ndarray:
-    """Inverse-CDF table for a truncated zipf over [0, vocab) — sampling via
-    ``searchsorted(cdf, uniform)`` is ~20x faster than ``rng.zipf`` and keeps
-    the same head-heavy token distribution."""
-    key = (vocab, a)
-    if key not in _ZIPF_CDF_CACHE:
-        p = 1.0 / np.power(np.arange(1, vocab + 1, dtype=np.float64), a)
-        _ZIPF_CDF_CACHE[key] = np.cumsum(p / p.sum())
-    return _ZIPF_CDF_CACHE[key]
-
-
-def _gen_partition_rows_fast(start: int, count: int, seed: int, vocab: int,
-                             mean_len: float):
-    """Same length distribution / skew pattern as :func:`_gen_partition_rows`
-    but tokens drawn via the inverse-CDF table (multi-billion-token scaling
-    inputs need generation to be memory-bandwidth-bound, not rng-bound)."""
-    rng = np.random.default_rng((seed, start))
-    lens = np.minimum(rng.lognormal(np.log(mean_len), 0.6, size=count)
-                      .astype(np.int64) + 1, 16384)
-    lens[(start + np.arange(count)) % 4096 == 0] = 80000
-    tot = int(lens.sum())
-    cdf = _zipf_cdf(vocab)
-    # float rounding can leave cdf[-1] slightly below a drawn uniform, which
-    # would return `vocab` (out of domain) — clip to the valid token range
-    toks = np.minimum(np.searchsorted(cdf, rng.random(tot)), vocab - 1) \
-        .astype(np.uint32).view(np.int32)
-    offs = np.concatenate(([0], np.cumsum(lens)))
-    return lens, toks, offs
-
-
-def zipfish_table(spark, n_docs: int, seed: int = 42, vocab: int = 50257,
-                  mean_len: float = 700.0, parts: int | None = None):
-    """Deterministic zipf-ish tokens table via the fast inverse-CDF sampler.
-
-    Identical contract to :func:`tokenish_table` (partition-id-seeded, same
-    table for any executor count) — used for the multi-billion-token scaling
-    input where ``rng.zipf`` would dominate generation time."""
-    parts = parts or max(spark.sparkContext.defaultParallelism, 8)
-    base = spark.range(0, n_docs, 1, parts)
-
-    def gen(it):
-        import pandas as pd
-        for pdf in it:
-            ids = pdf["id"].to_numpy()
-            if ids.size == 0:
-                continue
-            lens, toks, offs = _gen_partition_rows_fast(
-                int(ids[0]), ids.size, seed, vocab, mean_len)
-            yield pd.DataFrame({
-                "doc_id": [f"doc_{i:010d}" for i in ids],
-                "tokens": [toks[offs[k]:offs[k + 1]] for k in range(ids.size)],
-                "n_tok": lens.astype(np.int32),
-                "source": [f"src{i % 8}" for i in ids],
-            })
-
-    return base.mapInPandas(gen, schema=TOKENS_SCHEMA)
-
-
 def tokenish_table(spark, n_docs: int, seed: int = 42, vocab: int = 50257,
                    mean_len: float = 700.0, parts: int | None = None):
     """Distributed deterministic Zipf tokens table (bench preset).

@@ -255,9 +255,10 @@ def pack_greedy(df_tokens: DataFrame, chunk_len: int,
     the chunk assignment joins back to the arrays with the same
     shuffle_hash discipline as pack_chunks and ONE chunk-keyed exchange
     reassembles.  Docs longer than ``chunk_len`` cannot be packed uncut —
-    they are refused loudly (split them upstream with pack_chunks or the
-    engine's split_long_rows; silently truncating a document corrupts
-    training data).
+    they are refused loudly (split them upstream with pack_chunks, or
+    take the segments of ``engine.decode(..., reassemble=False)`` over a
+    split encode; silently truncating a document corrupts training
+    data).
 
     ``skinny`` (optional) supplies the assignment pass its
     ``(id_col, n_tok)`` rows from a cheaper plan than ``df_tokens``

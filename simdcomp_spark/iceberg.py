@@ -485,18 +485,19 @@ def _write_data_files(df: DataFrame, out_dir: str, schema: dict,
     Spark driver commits only what the job returned.
 
     When ``df`` is the exact frame ``engine.encode_files`` or
-    ``engine.encode`` returned (:func:`engine._fused_encoder`), the write
-    is fused: one ``mapInArrow`` over the encoder's input, each task
-    feeding the encoder's batches, re-cut as Spark would have cut them,
-    straight into :func:`_write_task` — one Python worker per task
-    instead of two, the same files.  Three frames keep the two-stage
-    plan: a cached one (it must be written from its cache, never
-    re-encoded: its input may be gone), a derived one (its rows are no
-    longer the encoder's), and any write to a partitioned spec (the
-    ``_p_`` columns are Spark expressions over the encoded rows)."""
+    ``engine.encode`` returned (``engine._ENCODE_PLANS``), the write is
+    fused: one ``mapInArrow`` over the encoder's input, each task feeding
+    the encoder's batches as they come straight into :func:`_write_task`
+    — one Python worker per task instead of two, the same files (a row
+    group's pages depend only on its rows, not on their batching).
+    Three frames keep the two-stage plan: a cached one (it must be
+    written from its cache, never re-encoded: its input may be gone), a
+    derived one (its rows are no longer the encoder's), and any write to
+    a partitioned spec (the ``_p_`` columns are Spark expressions over
+    the encoded rows)."""
     parts = _spec_partition_exprs(spec, schema)
     fused = (None if parts or df.is_cached
-             else engine._fused_encoder(df))
+             else engine._ENCODE_PLANS.get(df))
     for name, expr in parts:
         df = df.withColumn(f"_p_{name}", expr)
     ids = {f["name"]: (f["id"], f["type"].get("element-id")
@@ -642,8 +643,10 @@ def _write_task(batches, out_dir: str, names: list[str], ids: dict):
     def flush():
         for _, w, buf, check in files.values():
             if buf:
-                w.write_table(pa.Table.from_batches(buf),
-                              row_group_size=sum(b.num_rows for b in buf))
+                # one chunk per column: the pages then depend only on
+                # the row group's rows, not on how they were batched
+                t = pa.Table.from_batches(buf).combine_chunks()
+                w.write_table(t, row_group_size=t.num_rows)
                 buf.clear()
                 check.flush()
 
@@ -1324,8 +1327,8 @@ def append(df: DataFrame, table_dir: str,
     Readers of the previous snapshot are unaffected (snapshot isolation);
     ``read_table(snapshot_id=...)`` time-travels to any snapshot.
     ``extra_summary`` adds application keys to the snapshot summary (the
-    spec's summary map is string->string; e.g. the resumable encoder's
-    shard lineage).  ``branch`` stages the append on a write-audit-
+    spec's summary map is string->string; e.g. the resumable ingest's
+    input-file lineage).  ``branch`` stages the append on a write-audit-
     publish ref instead of main (see :func:`create_branch`)."""
     base = _load_base(table_dir)
     _check_same_schema(base[1], df, "append")
@@ -1892,7 +1895,8 @@ def read_table_with_pos(spark: SparkSession, table_dir: str,
     meta, data, dels = _snapshot_entries(table_dir, snapshot_id)
     if not data:
         return spark.createDataFrame(
-            [], _spark_ddl(table_dir) + ", _file string, _pos bigint")
+            [], _spark_struct_with_ids(_current_schema(meta))
+            .add("_file", "string").add("_pos", "long"))
     return _read_with_pos(spark, table_dir, data, dels, meta)
 
 
@@ -1939,7 +1943,8 @@ def read_table(spark: SparkSession, table_dir: str,
                             preloaded=(meta, files))
     paths = [d["file_path"] for d in files]
     if not paths:
-        return spark.createDataFrame([], _spark_ddl(table_dir))
+        return spark.createDataFrame(
+            [], _spark_struct_with_ids(_current_schema(meta)))
     if dels:
         df = _read_with_pos(spark, table_dir, files, dels, meta) \
             .drop("_file", "_pos")
@@ -1959,25 +1964,6 @@ def read_table(spark: SparkSession, table_dir: str,
         if hi is not None:
             df = df.where(df[col] <= hi)
     return df
-
-
-_ICEBERG_TO_SPARK_DDL = {
-    "string": "string", "int": "int", "long": "bigint",
-    "binary": "binary", "double": "double", "float": "float",
-    "boolean": "boolean", "timestamptz": "timestamp",
-    "timestamp": "timestamp_ntz", "date": "date"}
-
-
-def _ddl_type(t) -> str:
-    if isinstance(t, dict) and t.get("type") == "list":
-        return (f"array<"
-                f"{_ICEBERG_TO_SPARK_DDL.get(t['element'], t['element'])}>")
-    return _ICEBERG_TO_SPARK_DDL.get(t, t)
-
-
-def _spark_ddl(table_dir: str) -> str:
-    return ", ".join(f"{f['name']} {_ddl_type(f['type'])}" for f in
-                     _current_schema(_load_metadata(table_dir))["fields"])
 
 
 # ---------------------------------------------------------------------------
@@ -2375,14 +2361,14 @@ def _existing_entries(data: list[dict]) -> list[dict]:
 # table maintenance: snapshot expiry + orphan-file cleanup
 # ---------------------------------------------------------------------------
 
-# Resume lineage the resumable writers and the stream sink stamp on their
-# snapshot summaries: id sets (shard ids comma-separated, the others JSON
-# lists) and scalars.  expire_snapshots folds an expired snapshot's ids
-# into the `<key>-expired` JSON-list property and its scalars into the
-# property of the same key.
-_LINEAGE_SETS = ("simdcomp-shards", "simdcomp-input-files",
-                 "simdcomp-stream-batches")
-_LINEAGE_SCALARS = ("simdcomp-total-shards", "simdcomp-stream-query")
+# Resume lineage the file-keyed resumable ingest and the stream sink
+# stamp on their snapshot summaries: id sets (JSON lists: input files,
+# stream batch ids) and scalars (strings: the stream's query id).
+# expire_snapshots folds an expired snapshot's ids into the
+# `<key>-expired` JSON-list property and its scalars into the property of
+# the same key.
+_LINEAGE_SETS = ("simdcomp-input-files", "simdcomp-stream-batches")
+_LINEAGE_SCALARS = ("simdcomp-stream-query",)
 
 
 def _lineage(meta: dict | None,
@@ -2391,10 +2377,10 @@ def _lineage(meta: dict | None,
     snapshot of ``meta``) together with what :func:`expire_snapshots`
     folded into the table properties — the one reader of that format.
 
-    Each id-set key maps to its set of ids (shard ids as ints, input files
-    as relative paths, stream batch ids as ints); each scalar key to the
-    list of its values, the property's first, then the snapshots' in log
-    order (total shards as ints).  ``meta`` None (no table) has none."""
+    Each id-set key maps to its set of ids (input files as relative
+    paths, stream batch ids as ints); each scalar key to the list of its
+    values, the property's first, then the snapshots' in log order.
+    ``meta`` None (no table) has none."""
     meta = meta or {}
     props = meta.get("properties", {})
     if snapshots is None:
@@ -2404,18 +2390,11 @@ def _lineage(meta: dict | None,
     for key in _LINEAGE_SETS:
         ids = set(json.loads(props.get(f"{key}-expired", "[]")))
         for summ in summaries:
-            v = summ.get(key, "")
-            if key == "simdcomp-shards":
-                ids |= {x for x in v.split(",") if x}
-            elif v:
-                ids |= set(json.loads(v))
-        out[key] = {int(x) for x in ids} if key == "simdcomp-shards" \
-            else ids
+            ids |= set(json.loads(summ.get(key) or "[]"))
+        out[key] = ids
     for key in _LINEAGE_SCALARS:
-        vals = [v for v in [props.get(key)] + [s.get(key) for s in summaries]
-                if v]
-        out[key] = [int(v) for v in vals] \
-            if key == "simdcomp-total-shards" else vals
+        out[key] = [v for v in [props.get(key)]
+                    + [s.get(key) for s in summaries] if v]
     return out
 
 
@@ -2657,11 +2636,12 @@ def expire_snapshots(table_dir: str, keep_last: int = 1) -> dict:
     unaffected; physical bytes are reclaimed separately by
     :func:`remove_orphan_files`).
 
-    The resumable encoders record their lineage (shard ids / input files)
-    in snapshot summaries — expiring those snapshots must NOT forget the
-    work: expired summaries' lineage keys are folded into the table
-    ``properties`` first, and :func:`_lineage` unions properties with the
-    live summaries, so a resume after expiry is still a no-op."""
+    The resumable ingest and the stream sink record their lineage (input
+    files / stream batch ids) in snapshot summaries — expiring those
+    snapshots must NOT forget the work: expired summaries' lineage keys
+    are folded into the table ``properties`` first, and :func:`_lineage`
+    unions properties with the live summaries, so a resume after expiry
+    is still a no-op."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1 (the current snapshot "
                          "can never be expired)")
@@ -2677,15 +2657,12 @@ def expire_snapshots(table_dir: str, keep_last: int = 1) -> dict:
         folded = _lineage(meta, expired)
         for key in _LINEAGE_SETS:
             if folded[key]:
-                # shard ids stay JSON strings, sorted as strings
-                ids = map(str, folded[key]) if key == "simdcomp-shards" \
-                    else folded[key]
-                props[f"{key}-expired"] = json.dumps(sorted(ids))
-        # scalar lineage must survive expiry too: the shard modulus and
-        # the streaming sink's checkpoint query id
+                props[f"{key}-expired"] = json.dumps(sorted(folded[key]))
+        # scalar lineage must survive expiry too: the streaming sink's
+        # checkpoint query id
         for key in _LINEAGE_SCALARS:
             if folded[key]:
-                props[key] = str(folded[key][-1])
+                props[key] = folded[key][-1]
         return {**meta, "properties": props, "snapshots": [
             s for s in meta["snapshots"] if s["snapshot-id"] not in gone]}
     meta = _commit(table_dir, change, validate=_reapply, base=base)

@@ -2,14 +2,14 @@
 "resumable from checkpoint with per-partition lineage + metrics").
 
 Resume state and table state are one mechanism, the snapshot log: each
-batch commits as one append snapshot whose summary records the batch's
-lineage — doc-hash shard ids (:func:`encode_resumable_iceberg`) or input
-files (:func:`encode_files_resumable_iceberg`).  A crashed run commits no
-snapshot, so a re-run encodes exactly the work no committed snapshot
-claims; its orphan data files are invisible to metadata-planned readers.
-The lineage format and its survival of snapshot expiry live in
-:func:`iceberg._lineage`.  At 100 TB scale this is the difference between
-re-running a 12-hour job and re-running the 3 batches that failed.
+batch of input files commits as one append snapshot whose summary records
+the batch's files (:func:`encode_files_resumable_iceberg`).  A crashed
+run commits no snapshot, so a re-run encodes exactly the files no
+committed snapshot claims; its orphan data files are invisible to
+metadata-planned readers.  The lineage format and its survival of
+snapshot expiry live in :func:`iceberg._lineage`.  At 100 TB scale this
+is the difference between re-running a 12-hour job and re-running the 3
+batches that failed.
 """
 
 from __future__ import annotations
@@ -27,107 +27,21 @@ class RolledBack(RuntimeError):
     rolled back: the table's current state excludes it."""
 
 
-def completed_shards_iceberg(table_dir: str) -> set[int]:
-    """Shards already committed to the Iceberg table (the ``shards``
-    lineage of :func:`encode_resumable_iceberg`, expired snapshots'
-    included).  A crashed run commits no snapshot, so its shards are
-    absent here."""
-    return iceberg._lineage(
-        iceberg._metadata_or_none(table_dir))["simdcomp-shards"]
-
-
-def _require_resumable_lineage(meta: dict | None, table_dir: str,
-                               kind: str) -> None:
+def _require_resumable_lineage(meta: dict | None, table_dir: str) -> None:
     """Refuse to resume into a NON-EMPTY table that carries no resumable
     lineage: with an empty done-set, every row would be re-encoded and
     APPENDED — a silent full duplication of a table that was published by
     a non-resumable path (export_encoded / overwrite)."""
     if meta is None or not meta["snapshots"]:
         return
-    lineage = iceberg._lineage(meta)
-    if not (lineage["simdcomp-shards"]
-            or lineage["simdcomp-input-files"]):
+    if not iceberg._lineage(meta)["simdcomp-input-files"]:
         raise ValueError(
             f"{table_dir} is a non-empty Iceberg table with no resumable "
-            f"lineage in any snapshot summary — it was not written by "
-            f"{kind}; appending would silently duplicate every row. "
+            "lineage in any snapshot summary — it was not written by "
+            "encode_files_resumable_iceberg; appending would silently "
+            "duplicate every row. "
             "Use iceberg.append/overwrite explicitly, or target a fresh "
             "table dir")
-
-
-def encode_resumable_iceberg(df: DataFrame, table_dir: str,
-                             codec: str = "auto", shards: int = 32,
-                             split_threshold: int =
-                             engine.DEFAULT_SPLIT_THRESHOLD,
-                             batch_shards: int | None = None) -> dict:
-    """Encode ``df`` DIRECTLY into an Iceberg v2 table, resumable.
-
-    Each batch of ``batch_shards`` shards commits as ONE append snapshot
-    whose summary records the shard ids; re-running after a crash encodes
-    exactly the shards no committed snapshot claims.  Crash safety comes
-    from the Iceberg commit protocol itself: a run that dies before its
-    metadata publish leaves data files no manifest references (dead bytes,
-    not duplicate rows), and `iceberg.read_table` never sees them.
-    Returns ``{"shards", "skipped", "encoded", "rows", "tokens",
-    "payload_bytes", "snapshots"}``."""
-    meta0 = iceberg._metadata_or_none(table_dir)
-    _require_resumable_lineage(meta0, table_dir, "encode_resumable_iceberg")
-    lineage = iceberg._lineage(meta0)
-    done = lineage["simdcomp-shards"]
-    # the recorded total is authoritative: a LARGER new count would pass a
-    # range check vacuously and re-append rows already committed under the
-    # old modulus (hash%new and hash%old partition the rows differently)
-    totals = set(lineage["simdcomp-total-shards"])
-    if totals and totals != {shards}:
-        raise ValueError(
-            f"table {table_dir} was encoded with shards={sorted(totals)}, "
-            f"got shards={shards} — resuming under a different modulus "
-            "would silently duplicate committed rows; pass the original "
-            "shard count")
-    stale = done - set(range(shards))
-    if stale:
-        raise ValueError(
-            f"table {table_dir} has committed shards {sorted(stale)} "
-            f"outside range({shards}) — it was encoded with a different "
-            "shard count; pass the original `shards`")
-    todo = [s for s in range(shards) if s not in done]
-    summary = {"shards": shards, "skipped": len(done), "encoded": 0,
-               "rows": 0, "tokens": 0, "payload_bytes": 0,
-               "snapshots": []}
-    if not todo:
-        return summary
-
-    from pyspark.sql import Observation
-
-    base = engine.split_long_rows(df, split_threshold)
-    base = base.withColumn(
-        "shard", F.pmod(F.xxhash64("doc_id", "seg_id"),
-                        F.lit(shards)).cast("int"))
-    step = batch_shards or len(todo)
-    for i in range(0, len(todo), step):
-        batch = todo[i:i + step]
-        part = (base.where(F.col("shard").isin(batch))
-                .repartition(len(batch), "shard"))
-        enc = engine.encode(part.drop("shard"), codec=codec,
-                            split_threshold=None)
-        enc = enc.withColumn(
-            "shard", F.pmod(F.xxhash64("doc_id", "seg_id"),
-                            F.lit(shards)).cast("int"))
-        # token/byte totals ride on the write itself (Observation) —
-        # no second pass over the just-written payload bytes
-        obs = Observation(f"enc_batch_{i}")
-        enc = enc.observe(obs, F.sum("n_tok").alias("t"),
-                          F.sum(F.length("payload")).alias("p"))
-        extra = {"simdcomp-shards": ",".join(str(s) for s in batch),
-                 "simdcomp-total-shards": str(shards)}
-        meta = iceberg._append_or_create(enc, table_dir, extra)
-        snap = meta["snapshots"][-1]
-        summary["encoded"] += len(batch)
-        summary["rows"] += int(snap["summary"]["added-records"])
-        summary["tokens"] += int(obs.get["t"] or 0)
-        summary["payload_bytes"] += int(obs.get["p"] or 0)
-        summary["snapshots"].append(snap["snapshot-id"])
-    return summary
 
 
 def completed_input_files_iceberg(table_dir: str) -> set[str]:
@@ -195,11 +109,7 @@ def encode_files_resumable_iceberg(spark, input_path: str, table_dir: str,
     the unrecorded input files.  This is the natural resume unit for
     ingest: the input's file listing is already the planning primitive,
     and no doc-hash shuffle is needed at all (the whole pipeline stays
-    scan-aligned and narrow).  Compared with
-    :func:`encode_resumable_iceberg` (doc-hash shards, scan-based
-    encode), this path measured ~5-10x the throughput and is the one to
-    use when the input is static files; use the shard variant when the
-    input is a DataFrame with no stable file identity.
+    scan-aligned and narrow).
 
     ``verify=True`` round-trips EACH batch right after its commit
     (decode of the batch's data files vs the batch's input files, read
@@ -218,8 +128,7 @@ def encode_files_resumable_iceberg(spark, input_path: str, table_dir: str,
     summaries, which a rewrite preserves in history, so a later resume
     is still a no-op)."""
     meta0 = iceberg._metadata_or_none(table_dir)
-    _require_resumable_lineage(meta0, table_dir,
-                               "encode_files_resumable_iceberg")
+    _require_resumable_lineage(meta0, table_dir)
     all_files = engine._input_files(input_path, snapshot_id)
     rel = {f: os.path.relpath(f, input_path) for f in all_files}
     done = iceberg._lineage(meta0)["simdcomp-input-files"]

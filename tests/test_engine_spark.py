@@ -27,12 +27,49 @@ def test_spark_roundtrip_all_codecs(spark, unit_df, codec):
 
 
 def test_skew_split_segments(spark, unit_df):
-    split = engine.split_long_rows(unit_df, threshold=1 << 14)
-    huge = split.where(F.col("doc_id") == "doc_tokenish_huge_00000000")
+    enc = engine.encode(unit_df, codec="bitpack", split_threshold=1 << 14)
+    huge = enc.where(F.col("doc_id") == "doc_tokenish_huge_00000000")
     segs = huge.select("seg_id", "n_tok").orderBy("seg_id").collect()
     assert len(segs) == (70000 + (1 << 14) - 1) // (1 << 14)
+    assert [r["seg_id"] for r in segs] == list(range(len(segs)))
+    assert [r["n_tok"] for r in segs] == [1 << 14] * 4 + [70000 - (4 << 14)]
     assert sum(r["n_tok"] for r in segs) == 70000
-    assert all(r["n_tok"] <= (1 << 14) for r in segs)
+
+
+@pytest.mark.parametrize("via", ["encode", "encode_files"])
+def test_worker_split_edge_cases(spark, tmp_path, via):
+    """The encoder's worker split (_split_flat), through both encoders:
+    a document of 0 tokens, of exactly ``threshold``, of ``threshold + 1``
+    and of null tokens is 1, 1, 2 and 1 segments; ``split_threshold=None``
+    keeps every document whole as seg_id 0."""
+    t = 256
+    df = spark.createDataFrame(
+        [("empty", "s", []), ("exact", "s", list(range(t))),
+         ("over", "s", list(range(t + 1))), ("null", "s", None)],
+        "doc_id string, source string, tokens array<int>")
+    if via == "encode":
+        enc = engine.encode(df, codec="bitpack", split_threshold=t)
+    else:
+        src = str(tmp_path / "toks")
+        df.coalesce(1).write.parquet(src)
+        enc = engine.encode_files(spark, src, codec="bitpack",
+                                  split_threshold=t)
+    segs: dict = {}
+    for r in enc.select("doc_id", "seg_id", "n_tok").collect():
+        segs.setdefault(r["doc_id"], []).append((r["seg_id"], r["n_tok"]))
+    assert {d: sorted(v) for d, v in segs.items()} == {
+        "empty": [(0, 0)], "exact": [(0, t)], "over": [(0, t), (1, 1)],
+        "null": [(0, 0)]}
+    dec = {r["doc_id"]: r["tokens"]
+           for r in engine.decode(enc).collect()}
+    assert dec["over"] == list(range(t + 1)) and dec["exact"] == \
+        list(range(t))
+    if via == "encode":
+        whole = engine.encode(df, codec="bitpack", split_threshold=None)
+        assert sorted((r["doc_id"], r["seg_id"], r["n_tok"])
+                      for r in whole.collect()) == [
+            ("empty", 0, 0), ("exact", 0, t), ("null", 0, 0),
+            ("over", 0, t + 1)]
 
 
 def test_compressed_size_bound_on_spark(spark, unit_df):
@@ -113,64 +150,6 @@ def test_decode_plain_dirs(spark, unit_df, tmp_path):
             for d, v in parts.items()} == truth
     dec = engine.decode(spark.read.parquet(enc_dir), reassemble=True)
     assert engine.verify_roundtrip(unit_df, dec) == 0
-
-
-def test_encode_resumable_iceberg_crash_resume(spark, unit_df, tmp_path,
-                                               monkeypatch):
-    """Resume state and table state as ONE mechanism: each shard batch is
-    an Iceberg append snapshot carrying its shard ids in the summary.  A
-    run that crashes AFTER writing data files but BEFORE its metadata
-    publish commits nothing — the re-run encodes exactly the missing
-    shards and the final table round-trips with no duplicate rows (the
-    crashed attempt's files are orphans no manifest references)."""
-    from pathlib import Path
-
-    from simdcomp_spark import iceberg
-    table = str(tmp_path / "enc_iceberg")
-
-    # first commit (shards 0,1) succeeds: 2 avro writes (manifest +
-    # manifest list); the SECOND batch dies mid-publish on write 3
-    orig = iceberg._avro_write
-    calls = {"n": 0}
-
-    def flaky(*a, **k):
-        calls["n"] += 1
-        if calls["n"] >= 3:
-            raise RuntimeError("simulated crash before commit")
-        return orig(*a, **k)
-
-    monkeypatch.setattr(iceberg, "_avro_write", flaky)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        manifest.encode_resumable_iceberg(unit_df, table, codec="bitpack",
-                                          shards=4, batch_shards=2)
-    monkeypatch.setattr(iceberg, "_avro_write", orig)
-
-    assert manifest.completed_shards_iceberg(table) == {0, 1}
-    # orphan data of the crashed batch exists on disk but is invisible
-    n_live = iceberg.read_table(spark, table).count()
-    snap_dirs = list((Path(table) / "data").glob("snap-*"))
-    assert len(snap_dirs) == 2           # one committed + one orphan
-
-    s2 = manifest.encode_resumable_iceberg(unit_df, table, codec="bitpack",
-                                           shards=4, batch_shards=2)
-    assert s2["skipped"] == 2 and s2["encoded"] == 2
-    assert len(s2["snapshots"]) == 1
-    assert manifest.completed_shards_iceberg(table) == {0, 1, 2, 3}
-    assert iceberg.read_table(spark, table).count() > n_live
-
-    # idempotent: nothing left to do
-    s3 = manifest.encode_resumable_iceberg(unit_df, table, codec="bitpack",
-                                           shards=4)
-    assert s3["encoded"] == 0 and s3["skipped"] == 4
-
-    enc = iceberg.read_table(spark, table)
-    assert enc.groupBy("doc_id", "seg_id").count() \
-        .where(F.col("count") > 1).count() == 0
-    dec = engine.decode(enc.drop("shard"), reassemble=True)
-    assert engine.verify_roundtrip(unit_df, dec) == 0
-    # a different shard count against the same table is a loud error
-    with pytest.raises(ValueError, match="shard count"):
-        manifest.encode_resumable_iceberg(unit_df, table, shards=2)
 
 
 def test_encode_files_resumable_iceberg_crash_resume(spark, unit_df,
@@ -298,15 +277,8 @@ def test_expire_snapshots_and_orphan_cleanup_preserve_resume(
     assert not orphan_dir.exists()
     assert iceberg.read_table(spark, table).count() == n
     assert all(Path(f).exists() for f in live)
-
-    # the shard-variant lineage survives expiry the same way
-    table2 = str(tmp_path / "tbl2")
-    manifest.encode_resumable_iceberg(unit_df, table2, codec="bitpack",
-                                      shards=4, batch_shards=2)
-    iceberg.expire_snapshots(table2, keep_last=1)
-    assert manifest.completed_shards_iceberg(table2) == {0, 1, 2, 3}
     with pytest.raises(ValueError, match="keep_last"):
-        iceberg.expire_snapshots(table2, keep_last=0)
+        iceberg.expire_snapshots(table, keep_last=0)
 
 
 def test_rowgroup_units_many_small_files_no_driver_io(spark, unit_df,
@@ -708,29 +680,13 @@ def test_encode_files_large_list_parquet(spark, tmp_path):
 
 
 def test_resumable_iceberg_duplication_guards(spark, unit_df, tmp_path):
-    """The two silent-duplication paths are refused loudly: resuming a
-    shard-encoded table under a DIFFERENT modulus (hash%new and hash%old
-    partition rows differently), and resuming into a non-empty table that
-    carries no resumable lineage at all (published by export_encoded —
-    every row would be re-appended)."""
+    """The silent-duplication path is refused loudly: resuming into a
+    non-empty table that carries no resumable lineage at all (published
+    by export_encoded — every row would be re-appended)."""
     from simdcomp_spark import iceberg
-    t1 = str(tmp_path / "shards4")
-    manifest.encode_resumable_iceberg(unit_df, t1, codec="bitpack",
-                                      shards=4)
-    with pytest.raises(ValueError, match="shard count"):
-        manifest.encode_resumable_iceberg(unit_df, t1, codec="bitpack",
-                                          shards=8)
-    # lineage survives expiry, and so does the modulus guard
-    iceberg.expire_snapshots(t1, keep_last=1)
-    with pytest.raises(ValueError, match="shard count"):
-        manifest.encode_resumable_iceberg(unit_df, t1, codec="bitpack",
-                                          shards=8)
-
     t2 = str(tmp_path / "nolineage")
     iceberg.export_encoded(
         engine.encode(unit_df, codec="bitpack", split_threshold=None), t2)
-    with pytest.raises(ValueError, match="no resumable lineage"):
-        manifest.encode_resumable_iceberg(unit_df, t2, shards=4)
     src = str(tmp_path / "tok")
     unit_df.repartition(2).write.parquet(src)
     with pytest.raises(ValueError, match="no resumable lineage"):

@@ -182,6 +182,38 @@ def test_cached_encode_frame_is_written_from_its_cache(spark, tokens_dir,
         enc.unpersist()
 
 
+@pytest.mark.parametrize("derived", [False, True])
+def test_string_and_large_string_inputs_in_one_task(spark, tmp_path,
+                                                    derived):
+    """Input files whose id columns are string in some and large_string
+    in others, read by one task: the encoder emits ENCODED_SCHEMA's
+    string type for both, so the fused and the two-stage writes take
+    them and the table round-trips."""
+    par = spark.sparkContext.defaultParallelism
+    src = tmp_path / "in"
+    src.mkdir()
+    truth = {}
+    for f in range(2 * par):
+        # the larger large_string files go to the tasks first, one each;
+        # then one smaller string file joins each task
+        large = f < par
+        n = 60 if large else 30
+        typ = pa.large_string() if large else pa.string()
+        ids = [f"f{f}-{i}" for i in range(n)]
+        toks = [list(range(i + 1)) for i in range(n)]
+        truth.update(zip(ids, toks))
+        pq.write_table(pa.table({
+            "doc_id": pa.array(ids, typ),
+            "source": pa.array(["s"] * n, typ),
+            "tokens": pa.array(toks, pa.list_(pa.int32()))}),
+            src / f"part-{f}.parquet")
+    enc = engine.encode_files(spark, str(src), codec="bitpack")
+    table = str(tmp_path / "t")
+    iceberg.export_encoded(enc.select("*") if derived else enc, table)
+    dec = engine.decode(iceberg.read_table(spark, table))
+    assert {r["doc_id"]: r["tokens"] for r in dec.collect()} == truth
+
+
 @pytest.fixture()
 def idless_tokens(spark, tmp_path):
     """An Iceberg tokens table whose one data file lost its field ids."""

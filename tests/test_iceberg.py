@@ -1282,9 +1282,9 @@ def test_tags_pin_snapshots_through_commits_and_expiry(spark, unit_df,
 def test_expire_folds_lineage_in_the_stored_format(tmp_path):
     """Resume lineage keeps its on-disk format across expiry, so tables
     written before stay resumable: expired ids fold into `<key>-expired`
-    JSON lists (shard ids as strings, sorted as strings, merged with the
-    ids folded earlier), scalars into the property of the same key, and
-    the resume readers union the folded ids with the live summaries."""
+    JSON lists (sorted, merged with the ids folded earlier), scalars into
+    the property of the same key, and the resume readers union the folded
+    ids with the live summaries."""
     from simdcomp_spark import manifest, streaming
     table = tmp_path / "t"
     (table / "metadata").mkdir(parents=True)
@@ -1294,15 +1294,15 @@ def test_expire_folds_lineage_in_the_stored_format(tmp_path):
                 "summary": {"operation": "append", **summary}}
     meta = {
         "format-version": 2, "current-snapshot-id": 4, "refs": {},
-        "properties": {"simdcomp-shards-expired": '["7"]'},
+        "properties": {"simdcomp-input-files-expired": '["c.parquet"]'},
         "snapshots": [
-            snap(1, **{"simdcomp-shards": "10,2",
-                       "simdcomp-total-shards": "12"}),
-            snap(2, **{"simdcomp-input-files":
+            snap(1, **{"simdcomp-input-files":
                        json.dumps(["b.parquet", "a.parquet"])}),
+            snap(2, **{"simdcomp-stream-batches": "[2]",
+                       "simdcomp-stream-query": "q1"}),
             snap(3, **{"simdcomp-stream-batches": "[1]",
                        "simdcomp-stream-query": "q1"}),
-            snap(4, **{"simdcomp-shards": "3",
+            snap(4, **{"simdcomp-input-files": json.dumps(["d.parquet"]),
                        "simdcomp-stream-batches": "[0]",
                        "simdcomp-stream-query": "q1"})],
         "snapshot-log": []}
@@ -1314,15 +1314,14 @@ def test_expire_folds_lineage_in_the_stored_format(tmp_path):
     props = json.loads(
         (table / "metadata" / "v2.metadata.json").read_text())["properties"]
     assert props == {
-        "simdcomp-shards-expired": '["10", "2", "7"]',
-        "simdcomp-input-files-expired": '["a.parquet", "b.parquet"]',
-        "simdcomp-stream-batches-expired": "[1]",
-        "simdcomp-total-shards": "12",
+        "simdcomp-input-files-expired":
+            '["a.parquet", "b.parquet", "c.parquet"]',
+        "simdcomp-stream-batches-expired": "[1, 2]",
         "simdcomp-stream-query": "q1"}
-    assert manifest.completed_shards_iceberg(str(table)) == {2, 3, 7, 10}
     assert manifest.completed_input_files_iceberg(str(table)) == \
-        {"a.parquet", "b.parquet"}
-    assert streaming.committed_stream_batches(str(table)) == ({0, 1}, "q1")
+        {"a.parquet", "b.parquet", "c.parquet", "d.parquet"}
+    assert streaming.committed_stream_batches(str(table)) == \
+        ({0, 1, 2}, "q1")
 
 
 def test_tag_gapped_history_guards(spark, unit_df, tmp_path):
@@ -1727,15 +1726,16 @@ def test_interleaved_hint_writes_both_commit(tmp_path, monkeypatch):
 
 @pytest.fixture(scope="module")
 def lineage_table(spark, enc30, tmp_path_factory):
-    """A table with folded resume lineage in its properties (shard 0's
-    snapshot expired) and three data manifests in its current snapshot."""
+    """A table with folded resume lineage in its properties (stream batch
+    0's snapshot expired) and three data manifests in its current
+    snapshot."""
     table = str(tmp_path_factory.mktemp("lineage") / "t")
     iceberg.export_encoded(enc30, table, extra_summary={
-        "simdcomp-shards": "0", "simdcomp-total-shards": "4"})
+        "simdcomp-stream-batches": "[0]", "simdcomp-stream-query": "q"})
     iceberg.append(enc30.limit(3), table,
-                   extra_summary={"simdcomp-shards": "1"})
+                   extra_summary={"simdcomp-stream-batches": "[1]"})
     iceberg.append(enc30.limit(2), table,
-                   extra_summary={"simdcomp-shards": "2"})
+                   extra_summary={"simdcomp-stream-batches": "[2]"})
     iceberg.expire_snapshots(table, keep_last=2)
     return table
 
