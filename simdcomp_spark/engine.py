@@ -38,6 +38,7 @@ Schema of the encoded table:
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import tempfile
@@ -134,12 +135,9 @@ def get_spark(app: str = "simdcomp_spark", cores: int | None = None,
         # per task — on a saturated executor that is pure oversubscription,
         # and it silently inflates low-parallelism throughput (a "2-core"
         # run decoding parquet with 32 arrow threads), corrupting scaling
-        # measurements.  Env-parameterized for deployments that dedicate
-        # >1 cpu per task (spark.task.cpus alignment).
-        .config("spark.executorEnv.OMP_NUM_THREADS",
-                os.environ.get("SIMDCOMP_WORKER_THREADS", "1"))
-        .config("spark.executorEnv.ARROW_IO_THREADS",
-                os.environ.get("SIMDCOMP_ARROW_IO_THREADS", "2"))
+        # measurements.
+        .config("spark.executorEnv.OMP_NUM_THREADS", "1")
+        .config("spark.executorEnv.ARROW_IO_THREADS", "2")
         # a reused worker keeps its imports and the stat-guarded zip-import
         # cache that importing simdcomp_spark installs in it (see
         # simdcomp_spark._install_zip_import_cache): PySpark's per-task
@@ -409,7 +407,13 @@ def _encode_task(batches, codec: str, threshold: int):
     chosen = None if codec == "auto" else codec
     total_ns = 0
     for batch in batches:
-        flat_i32, lens = _list_to_flat(batch.column(1))
+        tokens = batch.column(1)
+        if tokens.null_count:
+            i = tokens.is_null().index(True).as_py()
+            raise ValueError(
+                f"document {batch.column(0)[i].as_py()!r} has null tokens "
+                "(an encoded row cannot tell null from []): drop or fill it")
+        flat_i32, lens = _list_to_flat(tokens)
         doc_ids, sources, seg_ids, flat, lens = _split_flat(
             batch.column(0), batch.column(2), flat_i32.view(np.uint32),
             lens, threshold)
@@ -442,8 +446,8 @@ def _split_flat(doc_ids, sources, flat, lens, threshold):
     """Cut every row longer than ``threshold`` tokens into segments of
     ``threshold`` tokens and a shorter tail — the one place a seg_id is
     made.  Returns (doc_ids, sources, seg_ids, flat, lens) per segment; a
-    row of 0 tokens (or null tokens) is one empty segment.  flat is
-    unchanged (segments are contiguous slices)."""
+    row of 0 tokens is one empty segment.  flat is unchanged (segments
+    are contiguous slices)."""
     lens = np.asarray(lens, dtype=np.int64)
     nseg = np.maximum((lens + threshold - 1) // threshold, 1)
     if int(nseg.sum()) == lens.size:
@@ -1120,19 +1124,13 @@ def intersect_encoded(df_pairs: DataFrame, key_cols: list[str]
 
 
 def _strong_content_hash(cand: DataFrame) -> DataFrame:
-    """Decode candidate rows and stamp a CRYPTOGRAPHIC per-row content hash
-    (sha256 over the raw little-endian int32 token bytes).
-
-    Verification arm of :func:`encoded_dedup`: runs only on members of
-    multi-doc fast-hash groups, so the per-row hashlib call (the one
-    non-vectorized step — OpenSSL sha256, ~1.5 GB/s/core) is bounded by
-    the duplicate-candidate count, not the table size.  Returns
-    (seq_hash, doc_id, strong_hash binary)."""
-    import hashlib
-
-    cols = ["seq_hash", "doc_id", "n_tok", "codec", "widths", "inits",
-            "payload"]
-    src = cand.select(*cols)
+    """(doc_id, seg_id, h) per segment row, h the sha256 (hex) of its
+    decoded little-endian int32 tokens: the confirmation arm of
+    :func:`_doc_signatures`, run on candidate documents only, so its one
+    non-vectorized step (hashlib, ~1.5 GB/s/core) scales with the
+    duplicate candidates, not the table."""
+    src = cand.select("doc_id", "seg_id", "n_tok", "codec", "widths",
+                      "inits", "payload")
 
     def fn(it):
         for batch in it:
@@ -1140,125 +1138,89 @@ def _strong_content_hash(cand: DataFrame) -> DataFrame:
                 *batch.columns[2:7]).decode()
             raw = memoryview(flat.astype("<u4", copy=False)).cast("B")
             ends = (np.cumsum(lens) * 4).tolist()
-            digs = [hashlib.sha256(raw[e - 4 * n:e]).digest()
+            digs = [hashlib.sha256(raw[e - 4 * n:e]).hexdigest()
                     for e, n in zip(ends, lens.tolist())]
             yield pa.RecordBatch.from_arrays(
-                [batch.column(0), batch.column(1),
-                 pa.array(digs, type=pa.binary())],
-                names=["seq_hash", "doc_id", "strong_hash"])
+                [batch.column(0), batch.column(1), pa.array(digs)],
+                names=["doc_id", "seg_id", "h"])
 
-    return src.mapInArrow(
-        fn, schema="seq_hash string, doc_id string, strong_hash binary")
+    return src.mapInArrow(fn, schema="doc_id string, seg_id int, h string")
 
 
-def encoded_dedup(df_encoded: DataFrame, verify: bool = True) -> DataFrame:
-    """Exact duplicate detection WITHOUT decoding the full table.
+def _doc_signature(rows: DataFrame) -> DataFrame:
+    """(doc_id, sig): a per-DOCUMENT identity from per-segment hashes
+    ``h`` — sha256 over the sorted ``seg_id:h`` list, so a document split
+    into segments (:func:`_split_flat`) compares as a whole and segment
+    count/order differences cannot collide."""
+    return rows.groupBy("doc_id").agg(
+        F.sha2(F.concat_ws(",", F.array_sort(F.collect_list(
+            F.concat_ws(":", F.col("seg_id").cast("string"),
+                        F.col("h"))))), 256).alias("sig"))
 
-    Primary path: group on the ``content_hash`` column the encoder stamps
-    on every row — a 128-bit hash of the RAW token stream computed in-UDF
-    at encode time (kernels.content_hash_flat), so it is CODEC-INVARIANT:
-    two identical docs hash equal even when ``codec='auto'`` picked
-    different codecs (or different block layouts) for their partitions.
-    At 100 TB this shuffles 16 bytes + doc_id per row — far below even the
-    compressed token bytes.
 
-    ``verify=True`` (default) guards against ADVERSARIAL collisions: the
-    stamped hash is a fast polynomial hash — 128-bit and statistically
-    sound, but linearly malleable, so on untrusted web data an attacker
-    could forge a document that hash-collides with a target.  Equality
-    inside every multi-doc hash group is therefore CONFIRMED on the
-    decoded tokens (sha256 over the raw little-endian token bytes).  Only
-    CANDIDATE rows (members of hash groups with ≥2 docs) are decoded;
-    singleton groups — the overwhelming majority at web scale — never
-    leave the 16-bytes-per-row fast path.  ``verify=False`` skips the
-    confirm pass (one narrow scan total) and is safe only when the input
-    is not adversarial.
+def _doc_signatures(enc: DataFrame, op: str) -> DataFrame:
+    """The one duplicate finder: (doc_id, sig) per document of an encoded
+    frame; equal sigs mean equal token sequences.
 
-    NULL content_hash (legacy rows unioned in via allowMissingColumns)
-    would collapse into one fake duplicate group; the guard is folded into
-    the grouping expression itself (``raise_error`` inside the single
-    aggregation scan), so validation adds no extra job.
+    The fast sig folds the encoder's per-segment ``content_hash`` (16
+    bytes per segment shuffled, no decode).  That hash is 128-bit but
+    linearly malleable, so a document could be forged to collide with a
+    target: every document whose fast sig another shares is decoded and
+    CONFIRMED, its sig becoming ``fast:strong`` (strong folded from a
+    sha256 per decoded segment).  Raises when ``content_hash`` is
+    missing, and in-plan when it is null (nulls would collapse into one
+    fake duplicate group)."""
+    if "content_hash" not in enc.columns:
+        raise ValueError(f"{op}: the frame has no content_hash column — "
+                         "every encoder stamps it; re-encode the table")
+    guarded = F.when(
+        F.col("content_hash").isNull(),
+        F.raise_error(F.lit(f"{op}: content_hash contains NULLs (rows "
+                            "unioned in without it?) — re-encode them"))
+    ).otherwise(F.col("content_hash"))
+    fast = _doc_signature(enc.select("doc_id", "seg_id",
+                                     F.hex(guarded).alias("h")))
+    shared = fast.groupBy("sig").count().where(F.col("count") >= 2)
+    cand = fast.join(shared, "sig", "leftsemi").select("doc_id")
+    strong = _doc_signature(_strong_content_hash(
+        enc.join(cand, "doc_id", "leftsemi")))
+    return (fast.join(strong.withColumnRenamed("sig", "strong"), "doc_id",
+                      "left")
+            .select("doc_id", F.concat_ws(":", "sig", "strong").alias("sig")))
 
-    Fallback (tables encoded before content_hash existed): hash the
-    compressed representation, which is a per-row bijection only for a
-    FIXED codec — enforced by raising when the table mixes codecs (the old
-    silent false-negative mode).  Returns one row per distinct token
-    sequence: (seq_hash string, n_docs, first_doc); the seq_hash value is
-    a unique group label (verified groups carry a ``:<sha256>`` suffix),
-    not a stable cross-run identifier."""
-    if "content_hash" in df_encoded.columns:
-        guarded = F.when(
-            F.col("content_hash").isNull(),
-            F.raise_error(F.lit(
-                "encoded_dedup: content_hash contains NULLs (legacy rows "
-                "unioned into a hash-stamped table?) — grouping would "
-                "collapse them into one fake duplicate group. Re-encode "
-                "the legacy rows to stamp content_hash."))
-        ).otherwise(F.col("content_hash"))
-        hashed = df_encoded.withColumn("seq_hash", F.hex(guarded))
-        fast = (hashed.select("seq_hash", "doc_id")
-                .groupBy("seq_hash")
-                .agg(F.count("*").alias("n_docs"),
-                     F.min("doc_id").alias("first_doc")))
-        if not verify:
-            return fast
-        singles = fast.where(F.col("n_docs") == 1)
-        dup_hashes = fast.where(F.col("n_docs") >= 2).select("seq_hash")
-        cand = hashed.join(dup_hashes, "seq_hash", "leftsemi")
-        verified = (_strong_content_hash(cand)
-                    .groupBy("seq_hash", "strong_hash")
-                    .agg(F.count("*").alias("n_docs"),
-                         F.min("doc_id").alias("first_doc"))
-                    .select(F.concat_ws(":", "seq_hash",
-                                        F.hex("strong_hash")
-                                        ).alias("seq_hash"),
-                            "n_docs", "first_doc"))
-        return singles.unionByName(verified)
-    codecs_present = [r["codec"] for r in
-                      df_encoded.select("codec").distinct().collect()]
-    if len(codecs_present) > 1:
-        raise ValueError(
-            "encoded_dedup on a legacy table (no content_hash column) "
-            f"requires a single fixed codec, found {sorted(codecs_present)}: "
-            "identical docs encoded by different codecs would hash apart "
-            "(silent false negatives). Re-encode to get content_hash.")
-    h = F.sha2(F.concat(F.col("codec").cast("binary"),
-                        F.col("n_tok").cast("string").cast("binary"),
-                        F.col("widths"), F.col("inits"), F.col("payload")), 256)
-    return (df_encoded.select(h.alias("seq_hash"), "doc_id")
-            .groupBy("seq_hash")
+
+def encoded_dedup(df_encoded: DataFrame) -> DataFrame:
+    """Exact duplicate DOCUMENTS of an encoded frame, without decoding the
+    table: one row per distinct token sequence, (seq_hash, n_docs,
+    first_doc).
+
+    Documents are compared whole: a document's segments count once, and
+    sharing some segments does not make two documents duplicates.  The
+    groups are :func:`_doc_signatures`' — keyed on the ``content_hash``
+    every encoder stamps from the RAW tokens, so identical documents
+    collapse across codecs, and always confirmed on a sha256 of the
+    decoded candidates (a multi-document group's seq_hash carries a
+    ``:<sha256>`` suffix).  A frame without ``content_hash``, or with
+    nulls in it, raises.  seq_hash is a group label, not a stable
+    cross-run identifier."""
+    return (_doc_signatures(df_encoded, "encoded_dedup")
+            .groupBy(F.col("sig").alias("seq_hash"))
             .agg(F.count("*").alias("n_docs"),
                  F.min("doc_id").alias("first_doc")))
 
 
-def _doc_signature(rows: DataFrame, hash_col: str) -> DataFrame:
-    """(doc_id, sig): a per-DOCUMENT identity from per-segment content
-    hashes — sha256 over the sorted ``seg_id:hash`` list, so a document
-    split into segments (:func:`_split_flat`) compares as a whole and
-    segment count/order differences cannot collide."""
-    return rows.groupBy("doc_id").agg(
-        F.sha2(F.concat_ws(",", F.array_sort(F.collect_list(
-            F.concat_ws(":", F.col("seg_id").cast("string"),
-                        F.col(hash_col))))), 256).alias("sig"))
-
-
-def dedup_delete_iceberg(spark: SparkSession, table_dir: str,
-                         verify: bool = True) -> dict | None:
+def dedup_delete_iceberg(spark: SparkSession, table_dir: str) -> dict | None:
     """Drop exact-duplicate DOCUMENTS from an encoded Iceberg table IN
     PLACE via v2 position-delete files — the 100 TB shape of 'dedup the
     corpus': no data file is rewritten, the commit is coordinates only
     (iceberg.write_position_deletes), and the keeper per duplicate group
     is the minimum doc_id (deterministic).
 
-    Duplicate detection is :func:`encoded_dedup`'s compressed-domain
-    machinery lifted to document granularity: group on the per-segment
-    ``content_hash`` the encoder stamps (16 bytes/row shuffled, no
-    decode), fold segments into a per-doc signature, and — with
-    ``verify=True`` (default) — CONFIRM candidate groups on a sha256 of
-    the decoded tokens before anything is deleted, so an adversarial
-    collision against the fast polynomial hash cannot delete an innocent
-    document.  Candidates only are decoded; at web scale that is the
-    duplicate fraction, not the table.
+    The groups are :func:`encoded_dedup`'s (:func:`_doc_signatures`):
+    whole documents, always confirmed on a sha256 of the decoded
+    candidates before anything is deleted, so a collision forged against
+    the stamped ``content_hash`` cannot delete an innocent document.  A
+    table without ``content_hash``, or with nulls in it, raises.
 
     Returns the new table metadata, or None when the table has no
     duplicate documents (no commit).  Reference analog: this is the
@@ -1269,63 +1231,21 @@ def dedup_delete_iceberg(spark: SparkSession, table_dir: str,
     base = iceberg._load_base(table_dir)
     enc = iceberg.read_table_with_pos(spark, table_dir,
                                       base[1].get("current-snapshot-id"))
-    if "content_hash" not in enc.columns:
-        raise ValueError(
-            f"{table_dir} has no content_hash column (pre-hash legacy "
-            "encode?) — dedup_delete_iceberg needs the stamped hash; "
-            "re-encode the table")
-    guarded = F.when(
-        F.col("content_hash").isNull(),
-        F.raise_error(F.lit(
-            "dedup_delete_iceberg: content_hash contains NULLs — "
-            "re-encode the legacy rows before deleting on hash equality"))
-    ).otherwise(F.col("content_hash"))
-    rows = enc.select("doc_id", "seg_id", F.hex(guarded).alias("h"),
-                      "_file", "_pos")
-    # sig is tiny (one row per doc) but its lineage is the full table
-    # scan + delete anti-joins; it feeds groups AND the candidate join —
-    # persist so that scan runs once, not per consumer
-    sig = _doc_signature(rows, "h").persist()
-    groups = sig.groupBy("sig").agg(F.min("doc_id").alias("keep"),
-                                    F.count("*").alias("n_docs"))
-    dup_groups = groups.where(F.col("n_docs") >= 2)
-    if verify:
-        # decode ONLY candidate docs and re-derive the signature from a
-        # cryptographic per-segment hash; losers come from the strong
-        # signature, so fast-hash forgeries cannot merge distinct docs
-        cand = (sig.join(dup_groups.select("sig"), "sig", "leftsemi")
-                .select("doc_id"))
-        cand_rows = (enc.join(cand, "doc_id", "leftsemi")
-                     .withColumn("seq_hash",
-                                 F.col("seg_id").cast("string")))
-        strong = _strong_content_hash(cand_rows)  # seq_hash carries seg_id
-        ssig = _doc_signature(
-            strong.select("doc_id",
-                          F.col("seq_hash").cast("int").alias("seg_id"),
-                          F.hex("strong_hash").alias("h")), "h")
-        sgroups = ssig.groupBy("sig").agg(F.min("doc_id").alias("keep"),
-                                          F.count("*").alias("n_docs"))
-        losers = (ssig.join(sgroups.where(F.col("n_docs") >= 2), "sig")
-                  .where(F.col("doc_id") != F.col("keep"))
-                  .select("doc_id"))
-    else:
-        losers = (sig.join(dup_groups, "sig")
-                  .where(F.col("doc_id") != F.col("keep"))
-                  .select("doc_id"))
-    # losers' lineage includes the candidate decode + sha256 pipeline;
-    # the coordinate join below must not re-run it
-    losers = losers.persist()
+    # one row per doc, but its lineage is the table scan and the candidate
+    # decode: persist so they run once, not again for the coordinate join
+    sig = _doc_signatures(enc, "dedup_delete_iceberg").persist()
+    keep = sig.groupBy("sig").agg(F.min("doc_id").alias("keep"))
+    losers = (sig.join(keep, "sig").where(F.col("doc_id") != F.col("keep"))
+              .select("doc_id"))
     pos = (enc.join(losers, "doc_id", "leftsemi")
            .select(F.col("_file").alias("file_path"),
                    F.col("_pos").alias("pos")))
     try:
         return iceberg.write_position_deletes(
             spark, table_dir, pos,
-            extra_summary={"simdcomp-dedup-delete":
-                           "exact-doc" + ("-verified" if verify else "")},
+            extra_summary={"simdcomp-dedup-delete": "exact-doc-verified"},
             base=base)
     finally:
-        losers.unpersist()
         sig.unpersist()
 
 

@@ -594,15 +594,14 @@ def q_range_count(spark, sf_dir):
 
 
 def q_encoded_dedup(spark, sf_dir):
-    """Exact dedup in the COMPRESSED domain (no decode), CODEC-INVARIANT:
-    the table is split by doc-id hash and the halves encoded with two
-    different codecs (duplicate quantity sequences routinely land in both
-    halves), so duplicates must collapse ACROSS codecs — the encoder's
-    raw-content hash (engine.encoded_dedup primary path) is what makes
-    that exact; the old compressed-representation hash silently missed
-    every cross-codec pair.  Histogram of duplicate-group sizes of
-    per-order sorted quantity sequences; the oracle groups the raw arrays,
-    so equality proves exactness."""
+    """Exact dedup in the COMPRESSED domain (only duplicate candidates
+    are decoded, to confirm them), CODEC-INVARIANT: the table is split by
+    doc-id hash and the halves encoded with two different codecs
+    (duplicate quantity sequences routinely land in both halves), so
+    duplicates must collapse ACROSS codecs — the encoder's raw-content
+    hash (engine.encoded_dedup) is what makes that exact.  Histogram of
+    duplicate-group sizes of per-order sorted quantity sequences; the
+    oracle groups the raw arrays, so equality proves exactness."""
     tok = tokens_table(spark, sf_dir, "lineitem", "l_orderkey",
                        "l_quantity", "l_quantity", "lineitem")
     even = F.xxhash64("doc_id") % 2 == 0
@@ -1605,7 +1604,7 @@ def q_iceberg_dedup_delete(spark, sf_dir):
                         split_threshold=8)
     iceberg.export_encoded(enc, table)
     before = {d["file_path"] for d in iceberg.data_files(table)}
-    meta = engine.dedup_delete_iceberg(spark, table, verify=True)
+    meta = engine.dedup_delete_iceberg(spark, table)
     if meta is None:
         raise AssertionError("planted duplicate docs not found")
     if {d["file_path"]

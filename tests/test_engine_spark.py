@@ -39,37 +39,43 @@ def test_skew_split_segments(spark, unit_df):
 @pytest.mark.parametrize("via", ["encode", "encode_files"])
 def test_worker_split_edge_cases(spark, tmp_path, via):
     """The encoder's worker split (_split_flat), through both encoders:
-    a document of 0 tokens, of exactly ``threshold``, of ``threshold + 1``
-    and of null tokens is 1, 1, 2 and 1 segments; ``split_threshold=None``
-    keeps every document whole as seg_id 0."""
+    a document of 0 tokens, of exactly ``threshold`` and of
+    ``threshold + 1`` is 1, 1 and 2 segments; ``split_threshold=None``
+    keeps every document whole as seg_id 0.  A document of null tokens
+    raises, naming it (an encoded row cannot tell null from [])."""
+    from pyspark.errors.exceptions.captured import PythonException
     t = 256
-    df = spark.createDataFrame(
-        [("empty", "s", []), ("exact", "s", list(range(t))),
-         ("over", "s", list(range(t + 1))), ("null", "s", None)],
-        "doc_id string, source string, tokens array<int>")
-    if via == "encode":
-        enc = engine.encode(df, codec="bitpack", split_threshold=t)
-    else:
-        src = str(tmp_path / "toks")
+    schema = "doc_id string, source string, tokens array<int>"
+    rows = [("empty", "s", []), ("exact", "s", list(range(t))),
+            ("over", "s", list(range(t + 1)))]
+
+    def encode(rows, name, **kw):
+        df = spark.createDataFrame(rows, schema)
+        if via == "encode":
+            return engine.encode(df, codec="bitpack", **kw)
+        src = str(tmp_path / name)
         df.coalesce(1).write.parquet(src)
-        enc = engine.encode_files(spark, src, codec="bitpack",
-                                  split_threshold=t)
+        return engine.encode_files(spark, src, codec="bitpack", **kw)
+
+    enc = encode(rows, "toks", split_threshold=t)
     segs: dict = {}
     for r in enc.select("doc_id", "seg_id", "n_tok").collect():
         segs.setdefault(r["doc_id"], []).append((r["seg_id"], r["n_tok"]))
     assert {d: sorted(v) for d, v in segs.items()} == {
-        "empty": [(0, 0)], "exact": [(0, t)], "over": [(0, t), (1, 1)],
-        "null": [(0, 0)]}
+        "empty": [(0, 0)], "exact": [(0, t)], "over": [(0, t), (1, 1)]}
     dec = {r["doc_id"]: r["tokens"]
            for r in engine.decode(enc).collect()}
     assert dec["over"] == list(range(t + 1)) and dec["exact"] == \
         list(range(t))
     if via == "encode":
-        whole = engine.encode(df, codec="bitpack", split_threshold=None)
+        whole = engine.encode(spark.createDataFrame(rows, schema),
+                              codec="bitpack", split_threshold=None)
         assert sorted((r["doc_id"], r["seg_id"], r["n_tok"])
                       for r in whole.collect()) == [
-            ("empty", 0, 0), ("exact", 0, t), ("null", 0, 0),
-            ("over", 0, t + 1)]
+            ("empty", 0, 0), ("exact", 0, t), ("over", 0, t + 1)]
+    with pytest.raises(PythonException, match="'null' has null tokens"):
+        encode(rows + [("null", "s", None)], "nulls",
+               split_threshold=t).collect()
 
 
 def test_compressed_size_bound_on_spark(spark, unit_df):
@@ -568,24 +574,6 @@ def test_encoded_dedup_codec_invariant(spark):
     assert len(groups2) == 10 and all(g["n_docs"] == 4 for g in groups2)
 
 
-def test_encoded_dedup_legacy_table_requires_fixed_codec(spark, unit_df):
-    """A pre-content_hash table (column dropped) with mixed codecs must be
-    REJECTED — the compressed-representation fallback hash is only a
-    bijection per fixed codec."""
-    even = F.xxhash64("doc_id") % 2 == 0
-    enc = (engine.encode(unit_df.where(even), codec="d1",
-                         split_threshold=None)
-           .unionByName(engine.encode(unit_df.where(~even), codec="bitpack",
-                                      split_threshold=None)))
-    legacy = enc.drop("content_hash")
-    with pytest.raises(ValueError, match="single fixed codec"):
-        engine.encoded_dedup(legacy)
-    # single-codec legacy tables still work
-    single = engine.encode(unit_df, codec="bitpack",
-                           split_threshold=None).drop("content_hash")
-    assert engine.encoded_dedup(single).count() > 0
-
-
 def test_range_count_rejects_unsorted_family(spark, unit_df):
     """range_count, search_sorted and minmax_sorted raise the same typed
     error, naming the operator and the codec, on every non-sorted family."""
@@ -607,7 +595,8 @@ def test_encoded_dedup_rejects_null_content_hash(spark, unit_df):
     content_hash; grouping them would collapse into one fake duplicate
     group — must raise.  The guard is folded into the single aggregation
     scan (raise_error in-plan, no separate probe job), so it surfaces at
-    execution time as a Spark exception."""
+    execution time as a Spark exception.  A frame without the column
+    raises at once."""
     import pytest
     enc = engine.encode(unit_df.limit(20), codec="bitpack",
                         split_threshold=None)
@@ -615,14 +604,17 @@ def test_encoded_dedup_rejects_null_content_hash(spark, unit_df):
     mixed = enc.unionByName(legacy, allowMissingColumns=True)
     with pytest.raises(Exception, match="content_hash contains NULL"):
         engine.encoded_dedup(mixed).collect()
+    with pytest.raises(ValueError, match="no content_hash column"):
+        engine.encoded_dedup(legacy)
 
 
 def test_encoded_dedup_verify_splits_forged_collision(spark):
     """The stamped content_hash is a fast polynomial hash — adversarially
     malleable.  Simulate a forged collision by forcing DIFFERENT token
-    rows to share a content_hash: verify=True (default) must split them
-    via the sha256 confirm pass; verify=False shows the fast path alone
-    would have silently merged them."""
+    rows to share a content_hash: the sha256 confirmation must split
+    them.  Every group's seq_hash carries the confirmation's ``:``
+    suffix behind ONE fast signature, so the fast path alone would have
+    merged all three."""
     df = spark.createDataFrame(
         [("a", "t", 4, [1, 2, 3, 4]), ("b", "t", 4, [9, 9, 9, 9]),
          ("c", "t", 4, [1, 2, 3, 4])],
@@ -633,8 +625,31 @@ def test_encoded_dedup_verify_splits_forged_collision(spark):
     assert sorted(g["n_docs"] for g in groups) == [1, 2]
     dup = next(g for g in groups if g["n_docs"] == 2)
     assert dup["first_doc"] == "a" and ":" in dup["seq_hash"]
-    unverified = engine.encoded_dedup(forged, verify=False).collect()
-    assert [g["n_docs"] for g in unverified] == [3]
+    assert len({g["seq_hash"].split(":")[0] for g in groups}) == 1
+
+
+def test_dedup_compares_whole_split_documents(spark, tmp_path):
+    """Documents split into several segments are compared as wholes: A
+    and A2 (identical, 70,000 tokens, so 2 segments) are one group of 2;
+    B shares A's first segment (65,536 tokens) but not its tail, and is a
+    group of its own — not a duplicate of A, and its segments not counted
+    as documents."""
+    from simdcomp_spark import iceberg
+    a = [int(x) for x in np.arange(70000) % 50000]
+    b = a[:1 << 16] + [7] * (70000 - (1 << 16))
+    df = spark.createDataFrame(
+        [("A", "t", a), ("A2", "t", a), ("B", "t", b)],
+        "doc_id string, source string, tokens array<int>")
+    enc = engine.encode(df, codec="bitpack")
+    assert enc.count() == 6
+    assert sorted((g["n_docs"], g["first_doc"])
+                  for g in engine.encoded_dedup(enc).collect()) == \
+        [(1, "B"), (2, "A")]
+    table = str(tmp_path / "t")
+    iceberg.export_encoded(enc, table)
+    assert engine.dedup_delete_iceberg(spark, table) is not None
+    assert {r["doc_id"] for r in iceberg.read_table(spark, table)
+            .select("doc_id").distinct().collect()} == {"A", "B"}
 
 
 def test_list_to_flat_handles_large_list(spark):

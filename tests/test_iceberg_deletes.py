@@ -245,24 +245,24 @@ def test_dedup_delete_iceberg(spark, tmp_path):
 
 
 def test_dedup_delete_verify_defeats_forged_collision(spark, tmp_path):
-    """Two DISTINCT docs forged to share a content_hash: verify=True must
-    delete nothing (the sha256 confirm separates them); verify=False
-    would have deleted one — the advisory's attack, tested end-to-end."""
+    """Four DISTINCT docs forged to share a content_hash: the sha256
+    confirmation separates them, so nothing is deleted — the advisory's
+    attack, tested end-to-end.  encoded_dedup over the table shows the
+    collision is real: all four docs share one fast signature, and each
+    group carries the confirmation's ``:`` suffix."""
     table = str(tmp_path / "t")
     tok = _tok_df(spark, n_docs=4)
     enc = engine.encode(tok, codec="bitpack", split_threshold=None) \
         .withColumn("content_hash",
                     F.lit(bytearray(16)).cast("binary"))  # forged equal
     iceberg.export_encoded(enc, table)
-    assert engine.dedup_delete_iceberg(spark, table, verify=True) is None
+    assert engine.dedup_delete_iceberg(spark, table) is None
     assert iceberg.read_table(spark, table) \
         .select("doc_id").distinct().count() == 4
-    # the unverified path WOULD have merged them (asserting the attack
-    # is real, not hypothetical)
-    assert engine.dedup_delete_iceberg(
-        spark, table, verify=False) is not None
-    assert iceberg.read_table(spark, table) \
-        .select("doc_id").distinct().count() == 1
+    groups = engine.encoded_dedup(iceberg.read_table(spark, table)).collect()
+    assert [g["n_docs"] for g in groups] == [1] * 4
+    assert all(":" in g["seq_hash"] for g in groups)
+    assert len({g["seq_hash"].split(":")[0] for g in groups}) == 1
 
 
 # ---------------------------------------------------------------------------
