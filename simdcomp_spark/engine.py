@@ -39,7 +39,7 @@ Schema of the encoded table:
 from __future__ import annotations
 
 import hashlib
-import json
+import heapq
 import os
 import tempfile
 import time
@@ -49,16 +49,32 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from . import blocks, codecs, kernels
 from .codecs.auto import choose_codec_flat
 
-ENCODED_SCHEMA = ("doc_id string, source string, seg_id int, n_tok int, "
-                  "codec string, widths binary, inits binary, payload binary, "
-                  "pid int, enc_ns long, content_hash binary")
-DECODED_SCHEMA = ("doc_id string, source string, seg_id int, "
-                  "tokens array<int>, n_tok int")
+_TYPES = {"string": T.StringType(), "int": T.IntegerType(),
+          "long": T.LongType(), "boolean": T.BooleanType(),
+          "binary": T.BinaryType(), "array<int>": T.ArrayType(T.IntegerType())}
+
+
+def _schema(ddl: str) -> T.StructType:
+    """A flat ``"name type, ..."`` schema as a StructType, built in Python:
+    a DDL string handed to ``mapInArrow`` is parsed by the JVM on every
+    plan build, a few py4j round trips each time."""
+    return T.StructType([T.StructField(n, _TYPES[t]) for n, t in
+                         (f.split() for f in ddl.split(", "))])
+
+
+ENCODED_SCHEMA = _schema(
+    "doc_id string, source string, seg_id int, n_tok int, codec string, "
+    "widths binary, inits binary, payload binary, pid int, enc_ns long, "
+    "content_hash binary")
+DECODED_SCHEMA = _schema(
+    "doc_id string, source string, seg_id int, tokens array<int>, n_tok int")
+_STITCHED_SCHEMA = _schema(
+    "doc_id string, source string, tokens array<int>, n_tok int")
 
 DEFAULT_SPLIT_THRESHOLD = 1 << 16  # tokens per segment
 # encode(split_threshold=None): a Spark array holds at most 2**31 - 1
@@ -68,8 +84,13 @@ _NO_SPLIT = np.iinfo(np.int32).max
 # the per-thread working set near the L3 share at full thread count
 # (measured +7-10% over 8192 at 8 and 32 cores; 1024 regresses)
 _ENCODE_BATCH_ROWS = 2048
-# work units per core planned by _rowgroup_units
+# encode_files' work units (_plan_units): an input of at most
+# _UNITS_PER_CORE files per core, none over _WHOLE_FILE_BYTES, runs whole
+# files in one task per core; a larger one runs _SLICE_BYTES slices of
+# its files in up to _UNITS_PER_CORE tasks per core
 _UNITS_PER_CORE = 4
+_WHOLE_FILE_BYTES = 256 << 20
+_SLICE_BYTES = 128 << 20
 _BLOCK_MODES = {"bitpack": "plain", "for": "for", "d1": "d1"}
 
 
@@ -461,102 +482,73 @@ def _split_flat(doc_ids, sources, flat, lens, threshold):
             flat, new_lens)
 
 
-def _input_files(path: str, snapshot_id: int | None = None) -> list[str]:
-    """Resolve an input path to its parquet data files.
+def _hidden(name: str) -> bool:
+    """Spark's rule for a path component its file index skips: a name
+    starting with ``.``, or with ``_`` and holding no ``=`` (``_temporary``
+    attempt files, ``_SUCCESS``; a ``_key=value`` partition dir stays)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _input_files(path: str, snapshot_id: int | None = None) -> dict[str, int]:
+    """Resolve an input path to its parquet data files → their sizes in
+    bytes, in listing order.
 
     Iceberg table dirs (``metadata/version-hint.text`` present) resolve
     through the snapshot's metadata → manifest-list → manifest tree
     (:func:`iceberg.data_files`, which refuses a snapshot that carries
-    delete files): only the snapshot's LIVE files are returned — a plain
-    directory walk over a multi-snapshot table would also pick up files
-    that are dead in the current snapshot and double-read history.
-    ``snapshot_id`` time-travels.  Plain directories recurse (e.g.
-    Hive-style ``key=value`` subdirectories)."""
-    from pathlib import Path
-
+    delete files): only the snapshot's LIVE files are returned, with the
+    manifests' ``file_size_in_bytes`` — a plain directory walk over a
+    multi-snapshot table would also pick up files that are dead in the
+    current snapshot and double-read history.  ``snapshot_id``
+    time-travels.  Plain directories recurse (e.g. Hive-style
+    ``key=value`` subdirectories), stat each file and skip what
+    ``spark.read.parquet`` skips (:func:`_hidden`): a failed job's
+    ``_temporary`` leftovers and hidden files."""
     from . import iceberg
     if iceberg.is_iceberg_table(path):
-        return [d["file_path"] for d in iceberg.data_files(path, snapshot_id)]
+        return {d["file_path"]: int(d["file_size_in_bytes"])
+                for d in iceberg.data_files(path, snapshot_id)}
     if snapshot_id is not None:
         raise ValueError(
             f"snapshot_id={snapshot_id} given but {path!r} is not an "
             "Iceberg table (no metadata/version-hint.text)")
-    return sorted(str(p) for p in Path(path).rglob("*.parquet"))
+    found = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        found += [os.path.join(root, n) for n in names
+                  if n.endswith(".parquet") and not _hidden(n)]
+    return {f: os.path.getsize(f) for f in sorted(found)}
 
 
-def _file_units(spark: SparkSession, groups: list[list[str]]) -> DataFrame:
-    """(path) DataFrame with one partition per group of files, planned on
-    the JVM side: ``spark.range`` gives each of the ``len(groups)``
-    partitions one id, which indexes the groups held as JSON literals in
-    the plan.  No shuffle, no Python worker, and the Spark driver only
-    handles file NAMES — it never opens a data file."""
-    k = len(groups)
-    lists = F.array(*[F.lit(json.dumps(g)) for g in groups])
-    return spark.range(k, numPartitions=k).select(F.explode(F.from_json(
-        F.element_at(lists, F.col("id").cast("int") + 1),
-        "array<string>")).alias("path"))
-
-
-def _rowgroup_units(spark: SparkSession, path: str,
-                    snapshot_id: int | None = None,
-                    files: list[str] | None = None) -> DataFrame:
-    """(path, rg) work units for the fused scan of :func:`encode_files`.
-    Input may be a plain parquet directory or an Iceberg table dir
-    (:func:`_input_files`, which refuses tables that carry deletes).
+def _plan_units(files: list[str], sizes: list[int], par: int
+                ) -> list[list[tuple[str, int, int]]]:
+    """The work units of :func:`encode_files`, one list per task, planned
+    in the Spark driver from the input listing alone: it never opens a
+    data file.  A unit ``(path, j, m)`` reads row groups j, j+m, j+2m, …
+    of ``path``; a whole file is ``(path, 0, 1)``, and a slice whose j is
+    past the file's last row group reads nothing.
 
     Small inputs (at most ``_UNITS_PER_CORE`` files per core, none over
-    256 MiB) become WHOLE-FILE units (rg = -1) spread over
-    ``k = min(files, defaultParallelism)`` tasks, one per core: files go
-    largest-first to the least-loaded task, by the sizes stat'ed here,
-    and the frame is built by :func:`_file_units` — so an ingest pass is
-    one stage of at most ``defaultParallelism`` tasks.
-
-    Larger inputs get one unit per parquet row group, so task size is
-    bounded by the writer's row-group size regardless of file-count
-    skew.  The footer reads AND the (path, row_group) expansion are
-    DISTRIBUTED: the driver only lists file names (one directory-metadata
-    pass, the same listing Spark's own file index performs — or, for
-    Iceberg, one metadata-tree read); it never opens a data file and
-    never materializes the unit list.  The counts stay in the plan,
-    ``explode(sequence(...))`` expands them executor-side, and partitions
-    are capped at ``_UNITS_PER_CORE`` × default parallelism (multiple
-    units per task, round-robin balanced).  ``files`` restricts the scan
-    to an explicit subset (the resumable ingest's batch unit)."""
-    if files is None:
-        files = _input_files(path, snapshot_id)
-    if not files:
-        return spark.createDataFrame([], "path string, rg int")
-    par = max(int(spark.sparkContext.defaultParallelism), 1)
-    k = min(len(files), par)
-    if len(files) <= par * _UNITS_PER_CORE:
-        try:
-            sizes = [os.path.getsize(f) for f in files]
-        except OSError:
-            sizes = None           # non-local paths: plan row groups
-        if sizes is not None and max(sizes) <= (256 << 20):
-            groups, loads = [[] for _ in range(k)], [0] * k
-            for size, f in sorted(zip(sizes, files),
-                                  key=lambda sf: -sf[0]):
-                i = loads.index(min(loads))
-                groups[i].append(f)
-                loads[i] += size
-            return _file_units(spark, groups).withColumn("rg", F.lit(-1))
-    fdf = _file_units(spark, [files[i::k] for i in range(k)])
-
-    def footer_counts(it):
-        import pyarrow.parquet as pq
-        for batch in it:
-            n_rg = [pq.ParquetFile(p).metadata.num_row_groups
-                    for p in batch.column(0).to_pylist()]
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0), pa.array(n_rg, type=pa.int32())],
-                names=["path", "n_rg"])
-
-    counts = fdf.mapInArrow(footer_counts, "path string, n_rg int")
-    units = (counts.where(F.col("n_rg") > 0)
-             .select("path", F.explode(F.sequence(
-                 F.lit(0), F.col("n_rg") - 1)).alias("rg")))
-    return units.repartition(par * _UNITS_PER_CORE)
+    ``_WHOLE_FILE_BYTES``) are whole files in ``min(files, par)`` tasks,
+    one per core.  Larger inputs cut each file into ``m = ceil(size /
+    _SLICE_BYTES)`` slices, in at most ``par × _UNITS_PER_CORE`` tasks,
+    so a task's size is bounded whatever the file-count skew.  Either
+    way units go largest first (a slice weighs size / m) to the
+    least-loaded task."""
+    small = (len(files) <= par * _UNITS_PER_CORE
+             and max(sizes, default=0) <= _WHOLE_FILE_BYTES)
+    units = []
+    for f, size in zip(files, sizes):
+        m = 1 if small else max(-(-size // _SLICE_BYTES), 1)
+        units += [(size / m, f, j, m) for j in range(m)]
+    k = min(len(units), par if small else par * _UNITS_PER_CORE)
+    tasks = [[] for _ in range(k)]
+    loads = [(0, i) for i in range(k)]      # a heap of (load, task)
+    for w, f, j, m in sorted(units, key=lambda u: -u[0]):
+        load, i = heapq.heappop(loads)
+        tasks[i].append((f, j, m))
+        heapq.heappush(loads, (load + w, i))
+    return tasks
 
 
 def encode_files(spark: SparkSession, path: str, codec: str = "auto",
@@ -583,11 +575,15 @@ def encode_files(spark: SparkSession, path: str, codec: str = "auto",
     consumes EVERY row and column of the tokens table, so Catalyst's scan
     pushdown has nothing to push, and the JVM per-element list conversion
     (the dominant fixed cost of the `mapInArrow`-over-scan plan) is pure
-    overhead.  Work units come from :func:`_rowgroup_units`: small inputs
-    run as one task per core over whole files, with no exchange in the
-    plan; larger ones as (file, row_group) units, so task size is bounded
-    by the writer's row-group size regardless of file-count skew.  Workers
-    read 2048-row batches (``_ENCODE_BATCH_ROWS``).
+    overhead.  The Spark driver plans the work units from the input
+    listing's file sizes (:func:`_plan_units`; it never opens a data
+    file): small inputs run as one task per core over whole files, larger
+    ones as strided row-group slices of about 128 MiB, so task size stays
+    bounded whatever the file-count skew.  The plan is a bare
+    ``spark.range`` of one id per task, with no exchange: each task reads
+    the units its id names.  ``files`` restricts the scan to an explicit
+    subset (the resumable ingest's batch unit).  Workers read 2048-row
+    batches (``_ENCODE_BATCH_ROWS``).
 
     ``iceberg.export_encoded`` / ``append`` of the returned frame itself
     — uncached, to an unpartitioned table — runs this encoder inside the
@@ -599,7 +595,10 @@ def encode_files(spark: SparkSession, path: str, codec: str = "auto",
     import pyarrow.parquet as pq
 
     from . import iceberg
-    fdf = _rowgroup_units(spark, path, snapshot_id, files)
+    sizes = (_input_files(path, snapshot_id) if files is None
+             else {f: os.path.getsize(f) for f in files})
+    plan = _plan_units(list(sizes), list(sizes.values()),
+                       max(int(spark.sparkContext.defaultParallelism), 1))
     roles = ["doc_id", "tokens", "source"]
     fids = (iceberg.fused_role_columns(path, roles)
             if iceberg.is_iceberg_table(path) else None)
@@ -621,17 +620,18 @@ def encode_files(spark: SparkSession, path: str, codec: str = "auto",
 
     def read(it):
         for batch in it:
-            for path_, rg in zip(batch.column(0).to_pylist(),
-                                 batch.column(1).to_pylist()):
-                pf = pq.ParquetFile(path_, pre_buffer=True)
-                cols = columns_of(pf, path_)
-                rgs = [rg] if rg >= 0 else None   # -1 = whole-file unit
-                for rb in pf.iter_batches(batch_size=_ENCODE_BATCH_ROWS,
-                                          row_groups=rgs, columns=cols):
-                    yield rb.select(cols)  # parquet yields file order
+            for task in batch.column(0).to_pylist():
+                for path_, j, m in plan[task]:
+                    pf = pq.ParquetFile(path_, pre_buffer=True)
+                    cols = columns_of(pf, path_)
+                    for rb in pf.iter_batches(
+                            batch_size=_ENCODE_BATCH_ROWS, columns=cols,
+                            row_groups=range(j, pf.num_row_groups, m)):
+                        yield rb.select(cols)  # parquet yields file order
 
     return _encode_plan(
-        fdf, lambda it: _encode_task(read(it), codec, split_threshold))
+        spark.range(len(plan), numPartitions=max(len(plan), 1)),
+        lambda it: _encode_task(read(it), codec, split_threshold))
 
 
 # the DataFrames encode() and encode_files() returned, held weakly, each
@@ -853,9 +853,7 @@ def _stitch(src: DataFrame, whole_runs: bool) -> DataFrame:
         if carry_id is not None:
             yield emit_carry()
 
-    return src.mapInArrow(
-        fn, schema="doc_id string, source string, tokens array<int>, "
-                   "n_tok int")
+    return src.mapInArrow(fn, schema=_STITCHED_SCHEMA)
 
 
 def point_lookup(df_encoded: DataFrame, index_col: str = "lookup_idx"

@@ -456,8 +456,9 @@ def _sv_decode(t, b: bytes):
 # Spark's parquet.block.size default: a task flushes its open files' row
 # groups once this much Arrow data is buffered across them
 _ROW_GROUP_BYTES = 128 << 20
-_WRITTEN_SCHEMA = ("path string, rows long, bytes long, bounds string, "
-                   "partition string, whole_runs boolean")
+_WRITTEN_SCHEMA = engine._schema(
+    "path string, rows long, bytes long, bounds string, partition string, "
+    "whole_runs boolean")
 # table property: every data file committed at a data sequence number at
 # or below this value passed the writer's whole-run check (_RunCheck), so
 # read_table may let engine.decode stitch it without an exchange

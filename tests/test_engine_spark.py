@@ -287,71 +287,93 @@ def test_expire_snapshots_and_orphan_cleanup_preserve_resume(
         iceberg.expire_snapshots(table, keep_last=0)
 
 
+def _read_units(plan) -> list[tuple[str, int]]:
+    """Every (file, row group) the planned tasks read, in plan order."""
+    import pyarrow.parquet as pq
+    return [(f, g) for task in plan for f, j, m in task
+            for g in range(j, pq.ParquetFile(f).num_row_groups, m)]
+
+
 def test_rowgroup_units_many_small_files_no_driver_io(spark, unit_df,
                                                       tmp_path, monkeypatch):
-    """At 100 TB the fused paths face 10^5-10^6 files; work-unit discovery
+    """At 100 TB the fused paths face 10^5-10^6 files; work-unit planning
     must not open parquet footers on the driver (the old sequential loop
-    serialized all of them before any task ran).  The driver may only LIST
-    file names; footer reads fan out as a Spark job.  Proven by poisoning
-    pq.ParquetFile in the driver process (executors are separate processes,
-    so the job itself is unaffected) over a many-small-files layout."""
+    serialized all of them before any task ran).  The driver only LISTS
+    the files and their sizes (_plan_units); the footers are read by the
+    tasks.  Proven by poisoning pq.ParquetFile in the driver process
+    (executors are separate processes, so the job itself is unaffected)
+    over a many-small-files layout, planned as whole files and, with the
+    sizes mocked at 1 GiB, as row-group slices."""
+    import unittest.mock as mock
+
     import pyarrow.parquet as pq
     src = str(tmp_path / "many")
     # 40 single-row-group files
     unit_df.repartition(40).write.parquet(src)
-    from pathlib import Path
-    n_files = len(list(Path(src).glob("*.parquet")))
-    assert n_files >= 30
+    files = engine._input_files(src)
+    assert len(files) >= 30
+    par = spark.sparkContext.defaultParallelism
+    plan = engine._plan_units(list(files), list(files.values()), par)
+    assert sorted(_read_units(plan)) == sorted((f, 0) for f in files)
 
     def _boom(*a, **k):
         raise AssertionError("driver-side parquet footer read in fused path")
     monkeypatch.setattr(pq, "ParquetFile", _boom)
 
-    units = engine._rowgroup_units(spark, src)
-    assert units.count() == n_files  # one row group per small file
     enc = engine.encode_files(spark, src, codec="bitpack",
                               split_threshold=1 << 14)
-    dec = engine.decode(enc, reassemble=True)
-    assert engine.verify_roundtrip(unit_df, dec) == 0
+    with mock.patch.object(engine.os.path, "getsize",
+                           return_value=1 << 30):
+        sliced = engine.encode_files(spark, src, codec="bitpack",
+                                     split_threshold=1 << 14)
+    assert sliced.rdd.getNumPartitions() == 4 * par
+    for e in (enc, sliced):
+        dec = engine.decode(e, reassemble=True)
+        assert engine.verify_roundtrip(unit_df, dec) == 0
 
 
 def test_rowgroup_units_exceed_partitions(spark, tmp_path):
-    """The (path, rg) expansion happens IN THE PLAN with partitions capped
-    at 4x default parallelism: with units >> partitions every row group is
-    still covered exactly once (multiple units per task) and the driver
-    never materializes an O(units) list or one-partition-per-unit plan."""
+    """A file past the whole-file size limit is read as strided row-group
+    slices, m = ceil(size / 128 MiB) of them, in at most 4x default
+    parallelism tasks: every row group is read exactly once, and the plan
+    is one Python stage over a bare range, with no exchange."""
+    import unittest.mock as mock
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     src = tmp_path / "manyrg"
     src.mkdir()
-    n_rows, rg_rows = 8000, 50          # 160 row groups > 32*4 partitions
+    n_rows, rg_rows = 8000, 50          # 160 row groups
     tokens = [[(7 * i + j) % 1000 for j in range(8)] for i in range(n_rows)]
     tbl = pa.table({
         "doc_id": [f"d{i:05d}" for i in range(n_rows)],
         "source": ["t"] * n_rows,
         "n_tok": pa.array([8] * n_rows, pa.int32()),
         "tokens": pa.array(tokens, pa.list_(pa.int32()))})
-    pq.write_table(tbl, src / "part-0.parquet", row_group_size=rg_rows)
+    f = str(src / "part-0.parquet")
+    pq.write_table(tbl, f, row_group_size=rg_rows)
+    par = spark.sparkContext.defaultParallelism
 
-    # r7 small-input fast path: one small file → ONE whole-file unit
-    # (rg = -1, workers iterate its row groups in file order)
-    fast = engine._rowgroup_units(spark, str(src)).collect()
-    assert [tuple(r) for r in fast] == [(str(src / "part-0.parquet"), -1)]
+    # small input: one whole-file unit; the task reads its row groups in
+    # file order
+    assert engine._plan_units([f], [os.path.getsize(f)], par) == \
+        [[(f, 0, 1)]]
+    # 40 GiB: 320 slices, more than the 4 * par task cap
+    plan = engine._plan_units([f], [40 << 30], par)
+    assert len(plan) == 4 * par
+    assert {u for task in plan for u in task} == \
+        {(f, j, 320) for j in range(320)}
+    assert sorted(_read_units(plan)) == \
+        [(f, g) for g in range(n_rows // rg_rows)]
 
-    # large files must take the distributed row-group planning path:
-    # pretend the file stats big so the fast path declines
-    import unittest.mock as mock
     with mock.patch.object(engine.os.path, "getsize",
                            return_value=1 << 30):
-        units = engine._rowgroup_units(spark, str(src))
-        cap = 4 * spark.sparkContext.defaultParallelism
-        assert units.rdd.getNumPartitions() <= cap
-        got = units.collect()
-    assert len(got) == n_rows // rg_rows
-    assert sorted(r["rg"] for r in got) == list(range(n_rows // rg_rows))
-
-    enc = engine.encode_files(spark, str(src), codec="bitpack")
+        enc = engine.encode_files(spark, str(src), codec="bitpack")
+    assert enc.rdd.getNumPartitions() == 8     # 1 GiB / 128 MiB slices
+    physical = enc._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in physical, physical
+    assert physical.count("MapInArrow") == 1, physical
     assert enc.agg(F.sum("n_tok")).first()[0] == n_rows * 8
     dec = engine.decode(enc, reassemble=False)
     assert dec.where(F.col("doc_id") == "d00042").first()["tokens"] == \
@@ -361,9 +383,9 @@ def test_rowgroup_units_exceed_partitions(spark, tmp_path):
 def test_ingest_pass_is_one_job(spark, tmp_path):
     """encode_files over a few small files plus export_encoded is ONE
     Spark job of at most one task per core: whole-file units are planned
-    on the JVM side (no Exchange), and each task writes its own data
-    files, so no second job re-reads footers.  Counted through a job
-    group and statusTracker."""
+    in the driver over a bare range (no Exchange), and each task writes
+    its own data files, so no second job re-reads footers.  Counted
+    through a job group and statusTracker."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -402,26 +424,73 @@ def test_ingest_pass_is_one_job(spark, tmp_path):
 
 def test_whole_file_units_balance_largest_first(spark, tmp_path):
     """Whole-file units: k = min(files, defaultParallelism) tasks, files
-    assigned largest-first to the least-loaded task, every file once."""
+    assigned largest-first to the least-loaded task, every file once;
+    encode_files runs one task per planned list."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     par = spark.sparkContext.defaultParallelism
-    src = tmp_path / "bal"
-    src.mkdir()
     sizes = [5000, 4000, 3000, 1000] + [100] * (par + 2)
-    for i, n in enumerate(sizes):
-        (src / f"f{i:03d}.parquet").write_bytes(b"x" * n)
-    units = engine._rowgroup_units(spark, str(src))
-    parts = units.rdd.glom().collect()
-    assert len(parts) == par
-    got = sorted(r["path"] for p in parts for r in p)
-    assert got == sorted(str(p) for p in src.glob("*.parquet"))
-    assert all(r["rg"] == -1 for p in parts for r in p)
-    loads = sorted(sum(os.path.getsize(r["path"]) for r in p)
-                   for p in parts)
+    files = [f"f{i:03d}.parquet" for i in range(len(sizes))]
+    plan = engine._plan_units(files, sizes, par)
+    assert len(plan) == par
+    assert sorted(f for task in plan for f, _, _ in task) == files
+    assert all((j, m) == (0, 1) for task in plan for _, j, m in task)
+    size_of = dict(zip(files, sizes))
+    loads = sorted(sum(size_of[f] for f, _, _ in task) for task in plan)
     # the four big files sit alone; the small ones spread evenly over
     # the other tasks
     assert loads[-4:] == [1000, 3000, 4000, 5000]
     assert sum(loads[:-4]) == 100 * (par + 2)
     assert loads[-5] - loads[0] <= 100 and loads[0] > 0
+
+    src = tmp_path / "bal"
+    src.mkdir()
+    truth = {}
+    for i, n in enumerate([400, 300, 200] + [20] * (par + 2)):
+        ids = [f"f{i}-{j}" for j in range(n)]
+        toks = [[j, i, j % 7] for j in range(n)]
+        truth.update(zip(ids, toks))
+        pq.write_table(pa.table({
+            "doc_id": ids, "source": ["t"] * n,
+            "tokens": pa.array(toks, pa.list_(pa.int32()))}),
+            src / f"f{i:03d}.parquet")
+    enc = engine.encode_files(spark, str(src), codec="bitpack")
+    assert enc.rdd.getNumPartitions() == par
+    assert {r["doc_id"]: r["tokens"]
+            for r in engine.decode(enc).collect()} == truth
+
+
+def test_input_files_skip_hidden_and_temporary(spark, tmp_path):
+    """The input listing skips what spark.read.parquet skips: a path
+    component starting with '.', or with '_' and holding no '=' (a failed
+    job's _temporary attempt files, hidden files) — and keeps Hive-style
+    key=value subdirectories."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "in"
+    live = ["part-0.parquet", "source=a/part-2.parquet",
+            "_c=1/part-3.parquet"]
+    dead = ["_temporary/0/task_1/part-0.parquet", ".hidden/x.parquet",
+            ".part-1.parquet", "_SUCCESS.parquet"]
+    truth = {}
+    for i, rel in enumerate(live + dead):
+        (src / rel).parent.mkdir(parents=True, exist_ok=True)
+        ids = [f"{rel}-{j}" for j in range(3)]
+        toks = [[i, j] for j in range(3)]
+        if rel in live:
+            truth.update(zip(ids, toks))
+        pq.write_table(pa.table({
+            "doc_id": ids, "source": ["s"] * 3,
+            "tokens": pa.array(toks, pa.list_(pa.int32()))}), src / rel)
+    (src / "_SUCCESS").write_bytes(b"")
+    files = engine._input_files(str(src))
+    assert list(files) == sorted(str(src / rel) for rel in live)
+    assert files[str(src / "part-0.parquet")] == \
+        os.path.getsize(src / "part-0.parquet")
+    got = engine.decode(engine.encode_files(spark, str(src)))
+    assert {r["doc_id"]: r["tokens"] for r in got.collect()} == truth
 
 
 def test_point_lookup_all_codecs(spark, unit_df):
