@@ -57,9 +57,3 @@ def choose_codec_flat(flat: np.ndarray, lens: np.ndarray
         costs[codec.name] = total
     best = min(costs.items(), key=lambda kv: (kv[1], kv[0]))[0]
     return best, costs
-
-
-def choose_codec(arrs: list[np.ndarray]) -> tuple[str, dict[str, int]]:
-    from .base import concat_rows
-    flat, lens = concat_rows(arrs[:SAMPLE_ROW_CAP])
-    return choose_codec_flat(flat, lens)

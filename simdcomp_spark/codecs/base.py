@@ -4,8 +4,7 @@ Every codec is BATCH- and BUFFER-oriented: the primary API moves ONE flat
 uint32 token buffer + per-row lengths in, and flat (widths, inits, payload)
 buffers + per-row lengths out — exactly the shape of Arrow list/binary
 columns, so the Spark ``mapInArrow`` hot path never materializes a per-row
-Python object for any codec.  List-of-bytes wrappers exist for tests and
-non-Arrow callers.
+Python object for any codec.
 """
 
 from __future__ import annotations
@@ -15,8 +14,6 @@ from dataclasses import dataclass
 import numpy as np
 
 from .. import native
-
-U32 = np.uint32
 
 
 @dataclass
@@ -30,19 +27,11 @@ class FlatEncoded:
     payload_lens: np.ndarray  # int64 per row
 
 
-def _slices(flat: np.ndarray, lens: np.ndarray) -> list[bytes]:
-    off = np.concatenate(([0], np.cumsum(lens)))
-    buf = flat.tobytes()
-    return [buf[int(off[r]):int(off[r + 1])] for r in range(lens.size)]
-
-
 class Codec:
     """Abstract lightweight-compression codec over uint32 token rows."""
 
     name: str = "?"
     _per_block_overhead = 1  # metadata bytes per 128-block (cost model)
-
-    # ---- primary flat API ----
 
     def encode_flat(self, flat: np.ndarray, lens: np.ndarray) -> FlatEncoded:
         raise NotImplementedError
@@ -60,35 +49,6 @@ class Codec:
         """Exact per-row payload bytes without materializing the encode
         (cost-model input).  Default: encode and measure."""
         return self.encode_flat(flat, lens).payload_lens
-
-    # ---- list-of-bytes wrappers ----
-
-    def encode_rows(self, arrs: list[np.ndarray]
-                    ) -> tuple[list[bytes], list[bytes], list[bytes]]:
-        flat, lens = concat_rows(arrs)
-        e = self.encode_flat(flat, lens)
-        return (_slices(e.widths, e.widths_lens),
-                _slices(e.inits, e.inits_lens),
-                _slices(e.payload, e.payload_lens))
-
-    def decode_rows(self, n_toks: np.ndarray, widths: list[bytes],
-                    inits: list[bytes], payloads: list[bytes]
-                    ) -> list[np.ndarray]:
-        lens = np.asarray(n_toks, dtype=np.int64)
-        wf = np.frombuffer(b"".join(widths), dtype=np.uint8)
-        inf = np.frombuffer(b"".join(inits), dtype=np.uint8)
-        pf = np.frombuffer(b"".join(payloads), dtype=np.uint8)
-        wl = np.fromiter(map(len, widths), dtype=np.int64, count=len(widths))
-        il = np.fromiter(map(len, inits), dtype=np.int64, count=len(inits))
-        pl = np.fromiter(map(len, payloads), dtype=np.int64, count=len(payloads))
-        out = self.decode_flat(lens, wf, wl, inf, il, pf, pl)
-        off = np.concatenate(([0], np.cumsum(lens)))
-        return [out[off[r]:off[r + 1]] for r in range(lens.size)]
-
-    def payload_sizes(self, arrs: list[np.ndarray]) -> np.ndarray:
-        flat, lens = concat_rows(arrs)
-        return self.payload_sizes_flat(flat, lens)
-
 
 def place_rows(out: np.ndarray, dst_off: np.ndarray, src: np.ndarray,
                lens: np.ndarray) -> None:
@@ -110,14 +70,3 @@ def extract_rows(src: np.ndarray, src_off: np.ndarray, lens: np.ndarray
     src_off = np.ascontiguousarray(src_off, dtype=np.int64)
     native.gather_rows(src, src_off, lens, out, dst_off)
     return out
-
-
-def concat_rows(arrs: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
-    nrows = len(arrs)
-    lens = np.fromiter((a.size for a in arrs), dtype=np.int64, count=nrows)
-    if nrows == 0 or lens.sum() == 0:
-        return np.zeros(0, dtype=U32), lens
-    if nrows == 1:
-        return np.ascontiguousarray(arrs[0], dtype=U32), lens
-    return (np.concatenate([np.ascontiguousarray(a, dtype=U32) for a in arrs]),
-            lens)

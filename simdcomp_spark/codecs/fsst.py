@@ -149,12 +149,6 @@ class SymbolTable:
             pos += 1 + ln
         return cls(syms)
 
-    def encode(self, s: bytes) -> bytes:
-        flat, _lens = self.encode_flat(
-            np.frombuffer(s, dtype=np.uint8),
-            np.asarray([len(s)], dtype=np.int64))
-        return flat.tobytes()
-
     def encode_flat(self, buf: np.ndarray, row_lens: np.ndarray
                     ) -> tuple[np.ndarray, np.ndarray]:
         """Encode MANY rows in one C pass: ``buf`` is the concatenated raw
@@ -176,26 +170,3 @@ class SymbolTable:
         row_lens = np.asarray(row_lens, dtype=np.int64)
         return native.decode_flat(
             self, codes, np.concatenate(([0], np.cumsum(row_lens))))
-
-    def decode(self, enc: bytes) -> bytes:
-        codes = np.frombuffer(enc, dtype=np.uint8)
-        flat, _lens = self.decode_flat(codes,
-                                       np.asarray([codes.size], np.int64))
-        return flat.tobytes()
-
-
-def encode_batch(strings: list[bytes], table: SymbolTable | None = None
-                 ) -> tuple[SymbolTable, list[bytes]]:
-    if table is None:
-        table = SymbolTable(train(strings))
-    lens = np.fromiter((len(s) for s in strings), dtype=np.int64,
-                       count=len(strings))
-    flat = np.frombuffer(b"".join(strings), dtype=np.uint8)
-    out, out_lens = table.encode_flat(flat, lens)
-    obuf = out.tobytes()
-    offs = np.concatenate(([0], np.cumsum(out_lens)))
-    return table, [obuf[offs[i]:offs[i + 1]] for i in range(lens.size)]
-
-
-def decode_batch(encs: list[bytes], table: SymbolTable) -> list[bytes]:
-    return [table.decode(e) for e in encs]

@@ -75,6 +75,15 @@ DECODED_SCHEMA = _schema(
     "doc_id string, source string, seg_id int, tokens array<int>, n_tok int")
 _STITCHED_SCHEMA = _schema(
     "doc_id string, source string, tokens array<int>, n_tok int")
+# the compressed-domain operators' outputs
+_LOOKUP_SCHEMA = _schema("doc_id string, seg_id int, idx int, val int")
+_SEARCH_SCHEMA = _schema("doc_id string, seg_id int, n_tok int, idx int")
+_RANGE_SCHEMA = _schema(
+    "doc_id string, seg_id int, n_tok int, n_in_range int")
+_CONTAINS_SCHEMA = _schema("doc_id string, seg_id int")
+_MINMAX_SCHEMA = _schema(
+    "doc_id string, seg_id int, n_tok int, min_tok int, max_tok int")
+_HASH_SCHEMA = _schema("doc_id string, seg_id int, h string")
 
 DEFAULT_SPLIT_THRESHOLD = 1 << 16  # tokens per segment
 # encode(split_threshold=None): a Spark array holds at most 2**31 - 1
@@ -198,10 +207,11 @@ def _list_to_flat(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     odt = np.int64 if pa.types.is_large_list(col.type) else np.int32
     off = np.frombuffer(bufs[1], dtype=odt)[
         col.offset: col.offset + len(col) + 1].astype(np.int64)
-    vals = col.values.to_numpy(zero_copy_only=False)
-    flat = vals[off[0]:off[-1]] if off.size else vals[:0]
-    lens = np.diff(off)
-    return flat, lens
+    start, end = (int(off[0]), int(off[-1])) if off.size else (0, 0)
+    # convert only this array's own values: a sliced array's child may
+    # hold nulls in other rows, which would turn the whole child float
+    flat = col.values.slice(start, end - start).to_numpy(zero_copy_only=False)
+    return flat, np.diff(off)
 
 
 def _binary_to_flat(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
@@ -428,13 +438,7 @@ def _encode_task(batches, codec: str, threshold: int):
     chosen = None if codec == "auto" else codec
     total_ns = 0
     for batch in batches:
-        tokens = batch.column(1)
-        if tokens.null_count:
-            i = tokens.is_null().index(True).as_py()
-            raise ValueError(
-                f"document {batch.column(0)[i].as_py()!r} has null tokens "
-                "(an encoded row cannot tell null from []): drop or fill it")
-        flat_i32, lens = _list_to_flat(tokens)
+        flat_i32, lens = _tokens_to_flat(batch.column(1), batch.column(0))
         doc_ids, sources, seg_ids, flat, lens = _split_flat(
             batch.column(0), batch.column(2), flat_i32.view(np.uint32),
             lens, threshold)
@@ -461,6 +465,45 @@ def _encode_task(batches, codec: str, threshold: int):
             names=["doc_id", "source", "seg_id", "n_tok", "codec",
                    "widths", "inits", "payload", "pid", "enc_ns",
                    "content_hash"])
+
+
+def _tokens_to_flat(tokens: pa.Array, doc_ids: pa.Array
+                    ) -> tuple[np.ndarray, np.ndarray]:
+    """An encoder batch's ``tokens`` column → (flat int32 values, row
+    lengths), refusing what would not decode back as it came in.
+
+    Any other integer element type (``list<int64>`` is pyarrow's type for
+    Python ints) is cast to int32 with a checked cast, so an out-of-range
+    value raises; a non-integer element type raises ``TypeError``.  A null
+    row, or a null element, raises a ``ValueError`` naming its
+    ``doc_id``: an encoded row cannot tell null from ``[]``, and a null
+    element would read as garbage.  An int32 column without nulls takes
+    no extra pass (the child's null count is known without one)."""
+    t = tokens.type
+    if not (pa.types.is_list(t) or pa.types.is_large_list(t)) \
+            or not pa.types.is_integer(t.value_type):
+        raise TypeError(f"tokens must be a list of integers, got {t}")
+    if tokens.null_count:
+        i = tokens.is_null().index(True).as_py()
+        raise ValueError(
+            f"document {doc_ids[i].as_py()!r} has null tokens (an encoded "
+            "row cannot tell null from []): drop or fill it")
+    if t.value_type != pa.int32():
+        tokens = tokens.cast(pa.large_list(pa.int32())
+                             if pa.types.is_large_list(t)
+                             else pa.list_(pa.int32()))
+    if tokens.values.null_count:
+        # a sliced array's child also holds other rows' values: look at
+        # this batch's own
+        off = tokens.offsets.to_numpy().astype(np.int64)
+        own = tokens.values.slice(off[0], off[-1] - off[0])
+        if own.null_count:
+            pos = own.is_null().index(True).as_py()
+            i = int(np.searchsorted(off - off[0], pos, "right")) - 1
+            raise ValueError(
+                f"document {doc_ids[i].as_py()!r} has a null token: "
+                "drop or fill it")
+    return _list_to_flat(tokens)
 
 
 def _split_flat(doc_ids, sources, flat, lens, threshold):
@@ -503,7 +546,10 @@ def _input_files(path: str, snapshot_id: int | None = None) -> dict[str, int]:
     time-travels.  Plain directories recurse (e.g. Hive-style
     ``key=value`` subdirectories), stat each file and skip what
     ``spark.read.parquet`` skips (:func:`_hidden`): a failed job's
-    ``_temporary`` leftovers and hidden files."""
+    ``_temporary`` leftovers and hidden files.  A missing path raises
+    ``FileNotFoundError`` and a directory with no data file (or a single
+    file) a ``ValueError``; an Iceberg snapshot with no live file is an
+    empty input."""
     from . import iceberg
     if iceberg.is_iceberg_table(path):
         return {d["file_path"]: int(d["file_size_in_bytes"])
@@ -512,11 +558,16 @@ def _input_files(path: str, snapshot_id: int | None = None) -> dict[str, int]:
         raise ValueError(
             f"snapshot_id={snapshot_id} given but {path!r} is not an "
             "Iceberg table (no metadata/version-hint.text)")
+    if not os.path.exists(path):
+        raise FileNotFoundError(f"input path {path!r} does not exist")
     found = []
     for root, dirs, names in os.walk(path):
         dirs[:] = [d for d in dirs if not _hidden(d)]
         found += [os.path.join(root, n) for n in names
                   if n.endswith(".parquet") and not _hidden(n)]
+    if not found:
+        raise ValueError(f"input path {path!r} is not an Iceberg table or "
+                         "a directory holding parquet data files")
     return {f: os.path.getsize(f) for f in sorted(found)}
 
 
@@ -889,7 +940,7 @@ def point_lookup(df_encoded: DataFrame, index_col: str = "lookup_idx"
                  pa.array(out_val[vsel].view(np.int32))],
                 names=["doc_id", "seg_id", "idx", "val"])
 
-    return src.mapInArrow(fn, schema="doc_id string, seg_id int, idx int, val int")
+    return src.mapInArrow(fn, schema=_LOOKUP_SCHEMA)
 
 
 def search_sorted(df_encoded: DataFrame, key: int) -> DataFrame:
@@ -914,7 +965,7 @@ def search_sorted(df_encoded: DataFrame, key: int) -> DataFrame:
                  pa.array(idx.astype(np.int32))],
                 names=["doc_id", "seg_id", "n_tok", "idx"])
 
-    return src.mapInArrow(fn, schema="doc_id string, seg_id int, n_tok int, idx int")
+    return src.mapInArrow(fn, schema=_SEARCH_SCHEMA)
 
 
 def range_count(df_encoded: DataFrame, lo: int, hi: int) -> DataFrame:
@@ -938,8 +989,7 @@ def range_count(df_encoded: DataFrame, lo: int, hi: int) -> DataFrame:
                  pa.array(n_in.astype(np.int32))],
                 names=["doc_id", "seg_id", "n_tok", "n_in_range"])
 
-    return src.mapInArrow(
-        fn, schema="doc_id string, seg_id int, n_tok int, n_in_range int")
+    return src.mapInArrow(fn, schema=_RANGE_SCHEMA)
 
 
 def contains_token(df_encoded: DataFrame,
@@ -1037,7 +1087,7 @@ def contains_token(df_encoded: DataFrame,
                 [out.column(0), out.column(1).cast(pa.int32())],
                 names=["doc_id", "seg_id"])
 
-    return src.mapInArrow(fn, schema="doc_id string, seg_id int")
+    return src.mapInArrow(fn, schema=_CONTAINS_SCHEMA)
 
 
 def minmax_sorted(df_encoded: DataFrame) -> DataFrame:
@@ -1071,9 +1121,7 @@ def minmax_sorted(df_encoded: DataFrame) -> DataFrame:
                  pa.array(mx[vsel].view(np.int32))],
                 names=["doc_id", "seg_id", "n_tok", "min_tok", "max_tok"])
 
-    return src.mapInArrow(
-        fn, schema="doc_id string, seg_id int, n_tok int, "
-                   "min_tok int, max_tok int")
+    return src.mapInArrow(fn, schema=_MINMAX_SCHEMA)
 
 
 def intersect_encoded(df_pairs: DataFrame, key_cols: list[str]
@@ -1142,7 +1190,7 @@ def _strong_content_hash(cand: DataFrame) -> DataFrame:
                 [batch.column(0), batch.column(1), pa.array(digs)],
                 names=["doc_id", "seg_id", "h"])
 
-    return src.mapInArrow(fn, schema="doc_id string, seg_id int, h string")
+    return src.mapInArrow(fn, schema=_HASH_SCHEMA)
 
 
 def _doc_signature(rows: DataFrame) -> DataFrame:

@@ -282,62 +282,8 @@ def source_overlap(df: DataFrame, col: str = "text", k: int = 3,
     self-join fans out at most C(n_sources, 2) rows per shingle —
     bounded by source cardinality, never corpus size, which is why this
     needs no ``max_df`` cap (unlike the doc-level
-    :func:`ngram_jaccard_pairs`).  For corpora where even the distinct
-    shingle set is too large to join, :func:`source_overlap_sketch`
-    estimates the same numbers from a fixed-size signature."""
+    :func:`ngram_jaccard_pairs`)."""
     sh = (df.select(F.col(source_col).alias("src"),
                     F.explode(_shingles(col, k)).alias("sh"))
           .distinct())
     return _overlap_pairs(sh, "src", "src_a", "src_b")
-
-
-def source_overlap_sketch(df: DataFrame, col: str = "text", k: int = 3,
-                          source_col: str = "source",
-                          num_hashes: int = 128,
-                          max_sources: int = 10_000) -> DataFrame:
-    """MinHash estimate of :func:`source_overlap`'s Jaccard at any
-    scale: per source, the min of ``num_hashes`` seeded XXH64s over its
-    shingles (one aggregation, map-side combinable — the shuffle moves
-    ``num_hashes`` longs per source, independent of corpus size), then
-    signatures compare pairwise.  Returns ``(src_a, src_b, matches,
-    num_hashes)``: matches/num_hashes estimates Jaccard with standard
-    error ~= sqrt(J(1-J)/num_hashes).  Property-tested against the
-    exact operator.
-
-    Scale bound (loud, in-plan): the pairwise signature compare is a
-    cross join over SOURCES — C(S, 2) output rows of ``num_hashes``
-    comparisons each.  That is the right tool for source/domain counts
-    (10s-1000s); above ``max_sources`` (default 10^4 ≈ 5·10^7 pairs) the
-    plan raises rather than letting the sketch be misused as a DOC-level
-    comparator (use minhash_lsh for documents — bucket-joined, never
-    all-pairs)."""
-    sh = df.select(F.col(source_col).alias("src"),
-                   F.explode(_shingles(col, k)).alias("sh"))
-    # same seeded family as minhash_signatures (xxhash64(sh, i)), so
-    # doc-level and source-level signatures stay comparable
-    sig = sh.groupBy("src").agg(*[
-        F.min(F.xxhash64(F.col("sh"), F.lit(i))).alias(f"_h{i}")
-        for i in range(num_hashes)])
-    # in-plan source-count guard: a window count over the (tiny: one row
-    # per source) signature frame; the guard column is FOLDED into the
-    # kept `matches` output (always 0 when within bounds) so column
-    # pruning cannot elide the check
-    from pyspark.sql import Window
-    n_src = F.count("*").over(Window.partitionBy())
-    sig = sig.withColumn(
-        "_guard",
-        F.when(n_src > max_sources, F.raise_error(F.lit(
-            f"source_overlap_sketch: more than {max_sources} distinct "
-            "sources — the pairwise signature compare is O(sources^2); "
-            "this is a SOURCE-level tool, use minhash_lsh for doc-level "
-            "near-dup"))).otherwise(F.lit(0)))
-    a = sig.alias("a")
-    b = sig.alias("b")
-    matches = sum(
-        (F.col(f"a._h{i}") == F.col(f"b._h{i}")).cast("int")
-        for i in range(num_hashes))
-    return (a.join(b, F.col("a.src") < F.col("b.src"))
-            .select(F.col("a.src").alias("src_a"),
-                    F.col("b.src").alias("src_b"),
-                    (matches + F.col("a._guard")).alias("matches"),
-                    F.lit(num_hashes).alias("num_hashes")))

@@ -1,20 +1,12 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
 with typed metadata.
 
-The Spark-side machinery (schema, Arrow batching, partitioning, UDF
-signatures) is real and tested.  Decoders resolve in three tiers:
-
-1. **Auto-detected real decoders** (``register_default_decoders``, run at
-   import): PCM-WAV audio via the stdlib ``wave`` module (always
-   available), images via Pillow when importable — else the pure-stdlib
-   PNG decoder (zlib + spec unfiltering), so image decode is REAL even
-   in this environment — and video via PyAV when importable, so the
-   NotImplementedError path is reachable only for formats whose library
-   is truly absent;
-2. **Explicit registration** (``set_decoder`` / the ``decoders=`` arg) for
-   custom formats — overrides the defaults;
-3. **Deterministic fake** (``deterministic_fake_decoder``) for CI and the
-   correctness gate, exercising the identical Arrow/UDF plumbing.
+:func:`extract_features` runs the decoders it is given (``decoders=``,
+kind → ``(payload, meta) -> ndarray``) inside one ``mapInPandas``; a
+kind with no decoder raises ``NotImplementedError``.  Two image decoders
+ship here: Pillow's when it is importable, and a pure-stdlib PNG decoder
+(zlib + spec unfiltering) that keeps image decode real without it.
+:func:`encode_gray_png` writes deterministic PNG payloads for the gate.
 """
 
 from __future__ import annotations
@@ -29,36 +21,6 @@ MEDIA_SCHEMA = ("media_id string, kind string, payload binary, mime string, "
 
 FEATURE_SCHEMA = ("media_id string, kind string, n_bytes long, "
                   "feature array<float>, frames int")
-
-_DECODERS: dict[str, Callable[[bytes, dict], np.ndarray]] = {}
-
-
-def set_decoder(kind: str, fn: Callable[[bytes, dict], np.ndarray]) -> None:
-    """Register a real decoder: (payload, meta) → ndarray of samples/pixels."""
-    _DECODERS[kind] = fn
-
-
-def wav_audio_decoder() -> Callable[[bytes, dict], np.ndarray]:
-    """PCM-WAV decoder built on the stdlib ``wave`` module — real audio
-    decode with zero optional dependencies.  Returns float32 samples in
-    [-1, 1] (channels interleaved, as stored)."""
-
-    def fn(payload: bytes, meta: dict) -> np.ndarray:
-        import io
-        import wave
-        with wave.open(io.BytesIO(payload)) as w:
-            sw = w.getsampwidth()
-            raw = w.readframes(w.getnframes())
-        if sw == 2:
-            return np.frombuffer(raw, np.int16).astype(np.float32) / 32768.0
-        if sw == 1:  # 8-bit WAV is unsigned
-            return (np.frombuffer(raw, np.uint8).astype(np.float32)
-                    - 128.0) / 128.0
-        if sw == 4:
-            return np.frombuffer(raw, np.int32).astype(np.float32) / 2 ** 31
-        raise ValueError(f"unsupported WAV sample width {sw}")
-
-    return fn
 
 
 def pillow_image_decoder() -> Callable[[bytes, dict], np.ndarray] | None:
@@ -194,80 +156,21 @@ def encode_gray_png(pixels: bytes, width: int = 16) -> bytes:
             + chunk(b"IDAT", zlib.compress(raw, 0)) + chunk(b"IEND", b""))
 
 
-def av_video_decoder() -> Callable[[bytes, dict], np.ndarray] | None:
-    """Per-frame mean-luma video decoder via PyAV, or None when absent."""
-    try:
-        import av  # noqa: F401
-    except ImportError:
-        return None
-
-    def fn(payload: bytes, meta: dict) -> np.ndarray:
-        import io
-        import av
-        with av.open(io.BytesIO(payload)) as container:
-            return np.asarray(
-                [float(frame.to_ndarray().mean())
-                 for frame in container.decode(video=0)], dtype=np.float32)
-
-    return fn
-
-
-def register_default_decoders() -> list[str]:
-    """Detect available media libraries and register real decoders for any
-    kind that has none yet.  Runs once at import; returns the kinds
-    registered, so ``NotImplementedError`` is raised only for formats whose
-    library is genuinely absent (Pillow for image, PyAV for video — WAV
-    audio always works via the stdlib)."""
-    registered = []
-    for kind, factory in (("audio", wav_audio_decoder),
-                          ("image", pillow_image_decoder),
-                          ("video", av_video_decoder)):
-        if kind in _DECODERS:
-            continue
-        fn = factory()
-        if fn is None and kind == "image":
-            # no Pillow: the stdlib PNG decoder keeps the image path
-            # REAL (actual pixel decode) rather than NotImplementedError
-            fn = stdlib_png_decoder()
-        if fn is not None:
-            _DECODERS[kind] = fn
-            registered.append(kind)
-    return registered
-
-
-def deterministic_fake_decoder(kind: str) -> Callable[[bytes, dict], np.ndarray]:
-    """Test decoder: bytes → deterministic float32 'pixels' (seeded by
-    content hash) so the downstream plumbing is exercised with stable data."""
-
-    def fn(payload: bytes, meta: dict) -> np.ndarray:
-        h = np.frombuffer(payload, dtype=np.uint8)
-        if h.size == 0:
-            return np.zeros(4, dtype=np.float32)
-        # cheap content-derived signal, deterministic across workers
-        acc = np.cumsum(h.astype(np.float32))
-        return (acc[-64:] % 255.0) / 255.0
-
-    return fn
-
-
-def extract_features(df: DataFrame, batch_pixels: int = 1 << 24,
-                     decoders: dict | None = None) -> DataFrame:
+def extract_features(df: DataFrame, decoders: dict) -> DataFrame:
     """media table → per-item feature vectors via mapInPandas.
 
     The UDF decodes each item, mean-pools to a fixed-length float feature,
     and reports byte/frame counts.  Arrow carries the binary payloads in
-    zero-copy batches; ``batch_pixels`` documents the back-pressure knob a
-    real decoder honors per batch.  ``decoders`` travels WITH the closure to
-    the Python workers (module-level registration only exists driver-side).
+    zero-copy batches.  ``decoders`` (kind → decoder) travels WITH the
+    closure to the Python workers.
     """
-    decoders = dict(_DECODERS if decoders is None else decoders)
+    decoders = dict(decoders)
 
     def _dec(kind, payload):
         fn = decoders.get(kind)
         if fn is None:
             raise NotImplementedError(
-                f"no {kind!r} decoder registered in this environment — "
-                "install the media libs and pass decoders=")
+                f"no {kind!r} decoder given — pass one in decoders=")
         return fn(payload, {})
 
     def fn(it):
@@ -291,76 +194,3 @@ def extract_features(df: DataFrame, batch_pixels: int = 1 << 24,
             })
 
     return df.mapInPandas(fn, schema=FEATURE_SCHEMA)
-
-
-def resize(df: DataFrame, target: int = 32,
-           decoders: dict | None = None) -> DataFrame:
-    """Resize/downsample each media item's decoded signal to ``target``
-    samples (linear interpolation — for a real image decoder this is the
-    per-axis resample; the Arrow/UDF plumbing is identical).  Returns
-    (media_id, kind, resized array<float>, orig_len)."""
-    decoders = dict(_DECODERS if decoders is None else decoders)
-
-    def _dec(kind, payload):
-        fn = decoders.get(kind)
-        if fn is None:
-            raise NotImplementedError(f"no {kind!r} decoder registered")
-        return fn(payload, {})
-
-    def fn(it):
-        import pandas as pd
-        for pdf in it:
-            out_sig, out_len = [], []
-            for kind, payload in zip(pdf["kind"], pdf["payload"]):
-                data = _dec(kind, bytes(payload)).astype(np.float32)
-                if data.size == 0:
-                    data = np.zeros(1, dtype=np.float32)
-                xs = np.linspace(0.0, data.size - 1, target)
-                out_sig.append(np.interp(
-                    xs, np.arange(data.size), data).astype(np.float32))
-                out_len.append(int(data.size))
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "kind": pdf["kind"],
-                "resized": out_sig,
-                "orig_len": pd.Series(out_len, dtype="int32"),
-            })
-
-    return df.mapInPandas(
-        fn, schema="media_id string, kind string, resized array<float>, "
-                   "orig_len int")
-
-
-def frame_sample(df: DataFrame, every_nth: int = 10,
-                 decoders: dict | None = None) -> DataFrame:
-    """Video-style frame sampling stub: keeps every Nth 'frame' of the
-    decoded stream, preserving the (media_id, frame_no) grain."""
-    decoders = dict(_DECODERS if decoders is None else decoders)
-
-    def _dec(kind, payload):
-        fn = decoders.get(kind)
-        if fn is None:
-            raise NotImplementedError(f"no {kind!r} decoder registered")
-        return fn(payload, {})
-
-    def fn(it):
-        import pandas as pd
-        for pdf in it:
-            rows = {"media_id": [], "frame_no": [], "frame": []}
-            for mid, kind, payload in zip(pdf["media_id"], pdf["kind"],
-                                          pdf["payload"]):
-                data = _dec(kind, bytes(payload))
-                for j in range(0, data.size, every_nth):
-                    rows["media_id"].append(mid)
-                    rows["frame_no"].append(j)
-                    rows["frame"].append(float(data[j]))
-            out = pd.DataFrame(rows)
-            out["frame_no"] = out["frame_no"].astype("int32")
-            yield out
-
-    return df.mapInPandas(fn, schema="media_id string, frame_no int, frame float")
-
-
-# auto-register real decoders for whatever media libraries this
-# environment actually has (stdlib WAV always; Pillow/PyAV when importable)
-register_default_decoders()

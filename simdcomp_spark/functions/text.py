@@ -149,49 +149,11 @@ def vocab_topk(df: DataFrame, col: str = "text", k: int = 100
     ``TakeOrderedAndProject`` of k rows; ties broken by token so the
     result is deterministic.  At 100 TB the shuffle volume is the
     DISTINCT vocabulary per partition, not the corpus — for natural-
-    language vocabularies that is millions of rows, fine; for adversar-
-    ially unbounded vocabularies use :func:`vocab_topk_mg`."""
+    language vocabularies that is millions of rows."""
     toks = df.select(F.explode(
         F.split(F.lower(F.col(col)), " ")).alias("token"))
     counts = toks.groupBy("token").agg(F.count("*").alias("cnt"))
     return counts.orderBy(F.desc("cnt"), F.asc("token")).limit(k)
-
-
-def vocab_topk_mg(df: DataFrame, col: str = "text", k: int = 100,
-                  capacity: int = 4096) -> DataFrame:
-    """Misra-Gries heavy hitters with BOUNDED shuffle — the 100 TB path
-    when the vocabulary itself is too large to shuffle: each partition
-    compresses its token stream into ≤ ``capacity`` counters
-    (mergeable-summaries reduction: merge exact per-batch counts, then
-    subtract the (capacity+1)-th largest value and drop non-positive —
-    Agarwal et al.'s weighted Misra-Gries), so the exchange carries at
-    most capacity × partitions rows regardless of corpus size.
-
-    Returned ``est_count`` values are UNDERESTIMATES with per-partition
-    error at most (tokens_in_partition / (capacity+1)); summing partials
-    keeps the guarantee additive.  Every token whose true corpus count
-    exceeds total_tokens/(capacity+1) is guaranteed present.  With
-    ``capacity`` ≥ the true vocabulary size the result equals
-    :func:`vocab_topk` exactly (tested)."""
-    import pandas as pd
-
-    def mg(batches):
-        counters = pd.Series(dtype="int64")
-        for pdf in batches:
-            vc = (pdf[col].str.lower().str.split(" ")
-                  .explode().value_counts())
-            counters = counters.add(vc, fill_value=0).astype("int64")
-            if len(counters) > capacity:
-                thresh = counters.nlargest(capacity + 1).iloc[-1]
-                counters = counters.sub(thresh)
-                counters = counters[counters > 0]
-        yield pd.DataFrame({"token": counters.index.astype(str),
-                            "cnt": counters.values})
-
-    partials = df.select(col).mapInPandas(mg, "token string, cnt long")
-    merged = partials.groupBy("token").agg(
-        F.sum("cnt").alias("est_count"))
-    return merged.orderBy(F.desc("est_count"), F.asc("token")).limit(k)
 
 
 # ASCII-class patterns only: Java (Spark) and RE2 (DuckDB) regex engines

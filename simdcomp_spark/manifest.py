@@ -44,14 +44,6 @@ def _require_resumable_lineage(meta: dict | None, table_dir: str) -> None:
             "table dir")
 
 
-def completed_input_files_iceberg(table_dir: str) -> set[str]:
-    """Input files (relative paths) already ingested into the Iceberg
-    table (the input-file lineage of
-    :func:`encode_files_resumable_iceberg`, expired snapshots' included)."""
-    return iceberg._lineage(
-        iceberg._metadata_or_none(table_dir))["simdcomp-input-files"]
-
-
 def _read_roles(spark, input_path: str, files: list[str]) -> DataFrame:
     """``files`` of the ingest input with their ``doc_id`` and ``tokens``
     columns under those role names, resolved as

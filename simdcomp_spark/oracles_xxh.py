@@ -337,12 +337,6 @@ WHERE x.doc_id < y.doc_id
 """
 
 
-def to_py_signed(x: int) -> int:
-    """Unsigned 64-bit value → python int with Spark's signed semantics."""
-    x %= M64
-    return x - M64 if x >= 1 << 63 else x
-
-
 def _rotl_i(x: int, r: int) -> int:
     x %= M64
     return ((x << r) | (x >> (64 - r))) % M64

@@ -1,7 +1,7 @@
-"""Corpus source formats beyond parquet/Iceberg: JSONL and CSV ingestion.
+"""Corpus source formats beyond parquet/Iceberg: JSONL ingestion.
 
-Raw text corpora commonly arrive as JSON-lines or CSV drops.  Two rules
-make these safe at 100 TB:
+Raw text corpora commonly arrive as JSON-lines drops.  Two rules make
+them safe at 100 TB:
 
 * **Explicit schema, never inference** — ``inferSchema`` is a full extra
   pass over the data before the real job starts; at 10^5-10^6 files that
@@ -12,10 +12,8 @@ make these safe at 100 TB:
   rejects instead of losing them (a 0.1% silent loss on a crawl is a
   bias nobody can debug later).
 
-Both formats round-trip the documents shape byte-exactly (JSON escapes
-embedded quotes/newlines; the CSV writer quotes and escapes per RFC and
-uses the Hive ``\\N`` null sentinel so NULL and ``''`` stay distinct) —
-pinned by tests with adversarial strings.
+JSONL round-trips the documents shape byte-exactly (JSON escapes
+embedded quotes/newlines) — pinned by tests with adversarial strings.
 """
 
 from __future__ import annotations
@@ -25,7 +23,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 DOCUMENTS_SCHEMA = ("doc_id long, text string, lang string, "
                     "source string")
 _CORRUPT = "_corrupt_record"
-_NULL_SENTINEL = "\\N"  # Hive/MySQL CSV convention for NULL
 
 
 def _permissive(reader, schema: str):
@@ -39,33 +36,6 @@ def read_documents_jsonl(spark: SparkSession, path: str,
     """JSONL corpus reader: explicit schema, malformed lines quarantined
     into ``_corrupt_record`` (use :func:`split_corrupt`)."""
     return _permissive(spark.read, schema).json(path)
-
-
-def read_documents_csv(spark: SparkSession, path: str,
-                       schema: str = DOCUMENTS_SCHEMA,
-                       header: bool = True,
-                       multi_line: bool = True) -> DataFrame:
-    """CSV corpus reader: explicit schema, RFC quoting/escaping,
-    malformed lines quarantined into ``_corrupt_record``.
-
-    ``multi_line=True`` (default) parses quoted embedded newlines
-    correctly but makes each FILE the split unit (no intra-file
-    parallel line splitting) — with text columns that may contain
-    newlines this is the only correct mode, so keep ingest files small
-    enough to be the parallelism unit; pass ``multi_line=False`` only
-    for corpora guaranteed newline-free (JSONL never has this tradeoff:
-    JSON escapes newlines, which is why it is the preferred drop
-    format)."""
-    return (_permissive(spark.read, schema)
-            .option("header", str(header).lower())
-            .option("multiLine", str(multi_line).lower())
-            .option("quote", '"').option("escape", '"')
-            # Hive-style null sentinel: NULL ↔ \N, empty string ↔ "" —
-            # Spark's default dialect (both written as nothing) silently
-            # turns '' into NULL on a round trip.  write_documents_csv
-            # raises in-scan if a data value equals the sentinel.
-            .option("nullValue", _NULL_SENTINEL)
-            .csv(path))
 
 
 def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -87,30 +57,3 @@ def write_documents_jsonl(df: DataFrame, path: str) -> None:
     """Deterministic JSONL export (JSON escaping handles embedded
     quotes/newlines/unicode)."""
     df.write.mode("error").json(path)
-
-
-def write_documents_csv(df: DataFrame, path: str,
-                        header: bool = True) -> None:
-    """CSV export with RFC quoting (quote char doubled via escape).
-
-    NULLs are written as the Hive sentinel ``\\N`` and empty strings as
-    quoted ``""`` so :func:`read_documents_csv` can tell them apart (the
-    default dialect writes both as nothing — a round trip then silently
-    turns ``''`` into NULL).  The one ambiguity left is a DATA value
-    equal to the sentinel itself; rather than silently corrupt it to
-    NULL on read, the writer raises in-scan (a ``when`` inside the write
-    projection — no extra pass) and points the user at JSONL, which has
-    no such collision."""
-    cols = [F.when(F.col(f.name) == _NULL_SENTINEL,
-                   F.raise_error(F.lit(
-                       f"write_documents_csv: column {f.name!r} contains "
-                       f"the literal string {_NULL_SENTINEL!r}, which is "
-                       "this dialect's NULL sentinel and would read back "
-                       "as NULL. Use JSONL for this corpus.")))
-            .otherwise(F.col(f.name)).alias(f.name)
-            if f.dataType.simpleString() == "string" else F.col(f.name)
-            for f in df.schema.fields]
-    (df.select(cols).write.mode("error")
-     .option("header", str(header).lower())
-     .option("quote", '"').option("escape", '"')
-     .option("nullValue", _NULL_SENTINEL).csv(path))

@@ -198,69 +198,3 @@ def windowed_token_rate(stream_df: DataFrame, ts_col: str = "ts",
                  F.count("*").alias("docs"))
             .select(F.col("win.start").alias("win_start"), "source",
                     "tokens", "docs"))
-
-
-def consume_incremental(spark: SparkSession, table_dir: str,
-                        cursor_path: str, process) -> dict:
-    """One exactly-once-per-range pull of everything appended to an
-    encoded Iceberg table since the saved cursor — the CONSUMER half of
-    the exactly-once streaming/resumable sinks above: a downstream job
-    (tokenizer-count audit, export, training-shard builder) calls this
-    on its own schedule and only ever decodes what LANDED.
-
-    Protocol: read the snapshot cursor from ``cursor_path`` (absent =
-    never ran → the full table is the first range), plan the appended
-    files metadata-only (:func:`iceberg.incremental_files`), run
-    ``process(decoded_segments_df)`` — ``engine.decode(...,
-    reassemble=False)`` over ``iceberg.read_table(since_snapshot_id=)``,
-    one row per stored segment — and advance the cursor via atomic
-    tmp+rename ONLY after ``process`` returns.  A crash inside
-    ``process`` leaves the cursor untouched, so the next call replays
-    the SAME range — at-least-once delivery; ``process`` must be
-    idempotent per range (write to a keyed sink, or use the range's
-    ``to_snapshot`` id as its commit key, mirroring
-    :func:`commit_encoded_stream_batch`).  Non-append history in the
-    range raises (delete/overwrite/replace make added-files ≠ logical
-    diff): re-seed by deleting the cursor file and reprocessing a full
-    read.  Returns ``{"from_snapshot", "to_snapshot", "files",
-    "snapshots"}`` for the processed range (files == -1 on a first-run
-    full read)."""
-    import json
-    import os
-    import tempfile
-    from . import iceberg
-
-    meta = iceberg._metadata_or_none(table_dir)
-    if meta is None:
-        # producer has not created the table yet (the consumer runs on
-        # its own schedule) — caught-up no-op, mirroring
-        # committed_stream_batches
-        return {"from_snapshot": None, "to_snapshot": None,
-                "files": 0, "snapshots": 0}
-    to_id = meta["current-snapshot-id"]
-    cur = None
-    if Path(cursor_path).is_file():
-        cur = json.loads(Path(cursor_path).read_text())["snapshot-id"]
-    if cur == to_id or to_id == -1:   # nothing landed / empty table
-        return {"from_snapshot": cur, "to_snapshot": to_id,
-                "files": 0, "snapshots": 0}
-    if cur is None or cur == -1:   # never ran, or seeded on empty table
-        since = None
-        nfiles, nsnaps = -1, len(meta["snapshots"])
-    else:
-        since = cur
-        order = {s["snapshot-id"]: i
-                 for i, s in enumerate(meta["snapshots"])}
-        nfiles = len(iceberg.incremental_files(table_dir, cur, to_id))
-        nsnaps = order[to_id] - order[cur]
-    process(engine.decode(
-        iceberg.read_table(spark, table_dir, snapshot_id=to_id,
-                           since_snapshot_id=since),
-        reassemble=False))
-    fd, tmp = tempfile.mkstemp(dir=str(Path(cursor_path).parent),
-                               prefix=".cursor.")
-    with os.fdopen(fd, "w") as f:
-        json.dump({"snapshot-id": to_id, "table": table_dir}, f)
-    os.replace(tmp, cursor_path)
-    return {"from_snapshot": cur, "to_snapshot": to_id,
-            "files": nfiles, "snapshots": nsnaps}

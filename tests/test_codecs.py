@@ -12,7 +12,7 @@ import pytest
 from simdcomp_spark import codecs, kernels as K
 from simdcomp_spark.codecs import REGISTRY
 from simdcomp_spark.codecs import fsst
-from simdcomp_spark.codecs.auto import choose_codec
+from simdcomp_spark.codecs.auto import choose_codec_flat
 
 U32 = np.uint32
 RNG = np.random.default_rng(42)
@@ -58,19 +58,43 @@ def edge_batch(kind: str) -> list[np.ndarray]:
                     np.cumsum(EDGE_LENS)[:-1])
 
 
-def _assert_block_roundtrip(arrs, widths, inits, payloads, name):
-    n_toks = np.array([a.size for a in arrs])
-    back = codecs.get(name).decode_rows(n_toks, widths, inits, payloads)
-    for a, b in zip(arrs, back):
-        np.testing.assert_array_equal(a, b)
+def _flat(arrs):
+    """Rows → (flat uint32 buffer, row lengths): the codecs' input."""
+    lens = np.fromiter((a.size for a in arrs), np.int64, count=len(arrs))
+    if not arrs:
+        return np.zeros(0, U32), lens
+    return np.concatenate([np.asarray(a, U32) for a in arrs]), lens
+
+
+def _rows(flat, lens):
+    """A flat buffer cut back into its rows (bytes)."""
+    off = np.concatenate(([0], np.cumsum(lens)))
+    buf = flat.tobytes()
+    return [buf[off[r]:off[r + 1]] for r in range(lens.size)]
+
+
+def _encode_rows(codec, arrs):
+    """(widths, inits, payload) per row, from one encode_flat call."""
+    e = codec.encode_flat(*_flat(arrs))
+    return (_rows(e.widths, e.widths_lens), _rows(e.inits, e.inits_lens),
+            _rows(e.payload, e.payload_lens))
+
+
+def _assert_roundtrip(codec, arrs):
+    """decode_flat(encode_flat(rows)) gives back every row."""
+    flat, lens = _flat(arrs)
+    e = codec.encode_flat(flat, lens)
+    np.testing.assert_array_equal(
+        codec.decode_flat(lens, e.widths, e.widths_lens, e.inits,
+                          e.inits_lens, e.payload, e.payload_lens), flat)
 
 
 def test_block_batch_matches_single_array_kernels():
-    """bitpack encode_rows must byte-match simdpack_length applied per row
+    """bitpack's encoding must byte-match simdpack_length applied per row
     with per-block maxbits — i.e. the demo format of example.c minus the
     inline headers — and decode back to the input."""
     arrs = corpus() + edge_batch("mixed")
-    widths, inits, payloads = codecs.get("bitpack").encode_rows(arrs)
+    widths, inits, payloads = _encode_rows(codecs.get("bitpack"), arrs)
     for a, w, p in zip(arrs, widths, payloads):
         wid = np.frombuffer(w, dtype=np.uint8)
         expect = b""
@@ -81,12 +105,12 @@ def test_block_batch_matches_single_array_kernels():
             expect += K.simdpack_length(blk, b)
         assert p == expect
     assert 32 in b"".join(widths)
-    _assert_block_roundtrip(arrs, widths, inits, payloads, "bitpack")
+    _assert_roundtrip(codecs.get("bitpack"), arrs)
 
 
 def test_block_batch_for_matches_kernel():
     arrs = [a for a in corpus() if a.size] + edge_batch("mixed")
-    widths, inits, payloads = codecs.get("for").encode_rows(arrs)
+    widths, inits, payloads = _encode_rows(codecs.get("for"), arrs)
     for a, w, ini, p in zip(arrs, widths, inits, payloads):
         wid = np.frombuffer(w, dtype=np.uint8)
         bases = np.frombuffer(ini, dtype=U32)
@@ -102,7 +126,7 @@ def test_block_batch_for_matches_kernel():
                 expect += K.simdpackFOR_length(mn, blk, b)
         assert p == expect
     assert 32 in b"".join(widths)
-    _assert_block_roundtrip(arrs, widths, inits, payloads, "for")
+    _assert_roundtrip(codecs.get("for"), arrs)
 
 
 def test_block_batch_d1_matches_reference_chaining():
@@ -112,7 +136,7 @@ def test_block_batch_d1_matches_reference_chaining():
     the short layout over deltas, b==32 blocks hold the raw values."""
     a = np.cumsum(RNG.integers(0, 100, size=512, dtype=U32)).astype(U32)
     arrs = [a] + edge_batch("sorted") + edge_batch("mixed")
-    widths, inits, payloads = codecs.get("d1").encode_rows(arrs)
+    widths, inits, payloads = _encode_rows(codecs.get("d1"), arrs)
     for row, w, ini, p in zip(arrs, widths, inits, payloads):
         wid = np.frombuffer(w, np.uint8)
         ini = np.frombuffer(ini, U32)
@@ -133,26 +157,20 @@ def test_block_batch_d1_matches_reference_chaining():
             prev = int(blk[-1])
         assert p == expect
     assert 32 in b"".join(widths)
-    _assert_block_roundtrip(arrs, widths, inits, payloads, "d1")
+    _assert_roundtrip(codecs.get("d1"), arrs)
 
 
 @pytest.mark.parametrize("name", ["bitpack", "for", "d1", "rle", "dict"])
 def test_codec_roundtrip_corpus(name):
-    codec = REGISTRY[name]
-    arrs = corpus()
-    n_toks = np.array([a.size for a in arrs])
-    w, i, p = codec.encode_rows(arrs)
-    back = codec.decode_rows(n_toks, w, i, p)
-    for a, b in zip(arrs, back):
-        np.testing.assert_array_equal(a, b)
+    _assert_roundtrip(REGISTRY[name], corpus())
 
 
 @pytest.mark.parametrize("name", ["bitpack", "for", "d1", "rle", "dict"])
 def test_payload_sizes_exact(name):
     codec = REGISTRY[name]
     arrs = [a for a in corpus()]
-    sizes = codec.payload_sizes(arrs)
-    _, _, payloads = codec.encode_rows(arrs)
+    sizes = codec.payload_sizes_flat(*_flat(arrs))
+    _, _, payloads = _encode_rows(codec, arrs)
     np.testing.assert_array_equal(sizes, [len(p) for p in payloads])
 
 
@@ -160,7 +178,7 @@ def test_bitpack_size_is_reference_bound():
     """north rule: compressed size ≤ reference bits(max)-per-block packing.
     For the bitpack codec it's exactly equal; the selector can only improve."""
     arrs = [a for a in corpus() if a.size]
-    _, _, payloads = codecs.get("bitpack").encode_rows(arrs)
+    _, _, payloads = _encode_rows(codecs.get("bitpack"), arrs)
     for a, p in zip(arrs, payloads):
         bound = sum(K.compressed_bytes(min(128, a.size - i), K.maxbits(a[i:i + 128]))
                     for i in range(0, a.size, 128))
@@ -170,27 +188,27 @@ def test_bitpack_size_is_reference_bound():
 def test_auto_selector_prefers_sensible_codecs():
     sorted_rows = [np.cumsum(RNG.integers(0, 4, size=1000, dtype=U32)).astype(U32)
                    for _ in range(8)]
-    name, costs = choose_codec(sorted_rows)
+    name, costs = choose_codec_flat(*_flat(sorted_rows))
     assert name == "d1", costs
     const_rows = [np.repeat(U32(7), 5000) for _ in range(8)]
-    name, costs = choose_codec(const_rows)
+    name, costs = choose_codec_flat(*_flat(const_rows))
     # a 1-entry dict (codes at 0 bits) is even cheaper than RLE here
     assert name in ("rle", "dict") and costs[name] < costs["bitpack"], costs
     run_rows = [np.repeat(RNG.integers(0, 2**30, size=100, dtype=U32),
                           RNG.integers(40, 60, size=100)) for _ in range(8)]
-    name, costs = choose_codec(run_rows)
+    name, costs = choose_codec_flat(*_flat(run_rows))
     assert name == "rle", costs
     shifted = [U32(1 << 30) + RNG.integers(0, 16, size=1000).astype(U32)
                for _ in range(8)]
-    name, costs = choose_codec(shifted)
+    name, costs = choose_codec_flat(*_flat(shifted))
     assert name in ("for", "d1"), costs
     random_rows = [RNG.integers(0, 50257, size=1000, dtype=U32) for _ in range(8)]
-    name, costs = choose_codec(random_rows)
+    name, costs = choose_codec_flat(*_flat(random_rows))
     assert name in ("bitpack", "for"), costs
     # every candidate's predicted bytes must be achievable (≥ actual is a bug)
     for codec_name, predicted in costs.items():
         codec = REGISTRY[codec_name]
-        w, i, p = codec.encode_rows(random_rows)
+        w, i, p = _encode_rows(codec, random_rows)
         actual = sum(len(x) for x in p)
         assert predicted >= actual  # prediction includes metadata overhead
 
@@ -198,15 +216,19 @@ def test_auto_selector_prefers_sensible_codecs():
 def test_fsst_roundtrip():
     strings = [f"doc_{i:08d}_common_prefix_{i % 7}".encode() for i in range(200)]
     strings += [b"", b"x", b"\xff\x00\xfe escape bytes \xff\xff"]
-    table, encs = fsst.encode_batch(strings)
-    back = fsst.decode_batch(encs, table)
+    flat = np.frombuffer(b"".join(strings), np.uint8)
+    lens = np.fromiter(map(len, strings), np.int64, count=len(strings))
+    table = fsst.SymbolTable(fsst.train(strings))
+    codes, code_lens = table.encode_flat(flat, lens)
+    encs = _rows(codes, code_lens)
+    back = _rows(*table.decode_flat(codes, code_lens))
     assert back == strings
     # compresses the redundant corpus
     assert sum(map(len, encs)) < sum(map(len, strings))
     # table survives serialization
     t2 = fsst.SymbolTable.deserialize(table.serialize())
-    assert fsst.decode_batch(encs, t2) == strings
-    assert [t2.encode(s) for s in strings] == encs
+    assert _rows(*t2.decode_flat(codes, code_lens)) == strings
+    assert _rows(*t2.encode_flat(flat, lens)) == encs
 
 
 FSST_GOLDEN = Path(__file__).parent / "golden" / "fsst_golden.json"

@@ -10,8 +10,14 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from simdcomp_spark import engine, fixtures, manifest
+from simdcomp_spark import engine, fixtures, iceberg, manifest
 from simdcomp_spark import kernels as K
+
+
+def _ingested(table: str) -> set[str]:
+    """The input files the table's resume lineage records as ingested."""
+    return iceberg._lineage(
+        iceberg._metadata_or_none(table))["simdcomp-input-files"]
 
 
 @pytest.fixture(scope="module")
@@ -187,7 +193,7 @@ def test_encode_files_resumable_iceberg_crash_resume(spark, unit_df,
             spark, src, table, codec="bitpack", batch_files=3)
     monkeypatch.setattr(iceberg, "_avro_write", orig)
 
-    assert len(manifest.completed_input_files_iceberg(table)) == 3
+    assert len(_ingested(table)) == 3
     s2 = manifest.encode_files_resumable_iceberg(
         spark, src, table, codec="bitpack", batch_files=3)
     assert s2["skipped"] == 3 and s2["encoded_files"] == 3
@@ -491,6 +497,49 @@ def test_input_files_skip_hidden_and_temporary(spark, tmp_path):
         os.path.getsize(src / "part-0.parquet")
     got = engine.decode(engine.encode_files(spark, str(src)))
     assert {r["doc_id"]: r["tokens"] for r in got.collect()} == truth
+
+
+def test_encode_files_int64_tokens_roundtrip(spark, tmp_path):
+    """pyarrow writes Python-int token lists as list<int64>; encode_files
+    over such a file decodes to exactly the values written, not to their
+    int32 halves."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "in"
+    src.mkdir()
+    rng = np.random.default_rng(3)
+    truth = {f"d{i}": [int(x) for x in rng.integers(
+        -2**31, 2**31, int(rng.integers(0, 400)))] for i in range(40)}
+    truth["big"] = list(range(70_000))
+    pq.write_table(pa.table({"doc_id": list(truth), "source": ["s"] * 41,
+                             "tokens": list(truth.values())}),
+                   src / "part-0.parquet")
+    assert pq.read_schema(src / "part-0.parquet").field("tokens").type == \
+        pa.list_(pa.int64())
+    dec = engine.decode(engine.encode_files(spark, str(src)))
+    assert {r["doc_id"]: r["tokens"] for r in dec.collect()} == truth
+
+
+def test_encode_files_refuses_missing_or_empty_input(spark, unit_df,
+                                                     tmp_path):
+    """A path that does not exist, or a directory with no data file,
+    raises (as spark.read.parquet does) instead of encoding nothing; an
+    Iceberg snapshot with no live file is a legal empty input."""
+    missing = str(tmp_path / "no_such_dir")
+    with pytest.raises(FileNotFoundError, match="no_such_dir"):
+        engine.encode_files(spark, missing)
+    empty = tmp_path / "empty"
+    (empty / "_temporary").mkdir(parents=True)
+    (empty / "_temporary" / "part-0.parquet").write_bytes(b"")
+    (empty / "notes.txt").write_text("no data here")
+    with pytest.raises(ValueError, match="directory holding parquet"):
+        engine.encode_files(spark, str(empty))
+    table = str(tmp_path / "tok_table")
+    cols = ["doc_id", "source", "n_tok", "tokens"]
+    iceberg.export_encoded(unit_df.select(*cols).limit(0), table)
+    assert iceberg.data_files(table) == []
+    assert engine.encode_files(spark, table).count() == 0
 
 
 def test_point_lookup_all_codecs(spark, unit_df):
@@ -801,7 +850,7 @@ def test_verify_rolls_back_corrupt_batch(spark, unit_df, tmp_path,
     monkeypatch.setattr(engine, "verify_roundtrip", real)
 
     # batch 1 committed and verified; batch 2 rolled back with its lineage
-    assert len(manifest.completed_input_files_iceberg(table)) == 2
+    assert len(_ingested(table)) == 2
     n_after_rollback = iceberg.read_table(spark, table).count()
     s = manifest.encode_files_resumable_iceberg(
         spark, src, table, codec="bitpack", verify=True)

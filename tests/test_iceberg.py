@@ -1100,41 +1100,6 @@ def test_incremental_files_refuses_non_append_history(spark, tmp_path):
         iceberg.incremental_files(t, s2, to_snapshot_id=s1)
 
 
-def test_consume_incremental_cursor_protocol(spark, tmp_path):
-    """streaming.consume_incremental: first call processes the full
-    table and seeds the cursor; later calls decode ONLY what landed; a
-    crash inside process leaves the cursor untouched (same range
-    replays); caught-up calls are no-ops that never invoke process."""
-    from simdcomp_spark import streaming
-
-    t = str(tmp_path / "t")
-    cur = str(tmp_path / "cursor.json")
-    enc = lambda df: engine.encode(df, codec="bitpack",  # noqa: E731
-                                   split_threshold=None)
-    iceberg.export_encoded(enc(_docs(spark, 0, 6)), t)
-    got = []
-
-    def grab(df):
-        got.append(sorted(r["doc_id"] for r in
-                          df.select("doc_id").collect()))
-
-    r1 = streaming.consume_incremental(spark, t, cur, grab)
-    assert r1["files"] == -1 and got[-1] == [f"d{i:03d}" for i in range(6)]
-    # caught up: no-op, process NOT called
-    assert streaming.consume_incremental(spark, t, cur, grab)["files"] == 0
-    assert len(got) == 1
-    iceberg.append(enc(_docs(spark, 6, 9)), t)
-    # crash inside process: cursor must not advance
-    with pytest.raises(RuntimeError, match="boom"):
-        streaming.consume_incremental(
-            spark, t, cur, lambda df: (_ for _ in ()).throw(
-                RuntimeError("boom")))
-    r2 = streaming.consume_incremental(spark, t, cur, grab)
-    assert r2["snapshots"] == 1 and r2["files"] >= 1
-    assert got[-1] == ["d006", "d007", "d008"]
-    assert streaming.consume_incremental(spark, t, cur, grab)["files"] == 0
-
-
 def test_rewrite_manifests_consolidates_append_history(spark, tmp_path):
     """One manifest per append (the streaming-sink shape) collapses to
     ceil(files/target) via a METADATA-ONLY replace commit: data files
@@ -1285,7 +1250,7 @@ def test_expire_folds_lineage_in_the_stored_format(tmp_path):
     JSON lists (sorted, merged with the ids folded earlier), scalars into
     the property of the same key, and the resume readers union the folded
     ids with the live summaries."""
-    from simdcomp_spark import manifest, streaming
+    from simdcomp_spark import streaming
     table = tmp_path / "t"
     (table / "metadata").mkdir(parents=True)
 
@@ -1318,7 +1283,8 @@ def test_expire_folds_lineage_in_the_stored_format(tmp_path):
             '["a.parquet", "b.parquet", "c.parquet"]',
         "simdcomp-stream-batches-expired": "[1, 2]",
         "simdcomp-stream-query": "q1"}
-    assert manifest.completed_input_files_iceberg(str(table)) == \
+    assert iceberg._lineage(iceberg._metadata_or_none(str(table)))[
+        "simdcomp-input-files"] == \
         {"a.parquet", "b.parquet", "c.parquet", "d.parquet"}
     assert streaming.committed_stream_batches(str(table)) == \
         ({0, 1, 2}, "q1")

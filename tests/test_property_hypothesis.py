@@ -74,10 +74,10 @@ def test_fsst_roundtrip_property(seed, nrows):
         b = rng.integers(0, 256, size=n, dtype=np.uint8)
         b[rng.random(n) < 0.05] = 255
         docs.append(bytes(b))
-    table, encs = fsst.encode_batch(docs)
-    assert fsst.decode_batch(encs, table) == docs
-    row_lens = np.fromiter(map(len, encs), np.int64, count=len(encs))
-    codes = np.frombuffer(b"".join(encs), np.uint8)
+    table = fsst.SymbolTable(fsst.train(docs))
+    codes, row_lens = table.encode_flat(
+        np.frombuffer(b"".join(docs), np.uint8),
+        np.fromiter(map(len, docs), np.int64, count=len(docs)))
     flat, out_lens = table.decode_flat(codes, row_lens)
     offs = np.concatenate(([0], np.cumsum(out_lens)))
     buf = flat.tobytes()
