@@ -9,6 +9,7 @@ Python object for any codec.
 
 from __future__ import annotations
 
+import abc
 from dataclasses import dataclass
 
 import numpy as np
@@ -27,28 +28,30 @@ class FlatEncoded:
     payload_lens: np.ndarray  # int64 per row
 
 
-class Codec:
+class Codec(abc.ABC):
     """Abstract lightweight-compression codec over uint32 token rows."""
 
     name: str = "?"
     _per_block_overhead = 1  # metadata bytes per 128-block (cost model)
 
+    @abc.abstractmethod
     def encode_flat(self, flat: np.ndarray, lens: np.ndarray) -> FlatEncoded:
-        raise NotImplementedError
+        ...
 
+    @abc.abstractmethod
     def decode_flat(self, lens: np.ndarray,
                     widths: np.ndarray, widths_lens: np.ndarray,
                     inits: np.ndarray, inits_lens: np.ndarray,
                     payload: np.ndarray, payload_lens: np.ndarray
                     ) -> np.ndarray:
         """Returns the flat uint32 token buffer (offsets = cumsum(lens))."""
-        raise NotImplementedError
 
+    @abc.abstractmethod
     def payload_sizes_flat(self, flat: np.ndarray, lens: np.ndarray
                            ) -> np.ndarray:
         """Exact per-row payload bytes without materializing the encode
-        (cost-model input).  Default: encode and measure."""
-        return self.encode_flat(flat, lens).payload_lens
+        (cost-model input)."""
+
 
 def place_rows(out: np.ndarray, dst_off: np.ndarray, src: np.ndarray,
                lens: np.ndarray) -> None:

@@ -84,6 +84,11 @@ _CONTAINS_SCHEMA = _schema("doc_id string, seg_id int")
 _MINMAX_SCHEMA = _schema(
     "doc_id string, seg_id int, n_tok int, min_tok int, max_tok int")
 _HASH_SCHEMA = _schema("doc_id string, seg_id int, h string")
+# the columns every reader of encoded rows projects (decode adds source
+# second), with one selectExpr: one py4j call, where select(*names) makes
+# one per name.  Its columns 2-6 are what _EncodedBatch.from_columns takes
+ENCODED_COLS = ("doc_id", "seg_id", "n_tok", "codec", "widths", "inits",
+                "payload")
 
 DEFAULT_SPLIT_THRESHOLD = 1 << 16  # tokens per segment
 # encode(split_threshold=None): a Spark array holds at most 2**31 - 1
@@ -637,12 +642,11 @@ def encode_files(spark: SparkSession, path: str, codec: str = "auto",
     batches (``_ENCODE_BATCH_ROWS``).
 
     ``iceberg.export_encoded`` / ``append`` of the returned frame itself
-    — uncached, to an unpartitioned table — runs this encoder inside the
-    Iceberg writer's task (``_ENCODE_PLANS``): an ingest pass is one job,
-    one stage and one Python worker per task.  A cached frame is
-    written from its cache, and a frame derived from this one (or a
-    partitioned write) keeps the encoder and the writer as two stacked
-    ``mapInArrow`` stages."""
+    — uncached, to any table — runs this encoder inside the Iceberg
+    writer's task (``_ENCODE_PLANS``): an ingest pass is one job, one
+    stage and one Python worker per task.  A cached frame is written
+    from its cache, and a frame derived from this one keeps the encoder
+    and the writer as two stacked ``mapInArrow`` stages."""
     import pyarrow.parquet as pq
 
     from . import iceberg
@@ -756,9 +760,9 @@ def decode(df_encoded: DataFrame, reassemble: bool = True) -> DataFrame:
     over the already-ordered flat decode buffer, a null doc_id raises
     ``ValueError`` (it names no document to stitch into), and the result
     is lazy: calling ``decode`` starts no Spark job."""
-    cols = ["doc_id", "source", "seg_id", "n_tok", "codec", "widths",
-            "inits", "payload"]
-    src = df_encoded.select(*cols)
+    # source in its stored place: a reordered projection would copy
+    # every row in a Project before the stitch
+    src = df_encoded.selectExpr("doc_id", "source", *ENCODED_COLS[1:])
     if reassemble:
         if df_encoded in _WHOLE_RUN_SCANS:
             return _stitch(src, whole_runs=True)
@@ -919,9 +923,8 @@ def point_lookup(df_encoded: DataFrame, index_col: str = "lookup_idx"
     src/simdpackedselect.c:8096).  Non-block codecs fall back to row decode.
     Returns (doc_id, seg_id, idx, val)."""
 
-    cols = ["doc_id", "seg_id", "n_tok", "codec", "widths", "inits",
-            "payload", index_col]
-    src = df_encoded.select(*cols)
+    src = df_encoded.selectExpr(
+        *ENCODED_COLS, "`" + index_col.replace("`", "``") + "`")
 
     def fn(it):
         for batch in it:
@@ -952,8 +955,7 @@ def search_sorted(df_encoded: DataFrame, key: int) -> DataFrame:
     decoded per row, batched per (width, block-length) group; other
     codecs raise a ValueError.  Returns (doc_id, seg_id, n_tok, idx) with
     idx == n_tok when every value < key."""
-    cols = ["doc_id", "seg_id", "n_tok", "codec", "widths", "inits", "payload"]
-    src = df_encoded.select(*cols)
+    src = df_encoded.selectExpr(*ENCODED_COLS)
 
     def fn(it):
         for batch in it:
@@ -974,9 +976,7 @@ def range_count(df_encoded: DataFrame, lo: int, hi: int) -> DataFrame:
     (count = lower_bound(hi) - lower_bound(lo)) in ONE narrow pass — at
     most two blocks touched per row, one scan, no join/shuffle.
     Returns (doc_id, seg_id, n_tok, n_in_range)."""
-    cols = ["doc_id", "seg_id", "n_tok", "codec", "widths", "inits",
-            "payload"]
-    src = df_encoded.select(*cols)
+    src = df_encoded.selectExpr(*ENCODED_COLS)
 
     def fn(it):
         for batch in it:
@@ -1024,9 +1024,7 @@ def contains_token(df_encoded: DataFrame,
         dtype=np.int64))
     if probes.size == 0:
         raise ValueError("contains_token: empty probe set")
-    cols = ["doc_id", "seg_id", "n_tok", "codec", "widths", "inits",
-            "payload"]
-    src = df_encoded.select(*cols)
+    src = df_encoded.selectExpr(*ENCODED_COLS)
 
     def fn(it):
         for batch in it:
@@ -1098,9 +1096,7 @@ def minmax_sorted(df_encoded: DataFrame) -> DataFrame:
     on zone-map probes instead of a scan.  Works for the d1 and FOR
     families (sorted rows); other codecs raise a ValueError.  Returns (doc_id, seg_id, n_tok, min_tok,
     max_tok); empty rows are dropped."""
-    cols = ["doc_id", "seg_id", "n_tok", "codec", "widths", "inits",
-            "payload"]
-    src = df_encoded.select(*cols)
+    src = df_encoded.selectExpr(*ENCODED_COLS)
 
     def fn(it):
         for batch in it:
@@ -1175,8 +1171,7 @@ def _strong_content_hash(cand: DataFrame) -> DataFrame:
     :func:`_doc_signatures`, run on candidate documents only, so its one
     non-vectorized step (hashlib, ~1.5 GB/s/core) scales with the
     duplicate candidates, not the table."""
-    src = cand.select("doc_id", "seg_id", "n_tok", "codec", "widths",
-                      "inits", "payload")
+    src = cand.selectExpr(*ENCODED_COLS)
 
     def fn(it):
         for batch in it:

@@ -67,10 +67,11 @@ parquet files and returns one small row per file — path, record count,
 size, column bounds from the file's own footer, partition values — so a
 write is ONE Spark job, and the Spark driver builds the manifest from
 the collected rows without opening a data file.  Writing the exact,
-uncached frame ``engine.encode_files`` or ``engine.encode`` returned to
-an unpartitioned table is also ONE Python stage: the writer runs the
+uncached frame ``engine.encode_files`` or ``engine.encode`` returned is
+also ONE Python stage, whatever the partition spec: the writer runs the
 encoder in its own task, on the encoder's input, so encoded rows never
-cross into the JVM and back.
+cross into the JVM and back, and the task computes each row's partition
+values itself (:func:`_transform_values`).
 
 The reference engine has no table notion at all (README.md:23-24 "does
 not define a compressed format"); this is the storage layer the north
@@ -94,6 +95,7 @@ from typing import NamedTuple
 import numpy as np
 
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -479,37 +481,34 @@ def _write_data_files(df: DataFrame, out_dir: str, schema: dict,
 
     ``schema`` is an Iceberg struct whose fields name ``df``'s columns;
     each column (and a list's element) carries its field id in the
-    parquet footer.  ``spec``'s fields are computed as
-    ``_p_<name>`` columns (:func:`_spec_partition_exprs`); each task
-    splits its rows by them into one file per partition value and drops
-    them from the file.  A failed task removes the files it wrote; the
-    Spark driver commits only what the job returned.
+    parquet footer.  The Spark driver resolves ``spec`` into one
+    ``(field name, source column, transform, param, source type)`` per
+    partition field; each task computes every field's value from its
+    source column (:func:`_transform_values`) and splits its rows by them
+    into one file per partition value.  A failed task removes the files
+    it wrote; the Spark driver commits only what the job returned.
 
     When ``df`` is the exact frame ``engine.encode_files`` or
     ``engine.encode`` returned (``engine._ENCODE_PLANS``), the write is
     fused: one ``mapInArrow`` over the encoder's input, each task feeding
     the encoder's batches as they come straight into :func:`_write_task`
     — one Python worker per task instead of two, the same files (a row
-    group's pages depend only on its rows, not on their batching).
-    Three frames keep the two-stage plan: a cached one (it must be
-    written from its cache, never re-encoded: its input may be gone), a
-    derived one (its rows are no longer the encoder's), and any write to
-    a partitioned spec (the ``_p_`` columns are Spark expressions over
-    the encoded rows)."""
-    parts = _spec_partition_exprs(spec, schema)
-    fused = (None if parts or df.is_cached
-             else engine._ENCODE_PLANS.get(df))
-    for name, expr in parts:
-        df = df.withColumn(f"_p_{name}", expr)
+    group's pages depend only on its rows, not on their batching), for
+    any spec.  Two frames keep the two-stage plan: a cached one (it must
+    be written from its cache, never re-encoded: its input may be gone)
+    and a derived one (its rows are no longer the encoder's)."""
+    by_id = {f["id"]: f for f in schema["fields"]}
+    parts = [(pf["name"], by_id[pf["source-id"]]["name"], *_transform_of(pf),
+              by_id[pf["source-id"]]["type"]) for pf in spec["fields"]]
+    fused = None if df.is_cached else engine._ENCODE_PLANS.get(df)
     ids = {f["name"]: (f["id"], f["type"].get("element-id")
                        if isinstance(f["type"], dict) else None)
            for f in schema["fields"]}
     Path(out_dir).mkdir(parents=True)
-    names = [n for n, _ in parts]
     df, rows_of = fused or (df, lambda it: it)
 
     def write_fn(it):
-        return _write_task(rows_of(it), out_dir, names, ids)
+        return _write_task(rows_of(it), out_dir, parts, ids)
 
     return sorted(({**r.asDict(), "bounds": json.loads(r["bounds"]),
                     "partition": json.loads(r["partition"])}
@@ -534,19 +533,18 @@ def _with_field_ids(schema: pa.Schema, ids: dict) -> pa.Schema:
     return pa.schema(out)
 
 
-def _split_partitions(batch: pa.RecordBatch, names: list[str]):
-    """Yield (partition values, rows) of ``batch`` per distinct value of
-    its ``_p_<name>`` columns, rows in arrival order, the ``_p_`` columns
-    dropped."""
-    if not names:
+def _split_partitions(batch: pa.RecordBatch, parts: list[tuple]):
+    """Yield (partition values, rows) of ``batch`` per distinct tuple of
+    its ``parts``' transformed values (:func:`_write_data_files`), rows
+    in arrival order."""
+    if not parts:
         yield (), batch
         return
-    pcols = [f"_p_{n}" for n in names]
-    data = batch.drop_columns(pcols)
     code = np.zeros(batch.num_rows, np.int64)
     values, codes = [], []
-    for c in pcols:
-        enc = batch.column(c).dictionary_encode(null_encoding="encode")
+    for _, src, tname, param, src_type in parts:
+        enc = _transform_values(batch.column(src), tname, param, src_type
+                                ).dictionary_encode(null_encoding="encode")
         ix = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
         values.append(enc.dictionary.to_pylist())
         codes.append(ix)
@@ -555,7 +553,7 @@ def _split_partitions(batch: pa.RecordBatch, names: list[str]):
     for u in range(uniq.size):
         rows = np.flatnonzero(inv == u)
         key = tuple(v[ix[rows[0]]] for v, ix in zip(values, codes))
-        yield key, (data if uniq.size == 1 else data.take(rows))
+        yield key, (batch if uniq.size == 1 else batch.take(rows))
 
 
 def _footer_stats(md) -> dict:
@@ -628,7 +626,7 @@ class _RunCheck:
         self.open_id, self.open_len = None, 0
 
 
-def _write_task(batches, out_dir: str, names: list[str], ids: dict):
+def _write_task(batches, out_dir: str, parts: list[tuple], ids: dict):
     """Task side of :func:`_write_data_files`: stream ``batches`` into one
     snappy ``ParquetWriter`` per partition value, flushing a row group
     whenever ``_ROW_GROUP_BYTES`` of Arrow data is buffered, then yield
@@ -653,7 +651,7 @@ def _write_task(batches, out_dir: str, names: list[str], ids: dict):
 
     try:
         for batch in batches:
-            for key, rows in _split_partitions(batch, names):
+            for key, rows in _split_partitions(batch, parts):
                 if rows.num_rows == 0:
                     continue
                 if key not in files:
@@ -673,6 +671,7 @@ def _write_task(batches, out_dir: str, names: list[str], ids: dict):
             w.close()
         out = {c: [] for c in ("path", "rows", "bytes", "bounds",
                                "partition", "whole_runs")}
+        names = [p[0] for p in parts]
         for key, (path, _, _, check) in files.items():
             md = pq.read_metadata(path)
             out["path"].append(path)
@@ -892,17 +891,32 @@ def _murmur3_32_long_vec(v: np.ndarray) -> np.ndarray:
     return h ^ (h >> u32(16))
 
 
-def bucket_value(value, src_type: str, n: int) -> int | None:
-    """``bucket[n]`` of one value: (murmur3 & Int.MAX) % n, per spec."""
-    if value is None:
-        return None
-    if src_type in ("int", "long"):
-        h = murmur3_32(int(value).to_bytes(8, "little", signed=True))
-    elif src_type == "string":
-        h = murmur3_32(str(value).encode("utf-8"))
+def _transform_values(values: pa.Array, tname: str, param: int | None,
+                      src_type: str) -> pa.Array:
+    """The spec's partition transform ``tname[param]`` of every value, null
+    to null: identity is ``values``; truncate[W] is v − floorMod(v, W) on
+    int/long and the first W code points of a string; bucket[N] is
+    (murmur3 & Int.MAX) % N, ints hashed as longs so int and long
+    agree."""
+    if tname == "identity":
+        return values
+    if tname == "truncate" and src_type == "string":
+        return pc.utf8_slice_codeunits(values, 0, param)
+    nulls = (values.is_null().to_numpy(zero_copy_only=False)
+             if values.null_count else None)
+    if src_type == "string":
+        h = np.array([0 if v is None else murmur3_32(v.encode("utf-8"))
+                      for v in values.to_pylist()], np.uint32)
+    elif src_type in ("int", "long"):
+        v = values.fill_null(0).to_numpy(zero_copy_only=False) \
+            .astype(np.int64)
+        if tname == "truncate":
+            return pa.array(v - np.mod(v, param), mask=nulls)
+        h = _murmur3_32_long_vec(v)
     else:
-        raise NotImplementedError(f"bucket over {src_type!r}")
-    return (h & 0x7FFFFFFF) % n
+        raise NotImplementedError(f"{tname} over {src_type!r}")
+    return pa.array(((h & np.uint32(0x7FFFFFFF)) % np.uint32(param))
+                    .astype(np.int32), mask=nulls)
 
 
 _PARTITION_BY_RE = re.compile(
@@ -933,66 +947,6 @@ def _transform_of(pf: dict) -> tuple[str, int | None]:
     return m.group(1), int(m.group(2))
 
 
-def _transform_column(tname: str, param: int | None, src_col: str,
-                      src_type: str):
-    """Spark Column computing a transform of ``src_col`` — identity and
-    truncate are pure JVM expressions; bucket is a vectorized
-    (Arrow-batched) pandas UDF over the numpy murmur3 kernel for
-    int/long, per-value for string."""
-    if tname == "identity":
-        return F.col(src_col)
-    if tname == "truncate":
-        if src_type in ("int", "long"):
-            # spec: v - floorMod(v, W) — exact on negatives via pmod
-            return (F.col(src_col)
-                    - F.pmod(F.col(src_col), F.lit(int(param)))
-                    ).cast("int" if src_type == "int" else "long")
-        if src_type == "string":
-            return F.substring(F.col(src_col), 1, int(param))
-        raise NotImplementedError(f"truncate over {src_type!r}")
-    if tname == "bucket":
-        import pandas as pd_
-
-        if src_type in ("int", "long"):
-            def _b(s):
-                mask = s.isna()
-                vals = s.fillna(0).to_numpy(dtype="int64")
-                out = ((_murmur3_32_long_vec(vals)
-                        & np.uint32(0x7FFFFFFF))
-                       % np.uint32(int(param))).astype("int32")
-                res = pd_.Series(out, index=s.index, dtype="Int32")
-                res[mask] = None
-                return res
-        elif src_type == "string":
-            def _b(s):
-                return s.map(lambda v: None if v is None else
-                             bucket_value(v, "string", int(param))
-                             ).astype("Int32")
-        else:
-            raise NotImplementedError(f"bucket over {src_type!r}")
-        # real class objects, not string annotations — `from __future__
-        # import annotations` strings don't resolve inside pyspark's
-        # type-hint inference when pandas is imported locally
-        _b.__annotations__ = {"s": pd_.Series, "return": pd_.Series}
-        return F.pandas_udf(_b, "int")(F.col(src_col))
-    raise NotImplementedError(tname)
-
-
-def _spec_partition_exprs(spec: dict, schema: dict) -> list[tuple[str, object]]:
-    """[(partition field name, Spark Column)] computing every spec
-    field's transform from the table schema — the single source for the
-    physical ``partitionBy`` layout in append/export AND compaction."""
-    by_id = {f["id"]: f for f in schema["fields"]}
-    out = []
-    for pf in spec["fields"]:
-        tname, param = _transform_of(pf)
-        src = by_id[pf["source-id"]]
-        out.append((pf["name"],
-                    _transform_column(tname, param, src["name"],
-                                      src["type"])))
-    return out
-
-
 def _write_snapshot(table_dir: str, df: DataFrame,
                     base: tuple[int, dict] | None,
                     operation: str = "append",
@@ -1008,13 +962,14 @@ def _write_snapshot(table_dir: str, df: DataFrame,
     previous snapshots' files become dead in it but remain readable by
     time travel).
 
-    ``partition_by`` (new tables only) writes an identity partition spec
-    on that column: data files are physically split per value (by a
-    computed ``_p_<col>`` column the writer drops, so the column itself
-    STAYS in the data files as Iceberg requires), each manifest entry
-    carries the file's partition struct, and :func:`prune_files` prunes
-    on it from the spec alone — no bounds read.  Appends to a partitioned
-    table inherit the table's spec automatically."""
+    ``partition_by`` (new tables only) writes a one-field partition spec:
+    ``col`` (identity), ``bucket(N, col)`` or ``truncate(W, col)``.  Each
+    writer task computes the field's value per row and splits its files
+    by it (the source column itself STAYS in the data files, as Iceberg
+    requires); each manifest entry carries the file's partition struct,
+    and :func:`prune_files` prunes on it from the spec alone — no bounds
+    read.  Appends to a partitioned table inherit the table's spec
+    automatically."""
     table_dir = str(table_dir)
     mdir = _meta_dir(table_dir)
     mdir.mkdir(parents=True, exist_ok=True)
@@ -1591,7 +1546,8 @@ def prune_files(table_dir: str, col: str, lo=None, hi=None,
     tname = param = None
     if part_field is not None:
         tname, param = _transform_of(part_field)
-        bucket_eq = (bucket_value(lo, ftype, param)
+        bucket_eq = (_transform_values(pa.array([lo]), tname, param,
+                                       ftype)[0].as_py()
                      if tname == "bucket" and lo is not None
                      and lo == hi else None)
     out = []

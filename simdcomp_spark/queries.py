@@ -226,12 +226,11 @@ def _maxbits_of_widths(enc: DataFrame, key_name: str,
     Arrow batch, no Python loop over rows."""
     import pyarrow as pa_
     import pyarrow.compute as pc
-    src = enc.select("doc_id", "n_tok", "codec", "widths", "inits",
-                     "payload")
+    src = enc.selectExpr(*engine.ENCODED_COLS)
 
     def f(it):
         for batch in it:
-            eb = engine._EncodedBatch.from_columns(*batch.columns[1:6])
+            eb = engine._EncodedBatch.from_columns(*batch.columns[2:7])
             wl = eb.widths_lens
             mb = np.zeros(wl.size, dtype=np.int64)
             nz = wl > 0
@@ -434,12 +433,11 @@ def _fastset_shim(enc, last_element: bool = False):
     (engine._EncodedBatch), no per-row bytes materialization."""
     import pyarrow as pa_
     import pyarrow.compute as pc
-    src = enc.select("doc_id", "n_tok", "codec", "widths", "inits",
-                     "payload")
+    src = enc.selectExpr(*engine.ENCODED_COLS)
 
     def f(it):
         for batch in it:
-            eb = engine._EncodedBatch.from_columns(*batch.columns[1:6])
+            eb = engine._EncodedBatch.from_columns(*batch.columns[2:7])
             n = eb.n_tok
             eb.payload = eb.payload.copy()        # in-place write target
             starts = np.cumsum(eb.payload_lens) - eb.payload_lens
@@ -1117,88 +1115,40 @@ def q_ann_lsh(spark, sf_dir):
     return similarity.ann_topk_lsh(df, qvec, k=10, bits=12, probe_hamming=2)
 
 
-# bump when the IVF build algorithm or the recall metric changes
-_IVF_VERSION = "v4-philox-keyed"
-
-
 def q_ann_ivf(spark, sf_dir):
-    """IVF-bucketed ANN over a PREBUILT index: ivf_build writes the table
-    partitioned by ivf_cell once (offline step, cached across gate runs);
-    the query path reads only the nprobe nearest cells — the probe filter
-    is storage-level partition pruning, no per-query full-table work."""
-    import hashlib
+    """IVF-bucketed ANN over a prebuilt index: ivf_build writes the table
+    partitioned by ivf_cell under the run's own scratch directory (cleared
+    first, so every run builds it); the query path reads only the nprobe
+    nearest cells — the probe filter is storage-level partition pruning,
+    no per-query full-table work."""
     import os
-    import tempfile
-    from pathlib import Path
     df = _t(spark, sf_dir, "embeddings")
-    # tag includes the source data identity (file names + sizes + mtimes,
-    # recursing into parquet directories), so a regenerated fixture or a
-    # stale index from an earlier session can never be served: the cache
-    # key changes with the data.  Non-local sf_dir forms (file:/, hdfs:/)
-    # aren't os.stat-able — fall back to a path-only tag (no caching
-    # guarantee beyond path identity, still correct: ivf_build just reruns).
-    src = f"{sf_dir}/embeddings.parquet"
-    try:
-        if os.path.isdir(src):
-            ident = repr(sorted(
-                (str(p.relative_to(src)), p.stat().st_size,
-                 p.stat().st_mtime_ns)
-                for p in Path(src).rglob("*") if p.is_file()))
-        else:
-            st = os.stat(src)
-            ident = f"{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        ident = ""
-    # _IVF_VERSION keys the cache to the ALGORITHM as well as the data:
-    # without it, an index built by an older k-means (or a recall file
-    # from the older single-query metric) would be served and reported
-    # as the new algorithm's number
-    tag = hashlib.sha1(
-        f"{_IVF_VERSION}:{src}:{ident}".encode()).hexdigest()[:10]
-    path = os.path.join(tempfile.gettempdir(), f"simdcomp_ivf_{tag}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        similarity.ivf_build(df, path, n_clusters=16)
+    path = os.path.join(_stream_tmp(sf_dir, "ivf"), "index")
+    similarity.ivf_build(df, path, n_clusters=16)
     qvec = [float(x) for x in
             df.where(F.col("vec_id") == 0).select("embedding").first()[0]]
     # quantify the approximation instead of emitting an unmeasured top-k:
-    # recall@10 vs the exact answer rides along as a column.  It is
-    # measured ONCE per index build — averaged over 16 query vectors (a
-    # single query's recall has 0.1 granularity and is mostly noise) —
-    # and cached next to the index: the exact scans it requires belong to
-    # the amortized offline step, not the per-query path the bench times
-    # (the indexed probe must not pay for the brute-force scan the index
-    # exists to avoid).
-    rec_file = os.path.join(path, "_recall10_nprobe6")
-    if not os.path.exists(rec_file):
-        qrows = (df.orderBy("vec_id").limit(16)
-                 .select("embedding").collect())
-        qvecs = [[float(x) for x in r["embedding"]] for r in qrows]
-        rec = similarity.ivf_recall_at_k(spark, df, path, qvecs,
-                                         k=10, nprobe=6)
-        with open(rec_file, "w") as fh:
-            fh.write(str(round(float(rec), 4)))
-    rec = float(open(rec_file).read())
+    # recall@10 vs the exact answer rides along as a column, averaged
+    # over 16 query vectors (a single query's recall has 0.1 granularity
+    # and is mostly noise)
+    qrows = df.orderBy("vec_id").limit(16).select("embedding").collect()
+    qvecs = [[float(x) for x in r["embedding"]] for r in qrows]
+    rec = round(float(similarity.ivf_recall_at_k(
+        spark, df, path, qvecs, k=10, nprobe=6)), 4)
     # the fixture's embeddings are near-isotropic, so the number above is
     # honest but weakly informative (recall ≈ scanned fraction however
     # cells are assigned).  A second recall on PLANTED cluster structure
     # (fixtures.clustered_embeddings) rides along: ≥0.9 probing 2/16
     # cells for a working IVF, ≈ nprobe/K for a shuffled cell assignment
-    # — this one would FAIL if the quantizer broke.  Also measured once
-    # per build and cached (offline step, not the timed probe path).
-    crec_file = os.path.join(path, "_recall10_clustered_nprobe2")
-    if not os.path.exists(crec_file):
-        cemb = fixtures.clustered_embeddings(
-            spark, 4096, n_clusters=16).drop("cluster")
-        cpath = path + "_clustered"
-        if not os.path.exists(os.path.join(cpath, "_SUCCESS")):
-            similarity.ivf_build(cemb, cpath, n_clusters=16)
-        cqs = [[float(x) for x in r["embedding"]] for r in
-               cemb.orderBy("vec_id").limit(16).collect()]
-        crec = similarity.ivf_recall_at_k(spark, cemb, cpath, cqs,
-                                          k=10, nprobe=2)
-        with open(crec_file, "w") as fh:
-            fh.write(str(round(float(crec), 4)))
-    crec = float(open(crec_file).read())
+    # — this one would FAIL if the quantizer broke.
+    cemb = fixtures.clustered_embeddings(
+        spark, 4096, n_clusters=16).drop("cluster")
+    cpath = path + "_clustered"
+    similarity.ivf_build(cemb, cpath, n_clusters=16)
+    cqs = [[float(x) for x in r["embedding"]] for r in
+           cemb.orderBy("vec_id").limit(16).collect()]
+    crec = round(float(similarity.ivf_recall_at_k(
+        spark, cemb, cpath, cqs, k=10, nprobe=2)), 4)
     res = similarity.ann_topk_ivf_indexed(spark, path, qvec, k=10, nprobe=6)
     return (res.withColumn("recall_at_10", F.lit(rec))
             .withColumn("recall_clustered_nprobe2", F.lit(crec)))

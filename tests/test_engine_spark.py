@@ -635,9 +635,10 @@ def test_range_count_mixed_codec_batches(spark, unit_df):
     for r in rows:
         assert (r["min_tok"], r["max_tok"]) == \
             (raw[r["doc_id"]][0], raw[r["doc_id"]][-1]), r["doc_id"]
+    # an index column name that is not an identifier: point_lookup quotes it
     look = enc.withColumn(
-        "lookup_idx", F.pmod(F.xxhash64("doc_id"), F.col("n_tok")).cast("int"))
-    rows = engine.point_lookup(look).collect()
+        "lookup idx", F.pmod(F.xxhash64("doc_id"), F.col("n_tok")).cast("int"))
+    rows = engine.point_lookup(look, "lookup idx").collect()
     assert len(rows) == len(raw)
     for r in rows:
         assert r["val"] == raw[r["doc_id"]][r["idx"]], r

@@ -1,9 +1,10 @@
 """The fused ingest write: ``iceberg.export_encoded`` / ``append`` of the
 exact frame ``engine.encode_files`` or ``engine.encode`` returned runs the
 encoder inside the writer's own ``mapInArrow`` — one Python stage per
-task — and writes the same files the two-stage plan writes for any frame
-derived from it.  Cached, derived and partitioned frames keep the
-two-stage plan."""
+task, whatever the partition spec: the task computes each row's partition
+values itself — and writes the same files the two-stage plan writes for
+any frame derived from it.  Cached and derived frames keep the two-stage
+plan."""
 
 from __future__ import annotations
 
@@ -81,15 +82,22 @@ def _file_layout(path: str) -> tuple:
         show_field_metadata=True, show_schema_metadata=True), chunks), rows
 
 
+def _file_key(d: dict) -> tuple:
+    """(Spark partition id, Iceberg partition values) of a manifest
+    entry: what names one data file across two writes of the same rows."""
+    return (os.path.basename(d["file_path"]).split("-")[1],
+            tuple(sorted(d["partition"].items())))
+
+
 def _table_files(table: str) -> dict:
-    """{Spark partition id: data file path}."""
-    return {os.path.basename(p).split("-")[1]: p
-            for p in glob.glob(f"{table}/data/*/*.parquet")}
+    """{(Spark partition id, partition values): data file path}."""
+    _, data, _ = iceberg._snapshot_entries(table)
+    return {_file_key(d): d["file_path"] for d in data}
 
 
 def _entries(table: str) -> dict:
-    """Manifest entries by partition id: path, size and the ``enc_ns``
-    bounds (field 10) aside."""
+    """Manifest entries by (Spark partition id, partition values): path,
+    size and the ``enc_ns`` bounds (field 10) aside."""
     _, data, _ = iceberg._snapshot_entries(table)
     out = {}
     for d in data:
@@ -99,14 +107,19 @@ def _entries(table: str) -> dict:
         for k in ("lower_bounds", "upper_bounds"):
             e[k] = sorted((b["key"], b["value"]) for b in e[k]
                           if b["key"] != 10)
-        out[os.path.basename(d["file_path"]).split("-")[1]] = e
+        out[_file_key(d)] = e
     return out
 
 
-@pytest.mark.parametrize("conf", [
-    {}, {"maxBytesPerBatch": "100k"}, {"maxRecordsPerBatch": "700"}])
+@pytest.mark.parametrize("conf, partition_by, nfiles", [
+    pytest.param({}, None, 3, id="conf0"),
+    pytest.param({"maxBytesPerBatch": "100k"}, None, 3, id="conf1"),
+    pytest.param({"maxRecordsPerBatch": "700"}, None, 3, id="conf2"),
+    pytest.param({}, "source", 6, id="source"),
+    pytest.param({}, "bucket(4, doc_id)", 12, id="bucket")])
 def test_fused_and_two_stage_writes_are_identical(spark, tokens_dir,
-                                                  tmp_path, conf):
+                                                  tmp_path, conf,
+                                                  partition_by, nfiles):
     """export_encoded(encode_files(...)) and export_encoded of the same
     frame with a select("*") on top write the same files: equal footers
     and field ids, the same row groups, column chunks of equal sizes
@@ -114,7 +127,8 @@ def test_fused_and_two_stage_writes_are_identical(spark, tokens_dir,
     certificate and equal manifest entries — paths, file sizes and the
     timing column ``enc_ns`` aside.  Smaller Arrow batch limits make
     Spark cut its batches by size or by a row count the encoder's
-    batches do not share."""
+    batches do not share; a partitioned spec splits each task's rows
+    into one file per partition value on both plans."""
     keys = {f"spark.sql.execution.arrow.{k}": v for k, v in conf.items()}
     old = {k: spark.conf.get(k) for k in keys}
     for k, v in keys.items():
@@ -122,17 +136,19 @@ def test_fused_and_two_stage_writes_are_identical(spark, tokens_dir,
     try:
         fused, derived = str(tmp_path / "fused"), str(tmp_path / "derived")
         iceberg.export_encoded(
-            engine.encode_files(spark, tokens_dir), fused)
+            engine.encode_files(spark, tokens_dir), fused,
+            partition_by=partition_by)
         iceberg.export_encoded(
-            engine.encode_files(spark, tokens_dir).select("*"), derived)
+            engine.encode_files(spark, tokens_dir).select("*"), derived,
+            partition_by=partition_by)
     finally:
         for k, v in old.items():
             spark.conf.set(k, v)
     a, b = _table_files(fused), _table_files(derived)
-    assert len(a) == 3 and a.keys() == b.keys()
-    for pid in a:
-        (meta_a, rows_a), (meta_b, rows_b) = (_file_layout(a[pid]),
-                                              _file_layout(b[pid]))
+    assert len(a) == nfiles and a.keys() == b.keys()
+    for key in a:
+        (meta_a, rows_a), (meta_b, rows_b) = (_file_layout(a[key]),
+                                              _file_layout(b[key]))
         assert meta_a == meta_b
         assert rows_a.equals(rows_b)
     assert _entries(fused) == _entries(derived)
@@ -264,14 +280,23 @@ def test_fused_encoder_error_commits_nothing(spark, idless_tokens, tmp_path,
 def test_partitioned_export_writes_per_partition_files(spark, tokens_dir,
                                                        tmp_path,
                                                        monkeypatch):
-    """partition_by keeps the two-stage plan: each task splits its rows
-    into one file per source, and the manifest records each file's
-    value."""
+    """partition_by keeps the one-stage plan: the write of an exact
+    encode frame is one MapInArrow with no other Python node, for an
+    identity, a bucket and a truncate spec, and a derived frame's is two
+    MapInArrow and nothing else.  Each task splits its rows into one file
+    per source, and the manifest records each file's value."""
     plans = _write_plans(monkeypatch)
     table = str(tmp_path / "t")
     iceberg.export_encoded(engine.encode_files(spark, tokens_dir), table,
                            partition_by="source")
-    assert [p.count("MapInArrow") for p in plans] == [2]
+    for i, spec in enumerate(("bucket(4, doc_id)", "truncate(1, doc_id)")):
+        iceberg.export_encoded(engine.encode_files(spark, tokens_dir),
+                               str(tmp_path / f"t{i}"), partition_by=spec)
+    iceberg.export_encoded(engine.encode_files(spark, tokens_dir)
+                           .select("*"), str(tmp_path / "derived"),
+                           partition_by="source")
+    assert [p.count("MapInArrow") for p in plans] == [1, 1, 1, 2]
+    assert not any("EvalPython" in p for p in plans)
     _, data, _ = iceberg._snapshot_entries(table)
     assert len(data) == 6
     for d in data:

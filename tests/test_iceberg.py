@@ -172,18 +172,69 @@ def test_avro_independent_reader_cross_reads_all_manifests(
     assert n_records >= 6
 
 
+def _spec_bucket(k: int, n: int) -> int:
+    """``bucket[n]`` of a long straight from the spec's formula over the
+    scalar hash: (murmur3 of the 8-byte LE value & Int.MAX) % n."""
+    h = iceberg.murmur3_32(k.to_bytes(8, "little", signed=True))
+    return (h & 0x7FFFFFFF) % n
+
+
+def test_transform_values_match_spec_values(monkeypatch):
+    """The writer's one transform function against the spec's own
+    values, no Spark: truncate[W] on ints is v − floorMod(v, W) (so −1
+    truncates to −10, not 0 as a C-style remainder would give); on
+    strings it keeps W code points, not bytes; bucket[N] agrees for int
+    and long and with the Appendix B hashes; every transform maps null
+    to null; and prune_files' bucket probe goes through it."""
+    import pyarrow as pa
+    tv = iceberg._transform_values
+    for typ, src_type in ((pa.int32(), "int"), (pa.int64(), "long")):
+        got = tv(pa.array([-1, -10, 9, 10, None], typ), "truncate", 10,
+                 src_type)
+        assert got.to_pylist() == [-10, -10, 0, 10, None]
+    assert tv(pa.array(["héllo", "日本語", "a", None]), "truncate", 2,
+              "string").to_pylist() == ["hé", "日本", "a", None]
+    ints = tv(pa.array([34, -1, 0, None], pa.int32()), "bucket", 16, "int")
+    longs = tv(pa.array([34, -1, 0, None], pa.int64()), "bucket", 16,
+               "long")
+    assert ints.to_pylist() == longs.to_pylist() == \
+        [2017239379 % 16, _spec_bucket(-1, 16), _spec_bucket(0, 16), None]
+    assert tv(pa.array(["iceberg", None]), "bucket", 16, "string") \
+        .to_pylist() == [1210000089 % 16, None]
+    assert tv(pa.array([None, "x"]), "identity", None, "string") \
+        .to_pylist() == [None, "x"]
+
+    calls = []
+
+    def spy(*args):
+        calls.append(args[1:])
+        return tv(*args)
+
+    meta = {"current-schema-id": 0, "default-spec-id": 0,
+            "schemas": [{"schema-id": 0, "fields": [
+                {"id": 1, "name": "k", "type": "long"}]}],
+            "partition-specs": [{"spec-id": 0, "fields": [
+                {"name": "k_bucket", "transform": "bucket[8]",
+                 "source-id": 1, "field-id": 1000}]}]}
+    entries = [{"file_path": f"f{b}", "partition": {"k_bucket": b}}
+               for b in range(8)]
+    monkeypatch.setattr(iceberg, "_transform_values", spy)
+    kept = iceberg.prune_files(None, "k", 34, 34, preloaded=(meta, entries))
+    assert [d["file_path"] for d in kept] == [f"f{2017239379 % 8}"]
+    assert calls == [("bucket", 8, "long")]
+
+
 def test_partition_transform_hash_spec_vectors():
     """The bucket transform's hash is pinned to the Iceberg spec's own
     Appendix B vectors: murmur3_x86_32 of long 34 (8-byte LE) is
-    2017239379 — identical for int 34, since ints hash as longs — and of
-    the UTF-8 bytes of "iceberg" is 1210000089.  The vectorized numpy
-    kernel must agree with the scalar byte implementation everywhere,
-    including negatives."""
+    2017239379 and of the UTF-8 bytes of "iceberg" is 1210000089 (the
+    transform's int/long agreement is
+    :func:`test_transform_values_match_spec_values`).  The vectorized
+    numpy kernel must agree with the scalar byte implementation
+    everywhere, including negatives."""
     import numpy as np
     assert iceberg.murmur3_32((34).to_bytes(8, "little")) == 2017239379
     assert iceberg.murmur3_32(b"iceberg") == 1210000089
-    assert iceberg.bucket_value(34, "long", 16) == \
-        iceberg.bucket_value(34, "int", 16) == 2017239379 % 16
     vals = np.array([0, 1, -1, 34, 2**62, -2**62, 123456789],
                     dtype=np.int64)
     vec = iceberg._murmur3_32_long_vec(vals)
@@ -216,9 +267,9 @@ def test_partition_transforms_end_to_end(spark, tmp_path):
         b = d["partition"]["k_bucket"]
         ks = [r["k"] for r in spark.read.parquet(d["file_path"])
               .select("k").collect()]
-        assert all(iceberg.bucket_value(k, "long", 8) == b for k in ks)
+        assert all(_spec_bucket(k, 8) == b for k in ks)
     pruned = iceberg.prune_files(tb, "k", 123, 123)
-    want_b = iceberg.bucket_value(123, "long", 8)
+    want_b = _spec_bucket(123, 8)
     assert pruned and {d["partition"]["k_bucket"] for d in pruned} == \
         {want_b} and len(pruned) < len(live)
     got = iceberg.read_table(spark, tb, between=("k", 123, 123)).collect()
@@ -745,15 +796,16 @@ def test_write_task_removes_its_files_on_failure(tmp_path, monkeypatch):
             return 0
 
     monkeypatch.setattr(TaskContext, "get", classmethod(lambda c: Ctx()))
-    batch = pa.RecordBatch.from_pydict(
-        {"k": ["x", "y"], "_p_k": ["x", "y"]})
+    batch = pa.RecordBatch.from_pydict({"k": ["x", "y"]})
 
     def batches():
         yield batch
         raise RuntimeError("input failed")
 
     with pytest.raises(RuntimeError, match="input failed"):
-        list(iceberg._write_task(batches(), str(tmp_path), ["k"], {}))
+        list(iceberg._write_task(
+            batches(), str(tmp_path),
+            [("k", "k", "identity", None, "string")], {}))
     assert list(tmp_path.iterdir()) == []
 
 

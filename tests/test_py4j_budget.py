@@ -18,7 +18,7 @@ from simdcomp_spark import engine, iceberg
 
 # the measured counts plus ~10%
 INGEST_BUDGET = 80
-READ_BUDGET = 110
+READ_BUDGET = 82
 
 
 @contextlib.contextmanager
